@@ -1852,10 +1852,11 @@ def kg_question_retrieval(spark, sf_dir):
 @_qm("kg_streaming_ingest")
 def kg_streaming_ingest(spark, sf_dir):
     """Structured-Streaming ingest of the SAME synthesized transcripts
-    (readStream file source, watermark + keyed dedup, foreachBatch extraction
-    + linking, availableNow trigger) — the resulting edge set must equal the
-    BATCH pipeline edge-for-edge, because every stage is per-turn stateless
-    and per-(alias_key,surface) scoring is a pure function. Oracle: the
+    (readStream file source, watermark + keyed dedup, build_kg per
+    foreachBatch micro-batch, availableNow trigger) — the resulting edge set
+    must equal the BATCH pipeline edge-for-edge, because every stage is
+    per-turn stateless and per-(alias_key,surface) scoring is a pure
+    function. Oracle: the
     batch pipeline's independent pandas result. Reference analog: the
     checkpoint-per-query incremental loop (provence/provence.py:113-167)
     done as a stream."""
@@ -1904,13 +1905,14 @@ def kg_streaming_ingest(spark, sf_dir):
 
 @_qm("kg_checkpointed_run")
 def kg_checkpointed_run(spark, sf_dir):
-    """The resumable checkpointed runner under the driver gate: bucket-group
-    materialization (atomic done markers, per-bucket lineage, salted node
-    partials) over the synthesized transcripts must produce EXACTLY the batch
-    pipeline's edge set — conversations never split across buckets and
-    linking is a pure per-(alias_key, surface) function. Oracle: the batch
-    pipeline's independent pandas result. Reference analog: the per-query
-    checkpoint/skip loop (provence/provence.py:113-167) as bucket commits."""
+    """The resumable checkpointed runner under the oracle gate: bucket-group
+    materialization (build_kg per group, atomic done markers, per-bucket
+    lineage, per-group node partials) over the synthesized transcripts must
+    produce EXACTLY the batch pipeline's edge set — conversations never
+    split across buckets and linking is a pure per-(alias_key, surface)
+    function. Oracle: the batch pipeline's independent pandas result.
+    Reference analog: the per-query checkpoint/skip loop
+    (provence/provence.py:113-167) as bucket commits."""
     import os
     import tempfile
     import uuid

@@ -51,9 +51,10 @@ def canonicalize_node_stats(mention_stats: DataFrame, resolution: DataFrame) -> 
     mentions (counts sum; surface sets union), but the transcript-sized work
     already collapsed in the map-side-combined count aggregate, so no salting
     is needed here and no second pass over the mention rows happens at all.
-    This is the 10^12-turn path used by plans.pipeline.build_kg;
-    `canonicalize_nodes` remains the row-level operator (checkpointed
-    per-bucket partial aggregates, tests)."""
+    This is the 10^12-turn path used by plans.pipeline.build_kg, and so by
+    every run mode (the checkpointed runner commits its per-group output as
+    a node partial); `canonicalize_nodes` remains the row-level operator
+    that tools and tests call."""
     joined = mention_stats.join(
         F.broadcast(resolution.select("alias_key", "surface", "cui")),
         ["alias_key", "surface"],

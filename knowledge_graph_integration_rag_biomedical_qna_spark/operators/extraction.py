@@ -37,22 +37,7 @@ MENTIONS_SCHEMA = T.StructType(
     ]
 )
 
-RAW_TRIPLES_SCHEMA = T.StructType(
-    [
-        T.StructField("conv_id", T.StringType(), False),
-        T.StructField("turn_idx", T.IntegerType(), False),
-        T.StructField("sent_idx", T.IntegerType(), False),
-        T.StructField("subj_surface", T.StringType(), False),
-        T.StructField("subj_key", T.StringType(), False),
-        T.StructField("pred", T.StringType(), False),
-        T.StructField("obj_surface", T.StringType(), False),
-        T.StructField("obj_key", T.StringType(), False),
-        T.StructField("confidence", T.DoubleType(), False),
-    ]
-)
-
 _MENTION_COLS = list(MENTIONS_SCHEMA.fieldNames())
-_TRIPLE_COLS = list(RAW_TRIPLES_SCHEMA.fieldNames())
 
 
 def _unified_batches_fn(alias_keys_bc, kind: str | None = None, cols: list | None = None):
@@ -88,16 +73,6 @@ def detect_mentions_df(turns: DataFrame, alias_keys_bc) -> DataFrame:
     return turns.select("conv_id", "turn_idx", "text").mapInArrow(
         _unified_batches_fn(alias_keys_bc, kind="m", cols=_MENTION_COLS),
         MENTIONS_SCHEMA,
-    )
-
-
-def extract_triples_df(turns: DataFrame, alias_keys_bc) -> DataFrame:
-    """raw_triples(conv_id, turn_idx, sent_idx, subj/pred/obj surfaces+keys,
-    confidence) — unlinked SVO pattern hits (vectorized kernel, triple rows
-    projected in-pass)."""
-    return turns.select("conv_id", "turn_idx", "text").mapInArrow(
-        _unified_batches_fn(alias_keys_bc, kind="t", cols=_TRIPLE_COLS),
-        RAW_TRIPLES_SCHEMA,
     )
 
 
@@ -325,9 +300,10 @@ def mentions_view(unified: DataFrame) -> DataFrame:
 
 
 def triples_view(unified: DataFrame) -> DataFrame:
-    """Project the triple rows of the unified extraction (RAW_TRIPLES_SCHEMA).
-    Valid on both full and collapsed extractions ('t' rows pass through the
-    collapse untouched)."""
+    """Project the triple rows of the unified extraction: raw_triples(conv_id,
+    turn_idx, sent_idx, subj/pred/obj surfaces+keys, confidence) — unlinked
+    SVO pattern hits. Valid on both full and collapsed extractions ('t' rows
+    pass through the collapse untouched)."""
     return unified.filter("kind = 't'").selectExpr(
         "conv_id", "turn_idx", "sent_idx",
         "subj_surface", "subj_key", "pred", "obj_surface", "obj_key",

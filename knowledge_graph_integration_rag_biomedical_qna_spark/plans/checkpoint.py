@@ -6,17 +6,23 @@ engine that becomes:
 
 - the conversation space is hashed into CHECKPOINT_BUCKETS buckets
   (`pmod(xxhash64(conv_id), B)`) — the unit of commit and of resume;
-- buckets are processed in groups; each group's kg_edges / resolved mentions
-  partials land under `bucket=N` partition dirs, followed by an atomic done
-  marker (the Iceberg analog is a snapshot commit per group);
+- buckets are processed in groups; each group runs `plans.pipeline.build_kg`
+  (the one composition of stages [1]-[6]) over its conversations and commits
+  its kg_edges under `bucket=N` partition dirs and its kg_nodes as a node
+  partial under `commit_group=<min>-<max>`, followed by an atomic done marker
+  (the Iceberg analog is a snapshot commit per group);
 - resume = skip buckets whose markers exist (LEFT ANTI semantics, P8/U3);
-- kg_nodes is finalized from the per-bucket partial aggregates, so the salted
-  two-phase aggregate and the checkpoint granularity are the same mechanism;
-- a `lineage` table records (bucket, turns_in, mentions, triples, edges,
-  wall_sec) per bucket — per-partition lineage + triple-count metrics.
+- `finalize()` merges the node partials of marked groups (surface sets union,
+  counts sum; linking is a pure per-(alias_key, surface) function, so the
+  merge equals the batch kg_nodes) and builds kg_edge_stats from the
+  committed edges with the batch aggregate (exact n_convs);
+- a `lineage` table records (bucket, turns_in, raw_triples, edges, wall_sec)
+  per bucket — per-partition lineage + triple-count metrics.
 
 Failure model: a crash mid-group leaves no marker; rerun reprocesses exactly
-those buckets (writes replace the bucket partition — idempotent).
+those buckets (writes replace the bucket partition — idempotent), and
+finalize reads only the node partials of marked groups, so a crashed group's
+partial is never counted, whatever group size the resume uses.
 """
 
 from __future__ import annotations
@@ -28,64 +34,62 @@ import time
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..core.config import CANON_SALT_BUCKETS, CHECKPOINT_BUCKETS
-from ..operators.extraction import extract_all_df, mentions_view, triples_view
-from ..operators.linking import (
+from ..core.config import CHECKPOINT_BUCKETS
+from ..operators.canonicalize import aggregate_edges
+from .pipeline import broadcast_alias_keys, build_kg
+
+# Unused here since build_kg became the only composition. perfbench's traced
+# checkpointed job patches these module attributes by name, so they stay
+# importable from this module.
+from ..operators.extraction import extract_all_df, mentions_view, triples_view  # noqa: F401
+from ..operators.linking import (  # noqa: F401
     candidate_table,
     resolution_table,
     resolve_mentions,
     resolve_triples,
 )
-from ..operators.turn_assembly import assemble_turns
-from .pipeline import broadcast_alias_keys
+from ..operators.turn_assembly import assemble_turns  # noqa: F401
 
 _BUCKET = "bucket"
+_GROUP = "commit_group"
 
 
 def bucket_of(col: str = "conv_id", buckets: int = CHECKPOINT_BUCKETS):
     return F.pmod(F.xxhash64(col), F.lit(buckets)).cast("int")
 
 
+def _group_key(bucket_group) -> str:
+    return f"{min(bucket_group)}-{max(bucket_group)}"
+
+
 def _marker_path(out_dir: str, bucket_group: tuple[int, ...]) -> str:
-    return os.path.join(out_dir, "_done", f"group-{min(bucket_group)}-{max(bucket_group)}.json")
+    return os.path.join(out_dir, "_done", f"group-{_group_key(bucket_group)}.json")
+
+
+def _done_groups(out_dir: str) -> list[list[int]]:
+    """The bucket list of every committed group (one per done marker)."""
+    d = os.path.join(out_dir, "_done")
+    if not os.path.isdir(d):
+        return []
+    groups = []
+    for f in sorted(os.listdir(d)):
+        if f.endswith(".json"):
+            with open(os.path.join(d, f)) as fh:
+                groups.append(json.load(fh)["buckets"])
+    return groups
 
 
 def _done_buckets(out_dir: str) -> set[int]:
-    done: set[int] = set()
-    d = os.path.join(out_dir, "_done")
-    if not os.path.isdir(d):
-        return done
-    for f in os.listdir(d):
-        if f.endswith(".json"):
-            with open(os.path.join(d, f)) as fh:
-                done.update(json.load(fh)["buckets"])
-    return done
+    return {b for grp in _done_groups(out_dir) for b in grp}
 
 
-def _migrate_legacy_lineage(out_dir: str) -> None:
-    """One-time upgrade guard (r4 advice): lineage was a plain append through
-    r3 (root-level part-files), and is commit_group-partitioned since r4.
-    Resuming a pre-upgrade out_dir would mix root part-files with
-    commit_group= subdirectories in one path, which breaks Spark partition
-    discovery for every future lineage read. Move any root-level data files
-    under commit_group=legacy/ before the first new-format write; their rows
-    keep reading alongside new ones (the partition column reads 'legacy').
-    Idempotent; no-op on fresh or already-migrated dirs."""
-    lineage = os.path.join(out_dir, "lineage")
-    if not os.path.isdir(lineage):
-        return
-    stray = [
-        f
-        for f in os.listdir(lineage)
-        if os.path.isfile(os.path.join(lineage, f)) and not f.startswith(("_", "."))
-    ]
-    if not stray:
-        return
-    legacy = os.path.join(lineage, "commit_group=legacy")
-    os.makedirs(legacy, exist_ok=True)
-    for f in stray:
-        os.replace(os.path.join(lineage, f), os.path.join(legacy, f))
-    # root _SUCCESS markers are metadata, harmless to partition discovery
+def _overwrite(df: DataFrame, key: str, path: str) -> None:
+    """Dynamic partition overwrite keyed on `key`, NOT append: a crash between
+    this write and the done marker leaves the group unmarked, and the rerun
+    REPLACES the partitions it rewrites instead of double-counting them."""
+    df.write.mode("overwrite").partitionBy(key).option(
+        "partitionOverwriteMode", "dynamic"
+    ).parquet(path)
 
 
 class ResumableKGRun:
@@ -103,6 +107,43 @@ class ResumableKGRun:
         self.buckets = buckets
         self.group_size = group_size
 
+    def _per_bucket(self, df: DataFrame, name: str) -> DataFrame:
+        return df.groupBy(bucket_of("conv_id", self.buckets).alias(_BUCKET)).agg(
+            F.count(F.lit(1)).alias(name)
+        )
+
+    def _commit_group(self, grp: tuple[int, ...], kg, t0: float) -> None:
+        """Write one group's edges, node partial and lineage, then its marker;
+        `t0` is when the group started."""
+        key = F.lit(_group_key(grp))
+        _overwrite(
+            kg.kg_edges.withColumn(_BUCKET, bucket_of("conv_id", self.buckets)),
+            _BUCKET, os.path.join(self.out_dir, "kg_edges"),
+        )
+        _overwrite(
+            kg.kg_nodes.withColumn(_GROUP, key),
+            _GROUP, os.path.join(self.out_dir, "node_partials"),
+        )
+        # lineage metrics for this group, one row per bucket, counted from
+        # the composition's own outputs
+        lineage = (
+            self._per_bucket(kg.turns, "turns_in")
+            .join(self._per_bucket(kg.raw_triples, "raw_triples"), _BUCKET, "left")
+            .join(self._per_bucket(kg.kg_edges, "edges"), _BUCKET, "left")
+            .na.fill(0, ["raw_triples", "edges"])
+            .withColumn("wall_sec", F.lit(round(time.time() - t0, 3)))
+            .withColumn("committed_at", F.current_timestamp())
+            .withColumn(_GROUP, key)
+        )
+        _overwrite(lineage, _GROUP, os.path.join(self.out_dir, "lineage"))
+
+        # atomic done marker AFTER data + lineage are on disk
+        marker = _marker_path(self.out_dir, grp)
+        tmp = marker + ".tmp"
+        with open(tmp, "w") as fh:
+            json.dump({"buckets": list(grp), "wall_sec": round(time.time() - t0, 3)}, fh)
+        os.replace(tmp, marker)
+
     def run(
         self,
         transcripts: DataFrame,
@@ -114,10 +155,8 @@ class ResumableKGRun:
         Returns summary metrics. Call `finalize()` after all groups are done.
         """
         os.makedirs(os.path.join(self.out_dir, "_done"), exist_ok=True)
-        _migrate_legacy_lineage(self.out_dir)
         done = _done_buckets(self.out_dir)
         keys_bc = broadcast_alias_keys(self.spark, aliases)
-        aliases = aliases.cache()
 
         all_buckets = [b for b in range(self.buckets) if b not in done]
         groups = [
@@ -127,113 +166,37 @@ class ResumableKGRun:
         if max_groups is not None:
             groups = groups[:max_groups]
 
-        bucketed = transcripts.withColumn(_BUCKET, bucket_of("conv_id", self.buckets))
-        processed = []
-        for grp in groups:
-            t0 = time.time()
-            part = bucketed.filter(F.col(_BUCKET).isin(list(grp)))
-            turns = assemble_turns(part)
-            turns = turns.persist()
-            unified = extract_all_df(turns, keys_bc).persist()
-            mentions = mentions_view(unified)
-            raw_triples = triples_view(unified)
-            surf = mentions.select("alias_key", "surface")
-            # persist: the pandas-UDF scoring subtree otherwise re-executes
-            # once per consuming broadcast (~5x per group: twice in
-            # resolve_triples, once in resolve_mentions, again for the
-            # lineage edge counts) — same reasoning as build_kg (r4 review)
-            resolution = resolution_table(candidate_table(surf, aliases)).persist()
-            edges = resolve_triples(raw_triples, resolution).withColumn(
-                _BUCKET, bucket_of("conv_id", self.buckets)
-            )
-            resolved = resolve_mentions(mentions, resolution)
-            # per-bucket partial node aggregate == phase 1 of the salted agg,
-            # with (bucket, salt) as the composite salt
-            node_partial = (
-                resolved.withColumn(_BUCKET, bucket_of("conv_id", self.buckets))
-                .withColumn(
-                    "_salt",
-                    F.pmod(
-                        F.xxhash64("conv_id", "turn_idx", "sent_idx", "mention_idx"),
-                        F.lit(CANON_SALT_BUCKETS),
-                    ),
-                )
-                .groupBy(_BUCKET, "cui", "_salt")
-                .agg(
-                    F.collect_set("surface").alias("surfaces_partial"),
-                    F.count(F.lit(1)).alias("cnt_partial"),
-                )
-            )
-
-            edges.write.mode("overwrite").partitionBy(_BUCKET).option(
-                "partitionOverwriteMode", "dynamic"
-            ).parquet(os.path.join(self.out_dir, "kg_edges"))
-            node_partial.write.mode("overwrite").partitionBy(_BUCKET).option(
-                "partitionOverwriteMode", "dynamic"
-            ).parquet(os.path.join(self.out_dir, "node_partials"))
-
-            # lineage metrics for this group, one row per bucket
-            lineage = (
-                turns.groupBy(_BUCKET)
-                .agg(F.count(F.lit(1)).alias("turns_in"))
-                .join(
-                    mentions.withColumn(_BUCKET, bucket_of("conv_id", self.buckets))
-                    .groupBy(_BUCKET).agg(F.count(F.lit(1)).alias("mentions")),
-                    _BUCKET, "left",
-                )
-                .join(
-                    raw_triples.withColumn(_BUCKET, bucket_of("conv_id", self.buckets))
-                    .groupBy(_BUCKET).agg(F.count(F.lit(1)).alias("raw_triples")),
-                    _BUCKET, "left",
-                )
-                .join(edges.groupBy(_BUCKET).agg(F.count(F.lit(1)).alias("edges")), _BUCKET, "left")
-                .na.fill(0, ["mentions", "raw_triples", "edges"])
-                .withColumn("wall_sec", F.lit(round(time.time() - t0, 3)))
-                .withColumn("committed_at", F.current_timestamp())
-            )
-            # group-keyed dynamic partition overwrite, NOT append: a crash
-            # between this write and the done marker leaves the group
-            # unmarked, and the rerun must REPLACE its lineage rows instead
-            # of double-counting them (r4 review — the module's idempotency
-            # claim now covers the lineage table too)
-            lineage.withColumn(
-                "commit_group", F.lit(f"{min(grp)}-{max(grp)}")
-            ).write.mode("overwrite").partitionBy("commit_group").option(
-                "partitionOverwriteMode", "dynamic"
-            ).parquet(os.path.join(self.out_dir, "lineage"))
-
-            # atomic done marker AFTER data + lineage are on disk
-            marker = _marker_path(self.out_dir, grp)
-            tmp = marker + ".tmp"
-            with open(tmp, "w") as fh:
-                json.dump({"buckets": list(grp), "wall_sec": round(time.time() - t0, 3)}, fh)
-            os.replace(tmp, marker)
-            for df in (turns, unified, resolution):
-                df.unpersist()
-            processed.append(grp)
-
-        aliases.unpersist()  # r4 review: was leaked for the session lifetime
+        aliases = aliases.cache()
+        try:
+            for grp in groups:
+                t0 = time.time()
+                part = transcripts.filter(bucket_of("conv_id", self.buckets).isin(list(grp)))
+                kg = build_kg(self.spark, part, aliases, alias_index=keys_bc)
+                try:
+                    self._commit_group(grp, kg, t0)
+                finally:
+                    kg.unpersist()
+        finally:
+            aliases.unpersist()
         return {
-            "groups_processed": len(processed),
+            "groups_processed": len(groups),
             "buckets_done": sorted(_done_buckets(self.out_dir)),
             "complete": len(_done_buckets(self.out_dir)) == self.buckets,
         }
 
     def finalize(self) -> None:
-        """Phase-2 aggregate over all bucket partials -> kg_nodes + edge stats."""
-        partials = self.spark.read.parquet(os.path.join(self.out_dir, "node_partials"))
-        nodes = (
-            partials.groupBy("cui")
-            .agg(
-                F.array_sort(F.array_distinct(F.flatten(F.collect_list("surfaces_partial")))).alias("surfaces"),
-                F.sum("cnt_partial").alias("mention_count"),
-            )
+        """Merge the node partials of the marked groups -> kg_nodes; the
+        committed edges -> kg_edge_stats (exact n_convs, as in build_kg)."""
+        committed = [_group_key(grp) for grp in _done_groups(self.out_dir)]
+        partials = self.spark.read.parquet(
+            os.path.join(self.out_dir, "node_partials")
+        ).filter(F.col(_GROUP).isin(committed))
+        nodes = partials.groupBy("cui").agg(
+            F.array_sort(F.array_distinct(F.flatten(F.collect_list("surfaces")))).alias("surfaces"),
+            F.sum("mention_count").alias("mention_count"),
         )
         nodes.write.mode("overwrite").parquet(os.path.join(self.out_dir, "kg_nodes"))
         edges = self.spark.read.parquet(os.path.join(self.out_dir, "kg_edges"))
-        stats = edges.groupBy("subj_cui", "pred", "obj_cui").agg(
-            F.count(F.lit(1)).alias("n_evidence"),
-            F.round(F.avg("confidence"), 6).alias("avg_confidence"),
-            F.approx_count_distinct("conv_id").alias("n_convs"),
+        aggregate_edges(edges).write.mode("overwrite").parquet(
+            os.path.join(self.out_dir, "kg_edge_stats")
         )
-        stats.write.mode("overwrite").parquet(os.path.join(self.out_dir, "kg_edge_stats"))

@@ -12,13 +12,16 @@ Shuffle budget of the whole plan (the thing that decides 100 TB viability):
   1 shuffle   edge-stats groupBy (counter payload, map-side combine)
 
 Everything transcript-sized shuffles at most once; after the mention_stats
-aggregate no transcript-sized table is read twice (the salted row-level
-canonicalize remains in operators/ for the checkpointed per-bucket runner).
+aggregate no transcript-sized table is read twice. `build_kg` is the only
+composition of stages [1]-[6]: the checkpointed runner (plans.checkpoint)
+calls it once per bucket group and the streaming ingest (streaming.ingest)
+once per micro-batch; the run modes differ only in their sinks.
 """
 
 from __future__ import annotations
 
 from dataclasses import dataclass
+from functools import cached_property
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -31,7 +34,7 @@ from ..operators.turn_assembly import assemble_turns
 @dataclass
 class KGResult:
     turns: DataFrame
-    unified: DataFrame       # persisted single-pass extraction (mentions+triples)
+    unified: DataFrame       # collapsed single-pass extraction (triples + mention stats)
     raw_triples: DataFrame
     candidates: DataFrame
     resolution: DataFrame
@@ -39,22 +42,17 @@ class KGResult:
     kg_edge_stats: DataFrame  # deduplicated graph edges with counters
     kg_nodes: DataFrame
     mention_stats: DataFrame | None = None  # vocab-sized (alias_key, surface, n)
-    # per-occurrence mentions: either prebuilt, or a thunk resolved on first
-    # access (the collapsed-cache default never constructs the plan unless a
-    # consumer actually reads token spans — plan construction itself costs
-    # driver time, see build_kg docstring)
-    _mentions: DataFrame | None = None
+    # per-occurrence mentions: a thunk resolved on first access (the plan is
+    # never constructed unless a consumer actually reads token spans — plan
+    # construction itself costs driver time, see build_kg docstring)
     _mentions_fn: object | None = None
 
-    @property
+    @cached_property
     def mentions(self) -> DataFrame:
-        if self._mentions is None:
-            self._mentions = self._mentions_fn()
-        return self._mentions
+        return self._mentions_fn()
 
     def unpersist(self) -> None:
-        for df in (self.unified, self.resolution, self.mention_stats,
-                   self._mentions):
+        for df in (self.unified, self.resolution, self.mention_stats):
             if df is None:
                 continue
             try:
@@ -205,19 +203,27 @@ def build_kg(
     aliases: DataFrame,
     persist: bool = True,
     assume_clustered: bool = False,
-    collapse_mention_cache: bool = True,
     alias_index=None,
-    persist_mentions: bool = False,
 ) -> KGResult:
-    """Compose stages [1]-[6].
+    """Compose stages [1]-[6] — the one composition every run mode calls
+    (batch, the checkpointed runner per bucket group, streaming per
+    micro-batch).
 
-    `persist=True` caches the unified extraction output plus the two
+    The extraction pass emits triple rows plus per-occurrence mention rows
+    already collapsed to per-task partial (alias_key, surface, n) stats
+    (extract_collapsed_df): the mentions are only ever re-read as the
+    vocab-sized aggregate, so the collapse removes most of the Arrow->JVM
+    transfer, the cache build and the mention-stats shuffle. `.mentions`
+    stays per-occurrence via a LAZY uncached second extraction pass —
+    consumers of token spans pay for that pass only if they read it (tests
+    and tools do; the nodes+edges product never does).
+
+    `persist=True` caches the collapsed extraction output plus the two
     vocabulary-sized tables (mention_stats, resolution): without a cache
-    Catalyst re-executes the pandas-UDF extraction once per consuming subtree
-    (no cross-branch CSE) — measured 3 extraction passes instead of 1. For
-    jobs too large to cache, use plans.checkpoint.ResumableKGRun, which
-    materializes stage boundaries to storage instead (the reference's JSON
-    stage files, done right).
+    Catalyst re-executes the extraction once per consuming subtree (no
+    cross-branch CSE). Callers release them with `KGResult.unpersist()`. For
+    jobs too large to cache at once, plans.checkpoint.ResumableKGRun calls
+    this per bucket group and commits each group to storage.
 
     `assume_clustered=True` declares the input already bucketed by conv_id
     (sources.io.write_bucketed): stage [1] skips its repartition and the
@@ -225,30 +231,10 @@ def build_kg(
     tests/test_bucketing.py) — the right storage layout at 100 TB, where
     one bucketed write amortizes the shuffle across every downstream job.
 
-    `collapse_mention_cache=True` (default, r5): the extraction pass emits
-    per-occurrence mention rows already collapsed to per-task partial
-    (alias_key, surface, n) stats — they were ~92% of the cached unified
-    rows but are only ever re-read as the vocab-sized aggregate, so the
-    collapse removes most of the Arrow->JVM transfer, the cache build (the
-    steady pipeline's dominant phase), and the mention-stats shuffle.
-    kg_edges/kg_nodes/mention_stats are bit-identical either way
-    (parity-tested); `.mentions` stays per-occurrence via a LAZY uncached
-    second extraction pass — consumers of token spans pay for that pass only
-    if they actually read it (tests/tools do; the nodes+edges product never
-    does). Pass False to get the single-pass unified cache that `.mentions`
-    shares.
-
-    `persist_mentions=True` (r6, for consumers reading BOTH edges and token
-    spans): forces the single-pass UNCOLLAPSED persisted cache — edges,
-    nodes, mention_stats and `.mentions` all derive from ONE cached
-    extraction, so reading both views runs extraction exactly once. The
-    trade is the ~12x larger cache the collapse exists to avoid; the default
-    (False) keeps the collapsed cache and the lazy second pass.
-
     `alias_index`: a prebuilt broadcast_alias_keys() result. A long-lived
     deployment ships the dictionary once, not once per job — steady-state
-    callers (bench, repeated builds against one dictionary) hoist it; the
-    default builds it here.
+    callers (bench, the checkpointed and streaming runs, repeated builds
+    against one dictionary) hoist it; the default builds it here.
 
     Driver-side plan-construction cost (r6): one warm build_kg call is ~470
     py4j round-trips / ~0.45 s with a hoisted alias_index (~0.9 s cold incl.
@@ -256,45 +242,20 @@ def build_kg(
     the selectExpr/SQL-string rewrites of synth/assembly/linking/views. At
     steady state amortize it by reusing the returned plan (see bench.py).
     """
-    from pyspark.sql import functions as F
-
     from ..operators.extraction import extract_collapsed_df, mention_stats_view
-
-    if persist_mentions:
-        # both views off ONE cached extraction pass — see docstring
-        collapse_mention_cache = False
-        persist = True
 
     turns = assemble_turns(transcripts, assume_clustered=assume_clustered)
     keys_bc = alias_index if alias_index is not None else broadcast_alias_keys(spark, aliases)
-    # one Arrow pass over the turn text produces BOTH mentions and triples;
-    # the persisted unified table is the stage boundary both branches reuse
-    if collapse_mention_cache:
-        unified = extract_collapsed_df(turns, keys_bc)
-    else:
-        unified = extract_all_df(turns, keys_bc)
+    # one Arrow pass over the turn text produces BOTH the triples and the
+    # mention stats; the persisted unified table is the stage boundary both
+    # branches reuse
+    unified = extract_collapsed_df(turns, keys_bc)
     if persist:
         unified = unified.persist()
     raw_triples = triples_view(unified)
-
-    if collapse_mention_cache:
-        # per-occurrence view: a LAZY uncached second extraction pass, built
-        # only if a consumer reads .mentions (plan construction deferred too)
-        mentions_fn = lambda: mentions_view(extract_all_df(turns, keys_bc))  # noqa: E731
-        # vocab-sized already: sum the per-task partials
-        mention_stats = mention_stats_view(unified)
-    else:
-        mentions_fn = lambda: mentions_view(unified)  # noqa: E731
-        # ONE transcript-sized aggregate collapses mentions to
-        # vocabulary-sized (alias_key, surface, n) — map-side combine
-        # absorbs hot-entity skew. It feeds BOTH candidate generation and
-        # node canonicalization, so the mention rows are never re-read
-        # after this pass.
-        mention_stats = (
-            mentions_view(unified)
-            .groupBy("alias_key", "surface")
-            .agg(F.expr("count(1) AS n_mentions"))
-        )
+    # vocab-sized already: sum the per-task partials. It feeds BOTH
+    # candidate generation and node canonicalization.
+    mention_stats = mention_stats_view(unified)
     if persist:
         mention_stats = mention_stats.persist()
 
@@ -315,7 +276,9 @@ def build_kg(
     return KGResult(
         turns=turns,
         unified=unified,
-        _mentions_fn=mentions_fn,
+        # per-occurrence view: a LAZY uncached second extraction pass, built
+        # only if a consumer reads .mentions (plan construction deferred too)
+        _mentions_fn=lambda: mentions_view(extract_all_df(turns, keys_bc)),
         raw_triples=raw_triples,
         candidates=candidates,
         resolution=resolution,

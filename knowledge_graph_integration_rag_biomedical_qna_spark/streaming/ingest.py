@@ -1,16 +1,18 @@
 """Streaming transcript ingest -> incremental KG construction.
 
-The batch job is the contract (SURVEY.md §7.6); this module shows the same
-stages running under Structured Streaming for continuous ingest:
+The batch job is the contract (SURVEY.md §7.6); this module runs the same
+composition under Structured Streaming for continuous ingest:
 
 - `readStream` over the transcripts source (file source here; Kafka in prod —
   swap the format, the plan is identical),
-- `withWatermark("ts", ...)` + `dropDuplicates(["conv_id","turn_idx"])` for
-  late/duplicate turns (the streaming analog of stage [1]'s first-wins dedup),
-- stages [2]-[5] are stateless per turn, so they run unchanged inside
-  `foreachBatch`, appending evidence-level edges per micro-batch; the
-  canonicalization groupBy stays a periodic batch compaction over the appended
-  edges (exactly the checkpointed phase-2 finalize).
+- `withWatermark("ts", ...)` + keyed dedup on (conv_id, turn_idx) for
+  late/duplicate turns ACROSS micro-batches (the streaming analog of stage
+  [1]'s first-wins dedup),
+- each micro-batch runs `plans.pipeline.build_kg` inside `foreachBatch` and
+  appends its evidence-level kg_edges: stages [1]-[5] are per-turn stateless
+  and linking is a pure per-(alias_key, surface) function, so the appended
+  edges equal the batch job's. The canonicalization groupBy stays a periodic
+  batch compaction over the appended edges (the checkpointed finalize).
 
 Exactly-once: foreachBatch + idempotent per-epoch parquet dirs, plus the
 streaming checkpointLocation for source offsets.
@@ -23,8 +25,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..operators.extraction import extract_triples_df
-from ..operators.linking import candidate_table, resolution_table, resolve_triples
+from ..plans.pipeline import build_kg
 from ..sources.io import TRANSCRIPTS_SCHEMA
 
 
@@ -45,13 +46,13 @@ def deduped_turns_stream(stream: DataFrame, watermark: str = "10 minutes") -> Da
     on the keys, evict each key's state once the watermark passes its first
     sighting. A duplicate arriving later than the watermark delay after the
     original is no longer deduplicated — that is the same contract as the
-    late-row bound the watermark already imposes."""
+    late-row bound the watermark already imposes. Empty turns pass through:
+    stage [1] inside build_kg drops them."""
     dd = stream.withWatermark("ts", watermark)
     try:
-        dd = dd.dropDuplicatesWithinWatermark(["conv_id", "turn_idx"])
+        return dd.dropDuplicatesWithinWatermark(["conv_id", "turn_idx"])
     except AttributeError:  # pragma: no cover - pyspark < 3.5
-        dd = dd.dropDuplicates(["conv_id", "turn_idx"])
-    return dd.filter(F.trim(F.coalesce(F.col("text"), F.lit(""))) != "")
+        return dd.dropDuplicates(["conv_id", "turn_idx"])
 
 
 def start_kg_stream(
@@ -74,11 +75,8 @@ def start_kg_stream(
     os.makedirs(out_dir, exist_ok=True)
 
     def process_batch(batch_df: DataFrame, epoch_id: int) -> None:
-        raw = extract_triples_df(batch_df, keys_bc)
-        surf = raw.select(F.col("subj_key").alias("alias_key"), F.col("subj_surface").alias("surface")) \
-            .unionByName(raw.select(F.col("obj_key").alias("alias_key"), F.col("obj_surface").alias("surface")))
-        resolution = resolution_table(candidate_table(surf, aliases))
-        edges = resolve_triples(raw, resolution).withColumn("epoch", F.lit(epoch_id))
+        kg = build_kg(batch_df.sparkSession, batch_df, aliases, alias_index=keys_bc)
+        edges = kg.kg_edges.withColumn("epoch", F.lit(epoch_id))
         # foreachBatch is AT-LEAST-ONCE: an epoch replayed after a crash
         # between the sink write and the offset commit must land in the SAME
         # place, not append a second copy (r4 review — the docstring's
@@ -87,6 +85,7 @@ def start_kg_stream(
         edges.write.mode("overwrite").partitionBy("epoch").option(
             "partitionOverwriteMode", "dynamic"
         ).parquet(os.path.join(out_dir, "kg_edges_stream"))
+        kg.unpersist()
 
     writer = (
         turns.writeStream.foreachBatch(process_batch)

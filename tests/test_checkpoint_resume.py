@@ -4,6 +4,8 @@ identical to a single-shot run. Also checks lineage metrics coverage."""
 
 from __future__ import annotations
 
+import os
+
 import pandas as pd
 import pytest
 
@@ -80,43 +82,47 @@ def test_lineage_metrics(spark, inputs, tmp_path):
     assert int(lineage["edges"].sum()) == edges.count()
 
 
-def test_legacy_root_lineage_migrates_cleanly(spark, inputs, tmp_path):
-    """r4 advice: lineage was a plain append (root part-files) through r3 and
-    is commit_group-partitioned since r4 — resuming a pre-upgrade out_dir
-    mixed both layouts in one path and broke partition discovery. The run()
-    entry must move root-level files under commit_group=legacy so old rows
-    keep reading alongside new ones."""
-    import os
+def _sorted_table(spark, path: str, key: list[str]) -> pd.DataFrame:
+    pdf = spark.read.parquet(path).toPandas()
+    if "surfaces" in pdf:
+        pdf["surfaces"] = pdf["surfaces"].map(list)
+    return pdf.sort_values(key).reset_index(drop=True)
 
+
+def test_crash_before_marker_resume_with_other_group_size(spark, inputs, tmp_path, monkeypatch):
+    """A group that fails after its node-partial write and before its done
+    marker leaves a partial under an unmarked commit_group. A resume with
+    another group size re-covers those buckets under new group keys, so
+    finalize must read only the marked groups' partials, or the crashed
+    group's nodes count twice."""
     transcripts, aliases = inputs
-    out = str(tmp_path / "legacy_dir")
-    lineage = os.path.join(out, "lineage")
-    os.makedirs(lineage, exist_ok=True)
-    # simulate a pre-upgrade append: one root-level parquet data file with
-    # the lineage row schema minus the partition column
-    legacy_rows = pd.DataFrame(
-        {
-            "bucket": pd.array([0], dtype="int32"),
-            "turns_in": pd.array([7], dtype="int64"),
-            "mentions": pd.array([3], dtype="int64"),
-            "raw_triples": pd.array([1], dtype="int64"),
-            "edges": pd.array([1], dtype="int64"),
-            "wall_sec": [0.5],
-            "committed_at": pd.array(
-                [pd.Timestamp("2026-01-01")], dtype="datetime64[us]"
-            ),
-        }
-    )
-    legacy_rows.to_parquet(os.path.join(lineage, "part-00000-legacy.parquet"))
+    single = str(tmp_path / "single")
+    run = ResumableKGRun(spark, single, buckets=8, group_size=2)
+    assert run.run(transcripts, aliases)["complete"]
+    run.finalize()
 
-    run = ResumableKGRun(spark, out, buckets=4, group_size=2)
-    s = run.run(transcripts, aliases)
-    assert s["complete"]
-    # partition discovery must succeed and see BOTH generations
-    got = spark.read.parquet(lineage)
-    groups = {r["commit_group"] for r in got.select("commit_group").distinct().collect()}
-    assert "legacy" in groups and len(groups) >= 2, groups
-    assert got.filter("commit_group = 'legacy'").count() == 1
-    # idempotent: a second run() must not disturb the migrated layout
-    run.run(transcripts, aliases)
-    assert spark.read.parquet(lineage).filter("commit_group = 'legacy'").count() == 1
+    crashed = str(tmp_path / "crashed")
+    real_replace = os.replace
+
+    def crash_on_second_marker(src, dst):
+        if dst.endswith("group-2-3.json"):
+            raise OSError("injected crash before the done marker")
+        return real_replace(src, dst)
+
+    monkeypatch.setattr(os, "replace", crash_on_second_marker)
+    with pytest.raises(OSError, match="injected crash"):
+        ResumableKGRun(spark, crashed, buckets=8, group_size=2).run(transcripts, aliases)
+    monkeypatch.undo()
+    assert os.path.isdir(f"{crashed}/node_partials/commit_group=2-3")
+
+    resumed = ResumableKGRun(spark, crashed, buckets=8, group_size=4)
+    s = resumed.run(transcripts, aliases)
+    assert s["complete"] and s["groups_processed"] == 2
+    resumed.finalize()
+
+    for table, key in (("kg_nodes", ["cui"]),
+                       ("kg_edge_stats", ["subj_cui", "pred", "obj_cui"])):
+        pd.testing.assert_frame_equal(
+            _sorted_table(spark, f"{crashed}/{table}", key),
+            _sorted_table(spark, f"{single}/{table}", key),
+        )

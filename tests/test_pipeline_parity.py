@@ -308,36 +308,6 @@ def test_adversarial_inputs_match_pandas_oracle(spark):
     assert not any(c == "c2" and t == 2 for c, t, *_ in got)
 
 
-def test_persist_mentions_single_extraction_pass(spark, fixture_dir, tmp_path):
-    """persist_mentions=True: edges AND token spans come off ONE cached
-    extraction pass; the default (collapsed cache) pays a second lazy pass
-    for .mentions. Counted via worker-side index accesses (1 per task per
-    pass — same partitioning both runs, so the default path is exactly 2x)."""
-    from knowledge_graph_integration_rag_biomedical_qna_spark.fixtures.testing import (
-        CountingAliasIndex,
-    )
-
-    transcripts = spark.read.parquet(f"{fixture_dir}/transcripts.parquet")
-    aliases = spark.read.parquet(f"{fixture_dir}/concept_aliases.parquet")
-    keys = [r["alias_key"] for r in aliases.select("alias_key").distinct().collect()]
-
-    def run(tag, **kwargs):
-        path = tmp_path / f"accesses_{tag}.log"
-        idx = CountingAliasIndex(keys, path)
-        kg = build_kg(spark, transcripts, aliases, alias_index=idx, **kwargs)
-        n_edges = kg.kg_edges.count()
-        n_mentions = kg.mentions.count()
-        kg.unpersist()
-        return n_edges, n_mentions, sum(1 for _ in open(path))
-
-    e1, m1, n_shared = run("persist", persist_mentions=True)
-    e2, m2, n_default = run("default")
-    assert (e1, m1) == (e2, m2) and m1 > 0
-    # default: one collapsed pass (edges) + one lazy full pass (mentions);
-    # persist_mentions: both views read the single cached full pass
-    assert n_default == 2 * n_shared, (n_default, n_shared)
-
-
 def test_mentions_view_raises_on_collapsed_input(spark, fixture_dir):
     """A collapsed extraction has no per-occurrence 'm' rows; mentions_view
     must fail loudly instead of returning a silent empty result (r5 advice)."""

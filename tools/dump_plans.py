@@ -67,7 +67,7 @@ def main() -> None:
     sections = [
         ("kg_edges (stages [1]-[5]: window -> single-pass extraction -> broadcast resolution joins)", kg.kg_edges),
         ("kg_nodes (stage [6]: vocab-sized stats aggregate -> broadcast join)", kg.kg_nodes),
-        ("canonicalize_nodes (row-level salted two-phase, checkpoint-runner path)", _salted_nodes(kg)),
+        ("canonicalize_nodes (row-level salted two-phase operator, not on the build_kg path)", _salted_nodes(kg)),
         ("q1_pricing_summary (pushdown + partial aggregation)", REGISTRY["q1_pricing_summary"][0](spark, sf)),
         ("q5_join_breadth (broadcast star join)", REGISTRY["q5_join_breadth"][0](spark, sf)),
         ("ann_cosine_topk (JVM-side vector math + WindowGroupLimit top-k)", REGISTRY["ann_cosine_topk"][0](spark, sf)),
