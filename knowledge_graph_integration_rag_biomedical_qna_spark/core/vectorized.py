@@ -295,12 +295,6 @@ def _gather_strings_arrow(pos: np.ndarray, span: np.ndarray, masks_desc, pc):
     return cat.take(pa.array(inv))
 
 
-def _gather_strings(pos: np.ndarray, span: np.ndarray, masks_desc, pc) -> np.ndarray:
-    """Object-dtype twin of _gather_strings_arrow (slow-path / test helper)."""
-    arr = _gather_strings_arrow(pos, span, masks_desc, pc)
-    return np.asarray(arr.to_pylist(), dtype=object)
-
-
 # byte classification LUTs for the zero-regex tokenizer (ASCII input only —
 # non-ASCII rows take the slow path before we get here)
 _LUT_CONT = np.zeros(256, dtype=bool)   # token continuation: [A-Za-z0-9'-]

@@ -15,183 +15,92 @@ near-dup. Design notes for 100 TB:
 
 from __future__ import annotations
 
-import threading
+from collections import deque
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
-# --- deferred hot-key warnings ----------------------------------------------
+# --- hot-key cap warnings ----------------------------------------------------
 
-# pending (Observation, message) pairs not yet delivered; ONE shared daemon
-# poller drains them (r4 advice: the previous one-thread-per-DataFrame shape
-# parked a thread forever for every plan-only caller — Observation.get has no
-# cancel — so plan builders leaked threads for the session lifetime)
-_PENDING_OBS: list = []
-_POLLER: dict = {"thread": None}
-# created at import, not lazily: two plan-builder threads racing the first
-# observation must not each install their own lock (r5 self-review)
-_OBS_LOCK = threading.Lock()
-
-
-# Spark Connect fallback state (no JVM handle to probe): ids of observations
-# whose blocking waiter returned / that already have a waiter parked
-_CONNECT_READY: set = set()
-_CONNECT_WAITERS: set = set()
+# (Observation, operator name, message) per capped plan whose first action
+# flush_hot_warnings has not read yet; bounded so plans that are built and
+# never run cannot accumulate (the oldest entry is dropped). deque
+# append/popleft are atomic, so concurrent plan builders and flushers need
+# no lock.
+_PENDING_OBS: deque = deque(maxlen=64)
 
 
 def _obs_ready(obs) -> bool:
     """Non-blocking probe: has the observed DataFrame finished its first
-    action? Classic Spark: the JVM Observation.getRowOrEmpty (an Option) —
-    the public python `get` blocks forever, which is exactly what a shared
-    poller must not do (tests/test_training_ops pins the private handle on
-    the installed Spark so an upgrade that removes it fails loudly, not
-    silently). Spark Connect has no `_jo` (r5 advice: the bare except made
-    every Connect observation permanently "not ready"): park ONE bounded
-    daemon waiter per entry on the blocking `get` and report ready once it
-    returns — a plan-only Connect entry leaks one parked thread, bounded by
-    the _MAX_TRACKED_WAITERS cap; classic-mode callers never spawn any."""
-    jo = getattr(obs, "_jo", None)
-    if jo is not None:
-        try:
-            return not jo.getRowOrEmpty().isEmpty()
-        except Exception:
-            return False
-    oid = id(obs)
-    if oid in _CONNECT_READY:
-        return True
-    if oid not in _CONNECT_WAITERS and len(_CONNECT_WAITERS) < _MAX_TRACKED_WAITERS:
-        _CONNECT_WAITERS.add(oid)
-
-        def _wait(o=obs, i=oid):
-            try:
-                _ = o.get  # blocks until the observed action completes
-                _CONNECT_READY.add(i)
-            except Exception:
-                pass
-
-        threading.Thread(
-            target=_wait, daemon=True, name="hotwarn-connect-wait"
-        ).start()
-    return False
+    action? Asks the classic JVM handle whether its result future has
+    completed; the public python `get` blocks until the action runs, and
+    the JVM `getRowOrEmpty` waits up to 100 ms per call.
+    tests/test_training_ops pins the handle on the installed Spark, so an
+    upgrade that removes it fails loudly."""
+    return obs._jo.future().isCompleted()
 
 
-def _deliver(entry) -> None:
-    import warnings
+def _distinct_counting_hot(marked: DataFrame, label: str, message: str) -> DataFrame:
+    """Distinct pairs of `marked`, plus a hot-key cap warning. `marked` holds
+    the pair rows (`_hot` null) and marker rows (pair columns null, `_hot`
+    a count of capped rows). The sum of `_hot` is counted by an Observation
+    riding the caller's OWN first action (plan builders stay lazy, no extra
+    job) and queued for `flush_hot_warnings()`, which warns
+    `"<label>: " + message.format(n=<sum>)` when it is non-zero.
 
-    obs, message = entry
-    try:
-        n = obs.get["n_hot_rows"]  # non-blocking once _obs_ready
-    except Exception:
-        return
-    if n:
-        warnings.warn(message.format(n=n))
-
-
-def _drain_ready() -> int:
-    """Deliver every ready pending observation; returns the number
-    delivered. Removal AND delivery happen under the lock: flush observes
-    "pending empty" only after every warning has actually been emitted —
-    delivering outside the lock let the poller thread remove an entry,
-    flush return, the caller's catch_warnings exit, and THEN the warn fire
-    into the void (measured 3-in-8 flake)."""
-    with _OBS_LOCK:
-        ready = [e for e in _PENDING_OBS if _obs_ready(e[0])]
-        for e in ready:
-            _PENDING_OBS.remove(e)
-            _CONNECT_READY.discard(id(e[0]))
-            _CONNECT_WAITERS.discard(id(e[0]))
-            _deliver(e)
-    return len(ready)
-
-
-def _ensure_poller() -> None:
-    t = _POLLER["thread"]
-    if t is not None and t.is_alive():
-        return
-
-    def _poll():
-        import time as _time
-
-        while True:
-            _time.sleep(0.25)
-            try:
-                _drain_ready()
-            except Exception:
-                pass
-
-    t = threading.Thread(target=_poll, daemon=True, name="hotwarn-poller")
-    _POLLER["thread"] = t
-    t.start()
-
-
-def _observe_hot_rows(df: DataFrame, flag_col, label: str, message: str) -> DataFrame:
-    """Count rows matching `flag_col` as an Observation riding the caller's
-    OWN first action — plan builders stay lazy (r3 advice: the previous eager
-    `count()` turned DataFrame construction into an action and ran the
-    banding window twice). Delivery is asynchronous via ONE shared daemon
-    poller (never a thread per call); a DataFrame that is never evaluated
-    just leaves one idle list entry. Tests drain deterministically via
-    `flush_hot_warnings()`."""
+    The markers carry the count through the final aggregate, so the
+    Observation sits on top of the operator's plan. Below the final shuffle
+    it would be lost whenever that shuffle comes out empty (no pairs, e.g.
+    an all-hot corpus): AQE then replaces the plan, observed node included,
+    with an empty relation. A Spark Connect Observation has no JVM
+    handle to probe without blocking, so under Connect no warning is
+    queued."""
     import uuid
 
-    try:
-        from pyspark.sql import Observation
-    except ImportError:  # pragma: no cover - ancient pyspark
-        return df
+    cols = [c for c in marked.columns if c != "_hot"]
+    out = marked.groupBy(*cols).agg(F.sum("_hot").alias("_hot"))
     obs = Observation(f"{label}_{uuid.uuid4().hex[:8]}")
-    df = df.observe(obs, F.sum(flag_col.cast("long")).alias("n_hot_rows"))
-    _ensure_poller()
-    with _OBS_LOCK:
-        _PENDING_OBS.append((obs, message))
-        # bound bookkeeping: plan-only entries accumulate forever otherwise;
-        # beyond the cap the oldest never-evaluated entries stop being polled
-        del _PENDING_OBS[:-_MAX_TRACKED_WAITERS]
-    return df
+    out = out.observe(obs, F.sum("_hot").alias("n_hot_rows"))
+    if getattr(obs, "_jo", None) is not None:
+        _PENDING_OBS.append((obs, label, message))
+    return out.filter(F.col(cols[0]).isNotNull()).drop("_hot")
 
 
-# bookkeeping cap for never-evaluated observations (see _observe_hot_rows)
-_MAX_TRACKED_WAITERS = 64
+def flush_hot_warnings() -> None:
+    """Warn, in the calling thread, for every queued capped plan whose first
+    action has finished; plans not yet run stay queued. Spark completes an
+    Observation from its listener bus, just after the observed action
+    returns, so the flush first lets the bus deliver the events already
+    posted (LiveListenerBus.waitUntilEmpty: returns at once on an idle bus,
+    measured 0.1 ms median and 14 ms max right after an action, and raises
+    past its 10 s bound). Without that, 3 of 150 observations read right
+    after their action were not complete yet.
 
+    A finished Observation can hold an empty row: when a stage the caller
+    put above the operator comes out empty, AQE replaces the plan, observed
+    node included, with an empty relation. The count is then unknown, and
+    that is warned instead of a count."""
+    import warnings
 
-def _spark_jobs_active() -> bool:
-    """Best-effort: is any Spark job currently running in this session?
-    Used to hold the flush grace window open while an observed action is
-    still mid-flight. Connect / no-context sessions report False."""
-    try:
-        from pyspark import SparkContext
+    from pyspark import SparkContext
 
-        sc = SparkContext._active_spark_context
-        return sc is not None and bool(sc.statusTracker().getActiveJobsIds())
-    except Exception:
-        return False
-
-
-def flush_hot_warnings(timeout: float = 10.0) -> None:
-    """Deliver pending hot-row warnings in the CALLING thread so callers that
-    just ran an action observe the warning deterministically.
-
-    Termination (r5 advice aligned the docstring AND widened the behavior):
-    polls until every pending observation is delivered, OR `timeout` seconds
-    elapse, OR there has been no delivery for GRACE=2.5 s *while no Spark job
-    is in flight* — an active job resets the grace countdown, so a slow
-    observed action no longer loses its warning to the grace window (it can
-    still lose it to `timeout`, the hard bound). Plans that were never
-    evaluated cost at most GRACE total, never N x timeout."""
-    import time
-
-    GRACE = 2.5
-    deadline = time.monotonic() + timeout
-    last_progress = time.monotonic()
-    while True:
-        if _drain_ready() or _spark_jobs_active():
-            last_progress = time.monotonic()
-        with _OBS_LOCK:
-            if not _PENDING_OBS:
-                return
-        now = time.monotonic()
-        if now >= deadline or now - last_progress > GRACE:
+    if not _PENDING_OBS:
+        return
+    SparkContext._active_spark_context._jsc.sc().listenerBus().waitUntilEmpty()
+    for _ in range(len(_PENDING_OBS)):
+        try:
+            obs, label, message = entry = _PENDING_OBS.popleft()
+        except IndexError:  # drained by a concurrent flush
             return
-        time.sleep(0.05)
+        if not _obs_ready(obs):
+            _PENDING_OBS.append(entry)
+        elif obs._jo.getRow().length() == 0:
+            warnings.warn(
+                f"{label}: hot-key cap count unavailable (the observed plan "
+                "was pruned by AQE after a later stage came out empty)"
+            )
+        elif n := obs.get["n_hot_rows"]:
+            warnings.warn(f"{label}: " + message.format(n=n))
 
 
 # --- exact -----------------------------------------------------------------
@@ -280,8 +189,9 @@ def lsh_candidate_pairs(
     only FULL-SIGNATURE-identical pairs (grouped to one representative:
     (min_id, other) per signature group — linear in bucket size, and
     identical signatures are near-certain duplicates anyway, which is what
-    degenerate buckets are made of). The number of capped buckets is counted
-    (one small aggregate-sized job) and logged. Cap default is None so the
+    degenerate buckets are made of). The banded rows in capped buckets are
+    counted by an Observation on the caller's own action (no extra job) and
+    warned by `flush_hot_warnings()`. Cap default is None so the
     plan stays single-pass; production callers at web scale should set it
     (minhash_dedup forwards its own `max_bucket`)."""
     rows_per_band = num_hashes // bands
@@ -299,18 +209,16 @@ def lsh_candidate_pairs(
 
         bsz = F.count(F.lit(1)).over(Window.partitionBy("band", "key"))
         banded = banded.withColumn("bsz", bsz)
-        banded = _observe_hot_rows(
-            banded, F.col("bsz") > max_bucket, "lsh_hot",
-            "lsh_candidate_pairs: {n} banded row(s) in buckets over "
-            f"max_bucket={max_bucket} excluded from the pairwise join; capped "
-            "buckets contribute identical-signature pairs only",
+        # per hot doc: its banded rows in capped buckets (the warned count)
+        hot_ids = (
+            banded.filter(F.col("bsz") > max_bucket)
+            .groupBy("id").agg(F.count(F.lit(1)).alias("_hot"))
         )
-        hot = banded.filter(F.col("bsz") > max_bucket)
         sig_key = F.concat_ws("|", *[F.col(f"h{i}") for i in range(num_hashes)])
         # linear rep-join, never a per-group array: groups in a degenerate
         # bucket can hold millions of ids
         hot_sigs = (
-            hot.select("id").distinct().join(signatures, "id")
+            hot_ids.join(signatures, "id")
             .select("id", sig_key.alias("sk"))
         )
         reps = hot_sigs.groupBy("sk").agg(F.min("id").alias("id_a"))
@@ -327,9 +235,16 @@ def lsh_candidate_pairs(
         .filter(F.col("a.id") < F.col("b.id"))
         .select(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
     )
-    if max_bucket is not None:
-        pairs = pairs.unionByName(capped_pairs)
-    return pairs.distinct()
+    if max_bucket is None:
+        return pairs.distinct()
+    return _distinct_counting_hot(
+        pairs.unionByName(capped_pairs)
+        .unionByName(hot_ids.select("_hot"), allowMissingColumns=True),
+        "lsh_candidate_pairs",
+        "{n} banded row(s) in buckets over "
+        f"max_bucket={max_bucket} excluded from the pairwise join; capped "
+        "buckets contribute identical-signature pairs only",
+    )
 
 
 def inverted_index_candidates(
@@ -360,51 +275,44 @@ def inverted_index_candidates(
             .select("id_a", "id_b")
             .distinct()
         )
-    # capped: ONE shuffle total (the previous shape shuffled the posting
-    # table twice: a df-cap window plus a hash self-join). The df count runs
-    # as a window over the shingle partitioning (sort-based, SPILLABLE — a
-    # degenerate 100M-doc shingle streams through it; a collect_list-with-
-    # count aggregate would have to materialize that group's full id array
-    # just to discover it is over the cap); hot postings are filtered, and
-    # only the KEPT groups — each ≤ max_shingle_df ids by construction —
-    # are collected into sorted arrays for map-side pair emission. The
-    # groupBy reuses the window's hashpartitioning(shingle), so no second
-    # exchange. This is also the correctness fix for the hot-drop warning:
-    # an Observation riding a subtree that a self-join duplicates is
-    # delivered as an EMPTY metrics row whenever the planner reuses the
-    # exchange (measured, nondeterministic) — this plan consumes the
-    # observed table exactly once, so its metrics always arrive.
+    # capped: ONE posting-table shuffle. The df count runs as a window over
+    # the shingle partitioning (sort-based, SPILLABLE — a degenerate
+    # 100M-doc shingle streams through it; a plain collect_list-with-count
+    # aggregate would have to materialize that group's full id array just
+    # to discover it is over the cap). The groupBy reuses the window's
+    # hashpartitioning(shingle), so no second exchange, and collects only
+    # the ids of KEPT shingles (each ≤ max_shingle_df by construction) into
+    # sorted arrays for map-side pair emission. A hot shingle emits one
+    # marker row carrying its df instead of pairs.
     from pyspark.sql import Window
 
-    sh = shingles.withColumn(
-        "_df", F.count(F.lit(1)).over(Window.partitionBy("shingle"))
-    )
-    sh = _observe_hot_rows(
-        sh, F.col("_df") > max_shingle_df, "invidx_hot",
-        "inverted_index_candidates: {n} posting row(s) of shingles over "
-        f"max_shingle_df={max_shingle_df} dropped from candidate "
-        "generation (verification still uses full shingle sets)",
-    )
+    kept = F.col("_df") <= max_shingle_df
     posts = (
-        sh.filter(F.col("_df") <= max_shingle_df)
+        shingles.withColumn("_df", F.count(F.lit(1)).over(Window.partitionBy("shingle")))
         .groupBy("shingle")
-        .agg(F.sort_array(F.collect_list("id")).alias("ids"))
-    )
-    pair = F.explode(
-        F.flatten(
-            F.transform(
-                F.col("ids"),
-                lambda x, i: F.transform(
-                    F.slice(F.col("ids"), i + F.lit(2), F.size(F.col("ids"))),
-                    lambda y: F.struct(x.alias("id_a"), y.alias("id_b")),
-                ),
-            )
+        .agg(
+            F.max("_df").alias("_df"),
+            F.sort_array(F.collect_list(F.when(kept, F.col("id")))).alias("ids"),
         )
     )
-    return (
-        posts.select(pair.alias("p"))
-        .select("p.id_a", "p.id_b")
-        .distinct()
+    no_id = F.lit(None).cast(shingles.schema["id"].dataType)
+    no_hot = F.lit(None).cast("long")
+    pairs = F.flatten(
+        F.transform(
+            F.col("ids"),
+            lambda x, i: F.transform(
+                F.slice(F.col("ids"), i + F.lit(2), F.size(F.col("ids"))),
+                lambda y: F.struct(x.alias("id_a"), y.alias("id_b"), no_hot.alias("_hot")),
+            ),
+        )
+    )
+    marker = F.array(F.struct(no_id.alias("id_a"), no_id.alias("id_b"), F.col("_df").alias("_hot")))
+    return _distinct_counting_hot(
+        posts.select(F.explode(F.when(kept, pairs).otherwise(marker)).alias("p")).select("p.*"),
+        "inverted_index_candidates",
+        "{n} posting row(s) of shingles over "
+        f"max_shingle_df={max_shingle_df} dropped from candidate "
+        "generation (verification still uses full shingle sets)",
     )
 
 
@@ -420,7 +328,8 @@ def array_jaccard_verify(
     join against the shingle table, so verification adds ZERO shingle-sized
     shuffles (the r7 shape; `jaccard_verify` below remains the join-based
     twin for callers without a stats aggregate). Same 64-bit-collision
-    tolerance as the hashed-key join it replaces."""
+    tolerance as the hashed-key join it replaces. Pairs sharing no shingle
+    are dropped at any threshold, as the join form never forms them."""
     va = doc_stats.select(
         F.col("id").alias("id_a"), F.col("n").alias("n_a"), F.col("hs").alias("hs_a")
     )
@@ -435,7 +344,7 @@ def array_jaccard_verify(
             "jaccard",
             F.round(F.col("n_inter") / (F.col("n_a") + F.col("n_b") - F.col("n_inter")), 6),
         )
-        .filter(F.col("jaccard") >= threshold)
+        .filter((F.col("n_inter") > 0) & (F.col("jaccard") >= threshold))
         .select("id_a", "id_b", "jaccard")
     )
 
@@ -631,14 +540,11 @@ def simhash_near_dups(
         banded = banded.withColumn(
             "bsz", F.count(F.lit(1)).over(Window.partitionBy("band", "key"))
         )
-        banded = _observe_hot_rows(
-            banded, F.col("bsz") > max_bucket, "simhash_hot",
-            "simhash_near_dups: {n} banded row(s) in buckets over "
-            f"max_bucket={max_bucket} excluded from the pairwise join; capped "
-            "buckets contribute identical-simhash pairs only",
+        # per hot doc: its banded rows in capped buckets (the warned count)
+        hot_ids = (
+            banded.filter(F.col("bsz") > max_bucket)
+            .groupBy("id", "simhash").agg(F.count(F.lit(1)).alias("_hot"))
         )
-        hot = banded.filter(F.col("bsz") > max_bucket)
-        hot_ids = hot.select("id", "simhash").distinct()
         reps = hot_ids.groupBy("simhash").agg(F.min("id").alias("id_a"))
         capped_pairs = (
             hot_ids.join(reps, "simhash")
@@ -656,11 +562,16 @@ def simhash_near_dups(
             F.bit_count(F.col("a.simhash").bitwiseXOR(F.col("b.simhash"))).alias("hamming"),
         )
     )
-    if max_bucket is not None:
-        pairs = pairs.unionByName(capped_pairs.select(
-            "id_a", "id_b", F.col("hamming").cast("int")
-        ))
-    return pairs.distinct()
+    if max_bucket is None:
+        return pairs.distinct()
+    return _distinct_counting_hot(
+        pairs.unionByName(capped_pairs.select("id_a", "id_b", F.col("hamming").cast("int")))
+        .unionByName(hot_ids.select("_hot"), allowMissingColumns=True),
+        "simhash_near_dups",
+        "{n} banded row(s) in buckets over "
+        f"max_bucket={max_bucket} excluded from the pairwise join; capped "
+        "buckets contribute identical-simhash pairs only",
+    )
 
 
 # --- embedding near-dup --------------------------------------------------------

@@ -16,8 +16,8 @@ engine that becomes:
   counts sum; linking is a pure per-(alias_key, surface) function, so the
   merge equals the batch kg_nodes) and builds kg_edge_stats from the
   committed edges with the batch aggregate (exact n_convs);
-- a `lineage` table records (bucket, turns_in, raw_triples, edges, wall_sec)
-  per bucket — per-partition lineage + triple-count metrics.
+- a `lineage` table records (bucket, turns_in, raw_triples, edges, wall_sec,
+  commit_group) per bucket — per-partition lineage + triple-count metrics.
 
 Failure model: a crash mid-group leaves no marker; rerun reprocesses exactly
 those buckets (writes replace the bucket partition — idempotent), and
@@ -125,7 +125,8 @@ class ResumableKGRun:
             _GROUP, os.path.join(self.out_dir, "node_partials"),
         )
         # lineage metrics for this group, one row per bucket, counted from
-        # the composition's own outputs
+        # the composition's own outputs; keyed by bucket, so a resume with
+        # another group size replaces a crashed group's rows
         lineage = (
             self._per_bucket(kg.turns, "turns_in")
             .join(self._per_bucket(kg.raw_triples, "raw_triples"), _BUCKET, "left")
@@ -135,7 +136,7 @@ class ResumableKGRun:
             .withColumn("committed_at", F.current_timestamp())
             .withColumn(_GROUP, key)
         )
-        _overwrite(lineage, _GROUP, os.path.join(self.out_dir, "lineage"))
+        _overwrite(lineage, _BUCKET, os.path.join(self.out_dir, "lineage"))
 
         # atomic done marker AFTER data + lineage are on disk
         marker = _marker_path(self.out_dir, grp)

@@ -116,6 +116,17 @@ class FileBackedAliasIndex:
 MAX_BROADCAST_KEYS = 20_000_000
 
 
+def _ship_index(spark: SparkSession, rows):
+    """Broadcast an AliasIndex over already-collected `alias_key` rows."""
+    from ..core.patterns import AliasIndex
+
+    idx = AliasIndex(frozenset(r[0] for r in rows))
+    try:
+        return spark.sparkContext.broadcast(idx)
+    except Exception:  # Spark Connect: no SparkContext on the client
+        return _ClosureBroadcast(idx)
+
+
 def broadcast_alias_keys(
     spark: SparkSession,
     aliases: DataFrame,
@@ -132,8 +143,6 @@ def broadcast_alias_keys(
     gone exactly when it would hurt. On a real cluster pass `spill_dir` on
     SHARED storage (HDFS/S3 fuse mount); the default tempdir is correct only
     for local mode."""
-    from ..core.patterns import AliasIndex
-
     proj = aliases.select("alias_key")
     # LocalRelation fast path (r6): a dictionary built from driver-resident
     # literals (VALUES / parallelized local data the optimizer folded) never
@@ -149,11 +158,7 @@ def broadcast_alias_keys(
     except Exception:  # Spark Connect or plan-access change
         is_local = False
     if is_local:
-        idx = AliasIndex(frozenset(r[0] for r in proj.collect()))
-        try:
-            return spark.sparkContext.broadcast(idx)
-        except Exception:  # Spark Connect: no SparkContext on the client
-            return _ClosureBroadcast(idx)
+        return _ship_index(spark, proj.collect())
 
     distinct = proj.distinct()
     # size probe: one limit(1M+1)+collect detects-and-fetches dictionaries up
@@ -165,11 +170,7 @@ def broadcast_alias_keys(
     probe_cap = min(max_broadcast_keys, 1_000_000)
     probe = distinct.limit(probe_cap + 1).collect()
     if len(probe) <= probe_cap:
-        idx = AliasIndex(frozenset(r[0] for r in probe))
-        try:
-            return spark.sparkContext.broadcast(idx)
-        except Exception:  # Spark Connect: no SparkContext on the client
-            return _ClosureBroadcast(idx)
+        return _ship_index(spark, probe)
     n_keys = distinct.count()
     if n_keys > max_broadcast_keys:
         import os
@@ -190,11 +191,7 @@ def broadcast_alias_keys(
             # reader scans the directory as one dataset
             distinct.write.mode("overwrite").parquet(out_dir)
         return FileBackedAliasIndex(out_dir)
-    idx = AliasIndex(frozenset(r[0] for r in distinct.collect()))
-    try:
-        return spark.sparkContext.broadcast(idx)
-    except Exception:  # Spark Connect: no SparkContext on the client
-        return _ClosureBroadcast(idx)
+    return _ship_index(spark, distinct.collect())
 
 
 def build_kg(

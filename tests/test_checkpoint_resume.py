@@ -120,6 +120,12 @@ def test_crash_before_marker_resume_with_other_group_size(spark, inputs, tmp_pat
     assert s["complete"] and s["groups_processed"] == 2
     resumed.finalize()
 
+    # lineage: the crashed group's rows are replaced, not kept beside the
+    # resumed groups' rows
+    lineage = spark.read.parquet(f"{crashed}/lineage").toPandas()
+    assert sorted(lineage["bucket"]) == list(range(8))
+    assert int(lineage["edges"].sum()) == spark.read.parquet(f"{crashed}/kg_edges").count()
+
     for table, key in (("kg_nodes", ["cui"]),
                        ("kg_edge_stats", ["subj_cui", "pred", "obj_cui"])):
         pd.testing.assert_frame_equal(

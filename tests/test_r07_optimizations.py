@@ -73,7 +73,8 @@ def test_regex_shingles_other_spans(spark, n):
         assert got.get(i, set()) == _ref_shingles(t, n), f"n={n} text={t!r}"
 
 
-def test_array_jaccard_verify_equals_join_verify(spark):
+@pytest.mark.parametrize("threshold", [0.2, 0.0])
+def test_array_jaccard_verify_equals_join_verify(spark, threshold):
     from knowledge_graph_integration_rag_biomedical_qna_spark.operators.dedup import (
         array_jaccard_verify,
         jaccard_verify,
@@ -92,12 +93,12 @@ def test_array_jaccard_verify_equals_join_verify(spark):
     pairs = spark.createDataFrame(
         [(a, b) for a in range(5) for b in range(a + 1, 5)], "id_a long, id_b long"
     )
-    old = jaccard_verify(pairs, sh, threshold=0.2)
+    old = jaccard_verify(pairs, sh, threshold=threshold)
     stats = sh.groupBy("id").agg(
         F.count(F.lit(1)).alias("n"),
         F.collect_list(F.xxhash64("shingle")).alias("hs"),
     )
-    new = array_jaccard_verify(pairs, stats, threshold=0.2)
+    new = array_jaccard_verify(pairs, stats, threshold=threshold)
     assert old.exceptAll(new).count() == 0
     assert new.exceptAll(old).count() == 0
     assert new.count() > 0  # the comparison is not vacuous

@@ -629,6 +629,29 @@ def test_inverted_index_hot_shingle_cap(spark):
     assert len(got) < 100
 
 
+def test_inverted_index_hot_shingle_cap_all_hot_corpus(spark):
+    """Every shingle over the cap: no posting survives, so no pair does
+    either. The drop warning must still arrive with the full count (50 docs
+    x 4 shingles), although the pair shuffle comes out empty."""
+    import warnings
+
+    from knowledge_graph_integration_rag_biomedical_qna_spark.operators.dedup import (
+        flush_hot_warnings,
+        inverted_index_candidates,
+        with_shingles,
+    )
+
+    rows = [(i, "all rights reserved by the site") for i in range(50)]
+    docs = spark.createDataFrame(rows, "doc_id long, text string")
+    with warnings.catch_warnings(record=True) as caught:
+        warnings.simplefilter("always")
+        cand = inverted_index_candidates(with_shingles(docs, n=3), max_shingle_df=10).toPandas()
+        flush_hot_warnings()
+    assert len(cand) == 0
+    msgs = [str(w.message) for w in caught if "max_shingle_df" in str(w.message)]
+    assert msgs and msgs[0].startswith("inverted_index_candidates: 200 posting row(s)"), msgs
+
+
 def test_ivf_reference_design_point_768d(spark):
     """IVF at the reference's vector geometry (768-d MedCPT embeddings,
     retrieve.py:22,34): deterministic clustered corpus, 64 lists, nprobe 8 —
@@ -831,13 +854,12 @@ def test_matmul_query_collect_guard_routes_to_fold(spark, monkeypatch):
 
 
 def test_hot_warn_shared_poller_no_thread_leak(spark):
-    """r4 advice: plan-only callers used to park one waiter thread each for
-    the session lifetime (Observation.get has no cancel). The shared-poller
-    shape must keep the thread census flat: N never-evaluated observed plans
-    add list entries, not threads."""
+    """Capped plans that are built and never run start no thread, and
+    flush_hot_warnings reads them in the calling thread without waiting:
+    they stay queued and the flush returns at once."""
     import threading
+    import time
 
-    from knowledge_graph_integration_rag_biomedical_qna_spark.operators import dedup
     from knowledge_graph_integration_rag_biomedical_qna_spark.operators.dedup import (
         flush_hot_warnings,
         lsh_candidate_pairs,
@@ -855,28 +877,22 @@ def test_hot_warn_shared_poller_no_thread_leak(spark):
         lsh_candidate_pairs(sigs, num_hashes=16, bands=4, max_bucket=2)
         for _ in range(12)  # plan-only: never evaluated
     ]
-    after = threading.active_count()
-    # at most the single shared poller thread appears; never one per plan
-    assert after - before <= 1, (before, after)
+    t0 = time.monotonic()
+    flush_hot_warnings()
+    assert time.monotonic() - t0 < 0.5
+    assert threading.active_count() == before
     hot_threads = [t for t in threading.enumerate() if t.name.startswith("hotwarn")]
-    assert len(hot_threads) <= 1, [t.name for t in hot_threads]
-    # plan-only entries must not stall the deterministic drain
-    import time
-
-    t0 = time.time()
-    flush_hot_warnings(timeout=5.0)
-    # the r4-review property: a backlog of N never-evaluated plans costs at
-    # most ONE timeout (the grace window, extended by stray deliveries from
-    # other tests, is capped by the deadline) — never N x timeout
-    assert time.time() - t0 < 6.0
+    assert not hot_threads, [t.name for t in hot_threads]
     assert plans  # keep references alive through the census
 
 
 def test_observation_private_handle_pinned(spark):
-    """The shared poller's non-blocking probe uses the classic Observation's
-    private JVM handle (obs._jo.getRowOrEmpty). Pin it on the installed
-    Spark: an upgrade that removes or renames it must fail HERE, loudly —
-    not silently stop delivering hot-bucket warnings (r5 advice)."""
+    """flush_hot_warnings' non-blocking probe uses the classic Observation's
+    private JVM handle (obs._jo.future().isCompleted), and it relies on the
+    row being set once the listener bus has delivered the events of the
+    observed action (LiveListenerBus.waitUntilEmpty). Pin both on the
+    installed Spark: an upgrade that breaks either must fail HERE, loudly —
+    not silently stop delivering hot-bucket warnings."""
     from pyspark.sql import Observation
     from pyspark.sql import functions as F
 
@@ -889,44 +905,11 @@ def test_observation_private_handle_pinned(spark):
     # before any action: handle exists and reports not-ready (no exception
     # swallowed into a permanent False)
     assert hasattr(obs, "_jo")
-    assert obs._jo.getRowOrEmpty().isEmpty()
+    assert not obs._jo.future().isCompleted()
     assert _obs_ready(obs) is False
     df.count()
+    spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
     assert _obs_ready(obs) is True
-
-
-def test_obs_ready_connect_fallback_delivers():
-    """An Observation without a _jo (Spark Connect shape) must still become
-    ready: _obs_ready parks one bounded daemon waiter on the blocking get
-    and reports ready once it returns (r5 advice: the old bare except made
-    Connect observations permanently not-ready, silently dropping hot
-    warnings)."""
-    import threading
-    import time
-
-    from knowledge_graph_integration_rag_biomedical_qna_spark.operators.dedup import (
-        _obs_ready,
-    )
-
-    release = threading.Event()
-
-    class FakeConnectObservation:
-        # no _jo attribute, like pyspark.sql.connect.observation.Observation
-        @property
-        def get(self):
-            release.wait(timeout=10)
-            return {"n_hot_rows": 3}
-
-    obs = FakeConnectObservation()
-    assert _obs_ready(obs) is False  # waiter parked, get still blocking
-    assert _obs_ready(obs) is False  # second probe must not stack waiters
-    hot = [t for t in threading.enumerate() if t.name == "hotwarn-connect-wait"]
-    assert len(hot) == 1, [t.name for t in hot]
-    release.set()
-    deadline = time.time() + 5
-    while not _obs_ready(obs):
-        assert time.time() < deadline, "connect fallback never became ready"
-        time.sleep(0.02)
 
 
 def test_minhash_family_recall_profile_near_dups(spark):
