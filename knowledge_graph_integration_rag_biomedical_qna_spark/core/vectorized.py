@@ -6,10 +6,10 @@ Arrow compute kernels over a flattened token stream:
 - sentence split / ws-normalize: RE2 `replace_substring_regex` + C split
   (Python's lookbehind split is re-expressed as terminator-capture + \\x00
   sentinel insertion, bit-identical on ASCII input)
-- tokenize: C split on the non-token char class + leading-punct strip
-  (provably equal to `re.finditer(TOKEN)`: a token is the suffix of a
-  separator-delimited field starting at its first alphanumeric)
-- per-token normalize: `utf8_lower` + trailing-punct regex strip (tokens
+- tokenize: numpy byte-class LUTs over the sentence buffer find the maximal
+  [A-Za-z0-9'-] runs; a token is each run's suffix from its first
+  alphanumeric (exactly `re.finditer(text._TOKEN)`), lowered by a byte LUT
+- per-token normalize: lowering + trailing-punct regex strip (tokens
   always start alphanumeric, so alias normalization reduces to these two)
 - dictionary & predicate probes: `is_in` hash joins against the alias-key /
   predicate-phrase sets, one per n-gram length (<= 3 alias, <= 4 predicate);
@@ -18,11 +18,12 @@ Arrow compute kernels over a flattened token stream:
   only over HIT positions (output-sized, not token-sized)
 
 Rows whose text is non-ASCII (or contains the \\x00 sentinel) take the exact
-per-row Python path — RE2's ASCII `\\s` differs from Python's Unicode `\\s`
-there. Semantics are row-for-row identical to `patterns.detect_mentions` /
-`detect_predicates` / `assemble_triples` (property-tested in
-tests/test_property.py): same greedy longest-first order, same normalization
-(predicates lower-only, aliases lower+edge-strip), same confidence rounding.
+per-row Python path `_extract_slow` — RE2's ASCII `\\s` differs from Python's
+Unicode `\\s` there. That path is also the specification: the fast path is
+row-for-row identical to it (property-tested in tests/test_property.py):
+same greedy longest-first order, same normalization (predicates lower-only,
+aliases lower+edge-strip), same confidence rounding. Both paths take and
+return Arrow, so no pandas sits between mapInArrow and the kernel.
 
 Reference analog: the engine-side replacement for the reference's batched
 encode loop (rag2-retriever/query_encode.py:51-78) — the per-item model call
@@ -32,15 +33,12 @@ becomes a per-batch columnar pass.
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
 
 from .config import MAX_ARG_GAP
 from .patterns import PREDICATE_LEXICON, AliasIndex, _as_index, extract_mentions_and_triples
-from .text import split_sentences, tokenize
+from .text import split_sentences
 
 _SENT_MARK_PAT = r"([.!?;])\s+"     # lookbehind-free form of text._SENT_BOUNDARY
-_NONTOKEN_PAT = r"[^A-Za-z0-9'\-]+"  # complement of text._TOKEN char classes
-_LEAD_PUNCT_PAT = r"^['\-]+"
 _TRAIL_PUNCT_PAT = r"['\-]+$"
 _WS_PAT = r"\s+"
 _SEP = "\x00"
@@ -62,12 +60,6 @@ _CONF_TABLE = np.array(
     [max(0.1, round(1.0 - 0.1 * g, 4)) for g in range(2 * MAX_ARG_GAP + 1)],
     dtype=np.float64,
 )
-
-_UNIFIED_COLUMNS = [
-    "conv_id", "turn_idx", "sent_idx", "kind", "mention_idx",
-    "surface", "alias_key", "tok_start", "tok_end",
-    "subj_surface", "subj_key", "pred", "obj_surface", "obj_key", "confidence",
-]
 
 # per-process cache: id(AliasIndex) -> (AliasIndex strong ref, {len: pa.Array})
 # The strong ref pins the index so the id can't be reused; at most one
@@ -152,28 +144,6 @@ def _pred_norm_map():
         hit = (pa.array(phrases, type=pa.string()), pa.array(norms, type=pa.string()))
         _PA_VOCAB_CACHE[key] = hit
     return hit
-
-
-def _empty_unified() -> pd.DataFrame:
-    return pd.DataFrame(
-        {
-            "conv_id": pd.Series([], dtype=object),
-            "turn_idx": np.array([], dtype="int32"),
-            "sent_idx": np.array([], dtype="int32"),
-            "kind": pd.Series([], dtype=object),
-            "mention_idx": np.array([], dtype="int32"),
-            "surface": pd.Series([], dtype=object),
-            "alias_key": pd.Series([], dtype=object),
-            "tok_start": np.array([], dtype="int32"),
-            "tok_end": np.array([], dtype="int32"),
-            "subj_surface": pd.Series([], dtype=object),
-            "subj_key": pd.Series([], dtype=object),
-            "pred": pd.Series([], dtype=object),
-            "obj_surface": pd.Series([], dtype=object),
-            "obj_key": pd.Series([], dtype=object),
-            "confidence": np.array([], dtype="float64"),
-        }
-    )
 
 
 def _ngram_masks(values, sent_of: np.ndarray, vocab_by_len: dict, pc):
@@ -319,23 +289,17 @@ def _tokenize_arrow(sent_arr, pa):
     """Zero-regex tokenizer over the Arrow string buffer: numpy byte-class
     masks find maximal [A-Za-z0-9'-] runs (split at sentence boundaries); a
     token is each run's suffix from its first alphanumeric — exactly
-    re.finditer(text._TOKEN). Returns (low arrow array, sent_of, pos_in_sent,
-    abs_start, abs_end, data bytes view) with ABSOLUTE char offsets into the
-    shared sentence buffer (ASCII: bytes == chars), or None when buffer
-    assumptions don't hold (caller falls back to the RE2 path)."""
+    re.finditer(text._TOKEN). `sent_arr` is a null-free `pa.string()` array
+    of non-empty sentences (extract_unified_batches casts its input once).
+    Returns (low arrow array, sent_of, pos_in_sent, abs_start, abs_end, data
+    bytes view) with ABSOLUTE char offsets into the shared sentence buffer
+    (ASCII: bytes == chars), or "EMPTY" when no sentence holds a token."""
     n = len(sent_arr)
-    if sent_arr.type != pa.string() or sent_arr.null_count:
-        return None
     bufs = sent_arr.buffers()
-    if bufs[1] is None or bufs[2] is None:
-        return None
     off = np.frombuffer(bufs[1], dtype=np.int32)[sent_arr.offset : sent_arr.offset + n + 1]
-    data_all = np.frombuffer(bufs[2], dtype=np.uint8)
     lo, hi = int(off[0]), int(off[-1])
-    d = data_all[lo:hi]
+    d = np.frombuffer(bufs[2], dtype=np.uint8)[lo:hi]
     rel = (off - lo).astype(np.int64)
-    if hi == lo:
-        return "EMPTY"  # no bytes at all
     C = _LUT_CONT[d]
     S = _LUT_START[d]
     at_start = np.zeros(len(d), dtype=bool)
@@ -382,47 +346,31 @@ def _tokenize_arrow(sent_arr, pa):
     return low, sent_of.astype(np.int64), pos_in_sent, tok_start, tok_end, d
 
 
-def _extract_slow(pdf: pd.DataFrame, idx: AliasIndex) -> pd.DataFrame:
-    """Exact per-row path for non-ASCII / sentinel-bearing rows (rare)."""
-    conv, ti, si_l, kind, midx = [], [], [], [], []
-    surf, akey, ts_, te_ = [], [], [], []
-    ss, sk, pr, os_, ok_, cf = [], [], [], [], [], []
-    for conv_id, turn_idx, text in zip(pdf["conv_id"], pdf["turn_idx"], pdf["text"]):
+def _extract_slow(conv, turn, texts, idx: AliasIndex):
+    """Exact per-row path: (conv, turn, texts) Arrow arrays -> one unified
+    RecordBatch (or None when there is nothing to emit). Takes the rows the
+    fast path can't (non-ASCII / routing chars, rare), and is the
+    specification the fast path is property-tested against: per sentence,
+    mention rows (kind='m') then triple rows (kind='t'); columns a kind does
+    not use carry -1 / NaN / null."""
+    import pyarrow as pa
+
+    rows = []
+    for conv_id, turn_idx, text in zip(conv.to_pylist(), turn.to_pylist(), texts.to_pylist()):
         for si, sent in enumerate(split_sentences(text)):
             mentions, triples = extract_mentions_and_triples(sent, idx)
             for mi, m in enumerate(mentions):
-                conv.append(conv_id); ti.append(turn_idx); si_l.append(si)
-                kind.append("m"); midx.append(mi)
-                surf.append(m.surface); akey.append(m.alias_key)
-                ts_.append(m.tok_start); te_.append(m.tok_end)
-                ss.append(None); sk.append(None); pr.append(None)
-                os_.append(None); ok_.append(None); cf.append(np.nan)
+                rows.append((conv_id, turn_idx, si, "m", mi, m.surface, m.alias_key,
+                             m.tok_start, m.tok_end, None, None, None, None, None, np.nan))
             for t in triples:
-                conv.append(conv_id); ti.append(turn_idx); si_l.append(si)
-                kind.append("t"); midx.append(-1)
-                surf.append(None); akey.append(None)
-                ts_.append(-1); te_.append(-1)
-                ss.append(t.subj_surface); sk.append(t.subj_key); pr.append(t.pred)
-                os_.append(t.obj_surface); ok_.append(t.obj_key); cf.append(t.confidence)
-    return pd.DataFrame(
-        {
-            "conv_id": conv,
-            "turn_idx": np.asarray(ti, dtype="int32"),
-            "sent_idx": np.asarray(si_l, dtype="int32"),
-            "kind": pd.Series(kind, dtype=object),
-            "mention_idx": np.asarray(midx, dtype="int32"),
-            "surface": pd.Series(surf, dtype=object),
-            "alias_key": pd.Series(akey, dtype=object),
-            "tok_start": np.asarray(ts_, dtype="int32"),
-            "tok_end": np.asarray(te_, dtype="int32"),
-            "subj_surface": pd.Series(ss, dtype=object),
-            "subj_key": pd.Series(sk, dtype=object),
-            "pred": pd.Series(pr, dtype=object),
-            "obj_surface": pd.Series(os_, dtype=object),
-            "obj_key": pd.Series(ok_, dtype=object),
-            "confidence": np.asarray(cf, dtype="float64"),
-        },
-        columns=_UNIFIED_COLUMNS,
+                rows.append((conv_id, turn_idx, si, "t", -1, None, None, -1, -1,
+                             t.subj_surface, t.subj_key, t.pred, t.obj_surface, t.obj_key,
+                             t.confidence))
+    if not rows:
+        return None
+    schema = _unified_pa_schema()
+    return pa.RecordBatch.from_arrays(
+        [pa.array(col, type=f.type) for col, f in zip(zip(*rows), schema)], schema=schema
     )
 
 
@@ -461,100 +409,33 @@ def _unified_pa_schema():
 
 def extract_unified_batches(conv, turn, texts, alias_keys):
     """Arrow-native core: (conv_id, turn_idx, text) Arrow arrays -> iterator
-    of unified-extraction RecordBatches (UNIFIED_SCHEMA order), no pandas on
-    the fast path in EITHER direction — this is what mapInArrow calls, so the
-    per-row Python-string materialization of the mapInPandas input/output
-    conversion layers never happens. Mixed batches yield one RecordBatch per
-    maximal fast/slow run, preserving exact row order."""
+    of unified-extraction RecordBatches (UNIFIED_SCHEMA order), no pandas in
+    EITHER direction — this is what mapInArrow calls. Texts are null-filled
+    and cast to `pa.string()` once here, so both paths see int32-offset
+    buffers. A batch yields one RecordBatch per maximal fast/slow run of
+    rows, preserving exact row order."""
     import pyarrow as pa
     import pyarrow.compute as pc
 
     idx: AliasIndex = _as_index(alias_keys)
-    if len(texts) == 0:
+    n = len(texts)
+    if n == 0:
         return
-    texts = pc.fill_null(texts, "")
+    texts = pc.cast(pc.fill_null(texts, ""), pa.string())
     ok = _fast_path_ok_arrow(texts)
-    if ok.all():
-        rb = _extract_fast(conv, turn, texts, idx)
+    bounds = np.r_[0, np.flatnonzero(ok[1:] != ok[:-1]) + 1, n].tolist()
+    for a, b in zip(bounds[:-1], bounds[1:]):
+        path = _extract_fast if ok[a] else _extract_slow
+        rb = path(conv.slice(a, b - a), turn.slice(a, b - a), texts.slice(a, b - a), idx)
         if rb is not None:
             yield rb
-        return
-    n = len(texts)
-    run_start = 0
-    for i in range(1, n + 1):
-        if i == n or ok[i] != ok[run_start]:
-            ln = i - run_start
-            if ok[run_start]:
-                rb = _extract_fast(
-                    conv.slice(run_start, ln), turn.slice(run_start, ln),
-                    texts.slice(run_start, ln), idx,
-                )
-                if rb is not None:
-                    yield rb
-            else:
-                seg = pd.DataFrame(
-                    {
-                        "conv_id": conv.slice(run_start, ln).to_pylist(),
-                        "turn_idx": turn.slice(run_start, ln).to_pylist(),
-                        "text": texts.slice(run_start, ln).to_pylist(),
-                    }
-                )
-                slow = _extract_slow(seg, idx)
-                if len(slow):
-                    yield pa.RecordBatch.from_pandas(
-                        slow, schema=_unified_pa_schema(), preserve_index=False
-                    )
-            run_start = i
-
-
-def extract_unified_pdf(pdf: pd.DataFrame, alias_keys) -> pd.DataFrame:
-    """One pandas batch of turns (conv_id, turn_idx, text) -> unified
-    extraction rows (UNIFIED_SCHEMA of operators.extraction): mention rows
-    (kind='m') then triple rows (kind='t') per sentence, in sentence order —
-    the exact row set AND row order of the per-row Python path. Pandas facade
-    over extract_unified_batches (tests / direct callers); the Spark hot path
-    uses the Arrow batches directly."""
-    import pyarrow as pa
-
-    if len(pdf) == 0:
-        return _empty_unified()
-    pdf = pdf.reset_index(drop=True)
-    conv = pa.array(pdf["conv_id"].to_numpy(dtype=object), type=pa.string())
-    turn = pa.array(pdf["turn_idx"].to_numpy())
-    try:
-        texts = pa.array(pdf["text"].to_numpy(dtype=object), type=pa.string())
-    except (pa.lib.ArrowInvalid, pa.lib.ArrowTypeError, TypeError):
-        # non-string garbage in text: normalize like the slow path would
-        texts = pa.array(
-            [t if isinstance(t, str) else "" for t in pdf["text"]], type=pa.string()
-        )
-    batches = list(extract_unified_batches(conv, turn, texts, alias_keys))
-    if not batches:
-        return _empty_unified()
-    out = pa.Table.from_batches(batches, schema=_unified_pa_schema()).to_pandas()
-    out["kind"] = out["kind"].astype(object)
-    return out
-
-
-_STRING_COLS = ("surface", "alias_key", "subj_surface", "subj_key",
-                "pred", "obj_surface", "obj_key")
-
-
-def _strings_to_object(df: pd.DataFrame) -> pd.DataFrame:
-    """ArrowDtype string columns -> object dtype with None nulls (the slow
-    path's representation), for mixed-batch concat and direct-pandas users."""
-    for c in _STRING_COLS:
-        s = df[c]
-        if s.dtype != object:
-            o = s.astype(object)
-            df[c] = o.where(pd.notna(o), None)
-    return df
 
 
 def _extract_fast(conv, turn, texts, idx: AliasIndex):
     """All-ASCII fast path: (conv, turn, texts) Arrow arrays -> one unified
-    RecordBatch (or None when there is nothing to emit). Arrow/numpy end to
-    end; Python touches only hit positions."""
+    RecordBatch (or None when there is nothing to emit), row-for-row equal
+    to `_extract_slow`. Arrow/numpy end to end; Python touches only hit
+    positions."""
     import pyarrow as pa
     import pyarrow.compute as pc
 
@@ -588,45 +469,18 @@ def _extract_fast(conv, turn, texts, idx: AliasIndex):
     grp_len = np.diff(np.r_[grp_start, nsent])
     sent_idx_arr = np.arange(nsent) - np.repeat(grp_start, grp_len)
 
-    # --- tokens: zero-regex byte-LUT scan over the Arrow buffer (falls back
-    # to the RE2 split pipeline if buffer assumptions don't hold) ---
+    # --- tokens: zero-regex byte-LUT scan over the Arrow buffer ---
     tk = _tokenize_arrow(sent_arr, pa)
     if tk == "EMPTY":
         return None
-    if tk is not None:
-        low, sent_of, pos_in_sent, tok_abs_start, tok_abs_end, sent_bytes = tk
-        total = len(sent_of)
-    else:
-        fields = pc.split_pattern_regex(sent_arr, pattern=_NONTOKEN_PAT)
-        f_off = fields.offsets.to_numpy()
-        tok_raw = pc.replace_substring_regex(
-            fields.flatten(), pattern=_LEAD_PUNCT_PAT, replacement=""
-        )
-        nz_idx = np.flatnonzero(
-            pc.greater(pc.utf8_length(tok_raw), 0).to_numpy(zero_copy_only=False)
-        )
-        total = nz_idx.size
-        if total == 0:
-            return None
-        tok_orig = pc.take(tok_raw, pa.array(nz_idx))
-        low = pc.utf8_lower(tok_orig)
-        sent_of = np.repeat(np.arange(nsent), np.diff(f_off))[nz_idx]
-        first = np.flatnonzero(np.r_[True, sent_of[1:] != sent_of[:-1]])
-        cnt = np.diff(np.r_[first, total])
-        pos_in_sent = np.arange(total) - np.repeat(first, cnt)
-        tok_abs_start = tok_abs_end = sent_bytes = None
+    low, sent_of, pos_in_sent, tok_abs_start, tok_abs_end, sent_bytes = tk
+    total = len(sent_of)
 
     # trailing '- strip only when some token actually ends with one (checked
     # on the raw byte buffer — skips the full regex rewrite on clean batches)
+    last = sent_bytes[tok_abs_end - 1]  # tokens are non-empty by construction
     norm = low
-    try:
-        _lb = low.buffers()
-        _loff = np.frombuffer(_lb[1], np.int32)[low.offset : low.offset + len(low) + 1]
-        _ldat = np.frombuffer(_lb[2], np.uint8)
-        _last = _ldat[_loff[1:] - 1]  # tokens are non-empty by construction
-        if ((_last == 39) | (_last == 45)).any():  # ' or -
-            norm = pc.replace_substring_regex(low, pattern=_TRAIL_PUNCT_PAT, replacement="")
-    except (TypeError, ValueError, IndexError):
+    if ((last == 39) | (last == 45)).any():  # ' or -
         norm = pc.replace_substring_regex(low, pattern=_TRAIL_PUNCT_PAT, replacement="")
 
     # --- greedy dictionary match (aliases on norm, predicates on low) ---
@@ -649,43 +503,20 @@ def _extract_fast(conv, turn, texts, idx: AliasIndex):
         mg_len = np.diff(np.r_[mg_start, n_m])
         ment_midx = np.arange(n_m) - np.repeat(mg_start, mg_len)
         ment_key_arr = _gather_strings_arrow(m_pos, m_span, alias_masks, pc)
-        if sent_bytes is not None:
-            # absolute char offsets are free on the byte path: surface =
-            # sentence buffer slice from first token start to last token end,
-            # gathered into ONE Arrow string buffer (no Python strings)
-            starts = tok_abs_start[m_pos].astype(np.int64)
-            ends = tok_abs_end[m_pos + m_span - 1].astype(np.int64)
-            slens = ends - starts
-            s_off = np.zeros(n_m + 1, dtype=np.int64)
-            np.cumsum(slens, out=s_off[1:])
-            g = np.arange(int(s_off[-1]), dtype=np.int64) + np.repeat(
-                starts - s_off[:-1], slens
-            )
-            ment_surf_arr = pa.Array.from_buffers(
-                pa.string(), n_m,
-                [None, pa.py_buffer(s_off.astype(np.int32).tobytes()),
-                 pa.py_buffer(sent_bytes[g].tobytes())],
-            )
-        else:
-            ment_surf = np.empty(n_m, dtype=object)
-            single = m_span == 1
-            if single.any():
-                ment_surf[single] = pc.take(tok_orig, pa.array(m_pos[single])).to_pylist()
-            multi_i = np.flatnonzero(~single)
-            if multi_i.size:
-                sent_py: dict[int, str] = {}
-                toks_py: dict[int, list] = {}
-                for i in multi_i:
-                    s = int(ment_sent[i])
-                    toks = toks_py.get(s)
-                    if toks is None:
-                        sent_py[s] = sent_arr[s].as_py()
-                        toks = tokenize(sent_py[s])
-                        toks_py[s] = toks
-                    cs = toks[int(ment_ts[i])][1]
-                    ce = toks[int(ment_te[i]) - 1][2]
-                    ment_surf[i] = sent_py[s][cs:ce]
-            ment_surf_arr = pa.array(ment_surf, type=pa.string())
+        # absolute char offsets are free on the byte path: surface = sentence
+        # buffer slice from first token start to last token end, gathered
+        # into ONE Arrow string buffer (no Python strings)
+        starts = tok_abs_start[m_pos].astype(np.int64)
+        ends = tok_abs_end[m_pos + m_span - 1].astype(np.int64)
+        slens = ends - starts
+        s_off = np.zeros(n_m + 1, dtype=np.int64)
+        np.cumsum(slens, out=s_off[1:])
+        g = np.arange(int(s_off[-1]), dtype=np.int64) + np.repeat(starts - s_off[:-1], slens)
+        ment_surf_arr = pa.Array.from_buffers(
+            pa.string(), n_m,
+            [None, pa.py_buffer(s_off.astype(np.int32).tobytes()),
+             pa.py_buffer(sent_bytes[g].tobytes())],
+        )
     else:
         ment_midx = np.array([], dtype=np.int64)
         ment_key_arr = pa.array([], type=pa.string())

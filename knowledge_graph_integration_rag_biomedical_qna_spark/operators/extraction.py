@@ -1,6 +1,6 @@
 """Stages [2]+[3] — mention detection and SVO triple extraction.
 
-Both run as `mapInPandas` over the turn table: Arrow-batched, per-turn
+Both run as one `mapInArrow` over the turn table: Arrow-batched, per-turn
 stateless, NO shuffle (they inherit the conv_id partitioning from stage [1]).
 The alias-key dictionary is shipped once per executor as a SparkContext
 broadcast (the reference instead held article dictionaries in driver RAM,
@@ -16,13 +16,8 @@ Reference analogs:
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import types as T
-
-from ..core.text import split_sentences
 
 MENTIONS_SCHEMA = T.StructType(
     [
@@ -108,16 +103,17 @@ def extract_all_df(turns: DataFrame, alias_keys_bc) -> DataFrame:
     and triple rows (kind='t') share the output. Downstream callers split
     with a filter — persist the result so both branches reuse the pass.
 
-    The kernel is the VECTORIZED pandas/numpy path (core.vectorized): C-regex
-    tokenization over whole Arrow batches + hash-join dictionary probes, with
-    interpreted Python only on hit positions. Property-tested row-for-row
-    equal to the per-row matcher (`row_path_unified_pdf` below), which it
-    replaced after profiling showed the per-token Python loop at ~20k
-    turns/s/core was the pipeline's 100x-scale bottleneck. r3: the stage runs
-    through mapInArrow — the kernel is Arrow-native in both directions, so
-    the mapInPandas conversion layers (Arrow -> per-row Python strings on
-    input, object arrays -> Arrow on output) are gone entirely; they were
-    ~10x the kernel's own core-time at 32 workers."""
+    The kernel is the VECTORIZED pyarrow/numpy path (core.vectorized):
+    byte-LUT tokenization over whole Arrow batches + hash-join dictionary
+    probes, with interpreted Python only on hit positions. Property-tested
+    row-for-row equal to the per-row matcher (`core.vectorized._extract_slow`,
+    which also takes the rare non-ASCII rows); it replaced that matcher after
+    profiling showed the per-token Python loop at ~20k turns/s/core was the
+    pipeline's 100x-scale bottleneck. The stage runs through mapInArrow — the
+    kernel is Arrow-native in both directions, so no pandas conversion layer
+    (Arrow -> per-row Python strings on input, object arrays -> Arrow on
+    output) sits at the boundary; those layers were ~10x the kernel's own
+    core-time at 32 workers."""
     return turns.select("conv_id", "turn_idx", "text").mapInArrow(
         _unified_batches_fn(alias_keys_bc), UNIFIED_SCHEMA
     )
@@ -219,61 +215,6 @@ def mention_stats_view(unified_collapsed: DataFrame) -> DataFrame:
         unified_collapsed.filter("kind = 's'")
         .groupBy("alias_key", "surface")
         .agg(F.expr("CAST(sum(mention_idx) AS BIGINT) AS n_mentions"))
-    )
-
-
-def row_path_unified_pdf(pdf: pd.DataFrame, keys) -> pd.DataFrame:
-    """Per-row Python reference implementation of one unified-extraction batch
-    (the original kernel). Kept as the specification the vectorized kernel is
-    property-tested against; not used in the hot path.
-
-    Output batches are built as typed columnar arrays (int32/float64 numpy,
-    not object tuples): Arrow conversion of 15 object columns was the
-    dominant cost of the stage (~2x) at millions of output rows per task.
-    Non-applicable columns carry sentinels (-1 / NaN / None) that the
-    mentions_view/triples_view projections never read."""
-    import numpy as np
-
-    from ..core.patterns import extract_mentions_and_triples
-
-    conv, ti, si_l, kind, midx = [], [], [], [], []
-    surf, akey, ts_, te_ = [], [], [], []
-    ss, sk, pr, os_, ok_, cf = [], [], [], [], [], []
-    for conv_id, turn_idx, text in zip(pdf["conv_id"], pdf["turn_idx"], pdf["text"]):
-        for si, sent in enumerate(split_sentences(text)):
-            mentions, triples = extract_mentions_and_triples(sent, keys)
-            for mi, m in enumerate(mentions):
-                conv.append(conv_id); ti.append(turn_idx); si_l.append(si)
-                kind.append("m"); midx.append(mi)
-                surf.append(m.surface); akey.append(m.alias_key)
-                ts_.append(m.tok_start); te_.append(m.tok_end)
-                ss.append(None); sk.append(None); pr.append(None)
-                os_.append(None); ok_.append(None); cf.append(np.nan)
-            for t in triples:
-                conv.append(conv_id); ti.append(turn_idx); si_l.append(si)
-                kind.append("t"); midx.append(-1)
-                surf.append(None); akey.append(None)
-                ts_.append(-1); te_.append(-1)
-                ss.append(t.subj_surface); sk.append(t.subj_key); pr.append(t.pred)
-                os_.append(t.obj_surface); ok_.append(t.obj_key); cf.append(t.confidence)
-    return pd.DataFrame(
-        {
-            "conv_id": conv,
-            "turn_idx": np.asarray(ti, dtype="int32"),
-            "sent_idx": np.asarray(si_l, dtype="int32"),
-            "kind": kind,
-            "mention_idx": np.asarray(midx, dtype="int32"),
-            "surface": surf,
-            "alias_key": akey,
-            "tok_start": np.asarray(ts_, dtype="int32"),
-            "tok_end": np.asarray(te_, dtype="int32"),
-            "subj_surface": ss,
-            "subj_key": sk,
-            "pred": pr,
-            "obj_surface": os_,
-            "obj_key": ok_,
-            "confidence": np.asarray(cf, dtype="float64"),
-        }
     )
 
 

@@ -12,6 +12,8 @@ engine that becomes:
   partial under `commit_group=<min>-<max>`, followed by an atomic done marker
   (the Iceberg analog is a snapshot commit per group);
 - resume = skip buckets whose markers exist (LEFT ANTI semantics, P8/U3);
+  each marker records the bucket count, and a resume or finalize under
+  another count raises (its bucket ids name other conversations);
 - `finalize()` merges the node partials of marked groups (surface sets union,
   counts sum; linking is a pure per-(alias_key, surface) function, so the
   merge equals the batch kg_nodes) and builds kg_edge_stats from the
@@ -66,8 +68,11 @@ def _marker_path(out_dir: str, bucket_group: tuple[int, ...]) -> str:
     return os.path.join(out_dir, "_done", f"group-{_group_key(bucket_group)}.json")
 
 
-def _done_groups(out_dir: str) -> list[list[int]]:
-    """The bucket list of every committed group (one per done marker)."""
+def _done_groups(out_dir: str, n_buckets: int) -> list[list[int]]:
+    """The bucket list of every committed group (one per done marker).
+    Bucket ids only mean something under the bucket count that wrote them,
+    so a marker from another count (or one that predates the field) raises
+    instead of skipping the wrong conversations."""
     d = os.path.join(out_dir, "_done")
     if not os.path.isdir(d):
         return []
@@ -75,12 +80,20 @@ def _done_groups(out_dir: str) -> list[list[int]]:
     for f in sorted(os.listdir(d)):
         if f.endswith(".json"):
             with open(os.path.join(d, f)) as fh:
-                groups.append(json.load(fh)["buckets"])
+                marker = json.load(fh)
+            if marker.get("n_buckets") != n_buckets:
+                raise ValueError(
+                    f"{out_dir}: done marker {f} was written with "
+                    f"n_buckets={marker.get('n_buckets')}, this run uses "
+                    f"n_buckets={n_buckets}; resume with the original bucket "
+                    "count or start a new output dir"
+                )
+            groups.append(marker["buckets"])
     return groups
 
 
-def _done_buckets(out_dir: str) -> set[int]:
-    return {b for grp in _done_groups(out_dir) for b in grp}
+def _done_buckets(out_dir: str, n_buckets: int) -> set[int]:
+    return {b for grp in _done_groups(out_dir, n_buckets) for b in grp}
 
 
 def _overwrite(df: DataFrame, key: str, path: str) -> None:
@@ -142,7 +155,8 @@ class ResumableKGRun:
         marker = _marker_path(self.out_dir, grp)
         tmp = marker + ".tmp"
         with open(tmp, "w") as fh:
-            json.dump({"buckets": list(grp), "wall_sec": round(time.time() - t0, 3)}, fh)
+            json.dump({"buckets": list(grp), "n_buckets": self.buckets,
+                       "wall_sec": round(time.time() - t0, 3)}, fh)
         os.replace(tmp, marker)
 
     def run(
@@ -156,7 +170,7 @@ class ResumableKGRun:
         Returns summary metrics. Call `finalize()` after all groups are done.
         """
         os.makedirs(os.path.join(self.out_dir, "_done"), exist_ok=True)
-        done = _done_buckets(self.out_dir)
+        done = _done_buckets(self.out_dir, self.buckets)
         keys_bc = broadcast_alias_keys(self.spark, aliases)
 
         all_buckets = [b for b in range(self.buckets) if b not in done]
@@ -179,16 +193,17 @@ class ResumableKGRun:
                     kg.unpersist()
         finally:
             aliases.unpersist()
+        done = _done_buckets(self.out_dir, self.buckets)
         return {
             "groups_processed": len(groups),
-            "buckets_done": sorted(_done_buckets(self.out_dir)),
-            "complete": len(_done_buckets(self.out_dir)) == self.buckets,
+            "buckets_done": sorted(done),
+            "complete": len(done) == self.buckets,
         }
 
     def finalize(self) -> None:
         """Merge the node partials of the marked groups -> kg_nodes; the
         committed edges -> kg_edge_stats (exact n_convs, as in build_kg)."""
-        committed = [_group_key(grp) for grp in _done_groups(self.out_dir)]
+        committed = [_group_key(grp) for grp in _done_groups(self.out_dir, self.buckets)]
         partials = self.spark.read.parquet(
             os.path.join(self.out_dir, "node_partials")
         ).filter(F.col(_GROUP).isin(committed))

@@ -3,7 +3,7 @@
 Shuffle budget of the whole plan (the thing that decides 100 TB viability):
 
   1 shuffle   stage [1] window over (conv_id, turn_idx)          [data-sized]
-  0 shuffles  stages [2]-[3] mapInPandas (inherit partitioning)
+  0 shuffles  stages [2]-[3] mapInArrow (inherit partitioning)
   1 shuffle   mention_stats groupBy(alias_key, surface)          [count payload;
               map-side combine absorbs hot-entity skew -> vocab-sized output,
               feeds BOTH candidate generation and node canonicalization]

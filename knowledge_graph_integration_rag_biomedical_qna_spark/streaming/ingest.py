@@ -48,11 +48,9 @@ def deduped_turns_stream(stream: DataFrame, watermark: str = "10 minutes") -> Da
     original is no longer deduplicated — that is the same contract as the
     late-row bound the watermark already imposes. Empty turns pass through:
     stage [1] inside build_kg drops them."""
-    dd = stream.withWatermark("ts", watermark)
-    try:
-        return dd.dropDuplicatesWithinWatermark(["conv_id", "turn_idx"])
-    except AttributeError:  # pragma: no cover - pyspark < 3.5
-        return dd.dropDuplicates(["conv_id", "turn_idx"])
+    return stream.withWatermark("ts", watermark).dropDuplicatesWithinWatermark(
+        ["conv_id", "turn_idx"]
+    )
 
 
 def start_kg_stream(
@@ -76,16 +74,18 @@ def start_kg_stream(
 
     def process_batch(batch_df: DataFrame, epoch_id: int) -> None:
         kg = build_kg(batch_df.sparkSession, batch_df, aliases, alias_index=keys_bc)
-        edges = kg.kg_edges.withColumn("epoch", F.lit(epoch_id))
-        # foreachBatch is AT-LEAST-ONCE: an epoch replayed after a crash
-        # between the sink write and the offset commit must land in the SAME
-        # place, not append a second copy (r4 review — the docstring's
-        # "idempotent per-epoch dirs" is now actually implemented). Dynamic
-        # partition overwrite keyed on epoch makes the replay a no-op.
-        edges.write.mode("overwrite").partitionBy("epoch").option(
-            "partitionOverwriteMode", "dynamic"
-        ).parquet(os.path.join(out_dir, "kg_edges_stream"))
-        kg.unpersist()
+        try:
+            edges = kg.kg_edges.withColumn("epoch", F.lit(epoch_id))
+            # foreachBatch is AT-LEAST-ONCE: an epoch replayed after a crash
+            # between the sink write and the offset commit must land in the
+            # SAME place, not append a second copy. Dynamic partition
+            # overwrite keyed on epoch makes the replay a no-op.
+            edges.write.mode("overwrite").partitionBy("epoch").option(
+                "partitionOverwriteMode", "dynamic"
+            ).parquet(os.path.join(out_dir, "kg_edges_stream"))
+        finally:
+            # a failed epoch write must not leave the cached tables pinned
+            kg.unpersist()
 
     writer = (
         turns.writeStream.foreachBatch(process_batch)

@@ -132,3 +132,21 @@ def test_crash_before_marker_resume_with_other_group_size(spark, inputs, tmp_pat
             _sorted_table(spark, f"{crashed}/{table}", key),
             _sorted_table(spark, f"{single}/{table}", key),
         )
+
+
+def test_resume_with_other_bucket_count_raises(spark, inputs, tmp_path):
+    """Bucket ids name conversations only under the bucket count that wrote
+    them: after one committed group at 8 buckets, a resume at 4 would skip
+    4-bucket ids 0 and 1 and never process their conversations that sit in
+    8-bucket ids 4 and 5. Both the resume and finalize must refuse."""
+    transcripts, aliases = inputs
+    out = str(tmp_path / "crashed")
+    s = ResumableKGRun(spark, out, buckets=8, group_size=2).run(
+        transcripts, aliases, max_groups=1
+    )
+    assert s["buckets_done"] == [0, 1]
+    other = ResumableKGRun(spark, out, buckets=4, group_size=2)
+    with pytest.raises(ValueError, match="n_buckets=8.*n_buckets=4"):
+        other.run(transcripts, aliases)
+    with pytest.raises(ValueError, match="n_buckets=8.*n_buckets=4"):
+        other.finalize()

@@ -171,20 +171,35 @@ divergent_ws_text_st = st.lists(
 ).map("".join)
 
 
-def _norm_unified(df):
+def _assert_kernel_equals_row_path(texts, text_type=None):
+    """Feed the same Arrow arrays to the kernel (fast path + slow-path runs)
+    and to the per-row specification `_extract_slow`; the two tables must
+    match in row set, row ORDER and values (NaN mention confidences compare
+    equal). Returns the kernel's table as a DataFrame."""
     import pandas as pd
+    import pyarrow as pa
 
-    df = df.reset_index(drop=True).copy()
-    df["conv_id"] = df["conv_id"].astype(str)
-    df["turn_idx"] = df["turn_idx"].astype("int64")
-    df["kind"] = df["kind"].astype(object)
-    # the fast path returns ArrowDtype string columns (pd.NA nulls); compare
-    # both paths in the object/None representation
+    from knowledge_graph_integration_rag_biomedical_qna_spark.core.patterns import AliasIndex
     from knowledge_graph_integration_rag_biomedical_qna_spark.core.vectorized import (
-        _strings_to_object,
+        _extract_slow,
+        _unified_pa_schema,
+        extract_unified_batches,
     )
 
-    return _strings_to_object(df)
+    conv = pa.array([f"c{i}" for i in range(len(texts))], type=pa.string())
+    turn = pa.array(range(len(texts)), type=pa.int32())
+    arr = pa.array(texts, type=text_type or pa.string())
+    idx = AliasIndex(KEYS)
+    schema = _unified_pa_schema()
+    got = pa.Table.from_batches(
+        list(extract_unified_batches(conv, turn, arr, idx)), schema
+    ).to_pandas()
+    # the kernel null-fills its text column at entry; the spec takes strings
+    spec_texts = pa.array([t or "" for t in texts], type=pa.string())
+    want_rb = _extract_slow(conv, turn, spec_texts, idx)
+    want = pa.Table.from_batches([want_rb] if want_rb is not None else [], schema)
+    pd.testing.assert_frame_equal(got, want.to_pandas())
+    return got
 
 
 @given(
@@ -196,29 +211,9 @@ def _norm_unified(df):
 )
 @settings(max_examples=200, deadline=None)
 def test_vectorized_kernel_equals_row_path(texts):
-    """extract_unified_pdf (pyarrow fast path + non-ASCII fallback) produces
-    the exact row set, row ORDER, and values of the per-row Python matcher."""
-    import pandas as pd
-
-    from knowledge_graph_integration_rag_biomedical_qna_spark.core.patterns import AliasIndex
-    from knowledge_graph_integration_rag_biomedical_qna_spark.core.vectorized import (
-        extract_unified_pdf,
-    )
-    from knowledge_graph_integration_rag_biomedical_qna_spark.operators.extraction import (
-        row_path_unified_pdf,
-    )
-
-    pdf = pd.DataFrame(
-        {
-            "conv_id": [f"c{i}" for i in range(len(texts))],
-            "turn_idx": list(range(len(texts))),
-            "text": texts,
-        }
-    )
-    idx = AliasIndex(KEYS)
-    got = _norm_unified(extract_unified_pdf(pdf, idx))
-    want = _norm_unified(row_path_unified_pdf(pdf, idx))
-    pd.testing.assert_frame_equal(got, want, check_dtype=False)
+    """extract_unified_batches (pyarrow fast path + per-row slow-path runs)
+    produces the exact row set, row ORDER, and values of `_extract_slow`."""
+    _assert_kernel_equals_row_path(texts)
 
 
 ascii_sentence_st = st.text(
@@ -249,7 +244,7 @@ def test_byte_tokenizer_equals_regex_tokenize(sents):
         for pos, (tok, a, b) in enumerate(tokenize(s)):
             want.append((si, pos, tok.lower(), base + a, base + b))
         base += len(s)
-    if tk == "EMPTY" or tk is None:
+    if tk == "EMPTY":
         assert not want, (sents, want)
         return
     low, sent_of, pos_in_sent, abs_start, abs_end, d = tk
@@ -265,27 +260,32 @@ def test_divergent_whitespace_chars_route_to_slow_path():
     Python's re but not RE2's ASCII \\s; rows containing them must produce
     identical sent_idx/rows via the slow path. \\x0c matches in both engines
     and may stay on the fast path."""
-    import pandas as pd
-
-    from knowledge_graph_integration_rag_biomedical_qna_spark.core.patterns import AliasIndex
-    from knowledge_graph_integration_rag_biomedical_qna_spark.core.vectorized import (
-        extract_unified_pdf,
-    )
-    from knowledge_graph_integration_rag_biomedical_qna_spark.operators.extraction import (
-        row_path_unified_pdf,
-    )
-
     k = sorted(KEYS)
     texts = [f"{k[0]}.{ch}{k[1]} treats {k[2]}." for ch in "\x0b\x1c\x1d\x1e\x1f\x0c"]
     texts.append(f"{k[0]} treats {k[1]}.")  # plain fast-path row in the same batch
-    pdf = pd.DataFrame(
-        {"conv_id": [f"c{i}" for i in range(len(texts))],
-         "turn_idx": list(range(len(texts))), "text": texts}
-    )
-    idx = AliasIndex(KEYS)
-    got = _norm_unified(extract_unified_pdf(pdf, idx))
-    want = _norm_unified(row_path_unified_pdf(pdf, idx))
-    pd.testing.assert_frame_equal(got, want, check_dtype=False)
+    _assert_kernel_equals_row_path(texts)
+
+
+def test_large_string_input_equals_string_input():
+    """The kernel casts its text column to pa.string() once at entry: a
+    large_string batch (64-bit offsets) with ASCII and non-ASCII rows must
+    give the same table as the same texts as pa.string()."""
+    import pandas as pd
+    import pyarrow as pa
+
+    k = sorted(KEYS)
+    texts = [
+        f"{k[0]} treats {k[1]}. The {k[2]} inhibits {k[3]}.",
+        f"Caf\u00e9 {k[0]} treats {k[1]} \u2014 {k[2]}.",
+        None,
+        "",
+        f"{k[4]} binds {k[0]}!  {k[1]} treats {k[2]}",
+        f"na\u00efve {k[3]} inhibits {k[4]}.",
+    ]
+    large = _assert_kernel_equals_row_path(texts, pa.large_string())
+    small = _assert_kernel_equals_row_path(texts, pa.string())
+    assert len(large) > 0
+    pd.testing.assert_frame_equal(large, small)
 
 
 word_st = st.sampled_from(

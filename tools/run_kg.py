@@ -14,8 +14,8 @@ Local smoke:
         --aliases data/fixtures/concept_aliases.parquet --out /tmp/kg_out
 
 The job is checkpointed and resumable: rerunning after a crash skips committed
-bucket groups (see plans/checkpoint.py). `--finalize` runs the phase-2 node /
-edge-stat aggregation once all buckets are done.
+bucket groups (see plans/checkpoint.py). Once all buckets are done it runs
+the phase-2 node / edge-stat aggregation; `--no-finalize` skips that step.
 
 Package the library for --py-files with:
     (cd /root/repo && zip -qr kg_pkg.zip knowledge_graph_integration_rag_biomedical_qna_spark)
@@ -40,7 +40,6 @@ def main() -> None:
     ap.add_argument("--group-size", type=int, default=8)
     ap.add_argument("--max-groups", type=int, default=None)
     ap.add_argument("--master", default=None, help="default: existing session / local[cpus]")
-    ap.add_argument("--finalize", action="store_true", default=True)
     ap.add_argument("--no-finalize", dest="finalize", action="store_false")
     args = ap.parse_args()
 
