@@ -9,11 +9,12 @@ top-k (rag2-retriever/main.py). Against the constructed graph that becomes:
     -> join kg_edge_stats on either endpoint CUI (1-hop neighborhood)
     -> score = evidence-weighted link score, per-question top-k window
 
-Batch-oriented: a million questions retrieve in one job; a single question is
-the degenerate one-row case. Edge stats are the small side ONLY when the
-graph is small — the join is keyed on CUI, so at 10^12-turn scale it is a
-shuffle join on (cui) with AQE skew handling; questions-side broadcast is
-chosen automatically when the question batch is small.
+`link_questions` returns a lazy plan and `retrieve_evidence` composes on top
+of it, so one ask is one adaptive query: the extraction runs once, nothing is
+cached or checkpointed, and `kg_edge_stats` is scanned once. Batch-oriented:
+a million questions retrieve in one job; a single question is the degenerate
+one-row case. The question links are the broadcast side of the edge join —
+question-sized by construction — so the graph is never shuffled to meet them.
 """
 
 from __future__ import annotations
@@ -28,55 +29,54 @@ from ..operators.linking import candidate_table, resolution_table
 def link_questions(
     spark: SparkSession, questions: DataFrame, aliases: DataFrame, keys_bc
 ) -> DataFrame:
-    """questions(question_id, text) -> (question_id, cui, link_score).
+    """questions(question_id, text) -> (question_id, cui, link_score), one
+    row per (question, linked surface). Lazy: building it starts no job.
 
     question_id keeps its INPUT type: the id rides the extractor as a string
-    conv_id, then joins back to the questions table to restore the original
-    column (r4 review: returning the stringified id made the gated output
-    string-typed against an int32 oracle, and string ordering diverges from
-    numeric past 9 questions). The per-question mention table is persisted:
-    it feeds both candidate generation and the resolution join, and without
-    a cache the mapInArrow extraction subtree re-executes per consumer (the
-    same no-cross-branch-CSE behavior build_kg persists `unified` for) —
-    with `spark.sql.shuffle.partitions`-scoped scoring parallelism via
-    session.default_parallelism."""
-    from ..session import default_parallelism
+    conv_id and is cast back on the way out (r4 review: a stringified id made
+    the gated output string-typed against an int32 oracle, and string order
+    diverges from numeric past 9 questions).
 
+    The dictionary hits are grouped per (alias_key, surface) with the set of
+    questions that contain them. Candidate scoring reads only the surfaces,
+    the final join reads the question sets; the no-op filter (qids is never
+    empty) blocks Catalyst from pruning `qids` off the candidate branch, so
+    both branches read one reused exchange and the mapInArrow extraction
+    runs once — the same idiom as dedup's `F.size("hs") >= 0`. No
+    `score_partitions`: AQE's shuffle read already coalesces the
+    vocabulary-sized input."""
     turns_like = questions.select(
         F.col("question_id").cast("string").alias("conv_id"),
         F.lit(0).cast("int").alias("turn_idx"),
         F.col("text"),
     )
-    mentions = detect_mentions_df(turns_like, keys_bc).persist()
-    try:
-        resolution = resolution_table(
-            candidate_table(
-                mentions.select("alias_key", "surface"), aliases,
-                score_partitions=default_parallelism(spark) // 16 or 1,
-            )
+    hits = (
+        detect_mentions_df(turns_like, keys_bc)
+        .groupBy("alias_key", "surface")
+        .agg(F.collect_set("conv_id").alias("qids"))
+        .filter("size(qids) > 0")
+    )
+    resolution = resolution_table(
+        candidate_table(hits.select("alias_key", "surface"), aliases)
+    )
+    return (
+        hits.join(F.broadcast(resolution), ["alias_key", "surface"])
+        .select(F.explode("qids").alias("qid"), "cui", "score")
+        .select(
+            F.col("qid").cast(questions.schema["question_id"].dataType).alias("question_id"),
+            "cui",
+            F.col("score").alias("link_score"),
         )
-        qid = questions.select(
-            F.col("question_id").cast("string").alias("conv_id"),
-            F.col("question_id"),
-        ).distinct()
-        linked = (
-            mentions.join(F.broadcast(resolution), ["alias_key", "surface"])
-            .join(F.broadcast(qid), "conv_id")
-            .select(
-                "question_id",
-                "cui",
-                F.col("score").alias("link_score"),
-            )
-            .distinct()
-        )
-        # materialize the (question-sized) link table eagerly, then release
-        # the mentions cache — the previous shape persisted mentions for the
-        # session lifetime (r4 advice: leaked cache blocks per invocation).
-        # localCheckpoint blocks are ContextCleaner-collected once the
-        # returned DataFrame goes out of scope, unlike a CacheManager entry.
-        return linked.localCheckpoint(eager=True)
-    finally:
-        mentions.unpersist()
+    )
+
+
+def _incident_edges(edges: DataFrame, keys: DataFrame) -> DataFrame:
+    """Edges touching each key's `cui`, in one scan: both endpoints explode
+    into `cui` (deduplicated, so a self-loop matches once) and one equi-join
+    on `cui` replaces a join per endpoint plus their union."""
+    return edges.withColumn(
+        "cui", F.explode(F.array_distinct(F.array("subj_cui", "obj_cui")))
+    ).join(keys, "cui").drop("cui")
 
 
 def neighborhood(kg_edge_stats: DataFrame, seeds: DataFrame, hops: int = 1, k: int = 50) -> DataFrame:
@@ -92,34 +92,19 @@ def neighborhood(kg_edge_stats: DataFrame, seeds: DataFrame, hops: int = 1, k: i
     broadcasts it while small and shuffles on cui when a hub seed explodes
     the frontier."""
     e = kg_edge_stats.select("subj_cui", "pred", "obj_cui", "n_evidence")
-    s = F.broadcast(seeds.select("seed_cui").distinct())
-    h1 = (
-        e.join(s, e.subj_cui == s.seed_cui)
-        .unionByName(e.join(s, e.obj_cui == s.seed_cui))
-        .select("seed_cui", "subj_cui", "pred", "obj_cui", "n_evidence")
-        .distinct()
-        .withColumn("hop", F.lit(1))
-    )
+    s = seeds.select("seed_cui", F.col("seed_cui").alias("cui")).distinct()
+    h1 = _incident_edges(e, F.broadcast(s)).withColumn("hop", F.lit(1))
     out = h1
     if hops >= 2:
         frontier = (
-            h1.select("seed_cui", F.col("subj_cui").alias("cui"))
-            .unionByName(h1.select("seed_cui", F.col("obj_cui").alias("cui")))
+            h1.select("seed_cui", F.explode(F.array("subj_cui", "obj_cui")).alias("cui"))
             .filter(F.col("cui") != F.col("seed_cui"))
             .distinct()
         )
-        h2 = (
-            e.join(frontier, e.subj_cui == frontier.cui)
-            .unionByName(e.join(frontier, e.obj_cui == frontier.cui))
-            .select("seed_cui", "subj_cui", "pred", "obj_cui", "n_evidence")
-            .distinct()
-            .withColumn("hop", F.lit(2))
-        )
-        out = (
-            h1.unionByName(h2)
-            .groupBy("seed_cui", "subj_cui", "pred", "obj_cui", "n_evidence")
-            .agg(F.min("hop").alias("hop"))
-        )
+        out = out.unionByName(_incident_edges(e, frontier).withColumn("hop", F.lit(2)))
+    out = out.groupBy("seed_cui", "subj_cui", "pred", "obj_cui", "n_evidence").agg(
+        F.min("hop").alias("hop")
+    )
     w = Window.partitionBy("seed_cui").orderBy(
         F.col("hop").asc(), F.col("n_evidence").desc(),
         "subj_cui", "pred", "obj_cui",
@@ -150,16 +135,22 @@ def retrieve_evidence(
     row) — inherent to any quantization of a libm-bearing expression, and
     strictly smaller than the float column's combined hazards. Ties pinned
     on (subj_cui, pred, obj_cui). Top-k via per-question window (T1).
+
+    Plan: one `kg_edge_stats` scan joins the broadcast question links, then
+    ONE range exchange on question_id. The max-aggregate, the top-k window
+    and a caller's orderBy("question_id", "rank") all accept that
+    partitioning, so none adds an exchange. Trade-off: all of a hub
+    question's hits land in one partition, where the aggregate and the
+    window spill instead of spreading.
     """
-    subj_hits = kg_edge_stats.join(
-        question_links.withColumnRenamed("cui", "subj_cui"), "subj_cui"
+    hits = (
+        _incident_edges(kg_edge_stats, F.broadcast(question_links))
+        .repartitionByRange("question_id")
+        .groupBy(
+            "question_id", "subj_cui", "pred", "obj_cui", "n_evidence", "avg_confidence"
+        )
+        .agg(F.max("link_score").alias("link_score"))
     )
-    obj_hits = kg_edge_stats.join(
-        question_links.withColumnRenamed("cui", "obj_cui"), "obj_cui"
-    )
-    hits = subj_hits.unionByName(obj_hits).groupBy(
-        "question_id", "subj_cui", "pred", "obj_cui", "n_evidence", "avg_confidence"
-    ).agg(F.max("link_score").alias("link_score"))
     scored = hits.withColumn(
         "rank_score_micro",
         F.round(

@@ -49,7 +49,10 @@ def _sql_lit(v) -> str:
     if isinstance(v, bool):
         return "true" if v else "false"
     if isinstance(v, str):
-        return "'" + v.replace("'", "''") + "'"
+        # Spark SQL unescapes backslashes in literals and substitutes ${var}
+        # in the statement text before parsing; \u0024 is decoded after that
+        esc = v.replace("\\", "\\\\").replace("'", "\\'").replace("$", "\\u0024")
+        return "'" + esc + "'"
     if isinstance(v, float):
         # repr(float) is shortest-round-trip, so the DOUBLE literal parses
         # back to the exact bits createDataFrame would have shipped

@@ -149,6 +149,18 @@ def test_kg_query_cli_smoke(spark, fixture_dir, tmp_path, capsys, monkeypatch):
         if l:
             json.loads(l)
 
+    # user text with an apostrophe, a backslash and ${...} is taken verbatim:
+    # the same edges as the plain question, under question_id 1
+    rc = kg_query.main(
+        ["ask", "--kg", out, "--aliases", aliases_path, "-k", "3",
+         f"what about {alias}?", f"what's \\ ${{x}} about {alias}?"]
+    )
+    assert rc == 0
+    rows = [json.loads(l) for l in capsys.readouterr().out.strip().splitlines() if l]
+    by_q = {q: [{k: v for k, v in r.items() if k != "question_id"}
+                for r in rows if r["question_id"] == q] for q in (0, 1)}
+    assert by_q[1] == by_q[0]
+
 
 def test_t_wide_widens_single_file_scan(spark):
     """_t_wide must widen a deficient (single-file) scan to the session's

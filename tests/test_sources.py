@@ -156,9 +156,9 @@ def test_alias_broadcast_file_backed_escape_hatch(spark, fixture_dir, tmp_path):
 def test_values_df_matches_createdataframe(spark):
     """values_df (LocalRelation literal) must be a drop-in for
     createDataFrame on the same DDL schema: identical schema and rows,
-    including quote escaping, None, bool, and float round-trip bits —
-    plus the property the swap exists for: a LocalRelation plan whose
-    collect runs zero Spark jobs."""
+    including quote, backslash and ${...} escaping, None, bool, and float
+    round-trip bits — plus the property the swap exists for: a
+    LocalRelation plan whose collect runs zero Spark jobs."""
     from knowledge_graph_integration_rag_biomedical_qna_spark.sources.synth import values_df
 
     rows = [
@@ -166,6 +166,12 @@ def test_values_df_matches_createdataframe(spark):
         ("plain", -2, 2.5e-17, False, 9),
         (None, 0, float(2**53 - 1), None, None),
     ]
+    # strings Spark SQL would otherwise unescape, substitute or fail to parse
+    probes = [
+        "back\\slash", "tab\\tx", "dollar ${x}", "end\\", "q\\'x", "''", "$",
+        "\\u0041", "real\ttab\nnewline", "-- not a comment /* */ ;", "café ✓",
+    ]
+    rows += [(t, i, 0.5, None, None) for i, t in enumerate(probes, start=10)]
     schema = "name string, n int, x double, flag boolean, extra bigint"
     a = values_df(spark, rows, schema)
     b = spark.createDataFrame(rows, schema)

@@ -49,6 +49,7 @@ def main(argv: list[str] | None = None) -> int:
     args = ap.parse_args(argv)
 
     from knowledge_graph_integration_rag_biomedical_qna_spark.session import get_spark
+    from knowledge_graph_integration_rag_biomedical_qna_spark.sources.synth import values_df
 
     spark = get_spark(app_name="kg_query", master=args.master)
     edge_stats = spark.read.parquet(os.path.join(args.kg, "kg_edge_stats"))
@@ -56,7 +57,7 @@ def main(argv: list[str] | None = None) -> int:
     if args.cmd == "neighbors":
         from knowledge_graph_integration_rag_biomedical_qna_spark.plans.query import neighborhood
 
-        seeds = spark.createDataFrame([(c,) for c in args.cuis], "seed_cui string")
+        seeds = values_df(spark, [(c,) for c in args.cuis], "seed_cui string")
         rows = neighborhood(edge_stats, seeds, hops=args.hops, k=args.k).collect()
     else:
         from knowledge_graph_integration_rag_biomedical_qna_spark.plans.pipeline import (
@@ -69,8 +70,8 @@ def main(argv: list[str] | None = None) -> int:
         from knowledge_graph_integration_rag_biomedical_qna_spark.sources.io import read_aliases
 
         aliases = read_aliases(spark, args.aliases)
-        questions = spark.createDataFrame(
-            list(enumerate(args.questions)), "question_id int, text string"
+        questions = values_df(
+            spark, list(enumerate(args.questions)), "question_id int, text string"
         )
         keys_bc = broadcast_alias_keys(spark, aliases)
         links = link_questions(spark, questions, aliases, keys_bc)
