@@ -45,21 +45,15 @@ def canonicalize_nodes(resolved_mentions: DataFrame, salt_buckets: int = CANON_S
     )
 
 
-def canonicalize_node_stats(mention_stats: DataFrame, resolution: DataFrame) -> DataFrame:
-    """kg_nodes from VOCABULARY-SIZED per-(alias_key, surface) mention counts
-    — value-identical to `canonicalize_nodes` over row-level resolved
-    mentions (counts sum; surface sets union), but the transcript-sized work
-    already collapsed in the map-side-combined count aggregate, so no salting
-    is needed here and no second pass over the mention rows happens at all.
-    This is the 10^12-turn path used by plans.pipeline.build_kg, and so by
-    every run mode (the checkpointed runner commits its per-group output as
-    a node partial); `canonicalize_nodes` remains the row-level operator
-    that tools and tests call."""
-    joined = mention_stats.join(
-        F.broadcast(resolution.select("alias_key", "surface", "cui")),
-        ["alias_key", "surface"],
-    )
-    return joined.groupBy("cui").agg(
+def canonicalize_node_stats(resolution: DataFrame) -> DataFrame:
+    """kg_nodes from the resolved VOCABULARY: one row per accepted
+    (alias_key, surface) link with its `n_mentions`, which build_kg passes
+    through linking. Value-identical to `canonicalize_nodes` over row-level
+    resolved mentions (counts sum; surface sets union), but it groups at most
+    |vocab| rows: no salting, no join. This is the path build_kg, and so
+    every run mode, uses; `canonicalize_nodes` remains the row-level
+    operator that tools and tests call."""
+    return resolution.groupBy("cui").agg(
         F.expr("array_sort(collect_set(surface)) AS surfaces"),
         F.expr("sum(n_mentions) AS mention_count"),
     )

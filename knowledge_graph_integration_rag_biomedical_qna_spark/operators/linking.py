@@ -13,9 +13,9 @@ rag2-retriever/main.py:119-167 + rerank.py:37-75 + context_pruning.py:36-51):
 4. per-surface top-k window with pinned tie-breaks (T1), top-1 + floor
    acceptance (A2 + the 0.5 cosine floor).
 
-The output `resolution` table is tiny (<= distinct surfaces) and is itself
-broadcast back against mentions/triples — so stages [4]-[6] add ZERO shuffles
-over the transcript-sized tables.
+The output `resolution` table is tiny (<= distinct surfaces); build_kg
+collects it to the driver and broadcasts it against the triples — so stages
+[4]-[6] add ZERO shuffles over the transcript-sized tables.
 """
 
 from __future__ import annotations
@@ -47,6 +47,10 @@ def candidate_table(
     Input must have columns (alias_key, surface); output adds
     (cui, prior, score, rank) with rank 1..k, deterministic order.
 
+    Other input columns (mention counts, question ids) pass through to the
+    output and `resolution_table`; each must be determined by (alias_key,
+    surface), as the dedup keeps one arbitrary row per pair.
+
     `score_partitions`: coalesce the distinct-surface table before the
     pandas-UDF scoring stage. The table is vocabulary-sized — far smaller
     than the session's transcript parallelism — so running it at full width
@@ -62,7 +66,7 @@ def candidate_table(
     table (r4 review: the hint reintroduced the very materialization the
     spill path exists to avoid); AQE picks surfaces-side broadcast or a
     shuffle join on alias_key as sizes dictate."""
-    surfaces = mentions_or_triples_surfaces.select("alias_key", "surface").distinct()
+    surfaces = mentions_or_triples_surfaces.dropDuplicates(["alias_key", "surface"])
     if score_partitions is not None:
         surfaces = surfaces.coalesce(max(1, score_partitions))
     cands = surfaces.join(aliases, "alias_key", "inner").withColumn(
@@ -71,16 +75,17 @@ def candidate_table(
     # SQL-string window (r6 plan-construction diet): one parse round trip;
     # DESC/ASC defaults (NULLS LAST / NULLS FIRST) match .desc()/.asc()
     return cands.selectExpr(
-        "alias_key", "surface", "cui", "prior", "score",
+        "*",
         "row_number() OVER (PARTITION BY alias_key, surface "
         "ORDER BY score DESC, prior DESC, cui ASC) AS rank",
-    ).filter(f"rank <= {int(TOP_K_CANDIDATES)}")
+    ).drop("alias").filter(f"rank <= {int(TOP_K_CANDIDATES)}")
 
 
 def resolution_table(candidates: DataFrame) -> DataFrame:
-    """Accepted top-1 links: (alias_key, surface, cui, score)."""
-    return candidates.filter(f"rank = 1 AND score >= {LINK_ACCEPT_FLOOR!r}").select(
-        "alias_key", "surface", "cui", "score"
+    """Accepted top-1 links: (alias_key, surface, cui, score) plus the
+    pass-through columns of `candidate_table`'s input."""
+    return candidates.filter(f"rank = 1 AND score >= {LINK_ACCEPT_FLOOR!r}").drop(
+        "prior", "rank"
     )
 
 

@@ -6,10 +6,18 @@ Shuffle budget of the whole plan (the thing that decides 100 TB viability):
   0 shuffles  stages [2]-[3] mapInArrow (inherit partitioning)
   1 shuffle   mention_stats groupBy(alias_key, surface)          [count payload;
               map-side combine absorbs hot-entity skew -> vocab-sized output,
-              feeds BOTH candidate generation and node canonicalization]
-  0 shuffles  resolution joins (resolution table is broadcast)
-  1 tiny      stage [6] groupBy(cui) over vocab-sized stats      [<= |vocab| rows]
+              whose n_mentions rides through linking to canonicalization]
+  1 tiny      candidate window over (alias_key, surface)         [<= |vocab| rows]
+  0 shuffles  resolution joins (the resolved vocabulary is broadcast)
+  1 tiny      stage [6] groupBy(cui) over the resolved vocabulary [<= |vocab| rows]
   1 shuffle   edge-stats groupBy (counter payload, map-side combine)
+
+Only the extraction is cached. Under AQE each reference to an unfilled cache
+runs its own cache-stage job and an exchange above a cached scan is never
+reused, so a persisted build collects the resolved vocabulary instead: the
+kg_edges write broadcasts it once and reuses that exchange for the second
+endpoint. Build plus the three writes: 14 Spark jobs on the construct_x5
+benchmark (20 with cached vocabulary tables).
 
 Everything transcript-sized shuffles at most once; after the mention_stats
 aggregate no transcript-sized table is read twice. `build_kg` is the only
@@ -52,13 +60,7 @@ class KGResult:
         return self._mentions_fn()
 
     def unpersist(self) -> None:
-        for df in (self.unified, self.resolution, self.mention_stats):
-            if df is None:
-                continue
-            try:
-                df.unpersist()
-            except Exception:
-                pass
+        self.unified.unpersist()
 
 
 class _ClosureBroadcast:
@@ -215,12 +217,17 @@ def build_kg(
     consumers of token spans pay for that pass only if they read it (tests
     and tools do; the nodes+edges product never does).
 
-    `persist=True` caches the collapsed extraction output plus the two
-    vocabulary-sized tables (mention_stats, resolution): without a cache
-    Catalyst re-executes the extraction once per consuming subtree (no
-    cross-branch CSE). Callers release them with `KGResult.unpersist()`. For
-    jobs too large to cache at once, plans.checkpoint.ResumableKGRun calls
-    this per bucket group and commits each group to storage.
+    `persist=True` caches the collapsed extraction output, the one
+    transcript-sized table both branches read (Catalyst has no cross-branch
+    CSE), and before returning collects the resolution table inside the JVM
+    and serves it as a LocalRelation: no row crosses into Python and both
+    endpoint joins share one broadcast. Driver bound: the rows a broadcast
+    of the resolution collects anyway, plus one bigint column;
+    `spark.driver.maxResultSize` applies as before. Callers release the
+    cache with `KGResult.unpersist()`. For jobs too large to cache at once,
+    plans.checkpoint.ResumableKGRun calls this per bucket group and commits
+    each group to storage. `persist=False` stays lazy: nothing is cached or
+    collected.
 
     `assume_clustered=True` declares the input already bucketed by conv_id
     (sources.io.write_bucketed): stage [1] skips its repartition and the
@@ -233,11 +240,11 @@ def build_kg(
     callers (bench, the checkpointed and streaming runs, repeated builds
     against one dictionary) hoist it; the default builds it here.
 
-    Driver-side plan-construction cost (r6): one warm build_kg call is ~470
-    py4j round-trips / ~0.45 s with a hoisted alias_index (~0.9 s cold incl.
-    the dictionary probe+broadcast) — down from ~3,100 / 0.75-1.3 s before
-    the selectExpr/SQL-string rewrites of synth/assembly/linking/views. At
-    steady state amortize it by reusing the returned plan (see bench.py).
+    Driver-side plan-construction cost (r6): one warm lazy build_kg call is
+    ~470 py4j round-trips / ~0.45 s with a hoisted alias_index (~0.9 s cold
+    incl. the dictionary probe+broadcast; persist=True adds the vocabulary
+    collect) — down from ~3,100 / 0.75-1.3 s before the selectExpr rewrites
+    of synth/assembly/linking/views. Amortize it by reusing the plan (bench.py).
     """
     from ..operators.extraction import extract_collapsed_df, mention_stats_view
 
@@ -250,25 +257,24 @@ def build_kg(
     if persist:
         unified = unified.persist()
     raw_triples = triples_view(unified)
-    # vocab-sized already: sum the per-task partials. It feeds BOTH
-    # candidate generation and node canonicalization.
+    # vocab-sized already: sum the per-task partials. n_mentions rides
+    # through linking, so the resolution feeds both edges and nodes.
     mention_stats = mention_stats_view(unified)
-    if persist:
-        mention_stats = mention_stats.persist()
 
     from ..session import default_parallelism
 
     default_par = default_parallelism(spark)
-    candidates = candidate_table(
-        mention_stats.select("alias_key", "surface"), aliases,
-        score_partitions=default_par // 16 or 1,
-    )
+    candidates = candidate_table(mention_stats, aliases, score_partitions=default_par // 16 or 1)
     resolution = resolution_table(candidates)
     if persist:
-        resolution = resolution.persist()
+        # the rows stay in the JVM: collected there, served as a LocalRelation
+        jdf = resolution._jdf
+        resolution = DataFrame(
+            spark._jsparkSession.createDataFrame(jdf.collectAsList(), jdf.schema()), spark
+        )
 
     kg_edges = resolve_triples(raw_triples, resolution)
-    kg_nodes = canonicalize_node_stats(mention_stats, resolution)
+    kg_nodes = canonicalize_node_stats(resolution)
     kg_edge_stats = aggregate_edges(kg_edges)
     return KGResult(
         turns=turns,

@@ -38,11 +38,9 @@ def link_questions(
     diverges from numeric past 9 questions).
 
     The dictionary hits are grouped per (alias_key, surface) with the set of
-    questions that contain them. Candidate scoring reads only the surfaces,
-    the final join reads the question sets; the no-op filter (qids is never
-    empty) blocks Catalyst from pruning `qids` off the candidate branch, so
-    both branches read one reused exchange and the mapInArrow extraction
-    runs once — the same idiom as dedup's `F.size("hs") >= 0`. No
+    questions that contain them; the set rides through candidate scoring as
+    a pass-through column (candidate_table's contract), so the extraction
+    runs once and the accepted links explode straight back to questions. No
     `score_partitions`: AQE's shuffle read already coalesces the
     vocabulary-sized input."""
     turns_like = questions.select(
@@ -54,13 +52,9 @@ def link_questions(
         detect_mentions_df(turns_like, keys_bc)
         .groupBy("alias_key", "surface")
         .agg(F.collect_set("conv_id").alias("qids"))
-        .filter("size(qids) > 0")
-    )
-    resolution = resolution_table(
-        candidate_table(hits.select("alias_key", "surface"), aliases)
     )
     return (
-        hits.join(F.broadcast(resolution), ["alias_key", "surface"])
+        resolution_table(candidate_table(hits, aliases))
         .select(F.explode("qids").alias("qid"), "cui", "score")
         .select(
             F.col("qid").cast(questions.schema["question_id"].dataType).alias("question_id"),

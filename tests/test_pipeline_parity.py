@@ -126,8 +126,9 @@ def test_provenance_invariant(kg, tables):
 
 
 def test_empty_inputs_produce_empty_outputs(spark):
-    """Degenerate inputs must not error: empty transcripts and/or empty
-    dictionary yield empty (but well-typed) outputs."""
+    """Degenerate inputs must not error: empty transcripts, an empty
+    dictionary or one with no hits yield empty (but well-typed) outputs,
+    lazy or persisted."""
     from knowledge_graph_integration_rag_biomedical_qna_spark.plans.pipeline import build_kg
     from knowledge_graph_integration_rag_biomedical_qna_spark.sources.io import (
         ALIASES_SCHEMA,
@@ -144,6 +145,17 @@ def test_empty_inputs_produce_empty_outputs(spark):
     assert kg1.kg_edges.count() == 0 and kg1.kg_nodes.count() == 0
     kg2 = build_kg(spark, some_t, empty_a, persist=False)
     assert kg2.kg_edges.count() == 0 and kg2.mentions.count() == 0
+    # persisted builds collect the (empty) resolution on the driver: an
+    # empty dictionary, and a dictionary none of the text mentions
+    no_hits_a = spark.createDataFrame([("zzqx", "zzqx", "C9999", 1.0)], ALIASES_SCHEMA)
+    for aliases in (empty_a, no_hits_a):
+        kg = build_kg(spark, some_t, aliases, persist=True)
+        try:
+            assert kg.resolution.collect() == []
+            for df in (kg.kg_edges, kg.kg_nodes, kg.kg_edge_stats):
+                assert df.collect() == []
+        finally:
+            kg.unpersist()
 
 
 def test_question_retrieval(spark, fixture_dir):

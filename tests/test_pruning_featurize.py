@@ -107,11 +107,17 @@ def test_link_scoring_runs_on_vocabulary_not_mentions(spark, fixture_dir):
 
     from knowledge_graph_integration_rag_biomedical_qna_spark.operators.linking import (
         candidate_table,
+        resolution_table,
     )
 
     aliases = spark.read.parquet(f"{fixture_dir}/concept_aliases.parquet")
-    pairs = aliases.select("alias_key", F.col("alias").alias("surface")).limit(20)
-    dup = pairs.crossJoin(spark.range(50)).select("alias_key", "surface")
+    # `extra` is determined by (alias_key, surface), as the pass-through
+    # contract requires
+    every_pair = aliases.select(
+        "alias_key", F.col("alias").alias("surface"), F.length("alias").alias("extra")
+    )
+    pairs = every_pair.limit(20)
+    dup = pairs.crossJoin(spark.range(50)).select("alias_key", "surface", "extra")
     got = candidate_table(dup, aliases)
     # row count must match the run on the already-distinct input exactly
     want = candidate_table(pairs, aliases)
@@ -119,3 +125,8 @@ def test_link_scoring_runs_on_vocabulary_not_mentions(spark, fixture_dir):
     # and the plan dedups BEFORE the join+score (an aggregate under the join)
     plan = got._jdf.queryExecution().executedPlan().toString()
     assert "HashAggregate" in plan or "ObjectHashAggregate" in plan
+    # the extra column passes through scoring and resolution unchanged
+    given = {tuple(r) for r in every_pair.collect()}
+    for out in (got, resolution_table(got)):
+        rows = {tuple(r) for r in out.select("alias_key", "surface", "extra").collect()}
+        assert rows and rows <= given, rows - given

@@ -1,11 +1,15 @@
-"""Plan-shape and job-count tests for the query side (and one dedup plan).
+"""Plan-shape and job-count tests for a KG build, an ask (and one dedup plan).
+
+A persisted `build_kg` caches only the extraction and serves the resolved
+vocabulary from the driver as a local relation, so the `kg_edges` write
+broadcasts it once and reuses that exchange for the second endpoint.
 
 An ask is one adaptive query: `link_questions` builds a lazy plan, and
 `retrieve_evidence` plus the caller's orderBy run it with one extraction
-pass, one `kg_edge_stats` scan and no cache or checkpoint. These tests read
-the final adaptive plan after `collect()` and count the Spark jobs of an
-ask, so a change that splits the plan again goes red here before it shows
-up as latency.
+pass, one `kg_edge_stats` scan and no cache or checkpoint.
+
+These tests read final adaptive plans and count Spark jobs, so a change that
+splits a plan again goes red here before it shows up as latency.
 """
 
 from __future__ import annotations
@@ -33,6 +37,18 @@ def final_plan(df) -> str:
     return plan.split("== Final Plan ==")[1].split("== Initial Plan ==")[0]
 
 
+def write_plan(spark, path: str) -> str:
+    """The final adaptive plan of the last write to `path`, from the SQL
+    status store, cut to the written query's own final plan (a cached
+    table's nested plans stay inside it)."""
+    execs = spark._jsparkSession.sharedState().statusStore().executionsList()
+    for i in reversed(range(execs.size())):
+        desc = execs.apply(i).physicalPlanDescription()
+        if "InsertIntoHadoopFsRelationCommand" in desc and path in desc:
+            return desc.split("== Final Plan ==", 1)[1].split("\n+- == Initial Plan ==")[0]
+    raise AssertionError(f"no write to {path} in the status store")
+
+
 def count_nodes(plan: str, name: str) -> int:
     """Plan lines whose operator (after the tree drawing) starts with `name`."""
     return sum(
@@ -53,6 +69,52 @@ def job_group(spark, name: str):
         ids.extend(sc.statusTracker().getJobIdsForGroup(name))
         sc.setLocalProperty("spark.jobGroup.id", None)
         sc.setLocalProperty("spark.job.description", None)
+
+
+@pytest.fixture(scope="module")
+def fixture_inputs(spark, fixture_dir):
+    """Transcripts and dictionary read from parquet (schema jobs run here)."""
+    return (spark.read.parquet(f"{fixture_dir}/transcripts.parquet"),
+            spark.read.parquet(f"{fixture_dir}/concept_aliases.parquet"))
+
+
+def _build_and_write(spark, inputs, out: str) -> None:
+    kg = build_kg(spark, *inputs)
+    try:
+        for name in ("kg_edges", "kg_nodes", "kg_edge_stats"):
+            getattr(kg, name).write.mode("overwrite").parquet(os.path.join(out, name))
+    finally:
+        kg.unpersist()
+
+
+def test_build_kg_job_count(spark, fixture_inputs, tmp_path):
+    """A persisted build_kg plus its three table writes takes at most 16
+    Spark jobs at local[4], dictionary probe included: the resolved
+    vocabulary is collected once, and no vocabulary table is cached."""
+    _build_and_write(spark, fixture_inputs, str(tmp_path / "warm"))
+    with job_group(spark, "build") as jobs:
+        _build_and_write(spark, fixture_inputs, str(tmp_path / "kg"))
+    assert len(jobs) <= 16, jobs
+
+
+def test_build_kg_serves_resolution_from_the_driver(spark, fixture_inputs, tmp_path):
+    """With persist=True the resolution is a LocalRelation; the kg_edges
+    write broadcasts it once and reuses that exchange for the object
+    endpoint, and its only cached table is the extraction."""
+    kg = build_kg(spark, *fixture_inputs)
+    try:
+        opt = kg.resolution._jdf.queryExecution().optimizedPlan()
+        assert opt.getClass().getSimpleName() == "LocalRelation"
+        path = str(tmp_path / "kg_edges")
+        kg.kg_edges.write.parquet(path)
+        plan = write_plan(spark, path)
+    finally:
+        kg.unpersist()
+    assert count_nodes(plan, "BroadcastExchange") == 1, plan
+    assert count_nodes(plan, "ReusedExchange") == 1, plan
+    # one cache, and it holds the extraction (its nested plan runs the kernel)
+    assert count_nodes(plan, "InMemoryRelation") == 1, plan
+    assert "MapInArrow" in plan, plan
 
 
 @pytest.fixture(scope="module")
@@ -98,14 +160,14 @@ def test_link_questions_is_lazy(spark, ask_env):
 
 
 def test_ask_is_one_plan(spark, ask_env):
-    """The final plan of an ask runs the extraction once (one MapInArrow,
-    whose exchange the candidate branch reuses), scans kg_edge_stats once,
-    and caches nothing."""
+    """The final plan of an ask runs the extraction once (one MapInArrow;
+    the question ids ride through linking, so there is no second branch and
+    nothing to reuse), scans kg_edge_stats once, and caches nothing."""
     df = _ask(spark, ask_env, _questions(spark, ask_env, range(16)))
     assert df.collect()
     plan = final_plan(df)
     assert count_nodes(plan, "MapInArrow") == 1, plan
-    assert count_nodes(plan, "ReusedExchange") == 1, plan
+    assert count_nodes(plan, "ReusedExchange") == 0, plan
     assert "InMemoryRelation" not in plan and "InMemoryTableScan" not in plan, plan
     edge_scans = [l for l in plan.splitlines()
                   if "FileScan" in l and "kg_edge_stats" in l]
@@ -114,13 +176,13 @@ def test_ask_is_one_plan(spark, ask_env):
 
 def test_ask_job_count(spark, ask_env):
     """link + retrieve + orderBy + collect of 16 questions built with
-    createDataFrame takes at most 8 Spark jobs at local[4]."""
+    createDataFrame takes at most 7 Spark jobs at local[4]."""
     qs = _questions(spark, ask_env, range(16))
     _ask(spark, ask_env, qs).collect()  # warm the Python workers
     with job_group(spark, "ask") as jobs:
         rows = _ask(spark, ask_env, qs).collect()
     assert rows
-    assert len(jobs) <= 8, jobs
+    assert len(jobs) <= 7, jobs
 
 
 @pytest.mark.parametrize("ddl, ids", [
