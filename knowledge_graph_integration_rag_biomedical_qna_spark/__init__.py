@@ -8,10 +8,10 @@ reference biomedical RAG pipeline
     transcripts (conv_id, turn_idx, role, text, tool, ts)
       -> [1] turn assembly        (stable window ordering per conversation)
       -> [2] mention detection    (vectorized sentence split + dictionary match)
-      -> [3] triple extraction    (pattern SVO over sentences, pandas UDF)
+      -> [3] triple extraction    (pattern SVO over sentences; [2]+[3] are one mapInArrow)
       -> [4] candidate generation (broadcast alias join)
-      -> [5] link scoring         (ngram/prior scoring + per-mention top-k)
-      -> [6] canonicalization     (salted groupBy cui -> nodes, CUI-resolved edges)
+      -> [5] link scoring         (ngram/prior scoring in mapInArrow + per-surface top-k)
+      -> [6] canonicalization     (groupBy cui -> nodes, CUI-resolved edges)
       -> [7] materialization      (parquet/Iceberg tables + lineage, resumable)
 
 Package map:

@@ -11,7 +11,9 @@ Numeric defaults are carried over from the reference pipeline so the operator
   (reference: rag2-filtering/filtering_module.py:21, generate_labels.py:11)
 - PERCENTILE = 0.75       per-group percentile filter
   (reference: similarity_pruning/context_pruning.py:14,40)
-- ARROW_BATCH = 1024      Arrow batch size for pandas UDFs
+- ARROW_BATCH = 1024      Arrow batch unit for every Python boundary
+                          (mapInArrow and pandas UDFs alike; the session
+                          sends ARROW_BATCH * 32 rows per batch)
   (reference search batch: rag2-retriever/main.py:128-131)
 """
 

@@ -9,7 +9,9 @@ rag2-retriever/main.py:119-167 + rerank.py:37-75 + context_pruning.py:36-51):
    to vocabulary, not corpus.
 2. broadcast equi-join against the concept_aliases table (J5) — the alias
    table is the small dimension; no shuffle.
-3. vectorized pandas-UDF blend score (M1-M3 analog, deterministic).
+3. blend score (M1-M3 analog, deterministic): `core.linking.link_score`
+   once per candidate row, in one Arrow pass (`mapInArrow`) that keeps its
+   input's partitioning.
 4. per-surface top-k window with pinned tie-breaks (T1), top-1 + floor
    acceptance (A2 + the 0.5 cosine floor).
 
@@ -20,7 +22,6 @@ collects it to the driver and broadcasts it against the triples — so stages
 
 from __future__ import annotations
 
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -29,12 +30,25 @@ from ..core.config import LINK_ACCEPT_FLOOR, TOP_K_CANDIDATES
 from ..core.linking import link_score
 
 
-@F.pandas_udf(T.DoubleType())
-def _link_score_udf(surface: pd.Series, alias: pd.Series, prior: pd.Series) -> pd.Series:
-    return pd.Series(
-        [link_score(s, a, float(p)) for s, a, p in zip(surface, alias, prior)],
-        dtype="float64",
-    )
+def _score_batches(batches):
+    """mapInArrow body: each RecordBatch comes back with a float64 `score`
+    column appended, `link_score` per row (null where the prior is null);
+    every input column passes through unchanged."""
+    import pyarrow as pa
+
+    for batch in batches:
+        scores = [
+            None if p is None else link_score(s, a, float(p))
+            for s, a, p in zip(
+                batch.column("surface").to_pylist(),
+                batch.column("alias").to_pylist(),
+                batch.column("prior").to_pylist(),
+            )
+        ]
+        yield pa.RecordBatch.from_arrays(
+            [*batch.columns, pa.array(scores, pa.float64())],
+            names=[*batch.schema.names, "score"],
+        )
 
 
 def candidate_table(
@@ -52,12 +66,15 @@ def candidate_table(
     surface), as the dedup keeps one arbitrary row per pair.
 
     `score_partitions`: coalesce the distinct-surface table before the
-    pandas-UDF scoring stage. The table is vocabulary-sized — far smaller
-    than the session's transcript parallelism — so running it at full width
-    mostly pays per-task scheduling + Python-worker spin-up (measured 35% of
-    the stage at local[32] with a 9-surface vocabulary). build_kg passes
+    Arrow scoring pass. The table is vocabulary-sized — far smaller than the
+    session's transcript parallelism — so running it at full width mostly
+    pays per-task scheduling + Python-worker spin-up (measured 35% of the
+    stage at local[32] with a 9-surface vocabulary). build_kg passes
     parallelism/16, which still gives a UMLS-scale vocabulary (~16M surfaces)
-    tens-to-hundreds of score tasks on a real cluster.
+    tens-to-hundreds of score tasks on a real cluster. Below 32 cores that
+    is one task, and the scoring pass keeps the single partition, so the
+    top-k window adds no exchange; a wider or hash-partitioned input (the
+    ask path) keeps one exchange, as the pass outputs new attribute ids.
 
     Join strategy is left to Catalyst/AQE (no forced broadcast hint): a
     normal dictionary auto-broadcasts under the session threshold, while a
@@ -69,8 +86,10 @@ def candidate_table(
     surfaces = mentions_or_triples_surfaces.dropDuplicates(["alias_key", "surface"])
     if score_partitions is not None:
         surfaces = surfaces.coalesce(max(1, score_partitions))
-    cands = surfaces.join(aliases, "alias_key", "inner").withColumn(
-        "score", _link_score_udf(F.col("surface"), F.col("alias"), F.col("prior"))
+    joined = surfaces.join(aliases, "alias_key", "inner")
+    cands = joined.mapInArrow(
+        _score_batches,
+        T.StructType([*joined.schema.fields, T.StructField("score", T.DoubleType())]),
     )
     # SQL-string window (r6 plan-construction diet): one parse round trip;
     # DESC/ASC defaults (NULLS LAST / NULLS FIRST) match .desc()/.asc()

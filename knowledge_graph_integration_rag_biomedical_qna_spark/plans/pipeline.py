@@ -7,17 +7,20 @@ Shuffle budget of the whole plan (the thing that decides 100 TB viability):
   1 shuffle   mention_stats groupBy(alias_key, surface)          [count payload;
               map-side combine absorbs hot-entity skew -> vocab-sized output,
               whose n_mentions rides through linking to canonicalization]
-  1 tiny      candidate window over (alias_key, surface)         [<= |vocab| rows]
+  0-1 tiny    candidate window over (alias_key, surface)         [<= |vocab| rows;
+              0 when the vocabulary is scored in one task, 1 otherwise]
   0 shuffles  resolution joins (the resolved vocabulary is broadcast)
-  1 tiny      stage [6] groupBy(cui) over the resolved vocabulary [<= |vocab| rows]
+  0-1 tiny    stage [6] groupBy(cui) over the resolved vocabulary [<= |vocab| rows;
+              0 on a persisted build, whose vocabulary is one partition]
   1 shuffle   edge-stats groupBy (counter payload, map-side combine)
 
 Only the extraction is cached. Under AQE each reference to an unfilled cache
 runs its own cache-stage job and an exchange above a cached scan is never
-reused, so a persisted build collects the resolved vocabulary instead: the
-kg_edges write broadcasts it once and reuses that exchange for the second
-endpoint. Build plus the three writes: 14 Spark jobs on the construct_x5
-benchmark (20 with cached vocabulary tables).
+reused, so a persisted build collects the resolved vocabulary instead and
+serves it as one partition: the kg_edges write broadcasts it once and reuses
+that exchange for the second endpoint, and kg_nodes groups it without an
+exchange. Build plus the three writes: 12 Spark jobs on the construct_x5
+benchmark.
 
 Everything transcript-sized shuffles at most once; after the mention_stats
 aggregate no transcript-sized table is read twice. `build_kg` is the only
@@ -149,11 +152,9 @@ def broadcast_alias_keys(
     # LocalRelation fast path (r6): a dictionary built from driver-resident
     # literals (VALUES / parallelized local data the optimizer folded) never
     # needs the cluster — collect() executes driver-side with zero Spark
-    # jobs, where the distinct-probe below costs a full 32-partition shuffle
-    # job (~0.45 s of task scheduling for a 10-row table, measured). The
-    # rows already live in driver memory, so collecting them is not a new
-    # driver-size risk. Classic-only probe; any failure falls through to
-    # the job-based probe.
+    # jobs, where the probe below costs at least one. The rows already live
+    # in driver memory, so collecting them is not a new driver-size risk.
+    # Classic-only probe; any failure falls through to the job-based probe.
     try:
         opt = proj._jdf.queryExecution().optimizedPlan()
         is_local = opt.getClass().getSimpleName() == "LocalRelation"
@@ -162,17 +163,21 @@ def broadcast_alias_keys(
     if is_local:
         return _ship_index(spark, proj.collect())
 
-    distinct = proj.distinct()
-    # size probe: one limit(1M+1)+collect detects-and-fetches dictionaries up
-    # to 1M keys (~tens of MB — harmless) in a single job, which is the
-    # overwhelmingly common case. Only when the probe overflows does a
-    # distributed count() decide broadcast-vs-spill, so the driver never
-    # receives max_broadcast_keys(=20M) rows just to notice there are too
-    # many of them (r2 advice).
+    # size probe: one task reads at most 1M+1 RAW rows, so a dictionary of
+    # up to 1M rows (~tens of MB — harmless), the overwhelmingly common case,
+    # is detected and fetched in one Spark job; _ship_index dedups the keys.
+    # Only when the probe overflows does a distributed distinct count()
+    # decide broadcast-vs-spill, so the driver never receives
+    # max_broadcast_keys(=20M) rows just to notice there are too many of
+    # them (r2 advice). Cost: a dictionary of more than 1M rows but at most
+    # 1M distinct keys overflows the raw probe and takes 6 jobs at local[4]
+    # (the probe, 3 for the distinct count, 2 for the distinct collect),
+    # where a distinct probe took 2.
     probe_cap = min(max_broadcast_keys, 1_000_000)
-    probe = distinct.limit(probe_cap + 1).collect()
+    probe = proj.coalesce(1).limit(probe_cap + 1).collect()
     if len(probe) <= probe_cap:
         return _ship_index(spark, probe)
+    distinct = proj.distinct()
     n_keys = distinct.count()
     if n_keys > max_broadcast_keys:
         import os
@@ -220,10 +225,13 @@ def build_kg(
     `persist=True` caches the collapsed extraction output, the one
     transcript-sized table both branches read (Catalyst has no cross-branch
     CSE), and before returning collects the resolution table inside the JVM
-    and serves it as a LocalRelation: no row crosses into Python and both
-    endpoint joins share one broadcast. Driver bound: the rows a broadcast
-    of the resolution collects anyway, plus one bigint column;
-    `spark.driver.maxResultSize` applies as before. Callers release the
+    and serves it as a one-partition LocalRelation: no row crosses into
+    Python, both endpoint joins share one broadcast, each broadcast build is
+    a single task and kg_nodes groups by cui without an exchange. Driver
+    bound: the rows a broadcast of the resolution collects anyway, plus one
+    bigint column; `spark.driver.maxResultSize` applies as before. At
+    cluster width the one partition has a cost: the broadcast build
+    serializes all the resolved rows in one task. Callers release the
     cache with `KGResult.unpersist()`. For jobs too large to cache at once,
     plans.checkpoint.ResumableKGRun calls this per bucket group and commits
     each group to storage. `persist=False` stays lazy: nothing is cached or
@@ -268,10 +276,12 @@ def build_kg(
     resolution = resolution_table(candidates)
     if persist:
         # the rows stay in the JVM: collected there, served as a LocalRelation
+        # in one partition (a LocalTableScan spreads over min(rows,
+        # parallelism) partitions, which kg_nodes would shuffle back together)
         jdf = resolution._jdf
         resolution = DataFrame(
             spark._jsparkSession.createDataFrame(jdf.collectAsList(), jdf.schema()), spark
-        )
+        ).coalesce(1)
 
     kg_edges = resolve_triples(raw_triples, resolution)
     kg_nodes = canonicalize_node_stats(resolution)

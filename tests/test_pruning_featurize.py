@@ -97,12 +97,13 @@ def test_cosine_col(spark):
 
 
 def test_link_scoring_runs_on_vocabulary_not_mentions(spark, fixture_dir):
-    """INVARIANT: the per-row Python in _link_score_udf is acceptable ONLY
-    because candidate_table dedups to distinct (alias_key, surface) first —
-    scoring cost is vocabulary-sized however many billions of mention rows
-    repeat a surface. Feed 50x-duplicated mentions and require the scored
-    candidate row count to equal the DISTINCT pair count times matching
-    aliases (i.e. no per-mention fan-out reaches the UDF)."""
+    """INVARIANT: the per-row Python in the Arrow scoring pass
+    (linking._score_batches) is acceptable ONLY because candidate_table
+    dedups to distinct (alias_key, surface) first — scoring cost is
+    vocabulary-sized however many billions of mention rows repeat a surface.
+    Feed 50x-duplicated mentions and require the scored candidate row count
+    to equal the DISTINCT pair count times matching aliases (i.e. no
+    per-mention fan-out reaches the scorer)."""
     from pyspark.sql import functions as F
 
     from knowledge_graph_integration_rag_biomedical_qna_spark.operators.linking import (
@@ -130,3 +131,39 @@ def test_link_scoring_runs_on_vocabulary_not_mentions(spark, fixture_dir):
     for out in (got, resolution_table(got)):
         rows = {tuple(r) for r in out.select("alias_key", "surface", "extra").collect()}
         assert rows and rows <= given, rows - given
+
+
+def test_candidate_scores_equal_link_score(spark):
+    """candidate_table's score is exactly core.linking.link_score of the
+    row (compared with ==): a surface whose normalized form is not its
+    alias_key, a non-ASCII alias and a prior with more than 6 decimals; an
+    array column passes through; a null prior scores null."""
+    from knowledge_graph_integration_rag_biomedical_qna_spark.core.linking import link_score
+    from knowledge_graph_integration_rag_biomedical_qna_spark.operators.linking import (
+        candidate_table,
+    )
+
+    surfaces = spark.createDataFrame(
+        [("foo bar", "foo/bar", ["q1", "q2"]),
+         ("sjögren syndrome", "Sjögren  Syndrome", ["q3"]),
+         ("aspirin", "ASA", [])],
+        "alias_key string, surface string, qids array<string>",
+    )
+    aliases = spark.createDataFrame(
+        [("foo bar", "C1", "foo bar", 0.1234567),
+         ("foo bar", "C2", "foo-bar", 0.6666665),
+         ("sjögren syndrome", "C3", "Sjögren syndrome", 1 / 3),
+         ("aspirin", "C4", "aspirin", 0.0000005),
+         ("aspirin", "C5", "acetylsalicylic acid", None)],
+        "alias_key string, cui string, alias string, prior double",
+    )
+    alias_of = {r["cui"]: r["alias"] for r in aliases.collect()}
+    rows = candidate_table(surfaces, aliases).collect()
+    assert {r["cui"] for r in rows} == set(alias_of)
+    for r in rows:
+        want = None if r["prior"] is None else link_score(
+            r["surface"], alias_of[r["cui"]], r["prior"])
+        assert r["score"] == want, (r, want)
+    qids = {r["surface"]: r["qids"] for r in surfaces.collect()}
+    assert all(r["qids"] == qids[r["surface"]] for r in rows)
+    assert candidate_table(surfaces.limit(0), aliases).collect() == []

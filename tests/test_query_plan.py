@@ -1,8 +1,11 @@
 """Plan-shape and job-count tests for a KG build, an ask (and one dedup plan).
 
 A persisted `build_kg` caches only the extraction and serves the resolved
-vocabulary from the driver as a local relation, so the `kg_edges` write
-broadcasts it once and reuses that exchange for the second endpoint.
+vocabulary from the driver as a one-partition local relation, so the
+`kg_edges` write broadcasts it once and reuses that exchange for the second
+endpoint, and the `kg_nodes` write groups it without an exchange. Link
+candidates are scored in an Arrow pass that keeps its input's partitioning,
+so a vocabulary scored in one task reaches the top-k window unshuffled.
 
 An ask is one adaptive query: `link_questions` builds a lazy plan, and
 `retrieve_evidence` plus the caller's orderBy run it with one extraction
@@ -87,24 +90,62 @@ def _build_and_write(spark, inputs, out: str) -> None:
         kg.unpersist()
 
 
+def _index_keys(index) -> set:
+    return set(index.singles) | {k for ks in index.multi_first.values() for _, k in ks}
+
+
+def test_small_parquet_dictionary_ships_in_one_job(spark, fixture_inputs):
+    """A parquet dictionary under the probe cap is read and shipped in one
+    Spark job: one task reads its raw rows, and the driver dedups the keys."""
+    aliases = fixture_inputs[1]
+    with job_group(spark, "probe") as jobs:
+        bc = broadcast_alias_keys(spark, aliases)
+    assert len(jobs) == 1, jobs
+    want = {r[0] for r in aliases.select("alias_key").distinct().collect()}
+    assert _index_keys(bc.value) == want
+
+
+def test_dictionary_probe_overflow_still_broadcasts(spark, tmp_path):
+    """8 raw rows over 4 distinct keys overflow a 5-key raw probe; the
+    distinct count then fits, so the dictionary still ships as a broadcast
+    index of its 4 keys, not a spill."""
+    from pyspark.broadcast import Broadcast
+
+    keys = ["aspirin", "heart attack", "ibuprofen", "type 2 diabetes"]
+    path = str(tmp_path / "aliases")
+    spark.createDataFrame(
+        [(k, f"C{i}") for i, k in enumerate(keys * 2)], "alias_key string, cui string"
+    ).write.parquet(path)
+    spill = tmp_path / "spill"
+    bc = broadcast_alias_keys(spark, spark.read.parquet(path),
+                              max_broadcast_keys=5, spill_dir=str(spill))
+    assert isinstance(bc, Broadcast)
+    assert _index_keys(bc.value) == set(keys)
+    assert not spill.exists()
+
+
 def test_build_kg_job_count(spark, fixture_inputs, tmp_path):
-    """A persisted build_kg plus its three table writes takes at most 16
+    """A persisted build_kg plus its three table writes takes at most 13
     Spark jobs at local[4], dictionary probe included: the resolved
-    vocabulary is collected once, and no vocabulary table is cached."""
+    vocabulary is collected once into one partition, the candidate window
+    and kg_nodes shuffle nothing, and no vocabulary table is cached."""
     _build_and_write(spark, fixture_inputs, str(tmp_path / "warm"))
     with job_group(spark, "build") as jobs:
         _build_and_write(spark, fixture_inputs, str(tmp_path / "kg"))
-    assert len(jobs) <= 16, jobs
+    assert len(jobs) <= 13, jobs
 
 
 def test_build_kg_serves_resolution_from_the_driver(spark, fixture_inputs, tmp_path):
-    """With persist=True the resolution is a LocalRelation; the kg_edges
-    write broadcasts it once and reuses that exchange for the object
-    endpoint, and its only cached table is the extraction."""
+    """With persist=True the resolution is a LocalRelation in one
+    partition; the kg_edges write broadcasts it once and reuses that
+    exchange for the object endpoint, and its only cached table is the
+    extraction."""
     kg = build_kg(spark, *fixture_inputs)
     try:
         opt = kg.resolution._jdf.queryExecution().optimizedPlan()
-        assert opt.getClass().getSimpleName() == "LocalRelation"
+        assert opt.getClass().getSimpleName() == "Repartition"
+        assert opt.child().getClass().getSimpleName() == "LocalRelation"
+        assert kg.resolution.rdd.getNumPartitions() == 1
         path = str(tmp_path / "kg_edges")
         kg.kg_edges.write.parquet(path)
         plan = write_plan(spark, path)
@@ -115,6 +156,29 @@ def test_build_kg_serves_resolution_from_the_driver(spark, fixture_inputs, tmp_p
     # one cache, and it holds the extraction (its nested plan runs the kernel)
     assert count_nodes(plan, "InMemoryRelation") == 1, plan
     assert "MapInArrow" in plan, plan
+
+
+def test_kg_nodes_write_has_no_exchange(spark, fixture_inputs, tmp_path):
+    """The persisted build's one-partition vocabulary already satisfies
+    kg_nodes' groupBy(cui): the write's final plan has no exchange."""
+    kg = build_kg(spark, *fixture_inputs)
+    try:
+        path = str(tmp_path / "kg_nodes")
+        kg.kg_nodes.write.parquet(path)
+        plan = write_plan(spark, path)
+    finally:
+        kg.unpersist()
+    assert count_nodes(plan, "Exchange") == 0, plan
+
+
+def test_lazy_resolution_scores_without_a_window_exchange(spark, fixture_inputs):
+    """At local[4] a lazy build scores its vocabulary in one task and the
+    scoring pass keeps that partition, so the resolution's final plan has
+    only the turn-assembly and mention-stats exchanges."""
+    res = build_kg(spark, *fixture_inputs, persist=False).resolution
+    assert res.collect()
+    plan = final_plan(res)
+    assert count_nodes(plan, "Exchange") == 2, plan
 
 
 @pytest.fixture(scope="module")
@@ -160,13 +224,15 @@ def test_link_questions_is_lazy(spark, ask_env):
 
 
 def test_ask_is_one_plan(spark, ask_env):
-    """The final plan of an ask runs the extraction once (one MapInArrow;
-    the question ids ride through linking, so there is no second branch and
-    nothing to reuse), scans kg_edge_stats once, and caches nothing."""
+    """The final plan of an ask runs the extraction once (the question ids
+    ride through linking, so there is no second branch and nothing to
+    reuse), scores candidates in one Arrow pass, scans kg_edge_stats once,
+    and caches nothing."""
     df = _ask(spark, ask_env, _questions(spark, ask_env, range(16)))
     assert df.collect()
     plan = final_plan(df)
-    assert count_nodes(plan, "MapInArrow") == 1, plan
+    assert count_nodes(plan, "MapInArrow fn(") == 1, plan
+    assert count_nodes(plan, "MapInArrow _score_batches(") == 1, plan
     assert count_nodes(plan, "ReusedExchange") == 0, plan
     assert "InMemoryRelation" not in plan and "InMemoryTableScan" not in plan, plan
     edge_scans = [l for l in plan.splitlines()
