@@ -9,8 +9,8 @@ reference biomedical RAG pipeline
       -> [1] turn assembly        (stable window ordering per conversation)
       -> [2] mention detection    (vectorized sentence split + dictionary match)
       -> [3] triple extraction    (pattern SVO over sentences; [2]+[3] are one mapInArrow)
-      -> [4] candidate generation (broadcast alias join)
-      -> [5] link scoring         (ngram/prior scoring in mapInArrow + per-surface top-k)
+      -> [4] candidate generation (lookup in the dictionary shipped with the matcher)
+      -> [5] link scoring         (ngram/prior scoring + per-surface top-k; [4]+[5] are one mapInArrow)
       -> [6] canonicalization     (groupBy cui -> nodes, CUI-resolved edges)
       -> [7] materialization      (parquet/Iceberg tables + lineage, resumable)
 

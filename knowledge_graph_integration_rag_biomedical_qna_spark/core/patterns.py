@@ -93,18 +93,24 @@ def _norm_token(w: str) -> str:
 
 
 class AliasIndex:
-    """First-token-indexed dictionary for the longest-match matcher.
+    """First-token-indexed dictionary for the longest-match matcher, plus
+    the dictionary rows that linking draws its candidates from.
 
     `singles` answers 1-token lookups; `multi_first` maps a first token to its
     multi-token keys longest-first, so a position whose token starts no alias
     costs two set probes instead of three string joins. Build once per
     dictionary and ship via SparkContext broadcast (executors share one copy).
     Matching semantics are identical to probing the flat key set.
+
+    `candidates`: the dictionary as four parallel columns (alias_key, alias,
+    cui, prior), or None for a matcher-only index (extraction needs keys
+    alone). Columns keep the payload compact; the per-key lookup is built
+    lazily by `candidates_by_key`, so extraction workers never build it.
     """
 
-    __slots__ = ("singles", "multi_first", "_by_len")
+    __slots__ = ("singles", "multi_first", "candidates", "_by_len", "_by_key")
 
-    def __init__(self, alias_keys):
+    def __init__(self, alias_keys, candidates=None):
         alias_keys = tuple(alias_keys)  # guard: __init__ iterates twice
         self.singles: frozenset[str] = frozenset(k for k in alias_keys if " " not in k)
         multi: dict[str, list[tuple[tuple[str, ...], str]]] = {}
@@ -130,7 +136,9 @@ class AliasIndex:
         for v in multi.values():
             v.sort(key=lambda pk: -len(pk[0]))
         self.multi_first = multi
+        self.candidates = candidates
         self._by_len = None
+        self._by_key = None
 
     def keys_by_len(self) -> "dict[int, frozenset[str]]":
         """Token-length -> key-set view (for the vectorized kernel's per-length
@@ -143,6 +151,21 @@ class AliasIndex:
                     by_len.setdefault(len(parts), set()).add(full_key)
             self._by_len = {k: frozenset(v) for k, v in by_len.items() if v}
         return self._by_len
+
+    def candidates_by_key(self) -> "dict[str, list[tuple[str, str, float]]]":
+        """alias_key -> [(cui, alias, prior), ...], one entry per dictionary
+        row in dictionary order. Built lazily and cached like `keys_by_len`."""
+        if self._by_key is None:
+            if self.candidates is None:
+                raise ValueError(
+                    "this AliasIndex carries no link candidates; build it with "
+                    "plans.pipeline.broadcast_alias_keys"
+                )
+            by_key: dict[str, list[tuple[str, str, float]]] = {}
+            for key, alias, cui, prior in zip(*self.candidates):
+                by_key.setdefault(key, []).append((cui, alias, prior))
+            self._by_key = by_key
+        return self._by_key
 
 
 def _as_index(alias_keys) -> AliasIndex:

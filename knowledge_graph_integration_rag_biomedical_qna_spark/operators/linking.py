@@ -7,13 +7,13 @@ rag2-retriever/main.py:119-167 + rerank.py:37-75 + context_pruning.py:36-51):
    context_pruning.py:79-85): identical surfaces are scored ONCE, however many
    billions of mentions repeat them. This keeps the scoring cost proportional
    to vocabulary, not corpus.
-2. broadcast equi-join against the concept_aliases table (J5) — the alias
-   table is the small dimension; no shuffle.
-3. blend score (M1-M3 analog, deterministic): `core.linking.link_score`
-   once per candidate row, in one Arrow pass (`mapInArrow`) that keeps its
-   input's partitioning.
-4. per-surface top-k window with pinned tie-breaks (T1), top-1 + floor
-   acceptance (A2 + the 0.5 cosine floor).
+2. one Arrow pass (`mapInArrow`) per surface batch: look the alias_key up in
+   the dictionary shipped with the matcher's AliasIndex (candidate
+   generation, J5 as a lookup: no join, no dictionary scan), score every
+   candidate with `core.linking.link_score` (M1-M3 analog, deterministic),
+   and keep the top-k under pinned tie-breaks (T1). The pass keeps its
+   input's partitioning, so linking adds no exchange.
+3. top-1 + floor acceptance (A2 + the 0.5 cosine floor): `resolution_table`.
 
 The output `resolution` table is tiny (<= distinct surfaces); build_kg
 collects it to the driver and broadcasts it against the triples — so stages
@@ -30,74 +30,108 @@ from ..core.config import LINK_ACCEPT_FLOOR, TOP_K_CANDIDATES
 from ..core.linking import link_score
 
 
-def _score_batches(batches):
-    """mapInArrow body: each RecordBatch comes back with a float64 `score`
-    column appended, `link_score` per row (null where the prior is null);
-    every input column passes through unchanged."""
-    import pyarrow as pa
+def _desc_nulls_last(x):
+    """Sort key of one double under `DESC NULLS LAST`, in Spark's order
+    (NaN above every number)."""
+    if x is None:
+        return (2, 0.0)
+    return (0, 0.0) if x != x else (1, -x)
 
-    for batch in batches:
-        scores = [
-            None if p is None else link_score(s, a, float(p))
-            for s, a, p in zip(
-                batch.column("surface").to_pylist(),
-                batch.column("alias").to_pylist(),
-                batch.column("prior").to_pylist(),
+
+def _candidates_fn(alias_index, cui_type, prior_type, k: int):
+    def candidates(batches):
+        """mapInArrow body: each input row comes back once per candidate of
+        its alias_key, top k by `score DESC NULLS LAST, prior DESC NULLS
+        LAST, cui ASC NULLS FIRST`, with cui, prior, score and rank appended;
+        a null prior scores null."""
+        import pyarrow as pa
+
+        by_key = alias_index.value.candidates_by_key()
+        for batch in batches:
+            take, cuis, priors, scores, ranks = [], [], [], [], []
+            for i, (key, surface) in enumerate(zip(
+                batch.column("alias_key").to_pylist(), batch.column("surface").to_pylist()
+            )):
+                cands = by_key.get(key)
+                if not cands:
+                    continue
+                scored = [
+                    (None if p is None else link_score(surface, a, float(p)), p, c)
+                    for c, a, p in cands
+                ]
+                scored.sort(key=lambda t: (
+                    _desc_nulls_last(t[0]), _desc_nulls_last(t[1]), t[2] is not None, t[2]
+                ))
+                for rank, (score, prior, cui) in enumerate(scored[:k], 1):
+                    take.append(i)
+                    cuis.append(cui)
+                    priors.append(prior)
+                    scores.append(score)
+                    ranks.append(rank)
+            kept = batch.take(pa.array(take, pa.int64()))
+            yield pa.RecordBatch.from_arrays(
+                [*kept.columns, pa.array(cuis, cui_type), pa.array(priors, prior_type),
+                 pa.array(scores, pa.float64()), pa.array(ranks, pa.int32())],
+                names=[*batch.schema.names, "cui", "prior", "score", "rank"],
             )
-        ]
-        yield pa.RecordBatch.from_arrays(
-            [*batch.columns, pa.array(scores, pa.float64())],
-            names=[*batch.schema.names, "score"],
-        )
+
+    return candidates
 
 
 def candidate_table(
     mentions_or_triples_surfaces: DataFrame,
     aliases: DataFrame,
     score_partitions: int | None = None,
+    alias_index=None,
 ) -> DataFrame:
-    """(alias_key, surface) x broadcast aliases -> scored, ranked candidates.
+    """(alias_key, surface) -> scored, ranked dictionary candidates.
 
     Input must have columns (alias_key, surface); output adds
-    (cui, prior, score, rank) with rank 1..k, deterministic order.
+    (cui, prior, score, rank) with rank 1..k, deterministic order. Each
+    surface's candidates are the dictionary rows under its alias_key (a
+    duplicated row stays two candidates); a surface whose key is not in the
+    dictionary, or is null, has none.
 
     Other input columns (mention counts, question ids) pass through to the
     output and `resolution_table`; each must be determined by (alias_key,
     surface), as the dedup keeps one arbitrary row per pair.
 
+    `alias_index`: the broadcast_alias_keys() result whose shipped
+    dictionary the candidates come from; None ships `aliases` here. Either
+    way `aliases` only types the cui and prior columns. An index built
+    without candidates raises when the plan runs. The lookup, scoring and
+    top-k run in one Arrow pass that keeps its input's partitioning, so
+    there is no join, no dictionary scan and no window exchange.
+
     `score_partitions`: coalesce the distinct-surface table before the
-    Arrow scoring pass. The table is vocabulary-sized — far smaller than the
+    Arrow pass. The table is vocabulary-sized — far smaller than the
     session's transcript parallelism — so running it at full width mostly
     pays per-task scheduling + Python-worker spin-up (measured 35% of the
     stage at local[32] with a 9-surface vocabulary). build_kg passes
     parallelism/16, which still gives a UMLS-scale vocabulary (~16M surfaces)
-    tens-to-hundreds of score tasks on a real cluster. Below 32 cores that
-    is one task, and the scoring pass keeps the single partition, so the
-    top-k window adds no exchange; a wider or hash-partitioned input (the
-    ask path) keeps one exchange, as the pass outputs new attribute ids.
+    tens-to-hundreds of score tasks on a real cluster; a >20M-alias
+    dictionary reaches those tasks as broadcast_alias_keys' spill file, read
+    once per Python worker."""
+    if alias_index is None:
+        # lazy import: plans.pipeline composes this module
+        from ..plans.pipeline import broadcast_alias_keys
 
-    Join strategy is left to Catalyst/AQE (no forced broadcast hint): a
-    normal dictionary auto-broadcasts under the session threshold, while a
-    >20M-alias dictionary — the regime broadcast_alias_keys spills to a
-    side-file for — must NOT be forced through the driver as a broadcast
-    table (r4 review: the hint reintroduced the very materialization the
-    spill path exists to avoid); AQE picks surfaces-side broadcast or a
-    shuffle join on alias_key as sizes dictate."""
+        alias_index = broadcast_alias_keys(aliases.sparkSession, aliases)
+    from pyspark.sql.pandas.types import to_arrow_type
+
     surfaces = mentions_or_triples_surfaces.dropDuplicates(["alias_key", "surface"])
     if score_partitions is not None:
         surfaces = surfaces.coalesce(max(1, score_partitions))
-    joined = surfaces.join(aliases, "alias_key", "inner")
-    cands = joined.mapInArrow(
-        _score_batches,
-        T.StructType([*joined.schema.fields, T.StructField("score", T.DoubleType())]),
+    # alias_key first, as an equi-join on it would order the columns
+    surfaces = surfaces.select("alias_key", *(c for c in surfaces.columns if c != "alias_key"))
+    cui, prior = aliases.schema["cui"], aliases.schema["prior"]
+    return surfaces.mapInArrow(
+        _candidates_fn(alias_index, to_arrow_type(cui.dataType), to_arrow_type(prior.dataType),
+                       int(TOP_K_CANDIDATES)),
+        T.StructType([*surfaces.schema.fields, cui, prior,
+                      T.StructField("score", T.DoubleType()),
+                      T.StructField("rank", T.IntegerType(), False)]),
     )
-    # SQL-string window (r6 plan-construction diet): one parse round trip;
-    # DESC/ASC defaults (NULLS LAST / NULLS FIRST) match .desc()/.asc()
-    return cands.selectExpr(
-        "*",
-        "row_number() OVER (PARTITION BY alias_key, surface "
-        "ORDER BY score DESC, prior DESC, cui ASC) AS rank",
-    ).drop("alias").filter(f"rank <= {int(TOP_K_CANDIDATES)}")
 
 
 def resolution_table(candidates: DataFrame) -> DataFrame:

@@ -13,7 +13,10 @@ engine that becomes:
   (the Iceberg analog is a snapshot commit per group);
 - resume = skip buckets whose markers exist (LEFT ANTI semantics, P8/U3);
   each marker records the bucket count, and a resume or finalize under
-  another count raises (its bucket ids name other conversations);
+  another count raises (its bucket ids name other conversations); each
+  marker also records the dictionary's digest, and a resume with another
+  dictionary, or a finalize over markers that disagree, raises (the
+  dictionary decides every link, so mixing two would mix links silently);
 - `finalize()` merges the node partials of marked groups (surface sets union,
   counts sum; linking is a pure per-(alias_key, surface) function, so the
   merge equals the batch kg_nodes) and builds kg_edge_stats from the
@@ -68,15 +71,17 @@ def _marker_path(out_dir: str, bucket_group: tuple[int, ...]) -> str:
     return os.path.join(out_dir, "_done", f"group-{_group_key(bucket_group)}.json")
 
 
-def _done_groups(out_dir: str, n_buckets: int) -> list[list[int]]:
+def _done_groups(out_dir: str, n_buckets: int, dict_digest: str | None = None) -> list[list[int]]:
     """The bucket list of every committed group (one per done marker).
     Bucket ids only mean something under the bucket count that wrote them,
     so a marker from another count (or one that predates the field) raises
-    instead of skipping the wrong conversations."""
+    instead of skipping the wrong conversations. Likewise a marker written
+    with another dictionary than `dict_digest` raises; with no digest given
+    (finalize) the markers must agree with each other."""
     d = os.path.join(out_dir, "_done")
     if not os.path.isdir(d):
         return []
-    groups = []
+    groups, digests = [], set()
     for f in sorted(os.listdir(d)):
         if f.endswith(".json"):
             with open(os.path.join(d, f)) as fh:
@@ -88,12 +93,24 @@ def _done_groups(out_dir: str, n_buckets: int) -> list[list[int]]:
                     f"n_buckets={n_buckets}; resume with the original bucket "
                     "count or start a new output dir"
                 )
+            if dict_digest is not None and marker.get("dict_digest") != dict_digest:
+                raise ValueError(
+                    f"{out_dir}: done marker {f} was written with dictionary "
+                    f"{marker.get('dict_digest')}, this run uses {dict_digest}; "
+                    "resume with the original dictionary or start a new output dir"
+                )
+            digests.add(marker.get("dict_digest"))
             groups.append(marker["buckets"])
+    if len(digests) > 1:
+        raise ValueError(
+            f"{out_dir}: done markers were written with different dictionaries "
+            f"{sorted(map(str, digests))}; rebuild into a new output dir"
+        )
     return groups
 
 
-def _done_buckets(out_dir: str, n_buckets: int) -> set[int]:
-    return {b for grp in _done_groups(out_dir, n_buckets) for b in grp}
+def _done_buckets(out_dir: str, n_buckets: int, dict_digest: str) -> set[int]:
+    return {b for grp in _done_groups(out_dir, n_buckets, dict_digest) for b in grp}
 
 
 def _overwrite(df: DataFrame, key: str, path: str) -> None:
@@ -125,9 +142,9 @@ class ResumableKGRun:
             F.count(F.lit(1)).alias(name)
         )
 
-    def _commit_group(self, grp: tuple[int, ...], kg, t0: float) -> None:
+    def _commit_group(self, grp: tuple[int, ...], kg, t0: float, dict_digest: str) -> None:
         """Write one group's edges, node partial and lineage, then its marker;
-        `t0` is when the group started."""
+        `t0` is when the group started, `dict_digest` names its dictionary."""
         key = F.lit(_group_key(grp))
         _overwrite(
             kg.kg_edges.withColumn(_BUCKET, bucket_of("conv_id", self.buckets)),
@@ -156,6 +173,7 @@ class ResumableKGRun:
         tmp = marker + ".tmp"
         with open(tmp, "w") as fh:
             json.dump({"buckets": list(grp), "n_buckets": self.buckets,
+                       "dict_digest": dict_digest,
                        "wall_sec": round(time.time() - t0, 3)}, fh)
         os.replace(tmp, marker)
 
@@ -170,8 +188,8 @@ class ResumableKGRun:
         Returns summary metrics. Call `finalize()` after all groups are done.
         """
         os.makedirs(os.path.join(self.out_dir, "_done"), exist_ok=True)
-        done = _done_buckets(self.out_dir, self.buckets)
         keys_bc = broadcast_alias_keys(self.spark, aliases)
+        done = _done_buckets(self.out_dir, self.buckets, keys_bc.digest)
 
         all_buckets = [b for b in range(self.buckets) if b not in done]
         groups = [
@@ -181,19 +199,15 @@ class ResumableKGRun:
         if max_groups is not None:
             groups = groups[:max_groups]
 
-        aliases = aliases.cache()
-        try:
-            for grp in groups:
-                t0 = time.time()
-                part = transcripts.filter(bucket_of("conv_id", self.buckets).isin(list(grp)))
-                kg = build_kg(self.spark, part, aliases, alias_index=keys_bc)
-                try:
-                    self._commit_group(grp, kg, t0)
-                finally:
-                    kg.unpersist()
-        finally:
-            aliases.unpersist()
-        done = _done_buckets(self.out_dir, self.buckets)
+        for grp in groups:
+            t0 = time.time()
+            part = transcripts.filter(bucket_of("conv_id", self.buckets).isin(list(grp)))
+            kg = build_kg(self.spark, part, aliases, alias_index=keys_bc)
+            try:
+                self._commit_group(grp, kg, t0, keys_bc.digest)
+            finally:
+                kg.unpersist()
+        done = _done_buckets(self.out_dir, self.buckets, keys_bc.digest)
         return {
             "groups_processed": len(groups),
             "buckets_done": sorted(done),
@@ -202,7 +216,8 @@ class ResumableKGRun:
 
     def finalize(self) -> None:
         """Merge the node partials of the marked groups -> kg_nodes; the
-        committed edges -> kg_edge_stats (exact n_convs, as in build_kg)."""
+        committed edges -> kg_edge_stats (exact n_convs, as in build_kg).
+        Raises if the markers name different dictionaries."""
         committed = [_group_key(grp) for grp in _done_groups(self.out_dir, self.buckets)]
         partials = self.spark.read.parquet(
             os.path.join(self.out_dir, "node_partials")

@@ -7,8 +7,6 @@ Shuffle budget of the whole plan (the thing that decides 100 TB viability):
   1 shuffle   mention_stats groupBy(alias_key, surface)          [count payload;
               map-side combine absorbs hot-entity skew -> vocab-sized output,
               whose n_mentions rides through linking to canonicalization]
-  0-1 tiny    candidate window over (alias_key, surface)         [<= |vocab| rows;
-              0 when the vocabulary is scored in one task, 1 otherwise]
   0 shuffles  resolution joins (the resolved vocabulary is broadcast)
   0-1 tiny    stage [6] groupBy(cui) over the resolved vocabulary [<= |vocab| rows;
               0 on a persisted build, whose vocabulary is one partition]
@@ -19,7 +17,7 @@ runs its own cache-stage job and an exchange above a cached scan is never
 reused, so a persisted build collects the resolved vocabulary instead and
 serves it as one partition: the kg_edges write broadcasts it once and reuses
 that exchange for the second endpoint, and kg_nodes groups it without an
-exchange. Build plus the three writes: 12 Spark jobs on the construct_x5
+exchange. Build plus the three writes: 11 Spark jobs on the construct_x5
 benchmark.
 
 Everything transcript-sized shuffles at most once; after the mention_stats
@@ -71,7 +69,7 @@ class _ClosureBroadcast:
     the value rides each task closure instead of the broadcast bus. Same
     `.value` interface."""
 
-    __slots__ = ("value",)
+    __slots__ = ("value", "digest")
 
     def __init__(self, value):
         self.value = value
@@ -83,16 +81,23 @@ _FILE_INDEX_CACHE: dict = {}
 
 class FileBackedAliasIndex:
     """Escape hatch for dictionaries too large to route through the driver:
-    the distinct alias keys are written to a parquet side-file by Spark
-    executors (never collected), and each PYTHON WORKER lazily builds the
-    AliasIndex from that file on first `.value` access, caching it per
-    (path, mtime). Pickles as just the path, so task closures stay tiny.
-    Same `.value` interface as a broadcast."""
+    the dictionary's four columns are written to a parquet side-file by
+    Spark executors (never collected), and each PYTHON WORKER lazily builds
+    the AliasIndex, keys and candidates, from that file on first `.value`
+    access, caching it per (path, mtime). Pickles as just the path, so task
+    closures stay tiny. Same `.value` interface as a broadcast."""
 
     __slots__ = ("path",)
 
     def __init__(self, path: str):
         self.path = path
+
+    @property
+    def digest(self) -> str:
+        """The dictionary's content digest: the spill directory's name."""
+        import os
+
+        return os.path.basename(self.path.rstrip(os.sep))
 
     @property
     def value(self):
@@ -107,11 +112,8 @@ class FileBackedAliasIndex:
 
             # path may be a single file or a multi-part parquet directory
             # (pyarrow reads both); parts are read in one dataset scan
-            keys = frozenset(
-                pq.read_table(self.path, columns=["alias_key"])
-                .column("alias_key").to_pylist()
-            )
-            hit = AliasIndex(keys)
+            cols = [c.to_pylist() for c in pq.read_table(self.path, columns=_SHIPPED).columns]
+            hit = AliasIndex(frozenset(cols[0]), candidates=cols)
             _FILE_INDEX_CACHE.clear()
             _FILE_INDEX_CACHE[key] = hit
         return hit
@@ -119,17 +121,29 @@ class FileBackedAliasIndex:
 
 # above this many distinct keys, stop collecting the dictionary to the driver
 MAX_BROADCAST_KEYS = 20_000_000
+# the dictionary columns the index ships: matcher keys plus link candidates
+_SHIPPED = ["alias_key", "alias", "cui", "prior"]
 
 
 def _ship_index(spark: SparkSession, rows):
-    """Broadcast an AliasIndex over already-collected `alias_key` rows."""
+    """Broadcast an AliasIndex over already-collected dictionary rows
+    (`_SHIPPED` columns). The handle's `digest` is a sha256 over the sorted
+    rows, computed here from the rows the driver already holds."""
+    import hashlib
+
     from ..core.patterns import AliasIndex
 
-    idx = AliasIndex(frozenset(r[0] for r in rows))
+    rows = [tuple(r) for r in rows]
+    cols = tuple(zip(*rows)) or ((),) * len(_SHIPPED)
+    idx = AliasIndex(frozenset(cols[0]), candidates=cols)
     try:
-        return spark.sparkContext.broadcast(idx)
+        handle = spark.sparkContext.broadcast(idx)
     except Exception:  # Spark Connect: no SparkContext on the client
-        return _ClosureBroadcast(idx)
+        handle = _ClosureBroadcast(idx)
+    handle.digest = "sha256-" + hashlib.sha256(
+        "\n".join(sorted(map(repr, rows))).encode()
+    ).hexdigest()
+    return handle
 
 
 def broadcast_alias_keys(
@@ -138,17 +152,26 @@ def broadcast_alias_keys(
     max_broadcast_keys: int = MAX_BROADCAST_KEYS,
     spill_dir: str | None = None,
 ):
-    """Ship the alias dictionary to executors once as a first-token-indexed
-    AliasIndex (matcher probes two sets per token instead of joining n-grams).
-    At UMLS scale (~16M alias keys) this is a few hundred MB — broadcast
-    territory. Beyond `max_broadcast_keys`, the driver never materializes the
-    dictionary: the distinct keys are spilled to a single parquet side-file
-    (executor-written) and workers build the index themselves
-    (FileBackedAliasIndex) — the one driver-side collect in the hot path is
-    gone exactly when it would hurt. On a real cluster pass `spill_dir` on
-    SHARED storage (HDFS/S3 fuse mount); the default tempdir is correct only
-    for local mode."""
-    proj = aliases.select("alias_key")
+    """Ship the alias dictionary to executors once as an AliasIndex: the
+    first-token index the matcher probes (two sets per token instead of
+    joining n-grams) and the (alias_key, alias, cui, prior) rows that
+    `candidate_table` looks candidates up in, so linking reads no dictionary
+    table of its own. Rows with a null alias_key link nothing and are
+    dropped.
+
+    Cost: the broadcast carries three more columns per alias than a
+    keys-only index, an estimated ~100 pickled bytes per alias, so about
+    1.6 GB at UMLS scale (~16M aliases), broadcast once per job. No
+    dictionary of that size has been run, so the regime is unmeasured. Beyond `max_broadcast_keys`
+    distinct keys the driver never materializes the dictionary: its rows are
+    spilled to a parquet side-file (executor-written) and workers build the
+    index themselves (FileBackedAliasIndex). On a real cluster pass
+    `spill_dir` on SHARED storage (HDFS/S3 fuse mount); the default tempdir
+    is correct only for local mode.
+
+    The returned handle's `digest` names the dictionary's content (a resume
+    compares it, plans.checkpoint); computing it starts no Spark job."""
+    proj = aliases.select(*_SHIPPED).where("alias_key IS NOT NULL")
     # LocalRelation fast path (r6): a dictionary built from driver-resident
     # literals (VALUES / parallelized local data the optimizer folded) never
     # needs the cluster — collect() executes driver-side with zero Spark
@@ -165,20 +188,18 @@ def broadcast_alias_keys(
 
     # size probe: one task reads at most 1M+1 RAW rows, so a dictionary of
     # up to 1M rows (~tens of MB — harmless), the overwhelmingly common case,
-    # is detected and fetched in one Spark job; _ship_index dedups the keys.
-    # Only when the probe overflows does a distributed distinct count()
-    # decide broadcast-vs-spill, so the driver never receives
+    # is detected and fetched in one Spark job. Only when the probe
+    # overflows does a distributed distinct count of alias_key decide
+    # broadcast-vs-spill, so the driver never receives
     # max_broadcast_keys(=20M) rows just to notice there are too many of
     # them (r2 advice). Cost: a dictionary of more than 1M rows but at most
-    # 1M distinct keys overflows the raw probe and takes 6 jobs at local[4]
-    # (the probe, 3 for the distinct count, 2 for the distinct collect),
-    # where a distinct probe took 2.
+    # max_broadcast_keys distinct keys overflows the raw probe and takes
+    # the probe, the distinct count and a collect of every row.
     probe_cap = min(max_broadcast_keys, 1_000_000)
     probe = proj.coalesce(1).limit(probe_cap + 1).collect()
     if len(probe) <= probe_cap:
         return _ship_index(spark, probe)
-    distinct = proj.distinct()
-    n_keys = distinct.count()
+    n_keys = proj.select("alias_key").distinct().count()
     if n_keys > max_broadcast_keys:
         import os
         import tempfile
@@ -187,18 +208,20 @@ def broadcast_alias_keys(
 
         base = spill_dir or os.path.join(tempfile.gettempdir(), "kg_alias_spill")
         os.makedirs(base, exist_ok=True)
-        # content-addressed spill dir: (count, order-insensitive key digest)
-        # — rerunning with the same dictionary reuses the existing spill
-        # instead of accreting uuid dirs forever
+        # content-addressed spill dir: (row count, order-insensitive digest
+        # of all four columns) — rerunning with the same dictionary reuses
+        # the existing spill, and a changed prior or cui gets a new one
         # bit_xor: order-insensitive and can't overflow (ANSI mode)
-        digest = distinct.agg(F.expr("bit_xor(xxhash64(alias_key))")).first()[0] or 0
-        out_dir = os.path.join(base, f"keys-{n_keys}-{digest & (1 << 64) - 1:016x}")
+        n_rows, digest = proj.agg(
+            F.count(F.lit(1)), F.expr(f"bit_xor(xxhash64({', '.join(_SHIPPED)}))")
+        ).first()
+        out_dir = os.path.join(base, f"aliases-{n_rows}-{(digest or 0) & (1 << 64) - 1:016x}")
         if not os.path.exists(os.path.join(out_dir, "_SUCCESS")):
             # multi-part write (no coalesce(1) single-task funnel); the
             # reader scans the directory as one dataset
-            distinct.write.mode("overwrite").parquet(out_dir)
+            proj.write.mode("overwrite").parquet(out_dir)
         return FileBackedAliasIndex(out_dir)
-    return _ship_index(spark, distinct.collect())
+    return _ship_index(spark, proj.collect())
 
 
 def build_kg(
@@ -243,7 +266,9 @@ def build_kg(
     tests/test_bucketing.py) — the right storage layout at 100 TB, where
     one bucketed write amortizes the shuffle across every downstream job.
 
-    `alias_index`: a prebuilt broadcast_alias_keys() result. A long-lived
+    `alias_index`: a prebuilt broadcast_alias_keys() result. It carries the
+    matcher's keys and the link candidates, so linking reads no dictionary
+    table: `aliases` only types the candidate columns. A long-lived
     deployment ships the dictionary once, not once per job — steady-state
     callers (bench, the checkpointed and streaming runs, repeated builds
     against one dictionary) hoist it; the default builds it here.
@@ -272,7 +297,9 @@ def build_kg(
     from ..session import default_parallelism
 
     default_par = default_parallelism(spark)
-    candidates = candidate_table(mention_stats, aliases, score_partitions=default_par // 16 or 1)
+    candidates = candidate_table(
+        mention_stats, aliases, score_partitions=default_par // 16 or 1, alias_index=keys_bc
+    )
     resolution = resolution_table(candidates)
     if persist:
         # the rows stay in the JVM: collected there, served as a LocalRelation

@@ -40,9 +40,12 @@ def link_questions(
     The dictionary hits are grouped per (alias_key, surface) with the set of
     questions that contain them; the set rides through candidate scoring as
     a pass-through column (candidate_table's contract), so the extraction
-    runs once and the accepted links explode straight back to questions. No
-    `score_partitions`: AQE's shuffle read already coalesces the
-    vocabulary-sized input."""
+    runs once and the accepted links explode straight back to questions.
+    Candidates come from the dictionary `keys_bc` already ships for the
+    matcher, looked up, scored and ranked in one Arrow pass over the
+    grouped hits: the plan reads no dictionary table, and linking adds no
+    broadcast and no exchange. No `score_partitions`: AQE's shuffle read
+    already coalesces the vocabulary-sized input."""
     turns_like = questions.select(
         F.col("question_id").cast("string").alias("conv_id"),
         F.lit(0).cast("int").alias("turn_idx"),
@@ -54,7 +57,7 @@ def link_questions(
         .agg(F.collect_set("conv_id").alias("qids"))
     )
     return (
-        resolution_table(candidate_table(hits, aliases))
+        resolution_table(candidate_table(hits, aliases, alias_index=keys_bc))
         .select(F.explode("qids").alias("qid"), "cui", "score")
         .select(
             F.col("qid").cast(questions.schema["question_id"].dataType).alias("question_id"),

@@ -150,3 +150,40 @@ def test_resume_with_other_bucket_count_raises(spark, inputs, tmp_path):
         other.run(transcripts, aliases)
     with pytest.raises(ValueError, match="n_buckets=8.*n_buckets=4"):
         other.finalize()
+
+
+def test_resume_with_a_changed_dictionary_raises(spark, inputs, tmp_path):
+    """The dictionary decides every link, so groups committed under one
+    dictionary must not be mixed with groups linked by another: a resume
+    whose dictionary differs in one prior raises, a resume with the
+    original dictionary completes, and finalize refuses markers that name
+    different dictionaries."""
+    import json
+
+    from pyspark.sql import functions as F
+
+    transcripts, aliases = inputs
+    out = str(tmp_path / "crashed")
+    run = ResumableKGRun(spark, out, buckets=8, group_size=2)
+    assert run.run(transcripts, aliases, max_groups=1)["buckets_done"] == [0, 1]
+
+    first = aliases.orderBy("alias_key", "cui", "alias").first()
+    changed = aliases.withColumn("prior", F.when(
+        (F.col("alias_key") == first["alias_key"]) & (F.col("cui") == first["cui"])
+        & (F.col("alias") == first["alias"]), F.col("prior") + 0.01,
+    ).otherwise(F.col("prior")))
+    with pytest.raises(ValueError, match="written with dictionary"):
+        run.run(transcripts, changed)
+
+    assert run.run(transcripts, aliases)["complete"]
+    run.finalize()
+
+    done = os.path.join(out, "_done")
+    marker = os.path.join(done, sorted(os.listdir(done))[0])
+    with open(marker) as fh:
+        m = json.load(fh)
+    m["dict_digest"] = "sha256-other"
+    with open(marker, "w") as fh:
+        json.dump(m, fh)
+    with pytest.raises(ValueError, match="different dictionaries"):
+        run.finalize()

@@ -60,8 +60,8 @@ def test_canonicalization_is_salted_two_phase(kg, spark):
 
     nodes_plan = _plan(kg.kg_nodes)
     assert "partial_count" in nodes_plan or "partial" in nodes_plan, nodes_plan
-    # the vocab-sized join side is broadcast
-    assert "BroadcastHashJoin" in nodes_plan
+    # candidates come from the shipped dictionary: no join of any kind
+    assert "Join" not in nodes_plan and "CartesianProduct" not in nodes_plan, nodes_plan
 
 
 def test_turn_assembly_single_shuffle(spark, fixture_dir):

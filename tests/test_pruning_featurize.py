@@ -97,8 +97,8 @@ def test_cosine_col(spark):
 
 
 def test_link_scoring_runs_on_vocabulary_not_mentions(spark, fixture_dir):
-    """INVARIANT: the per-row Python in the Arrow scoring pass
-    (linking._score_batches) is acceptable ONLY because candidate_table
+    """INVARIANT: the per-row Python in the Arrow candidate pass
+    (linking._candidates_fn) is acceptable ONLY because candidate_table
     dedups to distinct (alias_key, surface) first — scoring cost is
     vocabulary-sized however many billions of mention rows repeat a surface.
     Feed 50x-duplicated mentions and require the scored candidate row count
@@ -123,7 +123,7 @@ def test_link_scoring_runs_on_vocabulary_not_mentions(spark, fixture_dir):
     # row count must match the run on the already-distinct input exactly
     want = candidate_table(pairs, aliases)
     assert got.count() == want.count()
-    # and the plan dedups BEFORE the join+score (an aggregate under the join)
+    # and the plan dedups BEFORE the lookup+score (an aggregate under the pass)
     plan = got._jdf.queryExecution().executedPlan().toString()
     assert "HashAggregate" in plan or "ObjectHashAggregate" in plan
     # the extra column passes through scoring and resolution unchanged
@@ -167,3 +167,90 @@ def test_candidate_scores_equal_link_score(spark):
     qids = {r["surface"]: r["qids"] for r in surfaces.collect()}
     assert all(r["qids"] == qids[r["surface"]] for r in rows)
     assert candidate_table(surfaces.limit(0), aliases).collect() == []
+
+
+def test_candidate_ranking_matches_the_specification(spark):
+    """candidate_table ranks each surface's dictionary candidates in the
+    order `score DESC NULLS LAST, prior DESC NULLS LAST, cui ASC NULLS
+    FIRST` and keeps the top TOP_K_CANDIDATES: equal to
+    core.linking.rank_candidates where no cui or prior is null, and to that
+    order written out where one is. Duplicate dictionary rows stay separate
+    candidates; a key not in the dictionary and a null alias_key link to
+    nothing."""
+    from knowledge_graph_integration_rag_biomedical_qna_spark.core.config import (
+        TOP_K_CANDIDATES,
+    )
+    from knowledge_graph_integration_rag_biomedical_qna_spark.core.linking import (
+        link_score,
+        rank_candidates,
+    )
+    from knowledge_graph_integration_rag_biomedical_qna_spark.operators.linking import (
+        candidate_table,
+    )
+
+    dictionary = (
+        # more than k candidates: the top k survive
+        [("many", f"many {i}", f"C{i:02d}", i / 20) for i in range(TOP_K_CANDIDATES + 2)]
+        # one score from two priors (0.7 * 1 + 0.03 == 0.7 * 0 + 0.72999999),
+        # then one score and prior under two cuis
+        + [("tie", "tie", "T2", 0.1), ("tie", "zzzz", "T1", 2.4333333),
+           ("tie", "tie", "T0", 0.1)]
+        # a null prior scores null and ranks last; a null cui ranks first
+        # among its ties
+        + [("nulls", "nulls", "N1", None), ("nulls", "nulls", None, 0.5),
+           ("nulls", "nulls", "N0", 0.5), ("nulls", "other", "N2", 0.2)]
+        + [("dup", "dup", "D1", 0.4), ("dup", "dup", "D1", 0.4), ("dup", "dup", "D0", 0.4)]
+        + [(None, "ghost", "G1", 0.9)]
+    )
+    assert link_score("tie", "tie", 0.1) == link_score("tie", "zzzz", 2.4333333)
+    aliases = spark.createDataFrame(
+        dictionary, "alias_key string, alias string, cui string, prior double"
+    )
+    surfaces = spark.createDataFrame(
+        [("many", "many"), ("tie", "tie"), ("nulls", "nulls"), ("dup", "dup"),
+         ("absent", "absent"), (None, "ghost")],
+        "alias_key string, surface string",
+    )
+    out = candidate_table(surfaces, aliases)
+    assert [(f.name, f.dataType.simpleString()) for f in out.schema] == [
+        ("alias_key", "string"), ("surface", "string"), ("cui", "string"),
+        ("prior", "double"), ("score", "double"), ("rank", "int")]
+
+    got: dict[str, list] = {}
+    for r in out.collect():
+        got.setdefault(r["alias_key"], []).append(r)
+    assert set(got) == {"many", "tie", "nulls", "dup"}
+    for key, rows in got.items():
+        rows.sort(key=lambda r: r["rank"])
+        assert [r["rank"] for r in rows] == list(range(1, len(rows) + 1))
+        assert {r["surface"] for r in rows} == {key}
+        cands = [(c, a, p) for k, a, c, p in dictionary if k == key]
+        if key != "nulls":
+            assert [(r["cui"], r["score"]) for r in rows] == rank_candidates(key, cands)
+    assert len(got["many"]) == TOP_K_CANDIDATES
+    assert [r["cui"] for r in got["tie"]] == ["T1", "T0", "T2"]
+    assert [r["cui"] for r in got["dup"]] == ["D0", "D1", "D1"]
+    assert [(r["cui"], r["prior"], r["score"]) for r in got["nulls"]] == [
+        (None, 0.5, link_score("nulls", "nulls", 0.5)),
+        ("N0", 0.5, link_score("nulls", "nulls", 0.5)),
+        ("N2", 0.2, link_score("nulls", "other", 0.2)),
+        ("N1", None, None),
+    ]
+
+
+def test_candidates_need_an_index_that_carries_them(spark):
+    """A matcher-only AliasIndex (keys alone) cannot link: candidate_table
+    raises when the plan runs instead of returning an empty table."""
+    from knowledge_graph_integration_rag_biomedical_qna_spark.core.patterns import AliasIndex
+    from knowledge_graph_integration_rag_biomedical_qna_spark.operators.linking import (
+        candidate_table,
+    )
+
+    aliases = spark.createDataFrame(
+        [("aspirin", "aspirin", "C1", 0.9)],
+        "alias_key string, alias string, cui string, prior double",
+    )
+    surfaces = spark.createDataFrame([("aspirin", "Aspirin")], "alias_key string, surface string")
+    keys_only = spark.sparkContext.broadcast(AliasIndex(["aspirin"]))
+    with pytest.raises(Exception, match="carries no link candidates"):
+        candidate_table(surfaces, aliases, alias_index=keys_only).collect()

@@ -4,8 +4,9 @@ A persisted `build_kg` caches only the extraction and serves the resolved
 vocabulary from the driver as a one-partition local relation, so the
 `kg_edges` write broadcasts it once and reuses that exchange for the second
 endpoint, and the `kg_nodes` write groups it without an exchange. Link
-candidates are scored in an Arrow pass that keeps its input's partitioning,
-so a vocabulary scored in one task reaches the top-k window unshuffled.
+candidates are looked up in the dictionary the matcher's index ships, then
+scored and ranked in one Arrow pass that keeps its input's partitioning, so
+linking reads no dictionary table and adds no join, broadcast or exchange.
 
 An ask is one adaptive query: `link_questions` builds a lazy plan, and
 `retrieve_evidence` plus the caller's orderBy run it with one extraction
@@ -108,31 +109,36 @@ def test_small_parquet_dictionary_ships_in_one_job(spark, fixture_inputs):
 def test_dictionary_probe_overflow_still_broadcasts(spark, tmp_path):
     """8 raw rows over 4 distinct keys overflow a 5-key raw probe; the
     distinct count then fits, so the dictionary still ships as a broadcast
-    index of its 4 keys, not a spill."""
+    index of its 4 keys, not a spill, carrying both rows of every key as
+    link candidates."""
     from pyspark.broadcast import Broadcast
 
     keys = ["aspirin", "heart attack", "ibuprofen", "type 2 diabetes"]
+    rows = [(k, k.upper(), f"C{i}", i / 10) for i, k in enumerate(keys * 2)]
     path = str(tmp_path / "aliases")
     spark.createDataFrame(
-        [(k, f"C{i}") for i, k in enumerate(keys * 2)], "alias_key string, cui string"
+        rows, "alias_key string, alias string, cui string, prior double"
     ).write.parquet(path)
     spill = tmp_path / "spill"
     bc = broadcast_alias_keys(spark, spark.read.parquet(path),
                               max_broadcast_keys=5, spill_dir=str(spill))
     assert isinstance(bc, Broadcast)
     assert _index_keys(bc.value) == set(keys)
+    assert {k: sorted(v) for k, v in bc.value.candidates_by_key().items()} == {
+        k: sorted((c, a, p) for kk, a, c, p in rows if kk == k) for k in keys}
     assert not spill.exists()
 
 
 def test_build_kg_job_count(spark, fixture_inputs, tmp_path):
-    """A persisted build_kg plus its three table writes takes at most 13
+    """A persisted build_kg plus its three table writes takes at most 12
     Spark jobs at local[4], dictionary probe included: the resolved
-    vocabulary is collected once into one partition, the candidate window
-    and kg_nodes shuffle nothing, and no vocabulary table is cached."""
+    vocabulary is collected once into one partition, linking reads the
+    shipped dictionary (no dictionary broadcast), kg_nodes shuffles
+    nothing, and no vocabulary table is cached."""
     _build_and_write(spark, fixture_inputs, str(tmp_path / "warm"))
     with job_group(spark, "build") as jobs:
         _build_and_write(spark, fixture_inputs, str(tmp_path / "kg"))
-    assert len(jobs) <= 13, jobs
+    assert len(jobs) <= 12, jobs
 
 
 def test_build_kg_serves_resolution_from_the_driver(spark, fixture_inputs, tmp_path):
@@ -226,13 +232,17 @@ def test_link_questions_is_lazy(spark, ask_env):
 def test_ask_is_one_plan(spark, ask_env):
     """The final plan of an ask runs the extraction once (the question ids
     ride through linking, so there is no second branch and nothing to
-    reuse), scores candidates in one Arrow pass, scans kg_edge_stats once,
-    and caches nothing."""
+    reuse), looks candidates up, scores and ranks them in one Arrow pass
+    without reading the dictionary, broadcasts only the question links,
+    scans kg_edge_stats once, and caches nothing."""
     df = _ask(spark, ask_env, _questions(spark, ask_env, range(16)))
     assert df.collect()
     plan = final_plan(df)
     assert count_nodes(plan, "MapInArrow fn(") == 1, plan
-    assert count_nodes(plan, "MapInArrow _score_batches(") == 1, plan
+    assert count_nodes(plan, "MapInArrow candidates(") == 1, plan
+    assert count_nodes(plan, "BroadcastExchange") == 1, plan
+    assert not [l for l in plan.splitlines()
+                if "FileScan" in l and "concept_aliases" in l], plan
     assert count_nodes(plan, "ReusedExchange") == 0, plan
     assert "InMemoryRelation" not in plan and "InMemoryTableScan" not in plan, plan
     edge_scans = [l for l in plan.splitlines()
@@ -242,13 +252,13 @@ def test_ask_is_one_plan(spark, ask_env):
 
 def test_ask_job_count(spark, ask_env):
     """link + retrieve + orderBy + collect of 16 questions built with
-    createDataFrame takes at most 7 Spark jobs at local[4]."""
+    createDataFrame takes at most 5 Spark jobs at local[4]."""
     qs = _questions(spark, ask_env, range(16))
     _ask(spark, ask_env, qs).collect()  # warm the Python workers
     with job_group(spark, "ask") as jobs:
         rows = _ask(spark, ask_env, qs).collect()
     assert rows
-    assert len(jobs) <= 7, jobs
+    assert len(jobs) <= 5, jobs
 
 
 @pytest.mark.parametrize("ddl, ids", [

@@ -153,6 +153,50 @@ def test_alias_broadcast_file_backed_escape_hatch(spark, fixture_dir, tmp_path):
     pd.testing.assert_frame_equal(a, b)
 
 
+def test_spilled_dictionary_ships_the_same_candidates(spark, fixture_dir, tmp_path):
+    """The spill file carries the whole dictionary: a FileBackedAliasIndex
+    yields the same per-key candidates, and so the same candidate table, as
+    the broadcast index. Its directory is named by all four columns, so
+    changing one prior spills to a new directory instead of reusing a stale
+    one."""
+    from pyspark.sql import functions as F
+
+    from knowledge_graph_integration_rag_biomedical_qna_spark.operators.linking import (
+        candidate_table,
+    )
+    from knowledge_graph_integration_rag_biomedical_qna_spark.plans.pipeline import (
+        FileBackedAliasIndex,
+        broadcast_alias_keys,
+    )
+
+    aliases = spark.read.parquet(f"{fixture_dir}/concept_aliases.parquet")
+    bc = broadcast_alias_keys(spark, aliases)
+    fb = broadcast_alias_keys(spark, aliases, max_broadcast_keys=3, spill_dir=str(tmp_path))
+    assert isinstance(fb, FileBackedAliasIndex)
+
+    def by_key(index):
+        return {k: sorted(v) for k, v in index.value.candidates_by_key().items()}
+
+    assert by_key(fb) == by_key(bc)
+    surfaces = aliases.select("alias_key", F.col("alias").alias("surface"))
+
+    def cands(index):
+        return sorted(map(tuple, candidate_table(surfaces, aliases, alias_index=index).collect()))
+
+    assert cands(fb) == cands(bc)
+
+    first = aliases.orderBy("alias_key", "cui", "alias").first()
+    changed = aliases.withColumn("prior", F.when(
+        (F.col("alias_key") == first["alias_key"]) & (F.col("cui") == first["cui"])
+        & (F.col("alias") == first["alias"]), F.col("prior") + 0.01,
+    ).otherwise(F.col("prior")))
+    fb2 = broadcast_alias_keys(spark, changed, max_broadcast_keys=3, spill_dir=str(tmp_path))
+    assert fb2.path != fb.path
+    assert fb2.digest != fb.digest
+    assert broadcast_alias_keys(
+        spark, aliases, max_broadcast_keys=3, spill_dir=str(tmp_path)).path == fb.path
+
+
 def test_values_df_matches_createdataframe(spark):
     """values_df (LocalRelation literal) must be a drop-in for
     createDataFrame on the same DDL schema: identical schema and rows,
