@@ -31,46 +31,42 @@ from ..core.linking import link_score
 
 
 def _desc_nulls_last(x):
-    """Sort key of one double under `DESC NULLS LAST`, in Spark's order
-    (NaN above every number)."""
-    if x is None:
-        return (2, 0.0)
-    return (0, 0.0) if x != x else (1, -x)
+    """`DESC NULLS LAST` sort key of one double, in Spark's order (NaN above
+    every number)."""
+    return (2, 0.0) if x is None else (0, 0.0) if x != x else (1, -x)
 
 
-def _candidates_fn(alias_index, cui_type, prior_type, k: int):
+def _window_order(cand):
+    """Sort key of a (score, prior, cui) candidate: `score DESC NULLS LAST,
+    prior DESC NULLS LAST, cui ASC NULLS FIRST`."""
+    score, prior, cui = cand
+    return _desc_nulls_last(score), _desc_nulls_last(prior), cui is not None, cui
+
+
+def _candidates_fn(alias_index, cui_type, prior_type):
     def candidates(batches):
         """mapInArrow body: each input row comes back once per candidate of
-        its alias_key, top k by `score DESC NULLS LAST, prior DESC NULLS
-        LAST, cui ASC NULLS FIRST`, with cui, prior, score and rank appended;
-        a null prior scores null."""
+        its alias_key, the top TOP_K_CANDIDATES in `_window_order`, with cui,
+        prior, score and rank appended; a null prior scores null."""
         import pyarrow as pa
 
         by_key = alias_index.value.candidates_by_key()
         for batch in batches:
-            take, cuis, priors, scores, ranks = [], [], [], [], []
+            out = []
             for i, (key, surface) in enumerate(zip(
                 batch.column("alias_key").to_pylist(), batch.column("surface").to_pylist()
             )):
-                cands = by_key.get(key)
-                if not cands:
-                    continue
-                scored = [
-                    (None if p is None else link_score(surface, a, float(p)), p, c)
-                    for c, a, p in cands
-                ]
-                scored.sort(key=lambda t: (
-                    _desc_nulls_last(t[0]), _desc_nulls_last(t[1]), t[2] is not None, t[2]
-                ))
-                for rank, (score, prior, cui) in enumerate(scored[:k], 1):
-                    take.append(i)
-                    cuis.append(cui)
-                    priors.append(prior)
-                    scores.append(score)
-                    ranks.append(rank)
-            kept = batch.take(pa.array(take, pa.int64()))
+                scored = sorted(
+                    ((None if p is None else link_score(surface, a, float(p)), p, c)
+                     for c, a, p in by_key.get(key, ())),
+                    key=_window_order,
+                )
+                out += [(i, c, p, s, rank)
+                        for rank, (s, p, c) in enumerate(scored[:TOP_K_CANDIDATES], 1)]
+            take, cuis, priors, scores, ranks = zip(*out) if out else ((),) * 5
             yield pa.RecordBatch.from_arrays(
-                [*kept.columns, pa.array(cuis, cui_type), pa.array(priors, prior_type),
+                [*batch.take(pa.array(take, pa.int64())).columns,
+                 pa.array(cuis, cui_type), pa.array(priors, prior_type),
                  pa.array(scores, pa.float64()), pa.array(ranks, pa.int32())],
                 names=[*batch.schema.names, "cui", "prior", "score", "rank"],
             )
@@ -86,11 +82,11 @@ def candidate_table(
 ) -> DataFrame:
     """(alias_key, surface) -> scored, ranked dictionary candidates.
 
-    Input must have columns (alias_key, surface); output adds
-    (cui, prior, score, rank) with rank 1..k, deterministic order. Each
-    surface's candidates are the dictionary rows under its alias_key (a
-    duplicated row stays two candidates); a surface whose key is not in the
-    dictionary, or is null, has none.
+    Input must have columns (alias_key, surface); output keeps the input's
+    columns and adds (cui, prior, score, rank) with rank 1..k, deterministic
+    order. Each surface's candidates are the dictionary rows under its
+    alias_key (a duplicated row stays two candidates); a surface whose key
+    is not in the dictionary, or is null, has none.
 
     Other input columns (mention counts, question ids) pass through to the
     output and `resolution_table`; each must be determined by (alias_key,
@@ -122,12 +118,9 @@ def candidate_table(
     surfaces = mentions_or_triples_surfaces.dropDuplicates(["alias_key", "surface"])
     if score_partitions is not None:
         surfaces = surfaces.coalesce(max(1, score_partitions))
-    # alias_key first, as an equi-join on it would order the columns
-    surfaces = surfaces.select("alias_key", *(c for c in surfaces.columns if c != "alias_key"))
     cui, prior = aliases.schema["cui"], aliases.schema["prior"]
     return surfaces.mapInArrow(
-        _candidates_fn(alias_index, to_arrow_type(cui.dataType), to_arrow_type(prior.dataType),
-                       int(TOP_K_CANDIDATES)),
+        _candidates_fn(alias_index, to_arrow_type(cui.dataType), to_arrow_type(prior.dataType)),
         T.StructType([*surfaces.schema.fields, cui, prior,
                       T.StructField("score", T.DoubleType()),
                       T.StructField("rank", T.IntegerType(), False)]),
