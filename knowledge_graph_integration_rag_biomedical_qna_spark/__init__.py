@@ -10,7 +10,8 @@ reference biomedical RAG pipeline
       -> [2] mention detection    (vectorized sentence split + dictionary match)
       -> [3] triple extraction    (pattern SVO over sentences; [2]+[3] are one mapInArrow)
       -> [4] candidate generation (lookup in the dictionary shipped with the matcher)
-      -> [5] link scoring         (ngram/prior scoring + per-surface top-k; [4]+[5] are one mapInArrow)
+      -> [5] link scoring         (ngram/prior scoring + per-surface top-1 and floor;
+                                   [2]-[5] are one mapInArrow, each task linking its own surfaces)
       -> [6] canonicalization     (groupBy cui -> nodes, CUI-resolved edges)
       -> [7] materialization      (parquet/Iceberg tables + lineage, resumable)
 

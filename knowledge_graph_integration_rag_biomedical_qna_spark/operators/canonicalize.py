@@ -46,13 +46,14 @@ def canonicalize_nodes(resolved_mentions: DataFrame, salt_buckets: int = CANON_S
 
 
 def canonicalize_node_stats(resolution: DataFrame) -> DataFrame:
-    """kg_nodes from the resolved VOCABULARY: one row per accepted
-    (alias_key, surface) link with its `n_mentions`, which build_kg passes
-    through linking. Value-identical to `canonicalize_nodes` over row-level
-    resolved mentions (counts sum; surface sets union), but it groups at most
-    |vocab| rows: no salting, no join. This is the path build_kg, and so
-    every run mode, uses; `canonicalize_nodes` remains the row-level
-    operator that tools and tests call."""
+    """kg_nodes from linked VOCABULARY rows (cui, surface, n_mentions): one
+    row per accepted (alias_key, surface) link — build_kg passes one per
+    task that saw the pair, with that task's partial count. Value-identical
+    to `canonicalize_nodes` over row-level resolved mentions (counts sum;
+    surface sets union), but it groups vocabulary-sized rows: no salting, no
+    join. This is the path build_kg, and so every run mode, uses;
+    `canonicalize_nodes` remains the row-level operator that tools and tests
+    call."""
     return resolution.groupBy("cui").agg(
         F.expr("array_sort(collect_set(surface)) AS surfaces"),
         F.expr("sum(n_mentions) AS mention_count"),

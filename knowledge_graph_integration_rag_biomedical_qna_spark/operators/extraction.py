@@ -2,6 +2,8 @@
 
 Both run as one `mapInArrow` over the turn table: Arrow-batched, per-turn
 stateless, NO shuffle (they inherit the conv_id partitioning from stage [1]).
+The build's pass (`extract_collapsed_df`) also links each mention there
+(stages [4]+[5], operators.linking.pair_linker).
 The alias-key dictionary is shipped once per executor as a SparkContext
 broadcast (the reference instead held article dictionaries in driver RAM,
 rag2-filtering/filtering_module.py:44,62 — here the dictionary rides the
@@ -35,6 +37,17 @@ MENTIONS_SCHEMA = T.StructType(
 _MENTION_COLS = list(MENTIONS_SCHEMA.fieldNames())
 
 
+def kernel_batches(batches, index):
+    """The extraction kernel over (conv_id, turn_idx, text) RecordBatches:
+    unified RecordBatches (UNIFIED_SCHEMA order) out."""
+    from ..core.vectorized import extract_unified_batches
+
+    for batch in batches:
+        yield from extract_unified_batches(
+            batch.column("conv_id"), batch.column("turn_idx"), batch.column("text"), index
+        )
+
+
 def _unified_batches_fn(alias_keys_bc, kind: str | None = None, cols: list | None = None):
     """mapInArrow body: RecordBatch in -> unified RecordBatches out, with an
     optional in-pass kind filter + column projection (Arrow kernels, no
@@ -43,20 +56,13 @@ def _unified_batches_fn(alias_keys_bc, kind: str | None = None, cols: list | Non
     def fn(batches):
         import pyarrow.compute as pc
 
-        from ..core.vectorized import extract_unified_batches
-
-        keys = alias_keys_bc.value
-        for batch in batches:
-            for rb in extract_unified_batches(
-                batch.column("conv_id"), batch.column("turn_idx"),
-                batch.column("text"), keys,
-            ):
-                if kind is not None:
-                    rb = rb.filter(pc.equal(rb.column("kind"), kind))
-                if cols is not None:
-                    rb = rb.select(cols)
-                if len(rb):
-                    yield rb
+        for rb in kernel_batches(batches, alias_keys_bc.value):
+            if kind is not None:
+                rb = rb.filter(pc.equal(rb.column("kind"), kind))
+            if cols is not None:
+                rb = rb.select(cols)
+            if len(rb):
+                yield rb
 
     return fn
 
@@ -94,7 +100,6 @@ UNIFIED_SCHEMA = T.StructType(
     ]
 )
 
-_UNIFIED_COLS = list(UNIFIED_SCHEMA.fieldNames())
 
 
 def extract_all_df(turns: DataFrame, alias_keys_bc) -> DataFrame:
@@ -119,9 +124,85 @@ def extract_all_df(turns: DataFrame, alias_keys_bc) -> DataFrame:
     )
 
 
-def extract_collapsed_df(turns: DataFrame, alias_keys_bc) -> DataFrame:
-    """Stages [2]+[3] in one Arrow pass, with mention rows COLLAPSED to
-    per-task partial stats before they ever leave the Python worker.
+def _collapsed_fn(alias_index, cui_type):
+    """The extract_collapsed_df pass body over `alias_index` (an AliasIndex
+    handle carrying link candidates); `cui_type` is the Arrow type of the
+    CUI columns."""
+
+    def collapsed(batches):
+        """mapInArrow body: extraction, the per-task mention collapse and
+        linking in one pass over the task's turn batches."""
+        import pyarrow as pa
+        import pyarrow.compute as pc
+
+        from ..core.vectorized import _unified_pa_schema
+        from .linking import pair_linker
+
+        link = pair_linker(alias_index)
+        fields = [*_unified_pa_schema(), pa.field("subj_cui", cui_type),
+                  pa.field("obj_cui", cui_type), pa.field("cui", cui_type),
+                  pa.field("link_score", pa.float64())]
+
+        def rows(n, **cols):
+            """One output batch of n rows: `cols` by name, nulls elsewhere."""
+            return pa.RecordBatch.from_arrays(
+                [cols[f.name] if f.name in cols else pa.nulls(n, f.type) for f in fields],
+                names=[f.name for f in fields],
+            )
+
+        def cuis(hits):
+            return pa.array([h[0] if h else None for h in hits], cui_type)
+
+        def endpoint_cuis(rb, side):
+            return cuis(map(link, rb.column(f"{side}_key").to_pylist(),
+                            rb.column(f"{side}_surface").to_pylist()))
+
+        partials = []
+        for rb in kernel_batches(batches, alias_index.value):
+            is_t = pc.equal(rb.column("kind"), "t")
+            m_tbl = pa.Table.from_batches([rb.filter(pc.invert(is_t))]).select(
+                ["alias_key", "surface"]
+            )
+            if len(m_tbl):
+                part = m_tbl.group_by(["alias_key", "surface"]).aggregate([([], "count_all")])
+                partials.append(part)
+                # score the batch's distinct pairs here, so the triple rows
+                # below only look their endpoints up
+                for pair in zip(part["alias_key"].to_pylist(), part["surface"].to_pylist()):
+                    link(*pair)
+            t_rb = rb.filter(is_t)
+            if len(t_rb):
+                yield rows(len(t_rb), **dict(zip(t_rb.schema.names, t_rb.columns)),
+                           subj_cui=endpoint_cuis(t_rb, "subj"),
+                           obj_cui=endpoint_cuis(t_rb, "obj"))
+        if partials:
+            agg = (
+                pa.concat_tables(partials)
+                .group_by(["alias_key", "surface"])
+                .aggregate([("count_all", "sum")])
+            )
+            n = len(agg)
+            alias_key, surface = (agg.column(c).combine_chunks() for c in ("alias_key", "surface"))
+            hits = list(map(link, alias_key.to_pylist(), surface.to_pylist()))
+            zeros = pa.array([0] * n, pa.int32())
+            yield rows(
+                n, conv_id=pa.array([""] * n, pa.string()), turn_idx=zeros, sent_idx=zeros,
+                kind=pa.array(["s"] * n, pa.string()),
+                # the partial count rides in mention_idx (mention_stats_view)
+                mention_idx=pc.cast(agg.column("count_all_sum").combine_chunks(), pa.int32()),
+                surface=surface, alias_key=alias_key, cui=cuis(hits),
+                link_score=pa.array([h[1] if h else None for h in hits], pa.float64()),
+            )
+
+    return collapsed
+
+
+def extract_collapsed_df(
+    turns: DataFrame, alias_keys_bc, cui_type: T.DataType = T.StringType()
+) -> DataFrame:
+    """Stages [2]-[5] in one Arrow pass: extraction, with mention rows
+    COLLAPSED to per-task partial stats before they ever leave the Python
+    worker, and every mention linked where it is found.
 
     Motivation (r5 steady-state profile): per-occurrence mention rows are
     ~92% of the unified output (1.97M of 2.13M rows at bench scale), but the
@@ -132,75 +213,34 @@ def extract_collapsed_df(turns: DataFrame, alias_keys_bc) -> DataFrame:
     mention-stats shuffle. Here each task group-bys its mention hits
     Arrow-side (vectorized hash agg, vocab-sized result) and emits them as
     kind='s' rows carrying the partial count in `mention_idx`; triple rows
-    (kind='t') pass through untouched. `mention_stats` then sums the
+    (kind='t') pass through untouched. `mention_stats_view` sums the
     partials — bit-identical counts to the full path (parity-tested in
     test_pipeline_parity), with the transcript-sized mention traffic gone.
+
+    Linking rides the same pass: each task links its distinct
+    (alias_key, surface) pairs — the pairs its 's' rows already carry — once,
+    against the candidates `alias_keys_bc` ships
+    (operators.linking.pair_linker), and the output gains four nullable
+    columns: `subj_cui`, `obj_cui` on 't' rows and `cui`, `link_score` on 's'
+    rows, typed `cui_type` (pass the dictionary's cui type), null where the
+    surface does not link. Scoring is proportional to the distinct pairs in
+    each task, not to the global vocabulary: a pair seen by every task is
+    scored once per task. Every worker builds the index's per-key
+    candidates, so `alias_keys_bc` must carry them (broadcast_alias_keys).
 
     Callers needing per-occurrence mention rows (tok spans) run
     `extract_all_df` instead — build_kg keeps its `.mentions` view lazily on
     that path."""
-    import numpy as np
+    from pyspark.sql.pandas.types import to_arrow_type
 
-    def fn(batches):
-        import pyarrow as pa
-        import pyarrow.compute as pc
-
-        from ..core.vectorized import extract_unified_batches
-
-        keys = alias_keys_bc.value
-        partials = []
-        for batch in batches:
-            for rb in extract_unified_batches(
-                batch.column("conv_id"), batch.column("turn_idx"),
-                batch.column("text"), keys,
-            ):
-                is_t = pc.equal(rb.column("kind"), "t")
-                t_rb = rb.filter(is_t)
-                if len(t_rb):
-                    yield t_rb
-                m_tbl = pa.Table.from_batches([rb.filter(pc.invert(is_t))]).select(
-                    ["alias_key", "surface"]
-                )
-                if len(m_tbl):
-                    partials.append(
-                        m_tbl.group_by(["alias_key", "surface"]).aggregate(
-                            [([], "count_all")]
-                        )
-                    )
-        if partials:
-            agg = (
-                pa.concat_tables(partials)
-                .group_by(["alias_key", "surface"])
-                .aggregate([("count_all", "sum")])
-            )
-            n = len(agg)
-            zeros = pa.array(np.zeros(n, dtype=np.int32))
-            yield pa.RecordBatch.from_arrays(
-                [
-                    pa.array([""] * n, pa.string()),                    # conv_id
-                    zeros,                                              # turn_idx
-                    zeros,                                              # sent_idx
-                    pa.array(["s"] * n, pa.string()),                   # kind
-                    pc.cast(agg.column("count_all_sum").combine_chunks(), pa.int32()),
-                    agg.column("surface").combine_chunks(),
-                    agg.column("alias_key").combine_chunks(),
-                    pa.nulls(n, pa.int32()),                            # tok_start
-                    pa.nulls(n, pa.int32()),                            # tok_end
-                    pa.nulls(n, pa.string()),                           # subj_surface
-                    pa.nulls(n, pa.string()),                           # subj_key
-                    pa.nulls(n, pa.string()),                           # pred
-                    pa.nulls(n, pa.string()),                           # obj_surface
-                    pa.nulls(n, pa.string()),                           # obj_key
-                    pa.nulls(n, pa.float64()),                          # confidence
-                ],
-                names=_UNIFIED_COLS,
-            )
-
+    linked = [T.StructField(c, cui_type) for c in ("subj_cui", "obj_cui", "cui")]
     # plan-level marker: mentions_view raises on a collapsed input instead of
     # silently returning zero rows (there are no 'm' rows to project)
     return (
         turns.select("conv_id", "turn_idx", "text")
-        .mapInArrow(fn, UNIFIED_SCHEMA)
+        .mapInArrow(_collapsed_fn(alias_keys_bc, to_arrow_type(cui_type)),
+                    T.StructType([*UNIFIED_SCHEMA.fields, *linked,
+                                  T.StructField("link_score", T.DoubleType())]))
         .withMetadata("kind", {"collapsed": True})
     )
 

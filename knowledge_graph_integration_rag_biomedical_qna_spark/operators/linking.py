@@ -3,21 +3,24 @@
 Dataflow (reference shape: retrieve -> rerank -> threshold,
 rag2-retriever/main.py:119-167 + rerank.py:37-75 + context_pruning.py:36-51):
 
-1. distinct (alias_key, surface) pairs  — dedup-by-query analog (A6,
-   context_pruning.py:79-85): identical surfaces are scored ONCE, however many
-   billions of mentions repeat them. This keeps the scoring cost proportional
-   to vocabulary, not corpus.
-2. one Arrow pass (`mapInArrow`) per surface batch: look the alias_key up in
-   the dictionary shipped with the matcher's AliasIndex (candidate
-   generation, J5 as a lookup: no join, no dictionary scan), score every
-   candidate with `core.linking.link_score` (M1-M3 analog, deterministic),
-   and keep the top-k under pinned tie-breaks (T1). The pass keeps its
-   input's partitioning, so linking adds no exchange.
-3. top-1 + floor acceptance (A2 + the 0.5 cosine floor): `resolution_table`.
+1. `candidate_table`: distinct (alias_key, surface) pairs — dedup-by-query
+   analog (A6, context_pruning.py:79-85) — then one Arrow pass
+   (`mapInArrow`) that looks each alias_key up in the dictionary shipped
+   with the matcher's AliasIndex (candidate generation, J5 as a lookup: no
+   join, no dictionary scan), scores every candidate with
+   `core.linking.link_score` (M1-M3 analog, deterministic) and keeps the
+   top-k under pinned tie-breaks (T1). The pass keeps its input's
+   partitioning, so it adds no exchange.
+2. top-1 + floor acceptance (A2 + the 0.5 cosine floor): `resolution_table`.
 
-The output `resolution` table is tiny (<= distinct surfaces); build_kg
-collects it to the driver and broadcasts it against the triples — so stages
-[4]-[6] add ZERO shuffles over the transcript-sized tables.
+Steps 1+2 are the specification of linking and serve the lazy
+`KGResult.candidates`/`resolution` views. The build and the ask do not run
+them: their extraction passes link each task's distinct pairs in place
+with `pair_linker`, which ranks by the same rule (`_ranked`) and accepts
+by the same floor (`_accepted`), so linking costs no job, join, broadcast
+or exchange of its own. Scoring then runs once per distinct pair per task,
+proportional to the pairs each task already ships, not to the global
+vocabulary.
 """
 
 from __future__ import annotations
@@ -43,6 +46,43 @@ def _window_order(cand):
     return _desc_nulls_last(score), _desc_nulls_last(prior), cui is not None, cui
 
 
+def _ranked(surface, cands) -> list:
+    """One surface's dictionary candidates `(cui, alias, prior)` as
+    `(score, prior, cui)` in `_window_order`, best first; a null prior
+    scores null. The one ranking rule of the table and the in-pass linker."""
+    return sorted(
+        ((None if p is None else link_score(surface, a, float(p)), p, c) for c, a, p in cands),
+        key=_window_order,
+    )
+
+
+def _accepted(score, cui) -> bool:
+    """`resolution_table`'s rule for a top-1 candidate, in Python: a null
+    score or a null cui links nothing, and NaN passes the floor because
+    Spark orders NaN above every number."""
+    return cui is not None and score is not None and (score != score or score >= LINK_ACCEPT_FLOOR)
+
+
+def pair_linker(alias_index):
+    """`link(alias_key, surface) -> (cui, score) | None`: the accepted top-1
+    link of one pair, looked up in the dictionary `alias_index` ships and
+    memoized, so a task scores each distinct pair once however many
+    mentions repeat it. Call it inside a task: it builds the index's
+    per-key candidates there (raises on a keys-only index)."""
+    by_key = alias_index.value.candidates_by_key()
+    memo: dict = {}
+
+    def link(key, surface):
+        pair = (key, surface)
+        if pair not in memo:
+            ranked = _ranked(surface, by_key.get(key, ()))
+            score, _, cui = ranked[0] if ranked else (None, None, None)
+            memo[pair] = (cui, score) if _accepted(score, cui) else None
+        return memo[pair]
+
+    return link
+
+
 def _candidates_fn(alias_index, cui_type, prior_type):
     def candidates(batches):
         """mapInArrow body: each input row comes back once per candidate of
@@ -56,11 +96,7 @@ def _candidates_fn(alias_index, cui_type, prior_type):
             for i, (key, surface) in enumerate(zip(
                 batch.column("alias_key").to_pylist(), batch.column("surface").to_pylist()
             )):
-                scored = sorted(
-                    ((None if p is None else link_score(surface, a, float(p)), p, c)
-                     for c, a, p in by_key.get(key, ())),
-                    key=_window_order,
-                )
+                scored = _ranked(surface, by_key.get(key, ()))
                 out += [(i, c, p, s, rank)
                         for rank, (s, p, c) in enumerate(scored[:TOP_K_CANDIDATES], 1)]
             take, cuis, priors, scores, ranks = zip(*out) if out else ((),) * 5
@@ -77,7 +113,6 @@ def _candidates_fn(alias_index, cui_type, prior_type):
 def candidate_table(
     mentions_or_triples_surfaces: DataFrame,
     aliases: DataFrame,
-    score_partitions: int | None = None,
     alias_index=None,
 ) -> DataFrame:
     """(alias_key, surface) -> scored, ranked dictionary candidates.
@@ -97,17 +132,9 @@ def candidate_table(
     way `aliases` only types the cui and prior columns. An index built
     without candidates raises when the plan runs. The lookup, scoring and
     top-k run in one Arrow pass that keeps its input's partitioning, so
-    there is no join, no dictionary scan and no window exchange.
-
-    `score_partitions`: coalesce the distinct-surface table before the
-    Arrow pass. The table is vocabulary-sized — far smaller than the
-    session's transcript parallelism — so running it at full width mostly
-    pays per-task scheduling + Python-worker spin-up (measured 35% of the
-    stage at local[32] with a 9-surface vocabulary). build_kg passes
-    parallelism/16, which still gives a UMLS-scale vocabulary (~16M surfaces)
-    tens-to-hundreds of score tasks on a real cluster; a >20M-alias
-    dictionary reaches those tasks as broadcast_alias_keys' spill file, read
-    once per Python worker."""
+    there is no join, no dictionary scan and no window exchange; a
+    >20M-alias dictionary reaches the pass as broadcast_alias_keys' spill
+    file, read once per Python worker."""
     if alias_index is None:
         # lazy import: plans.pipeline composes this module
         from ..plans.pipeline import broadcast_alias_keys
@@ -116,8 +143,6 @@ def candidate_table(
     from pyspark.sql.pandas.types import to_arrow_type
 
     surfaces = mentions_or_triples_surfaces.dropDuplicates(["alias_key", "surface"])
-    if score_partitions is not None:
-        surfaces = surfaces.coalesce(max(1, score_partitions))
     cui, prior = aliases.schema["cui"], aliases.schema["prior"]
     return surfaces.mapInArrow(
         _candidates_fn(alias_index, to_arrow_type(cui.dataType), to_arrow_type(prior.dataType)),
@@ -129,8 +154,11 @@ def candidate_table(
 
 def resolution_table(candidates: DataFrame) -> DataFrame:
     """Accepted top-1 links: (alias_key, surface, cui, score) plus the
-    pass-through columns of `candidate_table`'s input."""
-    return candidates.filter(f"rank = 1 AND score >= {LINK_ACCEPT_FLOOR!r}").drop(
+    pass-through columns of `candidate_table`'s input. A top candidate with
+    a null cui names no concept, so its surface stays unlinked."""
+    return candidates.filter(
+        f"rank = 1 AND cui IS NOT NULL AND score >= {LINK_ACCEPT_FLOOR!r}"
+    ).drop(
         "prior", "rank"
     )
 

@@ -3,28 +3,23 @@
 Shuffle budget of the whole plan (the thing that decides 100 TB viability):
 
   1 shuffle   stage [1] window over (conv_id, turn_idx)          [data-sized]
-  0 shuffles  stages [2]-[3] mapInArrow (inherit partitioning)
-  1 shuffle   mention_stats groupBy(alias_key, surface)          [count payload;
-              map-side combine absorbs hot-entity skew -> vocab-sized output,
-              whose n_mentions rides through linking to canonicalization]
-  0 shuffles  resolution joins (the resolved vocabulary is broadcast)
-  0-1 tiny    stage [6] groupBy(cui) over the resolved vocabulary [<= |vocab| rows;
-              0 on a persisted build, whose vocabulary is one partition]
+  0 shuffles  stages [2]-[5] mapInArrow: extraction, the per-task mention
+              collapse and linking in one pass (inherit partitioning)
+  1 shuffle   stage [6] kg_nodes groupBy(cui) over the linked per-task
+              vocabulary rows                                    [vocab-sized]
   1 shuffle   edge-stats groupBy (counter payload, map-side combine)
 
-Only the extraction is cached. Under AQE each reference to an unfilled cache
-runs its own cache-stage job and an exchange above a cached scan is never
-reused, so a persisted build collects the resolved vocabulary instead and
-serves it as one partition: the kg_edges write broadcasts it once and reuses
-that exchange for the second endpoint, and kg_nodes groups it without an
-exchange. Build plus the three writes: 11 Spark jobs on the construct_x5
-benchmark.
+Only the extraction is cached, and nothing is collected to the driver: each
+task links its own surfaces against the dictionary the matcher's index
+ships, so kg_edges is a filter of the cached pass (no join, no broadcast)
+and kg_nodes one vocabulary-sized exchange above it. Build plus the three
+writes: 8 Spark jobs on the construct_x5 benchmark.
 
-Everything transcript-sized shuffles at most once; after the mention_stats
-aggregate no transcript-sized table is read twice. `build_kg` is the only
-composition of stages [1]-[6]: the checkpointed runner (plans.checkpoint)
-calls it once per bucket group and the streaming ingest (streaming.ingest)
-once per micro-batch; the run modes differ only in their sinks.
+Everything transcript-sized shuffles at most once and is read once, from
+the cached extraction. `build_kg` is the only composition of stages
+[1]-[6]: the checkpointed runner (plans.checkpoint) calls it once per
+bucket group and the streaming ingest (streaming.ingest) once per
+micro-batch; the run modes differ only in their sinks.
 """
 
 from __future__ import annotations
@@ -36,7 +31,8 @@ from pyspark.sql import DataFrame, SparkSession
 
 from ..operators.canonicalize import aggregate_edges, canonicalize_node_stats
 from ..operators.extraction import extract_all_df, mentions_view, triples_view
-from ..operators.linking import candidate_table, resolution_table, resolve_triples
+from ..operators.linking import candidate_table, resolution_table
+from ..operators.linking import resolve_triples  # noqa: F401 -- importable here for perfbench
 from ..operators.turn_assembly import assemble_turns
 
 
@@ -154,20 +150,22 @@ def broadcast_alias_keys(
 ):
     """Ship the alias dictionary to executors once as an AliasIndex: the
     first-token index the matcher probes (two sets per token instead of
-    joining n-grams) and the (alias_key, alias, cui, prior) rows that
-    `candidate_table` looks candidates up in, so linking reads no dictionary
-    table of its own. Rows with a null alias_key link nothing and are
-    dropped.
+    joining n-grams) and the (alias_key, alias, cui, prior) rows that the
+    extraction and question passes and `candidate_table` look candidates up
+    in, so linking reads no dictionary table of its own. Rows with a null
+    alias_key link nothing and are dropped.
 
     Cost: the broadcast carries three more columns per alias than a
     keys-only index, an estimated ~100 pickled bytes per alias, so about
     1.6 GB at UMLS scale (~16M aliases), broadcast once per job. No
-    dictionary of that size has been run, so the regime is unmeasured. Beyond `max_broadcast_keys`
-    distinct keys the driver never materializes the dictionary: its rows are
-    spilled to a parquet side-file (executor-written) and workers build the
-    index themselves (FileBackedAliasIndex). On a real cluster pass
-    `spill_dir` on SHARED storage (HDFS/S3 fuse mount); the default tempdir
-    is correct only for local mode.
+    dictionary of that size has been run, so the regime is unmeasured.
+    Beyond `max_broadcast_keys` distinct keys the dictionary is not
+    broadcast: its rows are spilled to a parquet side-file
+    (executor-written) and workers build the index themselves
+    (FileBackedAliasIndex). Only a dictionary already held by the driver (a
+    LocalRelation) is collected before the count decides. On a real cluster
+    pass `spill_dir` on SHARED storage (HDFS/S3 fuse mount); the default
+    tempdir is correct only for local mode.
 
     The returned handle's `digest` names the dictionary's content (a resume
     compares it, plans.checkpoint); computing it starts no Spark job."""
@@ -176,7 +174,8 @@ def broadcast_alias_keys(
     # literals (VALUES / parallelized local data the optimizer folded) never
     # needs the cluster — collect() executes driver-side with zero Spark
     # jobs, where the probe below costs at least one. The rows already live
-    # in driver memory, so collecting them is not a new driver-size risk.
+    # in driver memory, so collecting them is not a new driver-size risk;
+    # past max_broadcast_keys distinct keys they spill like any dictionary.
     # Classic-only probe; any failure falls through to the job-based probe.
     try:
         opt = proj._jdf.queryExecution().optimizedPlan()
@@ -184,7 +183,10 @@ def broadcast_alias_keys(
     except Exception:  # Spark Connect or plan-access change
         is_local = False
     if is_local:
-        return _ship_index(spark, proj.collect())
+        rows = proj.collect()
+        if len({r[0] for r in rows}) > max_broadcast_keys:
+            return _spill_index(proj, spill_dir)
+        return _ship_index(spark, rows)
 
     # size probe: one task reads at most 1M+1 RAW rows, so a dictionary of
     # up to 1M rows (~tens of MB — harmless), the overwhelmingly common case,
@@ -199,29 +201,34 @@ def broadcast_alias_keys(
     probe = proj.coalesce(1).limit(probe_cap + 1).collect()
     if len(probe) <= probe_cap:
         return _ship_index(spark, probe)
-    n_keys = proj.select("alias_key").distinct().count()
-    if n_keys > max_broadcast_keys:
-        import os
-        import tempfile
-
-        from pyspark.sql import functions as F
-
-        base = spill_dir or os.path.join(tempfile.gettempdir(), "kg_alias_spill")
-        os.makedirs(base, exist_ok=True)
-        # content-addressed spill dir: (row count, order-insensitive digest
-        # of all four columns) — rerunning with the same dictionary reuses
-        # the existing spill, and a changed prior or cui gets a new one
-        # bit_xor: order-insensitive and can't overflow (ANSI mode)
-        n_rows, digest = proj.agg(
-            F.count(F.lit(1)), F.expr(f"bit_xor(xxhash64({', '.join(_SHIPPED)}))")
-        ).first()
-        out_dir = os.path.join(base, f"aliases-{n_rows}-{(digest or 0) & (1 << 64) - 1:016x}")
-        if not os.path.exists(os.path.join(out_dir, "_SUCCESS")):
-            # multi-part write (no coalesce(1) single-task funnel); the
-            # reader scans the directory as one dataset
-            proj.write.mode("overwrite").parquet(out_dir)
-        return FileBackedAliasIndex(out_dir)
+    if proj.select("alias_key").distinct().count() > max_broadcast_keys:
+        return _spill_index(proj, spill_dir)
     return _ship_index(spark, proj.collect())
+
+
+def _spill_index(proj: DataFrame, spill_dir: str | None) -> FileBackedAliasIndex:
+    """Write the `_SHIPPED` dictionary rows to a content-addressed parquet
+    directory under `spill_dir` (executor-written) and return its index."""
+    import os
+    import tempfile
+
+    from pyspark.sql import functions as F
+
+    base = spill_dir or os.path.join(tempfile.gettempdir(), "kg_alias_spill")
+    os.makedirs(base, exist_ok=True)
+    # content-addressed spill dir: (row count, order-insensitive digest of
+    # all four columns) — rerunning with the same dictionary reuses the
+    # existing spill, and a changed prior or cui gets a new one
+    # bit_xor: order-insensitive and can't overflow (ANSI mode)
+    n_rows, digest = proj.agg(
+        F.count(F.lit(1)), F.expr(f"bit_xor(xxhash64({', '.join(_SHIPPED)}))")
+    ).first()
+    out_dir = os.path.join(base, f"aliases-{n_rows}-{(digest or 0) & (1 << 64) - 1:016x}")
+    if not os.path.exists(os.path.join(out_dir, "_SUCCESS")):
+        # multi-part write (no coalesce(1) single-task funnel); the reader
+        # scans the directory as one dataset
+        proj.write.mode("overwrite").parquet(out_dir)
+    return FileBackedAliasIndex(out_dir)
 
 
 def build_kg(
@@ -240,25 +247,27 @@ def build_kg(
     already collapsed to per-task partial (alias_key, surface, n) stats
     (extract_collapsed_df): the mentions are only ever re-read as the
     vocab-sized aggregate, so the collapse removes most of the Arrow->JVM
-    transfer, the cache build and the mention-stats shuffle. `.mentions`
+    transfer, the cache build and the kg_nodes shuffle. `.mentions`
     stays per-occurrence via a LAZY uncached second extraction pass —
     consumers of token spans pay for that pass only if they read it (tests
     and tools do; the nodes+edges product never does).
 
+    Linking rides that pass too: each task resolves its own distinct
+    (alias_key, surface) pairs against the candidates `alias_index` ships,
+    so kg_edges keeps the triples whose two endpoints linked (a filter, no
+    join) and kg_nodes groups the linked per-task stats by cui. Building
+    the result starts no Spark job when `alias_index` is given. The driver
+    never receives the resolved vocabulary, so `spark.driver.maxResultSize`
+    does not bound a build. `candidates`, `resolution` and `mention_stats`
+    are lazy specification views over the same pass (tools and tests read
+    them); no write runs them.
+
     `persist=True` caches the collapsed extraction output, the one
-    transcript-sized table both branches read (Catalyst has no cross-branch
-    CSE), and before returning collects the resolution table inside the JVM
-    and serves it as a one-partition LocalRelation: no row crosses into
-    Python, both endpoint joins share one broadcast, each broadcast build is
-    a single task and kg_nodes groups by cui without an exchange. Driver
-    bound: the rows a broadcast of the resolution collects anyway, plus one
-    bigint column; `spark.driver.maxResultSize` applies as before. At
-    cluster width the one partition has a cost: the broadcast build
-    serializes all the resolved rows in one task. Callers release the
-    cache with `KGResult.unpersist()`. For jobs too large to cache at once,
+    transcript-sized table every write reads (Catalyst has no cross-branch
+    CSE); nothing else is cached or collected. Callers release the cache
+    with `KGResult.unpersist()`. For jobs too large to cache at once,
     plans.checkpoint.ResumableKGRun calls this per bucket group and commits
-    each group to storage. `persist=False` stays lazy: nothing is cached or
-    collected.
+    each group to storage. `persist=False` stays lazy: nothing is cached.
 
     `assume_clustered=True` declares the input already bucketed by conv_id
     (sources.io.write_bucketed): stage [1] skips its repartition and the
@@ -268,50 +277,42 @@ def build_kg(
 
     `alias_index`: a prebuilt broadcast_alias_keys() result. It carries the
     matcher's keys and the link candidates, so linking reads no dictionary
-    table: `aliases` only types the candidate columns. A long-lived
+    table: `aliases` only types the cui (and prior) columns. A long-lived
     deployment ships the dictionary once, not once per job — steady-state
     callers (bench, the checkpointed and streaming runs, repeated builds
     against one dictionary) hoist it; the default builds it here.
 
     Driver-side plan-construction cost (r6): one warm lazy build_kg call is
     ~470 py4j round-trips / ~0.45 s with a hoisted alias_index (~0.9 s cold
-    incl. the dictionary probe+broadcast; persist=True adds the vocabulary
-    collect) — down from ~3,100 / 0.75-1.3 s before the selectExpr rewrites
-    of synth/assembly/linking/views. Amortize it by reusing the plan (bench.py).
+    incl. the dictionary probe+broadcast) — down from ~3,100 / 0.75-1.3 s
+    before the selectExpr rewrites of synth/assembly/linking/views. Amortize
+    it by reusing the plan (bench.py).
     """
     from ..operators.extraction import extract_collapsed_df, mention_stats_view
 
     turns = assemble_turns(transcripts, assume_clustered=assume_clustered)
     keys_bc = alias_index if alias_index is not None else broadcast_alias_keys(spark, aliases)
-    # one Arrow pass over the turn text produces BOTH the triples and the
-    # mention stats; the persisted unified table is the stage boundary both
-    # branches reuse
-    unified = extract_collapsed_df(turns, keys_bc)
+    # one Arrow pass over the turn text produces the linked triples and the
+    # linked mention stats; the persisted unified table is the stage
+    # boundary every write reads
+    unified = extract_collapsed_df(turns, keys_bc, aliases.schema["cui"].dataType)
     if persist:
         unified = unified.persist()
     raw_triples = triples_view(unified)
-    # vocab-sized already: sum the per-task partials. n_mentions rides
-    # through linking, so the resolution feeds both edges and nodes.
     mention_stats = mention_stats_view(unified)
-
-    from ..session import default_parallelism
-
-    default_par = default_parallelism(spark)
-    candidates = candidate_table(
-        mention_stats, aliases, score_partitions=default_par // 16 or 1, alias_index=keys_bc
-    )
+    candidates = candidate_table(mention_stats, aliases, alias_index=keys_bc)
     resolution = resolution_table(candidates)
-    if persist:
-        # the rows stay in the JVM: collected there, served as a LocalRelation
-        # in one partition (a LocalTableScan spreads over min(rows,
-        # parallelism) partitions, which kg_nodes would shuffle back together)
-        jdf = resolution._jdf
-        resolution = DataFrame(
-            spark._jsparkSession.createDataFrame(jdf.collectAsList(), jdf.schema()), spark
-        ).coalesce(1)
 
-    kg_edges = resolve_triples(raw_triples, resolution)
-    kg_nodes = canonicalize_node_stats(resolution)
+    kg_edges = unified.filter(
+        "kind = 't' AND subj_cui IS NOT NULL AND obj_cui IS NOT NULL"
+    ).select(
+        "conv_id", "turn_idx", "subj_cui", "pred", "obj_cui",
+        "subj_surface", "obj_surface", "confidence",
+    )
+    kg_nodes = canonicalize_node_stats(
+        unified.filter("kind = 's' AND cui IS NOT NULL")
+        .selectExpr("cui", "surface", "mention_idx AS n_mentions")
+    )
     kg_edge_stats = aggregate_edges(kg_edges)
     return KGResult(
         turns=turns,

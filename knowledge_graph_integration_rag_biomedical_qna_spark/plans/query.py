@@ -10,20 +10,62 @@ top-k (rag2-retriever/main.py). Against the constructed graph that becomes:
     -> score = evidence-weighted link score, per-question top-k window
 
 `link_questions` returns a lazy plan and `retrieve_evidence` composes on top
-of it, so one ask is one adaptive query: the extraction runs once, nothing is
-cached or checkpointed, and `kg_edge_stats` is scanned once. Batch-oriented:
-a million questions retrieve in one job; a single question is the degenerate
-one-row case. The question links are the broadcast side of the edge join —
-question-sized by construction — so the graph is never shuffled to meet them.
+of it, so one ask is one adaptive query: one Arrow pass detects and links the
+questions' mentions, nothing is cached or checkpointed, and `kg_edge_stats` is
+scanned once. Batch-oriented: a million questions retrieve in one job; a
+single question is the degenerate one-row case. The question links are the
+broadcast side of the edge join — question-sized by construction, and they
+reach the broadcast with no shuffle — so the graph is never shuffled to meet
+them.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
-from ..operators.extraction import detect_mentions_df
-from ..operators.linking import candidate_table, resolution_table
+# Unused here since questions link inside their extraction pass. perfbench's
+# traced ask wraps these names on this module, so they stay importable.
+from ..operators.extraction import detect_mentions_df  # noqa: F401
+from ..operators.linking import candidate_table, resolution_table  # noqa: F401
+
+
+def _question_links_fn(alias_index, cui_type):
+    """The link_questions pass body over `alias_index` (an AliasIndex handle
+    carrying link candidates); `cui_type` is the Arrow type of `cui`."""
+
+    def question_links(batches):
+        """mapInArrow body: detect each question's dictionary mentions, keep
+        one per (question, alias_key, surface), link it, and emit
+        (question_id, cui, link_score) for each accepted link."""
+        import pyarrow as pa
+        import pyarrow.compute as pc
+
+        from ..operators.extraction import kernel_batches
+        from ..operators.linking import pair_linker
+
+        link = pair_linker(alias_index)
+        seen = set()
+        for rb in kernel_batches(batches, alias_index.value):
+            hits = rb.filter(pc.equal(rb.column("kind"), "m"))
+            out = []
+            for row in zip(*(hits.column(c).to_pylist()
+                             for c in ("conv_id", "alias_key", "surface"))):
+                if row not in seen:
+                    seen.add(row)
+                    linked = link(row[1], row[2])
+                    if linked:
+                        out.append((row[0], *linked))
+            if out:
+                qids, cuis, scores = zip(*out)
+                yield pa.RecordBatch.from_arrays(
+                    [pa.array(qids, pa.string()), pa.array(cuis, cui_type),
+                     pa.array(scores, pa.float64())],
+                    names=["question_id", "cui", "link_score"],
+                )
+
+    return question_links
 
 
 def link_questions(
@@ -37,33 +79,28 @@ def link_questions(
     the gated output string-typed against an int32 oracle, and string order
     diverges from numeric past 9 questions).
 
-    The dictionary hits are grouped per (alias_key, surface) with the set of
-    questions that contain them; the set rides through candidate scoring as
-    a pass-through column (candidate_table's contract), so the extraction
-    runs once and the accepted links explode straight back to questions.
-    Candidates come from the dictionary `keys_bc` already ships for the
-    matcher, looked up, scored and ranked in one Arrow pass over the
-    grouped hits: the plan reads no dictionary table, and linking adds no
-    broadcast and no exchange. No `score_partitions`: AQE's shuffle read
-    already coalesces the vocabulary-sized input."""
+    One Arrow pass over the questions detects the dictionary mentions,
+    dedups them per (question, alias_key, surface) and links each distinct
+    pair once per task against the candidates `keys_bc` already ships for
+    the matcher — the same ranking and acceptance as
+    `resolution_table(candidate_table(...))`. The plan reads no dictionary
+    table and has no join, aggregate or exchange: the links keep the
+    questions' partitioning on their way to the evidence broadcast."""
+    from pyspark.sql.pandas.types import to_arrow_type
+
+    cui = aliases.schema["cui"]
     turns_like = questions.select(
         F.col("question_id").cast("string").alias("conv_id"),
         F.lit(0).cast("int").alias("turn_idx"),
         F.col("text"),
     )
-    hits = (
-        detect_mentions_df(turns_like, keys_bc)
-        .groupBy("alias_key", "surface")
-        .agg(F.collect_set("conv_id").alias("qids"))
-    )
-    return (
-        resolution_table(candidate_table(hits, aliases, alias_index=keys_bc))
-        .select(F.explode("qids").alias("qid"), "cui", "score")
-        .select(
-            F.col("qid").cast(questions.schema["question_id"].dataType).alias("question_id"),
-            "cui",
-            F.col("score").alias("link_score"),
-        )
+    return turns_like.mapInArrow(
+        _question_links_fn(keys_bc, to_arrow_type(cui.dataType)),
+        T.StructType([T.StructField("question_id", T.StringType()),
+                      T.StructField("cui", cui.dataType),
+                      T.StructField("link_score", T.DoubleType())]),
+    ).withColumn(
+        "question_id", F.col("question_id").cast(questions.schema["question_id"].dataType)
     )
 
 

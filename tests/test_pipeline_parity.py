@@ -145,8 +145,8 @@ def test_empty_inputs_produce_empty_outputs(spark):
     assert kg1.kg_edges.count() == 0 and kg1.kg_nodes.count() == 0
     kg2 = build_kg(spark, some_t, empty_a, persist=False)
     assert kg2.kg_edges.count() == 0 and kg2.mentions.count() == 0
-    # persisted builds collect the (empty) resolution on the driver: an
-    # empty dictionary, and a dictionary none of the text mentions
+    # persisted builds link inside the cached pass: an empty dictionary,
+    # and a dictionary none of the text mentions
     no_hits_a = spark.createDataFrame([("zzqx", "zzqx", "C9999", 1.0)], ALIASES_SCHEMA)
     for aliases in (empty_a, no_hits_a):
         kg = build_kg(spark, some_t, aliases, persist=True)

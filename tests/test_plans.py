@@ -1,7 +1,7 @@
 """Physical-plan shape tests: the properties that make the pipeline viable at
 100 TB are asserted on the plans themselves, not just the outputs.
 
-- linking joins must be broadcast (no shuffle of the mention-sized side)
+- linking must not join (the extraction pass links both triple endpoints)
 - canonicalization must be the salted two-phase aggregate
 - stage [1] must shuffle exactly once (repartition satisfies the window)
 - parquet scans must receive pushed filters / pruned columns
@@ -32,18 +32,19 @@ def _plan(df) -> str:
     return df._jdf.queryExecution().executedPlan().toString()
 
 
-def test_linking_joins_are_broadcast(kg):
+def test_linking_has_no_join(kg):
+    """The extraction pass links both endpoints, so kg_edges joins nothing:
+    the transcript-sized side meets no broadcast and no sort-merge join."""
     plan = _plan(kg.kg_edges)
-    assert "BroadcastHashJoin" in plan
-    # the transcript-sized side must NOT go through a sort-merge join
+    assert "Join" not in plan, plan
     assert "SortMergeJoin" not in plan
 
 
 def test_canonicalization_is_salted_two_phase(kg, spark):
     """Row-level canonicalize_nodes (checkpoint-runner path) stays salted
-    two-phase; build_kg's kg_nodes instead rides the vocab-sized
-    mention_stats aggregate — its plan must show the map-side-combined
-    (partial) count and NO transcript-sized second read."""
+    two-phase; build_kg's kg_nodes instead groups the extraction pass's
+    linked vocabulary rows — its plan must show the map-side-combined
+    (partial) aggregate and NO transcript-sized second read."""
     from knowledge_graph_integration_rag_biomedical_qna_spark.operators.canonicalize import (
         canonicalize_nodes,
     )

@@ -1,16 +1,15 @@
 """Plan-shape and job-count tests for a KG build, an ask (and one dedup plan).
 
-A persisted `build_kg` caches only the extraction and serves the resolved
-vocabulary from the driver as a one-partition local relation, so the
-`kg_edges` write broadcasts it once and reuses that exchange for the second
-endpoint, and the `kg_nodes` write groups it without an exchange. Link
-candidates are looked up in the dictionary the matcher's index ships, then
-scored and ranked in one Arrow pass that keeps its input's partitioning, so
-linking reads no dictionary table and adds no join, broadcast or exchange.
+A persisted `build_kg` caches only the extraction, and that one Arrow pass
+also links every mention against the dictionary the matcher's index ships.
+So the `kg_edges` write is a filter of the cached pass (no join, no
+broadcast), the `kg_nodes` write has one vocabulary-sized exchange above it,
+and building the result starts no job and collects nothing to the driver.
 
 An ask is one adaptive query: `link_questions` builds a lazy plan, and
-`retrieve_evidence` plus the caller's orderBy run it with one extraction
-pass, one `kg_edge_stats` scan and no cache or checkpoint.
+`retrieve_evidence` plus the caller's orderBy run it with one Arrow pass that
+detects and links the questions' mentions, one `kg_edge_stats` scan and no
+cache or checkpoint.
 
 These tests read final adaptive plans and count Spark jobs, so a change that
 splits a plan again goes red here before it shows up as latency.
@@ -44,7 +43,9 @@ def final_plan(df) -> str:
 def write_plan(spark, path: str) -> str:
     """The final adaptive plan of the last write to `path`, from the SQL
     status store, cut to the written query's own final plan (a cached
-    table's nested plans stay inside it)."""
+    table's nested plans stay inside it). Drains the listener bus first:
+    the store receives the final plan after the action returns."""
+    spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
     execs = spark._jsparkSession.sharedState().statusStore().executionsList()
     for i in reversed(range(execs.size())):
         desc = execs.apply(i).physicalPlanDescription()
@@ -130,43 +131,41 @@ def test_dictionary_probe_overflow_still_broadcasts(spark, tmp_path):
 
 
 def test_build_kg_job_count(spark, fixture_inputs, tmp_path):
-    """A persisted build_kg plus its three table writes takes at most 12
-    Spark jobs at local[4], dictionary probe included: the resolved
-    vocabulary is collected once into one partition, linking reads the
-    shipped dictionary (no dictionary broadcast), kg_nodes shuffles
-    nothing, and no vocabulary table is cached."""
+    """A persisted build_kg plus its three table writes takes at most 9
+    Spark jobs at local[4], dictionary probe included: linking runs inside
+    the cached extraction pass, so nothing is collected or broadcast and no
+    vocabulary table is cached."""
     _build_and_write(spark, fixture_inputs, str(tmp_path / "warm"))
     with job_group(spark, "build") as jobs:
         _build_and_write(spark, fixture_inputs, str(tmp_path / "kg"))
-    assert len(jobs) <= 12, jobs
+    assert len(jobs) <= 9, jobs
 
 
-def test_build_kg_serves_resolution_from_the_driver(spark, fixture_inputs, tmp_path):
-    """With persist=True the resolution is a LocalRelation in one
-    partition; the kg_edges write broadcasts it once and reuses that
-    exchange for the object endpoint, and its only cached table is the
-    extraction."""
-    kg = build_kg(spark, *fixture_inputs)
+def test_kg_edges_write_reads_only_the_cached_pass(spark, fixture_inputs, tmp_path):
+    """Given a prebuilt alias index, build_kg starts no Spark job. The
+    kg_edges write's final plan reads the cached extraction, whose pass
+    already linked both endpoints: no join and no broadcast."""
+    index = broadcast_alias_keys(spark, fixture_inputs[1])
+    with job_group(spark, "build_only") as jobs:
+        kg = build_kg(spark, *fixture_inputs, alias_index=index)
     try:
-        opt = kg.resolution._jdf.queryExecution().optimizedPlan()
-        assert opt.getClass().getSimpleName() == "Repartition"
-        assert opt.child().getClass().getSimpleName() == "LocalRelation"
-        assert kg.resolution.rdd.getNumPartitions() == 1
+        assert jobs == []
         path = str(tmp_path / "kg_edges")
         kg.kg_edges.write.parquet(path)
         plan = write_plan(spark, path)
     finally:
         kg.unpersist()
-    assert count_nodes(plan, "BroadcastExchange") == 1, plan
-    assert count_nodes(plan, "ReusedExchange") == 1, plan
+    assert count_nodes(plan, "BroadcastExchange") == 0, plan
+    assert "Join" not in plan, plan
     # one cache, and it holds the extraction (its nested plan runs the kernel)
     assert count_nodes(plan, "InMemoryRelation") == 1, plan
     assert "MapInArrow" in plan, plan
 
 
-def test_kg_nodes_write_has_no_exchange(spark, fixture_inputs, tmp_path):
-    """The persisted build's one-partition vocabulary already satisfies
-    kg_nodes' groupBy(cui): the write's final plan has no exchange."""
+def test_kg_nodes_write_has_one_exchange_above_the_cache(spark, fixture_inputs, tmp_path):
+    """kg_nodes groups the cached pass's linked vocabulary rows by cui: the
+    write's final plan has exactly one exchange above the cached extraction
+    (the cache's own plan holds only the turn-assembly exchange)."""
     kg = build_kg(spark, *fixture_inputs)
     try:
         path = str(tmp_path / "kg_nodes")
@@ -174,7 +173,9 @@ def test_kg_nodes_write_has_no_exchange(spark, fixture_inputs, tmp_path):
         plan = write_plan(spark, path)
     finally:
         kg.unpersist()
-    assert count_nodes(plan, "Exchange") == 0, plan
+    lines = plan.splitlines()
+    cache = next(i for i, l in enumerate(lines) if "InMemoryTableScan" in l)
+    assert count_nodes("\n".join(lines[:cache]), "Exchange") == 1, plan
 
 
 def test_lazy_resolution_scores_without_a_window_exchange(spark, fixture_inputs):
@@ -230,16 +231,15 @@ def test_link_questions_is_lazy(spark, ask_env):
 
 
 def test_ask_is_one_plan(spark, ask_env):
-    """The final plan of an ask runs the extraction once (the question ids
-    ride through linking, so there is no second branch and nothing to
-    reuse), looks candidates up, scores and ranks them in one Arrow pass
-    without reading the dictionary, broadcasts only the question links,
-    scans kg_edge_stats once, and caches nothing."""
+    """The final plan of an ask detects and links the questions' mentions
+    in one Arrow pass without reading the dictionary or shuffling (no
+    separate candidate pass), broadcasts only the question links, scans
+    kg_edge_stats once, and caches nothing."""
     df = _ask(spark, ask_env, _questions(spark, ask_env, range(16)))
     assert df.collect()
     plan = final_plan(df)
-    assert count_nodes(plan, "MapInArrow fn(") == 1, plan
-    assert count_nodes(plan, "MapInArrow candidates(") == 1, plan
+    assert count_nodes(plan, "MapInArrow") == 1, plan
+    assert "candidates(" not in plan, plan
     assert count_nodes(plan, "BroadcastExchange") == 1, plan
     assert not [l for l in plan.splitlines()
                 if "FileScan" in l and "concept_aliases" in l], plan
@@ -252,13 +252,13 @@ def test_ask_is_one_plan(spark, ask_env):
 
 def test_ask_job_count(spark, ask_env):
     """link + retrieve + orderBy + collect of 16 questions built with
-    createDataFrame takes at most 5 Spark jobs at local[4]."""
+    createDataFrame takes at most 4 Spark jobs at local[4]."""
     qs = _questions(spark, ask_env, range(16))
     _ask(spark, ask_env, qs).collect()  # warm the Python workers
     with job_group(spark, "ask") as jobs:
         rows = _ask(spark, ask_env, qs).collect()
     assert rows
-    assert len(jobs) <= 5, jobs
+    assert len(jobs) <= 4, jobs
 
 
 @pytest.mark.parametrize("ddl, ids", [

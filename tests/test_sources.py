@@ -255,3 +255,29 @@ def test_broadcast_alias_keys_local_fast_path(spark):
     bc2 = broadcast_alias_keys(spark, rdd_backed)
     assert bc.value.singles == bc2.value.singles
     assert bc.value.multi_first == bc2.value.multi_first
+
+
+def test_local_dictionary_over_the_key_cap_spills(spark, tmp_path):
+    """The LocalRelation fast path honours max_broadcast_keys: a driver-held
+    dictionary with more distinct keys than the cap spills to a
+    FileBackedAliasIndex with the same keys and candidates as the
+    broadcast index."""
+    from knowledge_graph_integration_rag_biomedical_qna_spark.plans.pipeline import (
+        FileBackedAliasIndex,
+        broadcast_alias_keys,
+    )
+    from knowledge_graph_integration_rag_biomedical_qna_spark.sources.synth import (
+        synth_aliases,
+    )
+
+    bc = broadcast_alias_keys(spark, synth_aliases(spark))
+    fb = broadcast_alias_keys(spark, synth_aliases(spark), max_broadcast_keys=1,
+                              spill_dir=str(tmp_path))
+    assert isinstance(fb, FileBackedAliasIndex)
+    assert fb.value.singles == bc.value.singles
+    assert fb.value.multi_first == bc.value.multi_first
+
+    def by_key(index):
+        return {k: sorted(v) for k, v in index.value.candidates_by_key().items()}
+
+    assert by_key(fb) == by_key(bc)

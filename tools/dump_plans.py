@@ -21,13 +21,13 @@ changes). What to look for, per the scale-design goals:
   bucketed writer lands exactly one file per bucket.
 - `WindowGroupLimit` — Spark's top-k pushdown replaces full window sorts for
   stage [1] dedup and every per-group top-k.
-- `BroadcastHashJoin` everywhere a dimension or resolution table joins the
-  data path; no `SortMergeJoin` touches transcript-sized inputs.
-- kg_nodes rides the vocabulary-sized mention_stats aggregate: a
-  map-side-combined (partial_count) groupBy whose counts pass through
-  linking, then a groupBy(cui) over the resolved vocabulary with no join —
-  the salted two-phase shape is the row-level `canonicalize_nodes` (see
-  its section below).
+- `BroadcastHashJoin` everywhere a dimension table joins the data path; no
+  `SortMergeJoin` touches transcript-sized inputs. Linking joins nothing:
+  the extraction `MapInArrow` links both triple endpoints in its pass.
+- kg_nodes groups the pass's linked per-task vocabulary rows by cui: one
+  map-side-combined (partial_collect_set/partial_sum) vocabulary-sized
+  exchange, no join — the salted two-phase shape is the row-level
+  `canonicalize_nodes` (see its section below).
 - Scans show `PushedFilters` and pruned `ReadSchema`.
 
 """
@@ -66,8 +66,8 @@ def main() -> None:
 
     sf = "/root/testdata/sf0.001"
     sections = [
-        ("kg_edges (stages [1]-[5]: window -> single-pass extraction -> broadcast resolution joins)", kg.kg_edges),
-        ("kg_nodes (stage [6]: vocab-sized stats aggregate -> groupBy(cui) over the resolved vocabulary)", kg.kg_nodes),
+        ("kg_edges (stages [1]-[5]: window -> one extraction+linking pass -> filter, no join)", kg.kg_edges),
+        ("kg_nodes (stage [6]: groupBy(cui) over the pass's linked vocabulary rows)", kg.kg_nodes),
         ("canonicalize_nodes (row-level salted two-phase operator, not on the build_kg path)", _salted_nodes(kg)),
         ("q1_pricing_summary (pushdown + partial aggregation)", REGISTRY["q1_pricing_summary"][0](spark, sf)),
         ("q5_join_breadth (broadcast star join)", REGISTRY["q5_join_breadth"][0](spark, sf)),
