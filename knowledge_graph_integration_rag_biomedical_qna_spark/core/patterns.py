@@ -103,9 +103,10 @@ class AliasIndex:
     Matching semantics are identical to probing the flat key set.
 
     `candidates`: the dictionary as four parallel columns (alias_key, alias,
-    cui, prior), or None for a matcher-only index (extraction needs keys
-    alone). Columns keep the payload compact; the per-key lookup is built
-    lazily by `candidates_by_key`, so extraction workers never build it.
+    cui, prior), or None for a matcher-only index (`extract_all_df` needs
+    keys alone). Columns keep the payload compact; `candidates_by_key`
+    builds the per-key lookup lazily, once per worker that links (the build's
+    and the question's extraction passes both do).
     """
 
     __slots__ = ("singles", "multi_first", "candidates", "_by_len", "_by_key")

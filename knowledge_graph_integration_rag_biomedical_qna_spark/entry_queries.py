@@ -79,14 +79,8 @@ def _t_wide(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     small by definition); a many-file input at real scale is untouched, so no
     extra full-data shuffle ever appears at 100 TB."""
     df = _t(spark, sf_dir, name)
-    from .session import default_parallelism
-
-    target = default_parallelism(spark)
-    try:
-        n_parts = df.rdd.getNumPartitions()
-    except Exception:  # Spark Connect: no client-side RDD API — skip widening
-        n_parts = None
-    if n_parts is not None and n_parts * 4 <= target:
+    target = spark.sparkContext.defaultParallelism
+    if df.rdd.getNumPartitions() * 4 <= target:
         df = df.repartition(target)
     return df
 
@@ -1906,11 +1900,12 @@ def kg_streaming_ingest(spark, sf_dir):
 @_qm("kg_checkpointed_run")
 def kg_checkpointed_run(spark, sf_dir):
     """The resumable checkpointed runner under the oracle gate: bucket-group
-    materialization (build_kg per group, atomic done markers, per-bucket
-    lineage, per-group node partials) over the synthesized transcripts must
-    produce EXACTLY the batch pipeline's edge set — conversations never
-    split across buckets and linking is a pure per-(alias_key, surface)
-    function. Oracle: the batch pipeline's independent pandas result.
+    materialization (build_kg per group, per-group node partials, atomic done
+    markers holding each group's per-bucket counts) over the synthesized
+    transcripts must produce EXACTLY the batch pipeline's edge set —
+    conversations never split across buckets and linking is a pure
+    per-(alias_key, surface) function. It reads a complete run's kg_edges,
+    so needs no finalize(). Oracle: the batch pipeline's pandas result.
     Reference analog: the per-query checkpoint/skip loop
     (provence/provence.py:113-167) as bucket commits."""
     import os

@@ -52,17 +52,14 @@ def _distinct_counting_hot(marked: DataFrame, label: str, message: str) -> DataF
     Observation sits on top of the operator's plan. Below the final shuffle
     it would be lost whenever that shuffle comes out empty (no pairs, e.g.
     an all-hot corpus): AQE then replaces the plan, observed node included,
-    with an empty relation. A Spark Connect Observation has no JVM
-    handle to probe without blocking, so under Connect no warning is
-    queued."""
+    with an empty relation."""
     import uuid
 
     cols = [c for c in marked.columns if c != "_hot"]
     out = marked.groupBy(*cols).agg(F.sum("_hot").alias("_hot"))
     obs = Observation(f"{label}_{uuid.uuid4().hex[:8]}")
     out = out.observe(obs, F.sum("_hot").alias("n_hot_rows"))
-    if getattr(obs, "_jo", None) is not None:
-        _PENDING_OBS.append((obs, label, message))
+    _PENDING_OBS.append((obs, label, message))
     return out.filter(F.col(cols[0]).isNotNull()).drop("_hot")
 
 

@@ -51,9 +51,7 @@ def assemble_turns(
         pass
     else:
         if num_partitions is None:
-            from ..session import default_parallelism
-
-            num_partitions = default_parallelism(transcripts.sparkSession)
+            num_partitions = transcripts.sparkSession.sparkContext.defaultParallelism
         df = df.repartition(num_partitions, "conv_id")
     # one SQL-string window expression instead of a Window-spec object tree:
     # parses JVM-side in a single round trip (r6 plan-construction diet);

@@ -10,24 +10,27 @@ engine that becomes:
   (the one composition of stages [1]-[6]) over its conversations and commits
   its kg_edges under `bucket=N` partition dirs and its kg_nodes as a node
   partial under `commit_group=<min>-<max>`, followed by an atomic done marker
-  (the Iceberg analog is a snapshot commit per group);
+  (the Iceberg analog is a snapshot commit per group): 5 Spark jobs a group;
+- the marker is the group's run record (`run()` returns them): per bucket
+  `turns_in` (input rows, before stage [1]'s dedup and empty-text drop),
+  `raw_triples` and `edges`, counted by Observations riding the kg_edges
+  write (null where AQE pruned one), plus `wall_sec` and `committed_at`;
 - resume = skip buckets whose markers exist (LEFT ANTI semantics, P8/U3);
   each marker records the bucket count, and a resume or finalize under
   another count raises (its bucket ids name other conversations); each
   marker also records the dictionary's digest, and a resume with another
   dictionary, or a finalize over markers that disagree, raises (the
   dictionary decides every link, so mixing two would mix links silently);
-- `finalize()` merges the node partials of marked groups (surface sets union,
-  counts sum; linking is a pure per-(alias_key, surface) function, so the
-  merge equals the batch kg_nodes) and builds kg_edge_stats from the
-  committed edges with the batch aggregate (exact n_convs);
-- a `lineage` table records (bucket, turns_in, raw_triples, edges, wall_sec,
-  commit_group) per bucket — per-partition lineage + triple-count metrics.
+- `finalize()` reads the markers once and builds every table from them:
+  kg_nodes merges the marked groups' node partials (linking is a pure
+  per-(alias_key, surface) function, so the merge equals the batch
+  kg_nodes), kg_edge_stats aggregates the marked buckets' edges (exact
+  n_convs), and `lineage` holds one record row per marked bucket.
 
 Failure model: a crash mid-group leaves no marker; rerun reprocesses exactly
-those buckets (writes replace the bucket partition — idempotent), and
-finalize reads only the node partials of marked groups, so a crashed group's
-partial is never counted, whatever group size the resume uses.
+those buckets (writes replace the bucket partition — idempotent). finalize
+reads only what the markers name, so a crashed group reaches no finalized
+table, resumed or not; until a resume, kg_edges still holds its buckets.
 """
 
 from __future__ import annotations
@@ -35,13 +38,15 @@ from __future__ import annotations
 import json
 import os
 import time
+from datetime import datetime, timezone
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from ..core.config import CHECKPOINT_BUCKETS
 from ..operators.canonicalize import aggregate_edges
-from .pipeline import broadcast_alias_keys, build_kg
+from ..operators.dedup import _obs_ready
+from .pipeline import EDGE_RULE, broadcast_alias_keys, build_kg, kg_edges_of
 
 # Unused here since build_kg became the only composition. perfbench's traced
 # checkpointed job patches these module attributes by name, so they stay
@@ -57,6 +62,10 @@ from ..operators.turn_assembly import assemble_turns  # noqa: F401
 
 _BUCKET = "bucket"
 _GROUP = "commit_group"
+# per-bucket counts of a group's run record, in lineage column order
+_COUNTS = ("turns_in", "raw_triples", "edges")
+_LINEAGE_SCHEMA = ("bucket int, turns_in bigint, raw_triples bigint, edges bigint, "
+                   "wall_sec double, committed_at timestamp, commit_group string")
 
 
 def bucket_of(col: str = "conv_id", buckets: int = CHECKPOINT_BUCKETS):
@@ -71,8 +80,8 @@ def _marker_path(out_dir: str, bucket_group: tuple[int, ...]) -> str:
     return os.path.join(out_dir, "_done", f"group-{_group_key(bucket_group)}.json")
 
 
-def _done_groups(out_dir: str, n_buckets: int, dict_digest: str | None = None) -> list[list[int]]:
-    """The bucket list of every committed group (one per done marker).
+def _done_markers(out_dir: str, n_buckets: int, dict_digest: str | None = None) -> list[dict]:
+    """Every committed group's done marker (its run record), in file order.
     Bucket ids only mean something under the bucket count that wrote them,
     so a marker from another count (or one that predates the field) raises
     instead of skipping the wrong conversations. Likewise a marker written
@@ -81,7 +90,7 @@ def _done_groups(out_dir: str, n_buckets: int, dict_digest: str | None = None) -
     d = os.path.join(out_dir, "_done")
     if not os.path.isdir(d):
         return []
-    groups, digests = [], set()
+    markers = []
     for f in sorted(os.listdir(d)):
         if f.endswith(".json"):
             with open(os.path.join(d, f)) as fh:
@@ -99,18 +108,23 @@ def _done_groups(out_dir: str, n_buckets: int, dict_digest: str | None = None) -
                     f"{marker.get('dict_digest')}, this run uses {dict_digest}; "
                     "resume with the original dictionary or start a new output dir"
                 )
-            digests.add(marker.get("dict_digest"))
-            groups.append(marker["buckets"])
+            markers.append(marker)
+    digests = {m.get("dict_digest") for m in markers}
     if len(digests) > 1:
         raise ValueError(
             f"{out_dir}: done markers were written with different dictionaries "
             f"{sorted(map(str, digests))}; rebuild into a new output dir"
         )
-    return groups
+    return markers
 
 
 def _done_buckets(out_dir: str, n_buckets: int, dict_digest: str) -> set[int]:
-    return {b for grp in _done_groups(out_dir, n_buckets, dict_digest) for b in grp}
+    return {b for m in _done_markers(out_dir, n_buckets, dict_digest) for b in m["buckets"]}
+
+
+def _per_bucket(bucket, grp, name: str, cond):
+    """`count_if(bucket = b AND cond) AS <name>_<b>` for each bucket of `grp`."""
+    return [F.count_if((bucket == b) & cond).alias(f"{name}_{b}") for b in grp]
 
 
 def _overwrite(df: DataFrame, key: str, path: str) -> None:
@@ -137,45 +151,51 @@ class ResumableKGRun:
         self.buckets = buckets
         self.group_size = group_size
 
-    def _per_bucket(self, df: DataFrame, name: str) -> DataFrame:
-        return df.groupBy(bucket_of("conv_id", self.buckets).alias(_BUCKET)).agg(
-            F.count(F.lit(1)).alias(name)
-        )
+    def _path(self, table: str) -> str:
+        return os.path.join(self.out_dir, table)
 
-    def _commit_group(self, grp: tuple[int, ...], kg, t0: float, dict_digest: str) -> None:
-        """Write one group's edges, node partial and lineage, then its marker;
-        `t0` is when the group started, `dict_digest` names its dictionary."""
-        key = F.lit(_group_key(grp))
-        _overwrite(
-            kg.kg_edges.withColumn(_BUCKET, bucket_of("conv_id", self.buckets)),
-            _BUCKET, os.path.join(self.out_dir, "kg_edges"),
+    def _commit_group(self, grp: tuple[int, ...], transcripts: DataFrame, aliases: DataFrame,
+                      keys_bc) -> dict:
+        """Build one group's KG, write its edges and node partial, then its
+        done marker: the group's run record, returned. Its counts ride the
+        first write (which also fills the cache) as Observations, no job."""
+        t0 = time.time()
+        bucket = bucket_of("conv_id", self.buckets)
+        seen, linked = Observation(), Observation()
+        part = transcripts.filter(bucket.isin(list(grp))).observe(
+            seen, *_per_bucket(bucket, grp, "turns_in", F.lit(True))
         )
-        _overwrite(
-            kg.kg_nodes.withColumn(_GROUP, key),
-            _GROUP, os.path.join(self.out_dir, "node_partials"),
-        )
-        # lineage metrics for this group, one row per bucket, counted from
-        # the composition's own outputs; keyed by bucket, so a resume with
-        # another group size replaces a crashed group's rows
-        lineage = (
-            self._per_bucket(kg.turns, "turns_in")
-            .join(self._per_bucket(kg.raw_triples, "raw_triples"), _BUCKET, "left")
-            .join(self._per_bucket(kg.kg_edges, "edges"), _BUCKET, "left")
-            .na.fill(0, ["raw_triples", "edges"])
-            .withColumn("wall_sec", F.lit(round(time.time() - t0, 3)))
-            .withColumn("committed_at", F.current_timestamp())
-            .withColumn(_GROUP, key)
-        )
-        _overwrite(lineage, _BUCKET, os.path.join(self.out_dir, "lineage"))
-
-        # atomic done marker AFTER data + lineage are on disk
+        kg = build_kg(self.spark, part, aliases, alias_index=keys_bc)
+        try:
+            unified = kg.unified.observe(
+                linked,
+                *_per_bucket(bucket, grp, "raw_triples", F.col("kind") == "t"),
+                *_per_bucket(bucket, grp, "edges", F.expr(EDGE_RULE)),
+            )
+            _overwrite(kg_edges_of(unified).withColumn(_BUCKET, bucket), _BUCKET,
+                       self._path("kg_edges"))
+            _overwrite(kg.kg_nodes.withColumn(_GROUP, F.lit(_group_key(grp))), _GROUP,
+                       self._path("node_partials"))
+        finally:
+            kg.unpersist()
+        # the listener bus completes the Observations just after the write;
+        # one whose node AQE pruned holds an empty row: its counts stay null
+        self.spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+        counts = {k: v for o in (seen, linked) if _obs_ready(o) and o._jo.getRow().length()
+                  for k, v in o.get.items()}
+        record = {
+            "buckets": list(grp), "n_buckets": self.buckets, "dict_digest": keys_bc.digest,
+            **{c: [counts.get(f"{c}_{b}") for b in grp] for c in _COUNTS},
+            "wall_sec": round(time.time() - t0, 3),
+            "committed_at": datetime.now(timezone.utc).isoformat(),
+        }
+        # atomic done marker AFTER the data is on disk
         marker = _marker_path(self.out_dir, grp)
         tmp = marker + ".tmp"
         with open(tmp, "w") as fh:
-            json.dump({"buckets": list(grp), "n_buckets": self.buckets,
-                       "dict_digest": dict_digest,
-                       "wall_sec": round(time.time() - t0, 3)}, fh)
+            json.dump(record, fh)
         os.replace(tmp, marker)
+        return record
 
     def run(
         self,
@@ -185,7 +205,8 @@ class ResumableKGRun:
     ) -> dict:
         """Process all not-yet-done bucket groups; `max_groups` simulates a
         crash after N group commits (used by the kill-and-resume test).
-        Returns summary metrics. Call `finalize()` after all groups are done.
+        Returns summary metrics, with the run record of every group this
+        call committed. Call `finalize()` after all groups are done.
         """
         os.makedirs(os.path.join(self.out_dir, "_done"), exist_ok=True)
         keys_bc = broadcast_alias_keys(self.spark, aliases)
@@ -199,35 +220,39 @@ class ResumableKGRun:
         if max_groups is not None:
             groups = groups[:max_groups]
 
-        for grp in groups:
-            t0 = time.time()
-            part = transcripts.filter(bucket_of("conv_id", self.buckets).isin(list(grp)))
-            kg = build_kg(self.spark, part, aliases, alias_index=keys_bc)
-            try:
-                self._commit_group(grp, kg, t0, keys_bc.digest)
-            finally:
-                kg.unpersist()
+        records = [self._commit_group(grp, transcripts, aliases, keys_bc) for grp in groups]
         done = _done_buckets(self.out_dir, self.buckets, keys_bc.digest)
         return {
             "groups_processed": len(groups),
             "buckets_done": sorted(done),
             "complete": len(done) == self.buckets,
+            "records": records,
         }
 
     def finalize(self) -> None:
-        """Merge the node partials of the marked groups -> kg_nodes; the
-        committed edges -> kg_edge_stats (exact n_convs, as in build_kg).
-        Raises if the markers name different dictionaries."""
-        committed = [_group_key(grp) for grp in _done_groups(self.out_dir, self.buckets)]
-        partials = self.spark.read.parquet(
-            os.path.join(self.out_dir, "node_partials")
-        ).filter(F.col(_GROUP).isin(committed))
+        """From one read of the done markers: the marked groups' node
+        partials -> kg_nodes, the marked buckets' edges -> kg_edge_stats
+        (exact n_convs, as in build_kg), and their run records -> lineage,
+        one row per bucket. A group without a marker (a crash) contributes
+        nothing. Raises if the markers name different dictionaries."""
+        markers = _done_markers(self.out_dir, self.buckets)
+        partials = self.spark.read.parquet(self._path("node_partials")).filter(
+            F.col(_GROUP).isin([_group_key(m["buckets"]) for m in markers])
+        )
         nodes = partials.groupBy("cui").agg(
             F.array_sort(F.array_distinct(F.flatten(F.collect_list("surfaces")))).alias("surfaces"),
             F.sum("mention_count").alias("mention_count"),
         )
-        nodes.write.mode("overwrite").parquet(os.path.join(self.out_dir, "kg_nodes"))
-        edges = self.spark.read.parquet(os.path.join(self.out_dir, "kg_edges"))
-        aggregate_edges(edges).write.mode("overwrite").parquet(
-            os.path.join(self.out_dir, "kg_edge_stats")
+        nodes.write.mode("overwrite").parquet(self._path("kg_nodes"))
+        edges = self.spark.read.parquet(self._path("kg_edges")).filter(
+            F.col(_BUCKET).isin([b for m in markers for b in m["buckets"]])
         )
+        aggregate_edges(edges).write.mode("overwrite").parquet(self._path("kg_edge_stats"))
+        lineage = [
+            (b, *(m[c][i] for c in _COUNTS), m["wall_sec"],
+             datetime.fromisoformat(m["committed_at"]), _group_key(m["buckets"]))
+            for m in markers for i, b in enumerate(m["buckets"])
+        ]
+        self.spark.createDataFrame(lineage, _LINEAGE_SCHEMA).write.mode("overwrite").partitionBy(
+            _BUCKET
+        ).parquet(self._path("lineage"))

@@ -60,17 +60,6 @@ class KGResult:
         self.unified.unpersist()
 
 
-class _ClosureBroadcast:
-    """Broadcast stand-in for SparkContext-less environments (Spark Connect):
-    the value rides each task closure instead of the broadcast bus. Same
-    `.value` interface."""
-
-    __slots__ = ("value", "digest")
-
-    def __init__(self, value):
-        self.value = value
-
-
 # per-python-worker cache for file-backed dictionaries: (path, mtime) -> index
 _FILE_INDEX_CACHE: dict = {}
 
@@ -132,10 +121,7 @@ def _ship_index(spark: SparkSession, rows):
     rows = [tuple(r) for r in rows]
     cols = tuple(zip(*rows)) or ((),) * len(_SHIPPED)
     idx = AliasIndex(frozenset(cols[0]), candidates=cols)
-    try:
-        handle = spark.sparkContext.broadcast(idx)
-    except Exception:  # Spark Connect: no SparkContext on the client
-        handle = _ClosureBroadcast(idx)
+    handle = spark.sparkContext.broadcast(idx)
     handle.digest = "sha256-" + hashlib.sha256(
         "\n".join(sorted(map(repr, rows))).encode()
     ).hexdigest()
@@ -176,13 +162,8 @@ def broadcast_alias_keys(
     # jobs, where the probe below costs at least one. The rows already live
     # in driver memory, so collecting them is not a new driver-size risk;
     # past max_broadcast_keys distinct keys they spill like any dictionary.
-    # Classic-only probe; any failure falls through to the job-based probe.
-    try:
-        opt = proj._jdf.queryExecution().optimizedPlan()
-        is_local = opt.getClass().getSimpleName() == "LocalRelation"
-    except Exception:  # Spark Connect or plan-access change
-        is_local = False
-    if is_local:
+    opt = proj._jdf.queryExecution().optimizedPlan()
+    if opt.getClass().getSimpleName() == "LocalRelation":
         rows = proj.collect()
         if len({r[0] for r in rows}) > max_broadcast_keys:
             return _spill_index(proj, spill_dir)
@@ -229,6 +210,18 @@ def _spill_index(proj: DataFrame, spill_dir: str | None) -> FileBackedAliasIndex
         # scans the directory as one dataset
         proj.write.mode("overwrite").parquet(out_dir)
     return FileBackedAliasIndex(out_dir)
+
+
+# kg_edges: the triple rows of the linked pass whose two endpoints linked
+EDGE_RULE = "kind = 't' AND subj_cui IS NOT NULL AND obj_cui IS NOT NULL"
+
+
+def kg_edges_of(unified: DataFrame) -> DataFrame:
+    """Evidence-level kg_edges: the `EDGE_RULE` rows, provenance kept."""
+    return unified.filter(EDGE_RULE).select(
+        "conv_id", "turn_idx", "subj_cui", "pred", "obj_cui",
+        "subj_surface", "obj_surface", "confidence",
+    )
 
 
 def build_kg(
@@ -282,11 +275,11 @@ def build_kg(
     callers (bench, the checkpointed and streaming runs, repeated builds
     against one dictionary) hoist it; the default builds it here.
 
-    Driver-side plan-construction cost (r6): one warm lazy build_kg call is
-    ~470 py4j round-trips / ~0.45 s with a hoisted alias_index (~0.9 s cold
-    incl. the dictionary probe+broadcast) — down from ~3,100 / 0.75-1.3 s
-    before the selectExpr rewrites of synth/assembly/linking/views. Amortize
-    it by reusing the plan (bench.py).
+    Driver-side plan-construction cost: one warm lazy build_kg call with a
+    hoisted alias_index is 276 py4j round-trips / ~0.22 s (median of 15,
+    n_conv=200 fixture, local[4] on 4 vCPU), paid once per checkpoint group
+    — down from ~3,100 / 0.75-1.3 s before the selectExpr rewrites.
+    Amortize it by reusing the plan (bench.py).
     """
     from ..operators.extraction import extract_collapsed_df, mention_stats_view
 
@@ -303,12 +296,7 @@ def build_kg(
     candidates = candidate_table(mention_stats, aliases, alias_index=keys_bc)
     resolution = resolution_table(candidates)
 
-    kg_edges = unified.filter(
-        "kind = 't' AND subj_cui IS NOT NULL AND obj_cui IS NOT NULL"
-    ).select(
-        "conv_id", "turn_idx", "subj_cui", "pred", "obj_cui",
-        "subj_surface", "obj_surface", "confidence",
-    )
+    kg_edges = kg_edges_of(unified)
     kg_nodes = canonicalize_node_stats(
         unified.filter("kind = 's' AND cui IS NOT NULL")
         .selectExpr("cui", "surface", "mention_idx AS n_mentions")

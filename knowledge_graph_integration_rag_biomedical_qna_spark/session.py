@@ -16,38 +16,18 @@ from pyspark.sql import SparkSession
 from .core.config import ARROW_BATCH
 
 
-def default_parallelism(spark: SparkSession, fallback: int = 32) -> int:
-    """Cluster default parallelism, Spark-Connect-safe: Connect sessions have
-    no client-side SparkContext, so fall back to the spark.default.parallelism
-    conf (or `fallback`). One shim for every call site — the try/except was
-    previously copy-pasted three times (r4 review)."""
-    try:
-        return spark.sparkContext.defaultParallelism
-    except Exception:
-        try:
-            return int(spark.conf.get("spark.default.parallelism", str(fallback)))
-        except Exception:
-            return fallback
-
-
 @contextlib.contextmanager
 def scoped_conf(spark: SparkSession, key: str, value: str):
     """Set a session conf for the duration of a block, restoring the prior
     value (or unsetting) on exit — the pin/restore choreography for e.g.
     scoping shuffle partitions to a streaming job's micro-batches."""
-    try:
-        old = spark.conf.get(key)
-    except Exception:
-        old = None
+    old = spark.conf.get(key, None)
     spark.conf.set(key, value)
     try:
         yield
     finally:
         if old is None:
-            try:
-                spark.conf.unset(key)
-            except Exception:
-                pass
+            spark.conf.unset(key)
         else:
             spark.conf.set(key, old)
 

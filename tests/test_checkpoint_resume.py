@@ -1,6 +1,7 @@
 """Kill-and-resume test (SURVEY.md §5): run the checkpointed materialization,
 abort after m of n bucket groups, resume, and require the final tables to be
-identical to a single-shot run. Also checks lineage metrics coverage."""
+identical to a single-shot run. Also checks the run records and the lineage
+table finalize() builds from them."""
 
 from __future__ import annotations
 
@@ -11,7 +12,9 @@ import pytest
 
 from knowledge_graph_integration_rag_biomedical_qna_spark.plans.checkpoint import (
     ResumableKGRun,
+    bucket_of,
 )
+from knowledge_graph_integration_rag_biomedical_qna_spark.plans.pipeline import build_kg
 
 TRIPLE_KEY = ["conv_id", "turn_idx", "subj_cui", "pred", "obj_cui"]
 
@@ -68,18 +71,111 @@ def test_resume_produces_identical_tables(spark, inputs, tmp_path):
     assert s3["groups_processed"] == 0 and s3["complete"]
 
 
+def _bucket_counts(df, buckets: int) -> dict[int, int]:
+    """Rows of `df` per checkpoint bucket, counted in pandas."""
+    pdf = df.select(bucket_of("conv_id", buckets).alias("bucket")).toPandas()
+    return {int(b): int(n) for b, n in pdf["bucket"].value_counts().items()}
+
+
 def test_lineage_metrics(spark, inputs, tmp_path):
+    """finalize() writes lineage from the done markers, one row per bucket,
+    and each count equals a job-based recount: turns_in the bucket's input
+    rows, raw_triples and edges the batch build's raw triples and kg_edges
+    grouped by bucket."""
     transcripts, aliases = inputs
     out = str(tmp_path / "lineage_run")
     run = ResumableKGRun(spark, out, buckets=4, group_size=4)
-    run.run(transcripts, aliases)
-    lineage = spark.read.parquet(f"{out}/lineage").toPandas()
-    assert sorted(lineage["bucket"].unique()) == [0, 1, 2, 3]
-    assert (lineage["turns_in"] > 0).all()
-    assert lineage["edges"].sum() > 0
+    summary = run.run(transcripts, aliases)
+    run.finalize()
+    lineage = spark.read.parquet(f"{out}/lineage")
+    assert lineage.schema.simpleString() == (
+        "struct<turns_in:bigint,raw_triples:bigint,edges:bigint,wall_sec:double,"
+        "committed_at:timestamp,commit_group:string,bucket:int>"
+    )
+    lineage = lineage.toPandas().set_index("bucket").sort_index()
+    assert lineage.index.tolist() == [0, 1, 2, 3]
+    assert (lineage["commit_group"] == "0-3").all()
     # triple-count conservation: lineage edge counts == materialized edges
     edges = spark.read.parquet(f"{out}/kg_edges")
     assert int(lineage["edges"].sum()) == edges.count()
+
+    kg = build_kg(spark, transcripts, aliases)
+    try:
+        expected = {
+            "turns_in": _bucket_counts(transcripts, 4),
+            "raw_triples": _bucket_counts(kg.raw_triples, 4),
+            "edges": _bucket_counts(kg.kg_edges, 4),
+        }
+    finally:
+        kg.unpersist()
+    for col, counts in expected.items():
+        assert lineage[col].to_dict() == counts, col
+
+    # run() returns the group's run record, the marker's content
+    (record,) = summary["records"]
+    assert record["buckets"] == [0, 1, 2, 3]
+    assert record["edges"] == lineage["edges"].tolist()
+    assert record["wall_sec"] == lineage["wall_sec"].iloc[0]
+
+
+def test_record_of_groups_without_extraction_rows(spark, inputs, tmp_path):
+    """Pins the run record of a group whose turns yield no extraction rows
+    (counts 0, observed) and of a group with no input rows: its input
+    Observation sits below stage [1]'s shuffle, which comes out empty, so
+    AQE prunes it and turns_in is recorded as null (unavailable), never 0."""
+    from pyspark.sql import functions as F
+
+    transcripts, aliases = inputs
+    bucket = bucket_of("conv_id", 8)
+    src = transcripts.filter(~bucket.isin(2, 3)).withColumn(
+        "text", F.when(bucket.isin(0, 1), F.lit("zzz qqq.")).otherwise(F.col("text"))
+    )
+    out = str(tmp_path / "empty_groups")
+    run = ResumableKGRun(spark, out, buckets=8, group_size=2)
+    # the third group has edges: finalize reads the kg_edges schema from them
+    no_rows, no_input, _ = run.run(src, aliases, max_groups=3)["records"]
+    turns = _bucket_counts(src, 8)
+    assert no_rows["buckets"] == [0, 1] and no_input["buckets"] == [2, 3]
+    assert no_rows["turns_in"] == [turns[0], turns[1]]
+    assert no_rows["raw_triples"] == no_rows["edges"] == [0, 0]
+    assert no_input["turns_in"] == [None, None]
+    assert no_input["raw_triples"] == no_input["edges"] == [0, 0]
+
+    run.finalize()
+    lineage = spark.read.parquet(f"{out}/lineage").toPandas().set_index("bucket").sort_index()
+    assert lineage.index.tolist() == list(range(6))
+    assert lineage["turns_in"].isna().tolist() == [False, False, True, True, False, False]
+
+
+def test_finalize_without_resume_reads_only_marked_groups(spark, inputs, tmp_path, monkeypatch):
+    """A group that crashed before its done marker has written its edges,
+    but finalize() without a resume must leave its buckets out of
+    kg_edge_stats and lineage, as it leaves its node partial out of
+    kg_nodes."""
+    transcripts, aliases = inputs
+    out = str(tmp_path / "crashed")
+    real_replace = os.replace
+
+    def crash_on_second_marker(src, dst):
+        if dst.endswith("group-2-3.json"):
+            raise OSError("injected crash before the done marker")
+        return real_replace(src, dst)
+
+    monkeypatch.setattr(os, "replace", crash_on_second_marker)
+    run = ResumableKGRun(spark, out, buckets=8, group_size=2)
+    with pytest.raises(OSError, match="injected crash"):
+        run.run(transcripts, aliases)
+    monkeypatch.undo()
+    edges = spark.read.parquet(f"{out}/kg_edges")
+    assert sorted(r.bucket for r in edges.select("bucket").distinct().collect()) == [0, 1, 2, 3]
+
+    run.finalize()
+    marked = edges.filter("bucket IN (0, 1)").count()
+    stats = spark.read.parquet(f"{out}/kg_edge_stats").toPandas()
+    assert int(stats["n_evidence"].sum()) == marked
+    lineage = spark.read.parquet(f"{out}/lineage").toPandas()
+    assert sorted(lineage["bucket"]) == [0, 1]
+    assert int(lineage["edges"].sum()) == marked
 
 
 def _sorted_table(spark, path: str, key: list[str]) -> pd.DataFrame:

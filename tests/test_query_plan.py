@@ -1,4 +1,5 @@
-"""Plan-shape and job-count tests for a KG build, an ask (and one dedup plan).
+"""Plan-shape and job-count tests for a KG build, a checkpoint group, an ask
+(and one dedup plan).
 
 A persisted `build_kg` caches only the extraction, and that one Arrow pass
 also links every mention against the dictionary the matcher's index ships.
@@ -139,6 +140,24 @@ def test_build_kg_job_count(spark, fixture_inputs, tmp_path):
     with job_group(spark, "build") as jobs:
         _build_and_write(spark, fixture_inputs, str(tmp_path / "kg"))
     assert len(jobs) <= 9, jobs
+
+
+def test_checkpoint_group_job_count(spark, fixture_inputs, tmp_path):
+    """A checkpoint group commits in at most 5 Spark jobs (the kg_edges write
+    and the node partial write): its lineage counts ride the kg_edges write
+    as Observations. Four groups plus the dictionary probe; finalize() adds
+    one job, the lineage write, to the node and edge-stat writes."""
+    from knowledge_graph_integration_rag_biomedical_qna_spark.plans.checkpoint import (
+        ResumableKGRun,
+    )
+
+    run = ResumableKGRun(spark, str(tmp_path / "ckpt"), buckets=8, group_size=2)
+    with job_group(spark, "ckpt_run") as jobs:
+        assert run.run(*fixture_inputs)["groups_processed"] == 4
+    assert len(jobs) <= 1 + 4 * 5, jobs
+    with job_group(spark, "ckpt_finalize") as jobs:
+        run.finalize()
+    assert len(jobs) <= 8, jobs
 
 
 def test_kg_edges_write_reads_only_the_cached_pass(spark, fixture_inputs, tmp_path):

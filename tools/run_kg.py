@@ -15,7 +15,9 @@ Local smoke:
 
 The job is checkpointed and resumable: rerunning after a crash skips committed
 bucket groups (see plans/checkpoint.py). Once all buckets are done it runs
-the phase-2 node / edge-stat aggregation; `--no-finalize` skips that step.
+the phase-2 node / edge-stat aggregation and writes the lineage table;
+`--no-finalize` skips that step. The printed JSON summary carries the run
+record (per-bucket counts, wall time) of every group this call committed.
 
 Package the library for --py-files with:
     (cd /root/repo && zip -qr kg_pkg.zip knowledge_graph_integration_rag_biomedical_qna_spark)
