@@ -2056,8 +2056,8 @@ def q4_semi_join_exists(spark, sf_dir):
     """,
 )
 def distinct_aggregation(spark, sf_dir):
-    """Exact distinct aggregation (expand + two-phase agg under the hood);
-    the approximate variant (approx_count_distinct/HLL) runs in kg_edge_stats."""
+    """Exact distinct aggregation (two-phase agg under the hood); the
+    approximate variant (approx_count_distinct/HLL) runs in approx_sketches."""
     ev = _t(spark, sf_dir, "events")
     return ev.groupBy("event_type").agg(
         F.countDistinct("user_id").alias("n_users"),

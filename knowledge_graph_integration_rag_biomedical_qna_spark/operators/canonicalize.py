@@ -60,21 +60,28 @@ def canonicalize_node_stats(resolution: DataFrame) -> DataFrame:
     )
 
 
-def aggregate_edges(resolved_triples: DataFrame, exact_distinct: bool = True) -> DataFrame:
-    """kg_edge_stats(subj_cui, pred, obj_cui, n_evidence, avg_confidence,
-    n_convs) — the deduplicated graph view over evidence-level edges.
-    groupBy keys are (cui, pred, cui): hot pairs exist, but the payload is
-    counters only (map-side partial agg absorbs the skew).
-
-    n_convs is an exact distinct by default so the table is oracle-checkable;
-    pass exact_distinct=False for the HLL sketch when a hot edge's distinct
-    conversation set itself is too large to shuffle (the 10^12-turn setting)."""
-    n_convs_sql = (
-        "count(DISTINCT conv_id)" if exact_distinct
-        else "approx_count_distinct(conv_id)"
-    )
-    return resolved_triples.groupBy("subj_cui", "pred", "obj_cui").agg(
+def _edge_stats(edges: DataFrame, n_convs_sql: str) -> DataFrame:
+    """kg_edge_stats' one definition; callers differ only in how n_convs is
+    counted."""
+    return edges.groupBy("subj_cui", "pred", "obj_cui").agg(
         F.expr("count(1) AS n_evidence"),
         F.expr("round(avg(confidence), 6) AS avg_confidence"),
         F.expr(f"{n_convs_sql} AS n_convs"),
     )
+
+
+def aggregate_edges(resolved_triples: DataFrame) -> DataFrame:
+    """kg_edge_stats(subj_cui, pred, obj_cui, n_evidence, avg_confidence,
+    n_convs) — the deduplicated graph view over stored evidence-level edges
+    (ResumableKGRun.finalize). n_convs is an exact `count(DISTINCT conv_id)`,
+    which plans a second exchange keyed by (edge, conv_id): stored rows can
+    split one conversation across tasks, so they carry no first-row flag."""
+    return _edge_stats(resolved_triples, "count(DISTINCT conv_id)")
+
+
+def aggregate_flagged_edges(linked_triples: DataFrame) -> DataFrame:
+    """kg_edge_stats over the extraction pass's linked triple rows, which
+    carry `conv_first` (extract_collapsed_df): n_convs is
+    `count_if(conv_first)`, equal to aggregate_edges' exact distinct, in one
+    exchange of at most (edge groups x tasks) partial rows."""
+    return _edge_stats(linked_triples, "count_if(conv_first)")

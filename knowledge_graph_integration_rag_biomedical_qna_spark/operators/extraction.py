@@ -77,6 +77,10 @@ def detect_mentions_df(turns: DataFrame, alias_keys_bc) -> DataFrame:
     )
 
 
+# extract_collapsed_df appends five nullable columns to these: subj_cui,
+# obj_cui and conv_first on 't' rows, cui and link_score on 's' rows.
+# conv_first holds only on stage [1]'s output (each conversation's turns in
+# one task, tasks sorted by conv_id), which the pass checks as it goes.
 UNIFIED_SCHEMA = T.StructType(
     [
         T.StructField("conv_id", T.StringType(), False),
@@ -140,8 +144,8 @@ def _collapsed_fn(alias_index, cui_type):
 
         link = pair_linker(alias_index)
         fields = [*_unified_pa_schema(), pa.field("subj_cui", cui_type),
-                  pa.field("obj_cui", cui_type), pa.field("cui", cui_type),
-                  pa.field("link_score", pa.float64())]
+                  pa.field("obj_cui", cui_type), pa.field("conv_first", pa.bool_()),
+                  pa.field("cui", cui_type), pa.field("link_score", pa.float64())]
 
         def rows(n, **cols):
             """One output batch of n rows: `cols` by name, nulls elsewhere."""
@@ -151,11 +155,29 @@ def _collapsed_fn(alias_index, cui_type):
             )
 
         def cuis(hits):
-            return pa.array([h[0] if h else None for h in hits], cui_type)
+            return [h[0] if h else None for h in hits]
 
         def endpoint_cuis(rb, side):
             return cuis(map(link, rb.column(f"{side}_key").to_pylist(),
                             rb.column(f"{side}_surface").to_pylist()))
+
+        # the current conversation's edge keys (stage [1] sorts nulls first)
+        conv, seen = None, set()
+
+        def conv_first(convs, subj, preds, obj):
+            nonlocal conv, seen
+            flags = []
+            for key in zip(convs, subj, preds, obj):
+                if key[0] != conv:
+                    if key[0] is None or conv is not None and key[0] < conv:
+                        raise ValueError(
+                            f"extract_collapsed_df: conv_id {key[0]!r} after {conv!r} in "
+                            "one task; the pass needs each task's turns sorted by "
+                            "conv_id (stage [1], assemble_turns)")
+                    conv, seen = key[0], set()
+                flags.append(None if None in (key[0], key[1], key[3]) else key not in seen)
+                seen.add(key)
+            return pa.array(flags, pa.bool_())
 
         partials = []
         for rb in kernel_batches(batches, alias_index.value):
@@ -172,9 +194,12 @@ def _collapsed_fn(alias_index, cui_type):
                     link(*pair)
             t_rb = rb.filter(is_t)
             if len(t_rb):
+                subj, obj = endpoint_cuis(t_rb, "subj"), endpoint_cuis(t_rb, "obj")
+                first = conv_first(t_rb.column("conv_id").to_pylist(), subj,
+                                   t_rb.column("pred").to_pylist(), obj)
                 yield rows(len(t_rb), **dict(zip(t_rb.schema.names, t_rb.columns)),
-                           subj_cui=endpoint_cuis(t_rb, "subj"),
-                           obj_cui=endpoint_cuis(t_rb, "obj"))
+                           subj_cui=pa.array(subj, cui_type), obj_cui=pa.array(obj, cui_type),
+                           conv_first=first)
         if partials:
             agg = (
                 pa.concat_tables(partials)
@@ -190,7 +215,7 @@ def _collapsed_fn(alias_index, cui_type):
                 kind=pa.array(["s"] * n, pa.string()),
                 # the partial count rides in mention_idx (mention_stats_view)
                 mention_idx=pc.cast(agg.column("count_all_sum").combine_chunks(), pa.int32()),
-                surface=surface, alias_key=alias_key, cui=cuis(hits),
+                surface=surface, alias_key=alias_key, cui=pa.array(cuis(hits), cui_type),
                 link_score=pa.array([h[1] if h else None for h in hits], pa.float64()),
             )
 
@@ -220,27 +245,38 @@ def extract_collapsed_df(
     Linking rides the same pass: each task links its distinct
     (alias_key, surface) pairs — the pairs its 's' rows already carry — once,
     against the candidates `alias_keys_bc` ships
-    (operators.linking.pair_linker), and the output gains four nullable
-    columns: `subj_cui`, `obj_cui` on 't' rows and `cui`, `link_score` on 's'
-    rows, typed `cui_type` (pass the dictionary's cui type), null where the
+    (operators.linking.pair_linker), and the output gains nullable
+    `subj_cui`, `obj_cui` on 't' rows and `cui`, `link_score` on 's' rows,
+    the CUIs typed `cui_type` (pass the dictionary's cui type), null where the
     surface does not link. Scoring is proportional to the distinct pairs in
     each task, not to the global vocabulary: a pair seen by every task is
     scored once per task. Every worker builds the index's per-key
     candidates, so `alias_keys_bc` must carry them (broadcast_alias_keys).
+
+    Each 't' row also gets `conv_first`: true on the first row of its
+    (conv_id, subj_cui, pred, obj_cui) in the task, false on later ones,
+    null when conv_id or an endpoint is null, so `count_if(conv_first)` per
+    edge is the exact `count(DISTINCT conv_id)`. Input contract: `turns` is
+    stage [1]'s output (assemble_turns): each conversation in one task, each
+    task sorted by conv_id, nulls first. The pass keeps only the current
+    conversation's keys and raises if conv_id decreases inside a task
+    (Python `str` order is Spark's UTF-8 byte order), so a broken order
+    fails instead of overcounting.
 
     Callers needing per-occurrence mention rows (tok spans) run
     `extract_all_df` instead — build_kg keeps its `.mentions` view lazily on
     that path."""
     from pyspark.sql.pandas.types import to_arrow_type
 
-    linked = [T.StructField(c, cui_type) for c in ("subj_cui", "obj_cui", "cui")]
+    linked = [T.StructField("subj_cui", cui_type), T.StructField("obj_cui", cui_type),
+              T.StructField("conv_first", T.BooleanType()), T.StructField("cui", cui_type),
+              T.StructField("link_score", T.DoubleType())]
     # plan-level marker: mentions_view raises on a collapsed input instead of
     # silently returning zero rows (there are no 'm' rows to project)
     return (
         turns.select("conv_id", "turn_idx", "text")
         .mapInArrow(_collapsed_fn(alias_keys_bc, to_arrow_type(cui_type)),
-                    T.StructType([*UNIFIED_SCHEMA.fields, *linked,
-                                  T.StructField("link_score", T.DoubleType())]))
+                    T.StructType([*UNIFIED_SCHEMA.fields, *linked]))
         .withMetadata("kind", {"collapsed": True})
     )
 

@@ -14,7 +14,9 @@ engine that becomes:
 - the marker is the group's run record (`run()` returns them): per bucket
   `turns_in` (input rows, before stage [1]'s dedup and empty-text drop),
   `raw_triples` and `edges`, counted by Observations riding the kg_edges
-  write (null where AQE pruned one), plus `wall_sec` and `committed_at`;
+  write (null where AQE pruned one), plus `wall_sec`, `committed_at` and
+  the schemas of the two tables it wrote, which `finalize()` reads with (a
+  write of no rows leaves no file to infer one from);
 - resume = skip buckets whose markers exist (LEFT ANTI semantics, P8/U3);
   each marker records the bucket count, and a resume or finalize under
   another count raises (its bucket ids name other conversations); each
@@ -172,10 +174,11 @@ class ResumableKGRun:
                 *_per_bucket(bucket, grp, "raw_triples", F.col("kind") == "t"),
                 *_per_bucket(bucket, grp, "edges", F.expr(EDGE_RULE)),
             )
-            _overwrite(kg_edges_of(unified).withColumn(_BUCKET, bucket), _BUCKET,
-                       self._path("kg_edges"))
-            _overwrite(kg.kg_nodes.withColumn(_GROUP, F.lit(_group_key(grp))), _GROUP,
-                       self._path("node_partials"))
+            tables = {"kg_edges": (kg_edges_of(unified).withColumn(_BUCKET, bucket), _BUCKET),
+                      "node_partials": (kg.kg_nodes.withColumn(_GROUP, F.lit(_group_key(grp))),
+                                        _GROUP)}
+            for table, (df, key) in tables.items():
+                _overwrite(df, key, self._path(table))
         finally:
             kg.unpersist()
         # the listener bus completes the Observations just after the write;
@@ -188,6 +191,7 @@ class ResumableKGRun:
             **{c: [counts.get(f"{c}_{b}") for b in grp] for c in _COUNTS},
             "wall_sec": round(time.time() - t0, 3),
             "committed_at": datetime.now(timezone.utc).isoformat(),
+            "schemas": {t: df.schema.toDDL() for t, (df, _) in tables.items()},
         }
         # atomic done marker AFTER the data is on disk
         marker = _marker_path(self.out_dir, grp)
@@ -236,7 +240,13 @@ class ResumableKGRun:
         one row per bucket. A group without a marker (a crash) contributes
         nothing. Raises if the markers name different dictionaries."""
         markers = _done_markers(self.out_dir, self.buckets)
-        partials = self.spark.read.parquet(self._path("node_partials")).filter(
+        if not markers:
+            raise ValueError(f"{self.out_dir}: no committed group to finalize; run() first")
+
+        def read(table: str) -> DataFrame:
+            return self.spark.read.schema(markers[0]["schemas"][table]).parquet(self._path(table))
+
+        partials = read("node_partials").filter(
             F.col(_GROUP).isin([_group_key(m["buckets"]) for m in markers])
         )
         nodes = partials.groupBy("cui").agg(
@@ -244,7 +254,7 @@ class ResumableKGRun:
             F.sum("mention_count").alias("mention_count"),
         )
         nodes.write.mode("overwrite").parquet(self._path("kg_nodes"))
-        edges = self.spark.read.parquet(self._path("kg_edges")).filter(
+        edges = read("kg_edges").filter(
             F.col(_BUCKET).isin([b for m in markers for b in m["buckets"]])
         )
         aggregate_edges(edges).write.mode("overwrite").parquet(self._path("kg_edge_stats"))

@@ -7,13 +7,16 @@ Shuffle budget of the whole plan (the thing that decides 100 TB viability):
               collapse and linking in one pass (inherit partitioning)
   1 shuffle   stage [6] kg_nodes groupBy(cui) over the linked per-task
               vocabulary rows                                    [vocab-sized]
-  1 shuffle   edge-stats groupBy (counter payload, map-side combine)
+  1 shuffle   stage [6] kg_edge_stats groupBy(subj_cui, pred, obj_cui),
+              counters only, map-side combined   [edge groups x tasks rows]
 
 Only the extraction is cached, and nothing is collected to the driver: each
 task links its own surfaces against the dictionary the matcher's index
 ships, so kg_edges is a filter of the cached pass (no join, no broadcast)
-and kg_nodes one vocabulary-sized exchange above it. Build plus the three
-writes: 8 Spark jobs on the construct_x5 benchmark.
+and kg_nodes one vocabulary-sized exchange above it. kg_edge_stats counts
+n_convs from the pass's per-conversation `conv_first` flag, so no
+exchange is keyed by (edge, conv_id). Build plus the three writes: 7 Spark
+jobs on the construct_x5 benchmark.
 
 Everything transcript-sized shuffles at most once and is read once, from
 the cached extraction. `build_kg` is the only composition of stages
@@ -29,7 +32,8 @@ from functools import cached_property
 
 from pyspark.sql import DataFrame, SparkSession
 
-from ..operators.canonicalize import aggregate_edges, canonicalize_node_stats
+from ..operators.canonicalize import aggregate_edges  # noqa: F401 -- importable here for perfbench
+from ..operators.canonicalize import aggregate_flagged_edges, canonicalize_node_stats
 from ..operators.extraction import extract_all_df, mentions_view, triples_view
 from ..operators.linking import candidate_table, resolution_table
 from ..operators.linking import resolve_triples  # noqa: F401 -- importable here for perfbench
@@ -248,7 +252,9 @@ def build_kg(
     Linking rides that pass too: each task resolves its own distinct
     (alias_key, surface) pairs against the candidates `alias_index` ships,
     so kg_edges keeps the triples whose two endpoints linked (a filter, no
-    join) and kg_nodes groups the linked per-task stats by cui. Building
+    join), kg_nodes groups the linked per-task stats by cui, and
+    kg_edge_stats groups the linked triples by edge, with the exact n_convs
+    counted from the pass's `conv_first` flags (extract_collapsed_df). Building
     the result starts no Spark job when `alias_index` is given. The driver
     never receives the resolved vocabulary, so `spark.driver.maxResultSize`
     does not bound a build. `candidates`, `resolution` and `mention_stats`
@@ -301,7 +307,7 @@ def build_kg(
         unified.filter("kind = 's' AND cui IS NOT NULL")
         .selectExpr("cui", "surface", "mention_idx AS n_mentions")
     )
-    kg_edge_stats = aggregate_edges(kg_edges)
+    kg_edge_stats = aggregate_flagged_edges(unified.filter(EDGE_RULE))
     return KGResult(
         turns=turns,
         unified=unified,

@@ -132,7 +132,6 @@ def test_record_of_groups_without_extraction_rows(spark, inputs, tmp_path):
     )
     out = str(tmp_path / "empty_groups")
     run = ResumableKGRun(spark, out, buckets=8, group_size=2)
-    # the third group has edges: finalize reads the kg_edges schema from them
     no_rows, no_input, _ = run.run(src, aliases, max_groups=3)["records"]
     turns = _bucket_counts(src, 8)
     assert no_rows["buckets"] == [0, 1] and no_input["buckets"] == [2, 3]
@@ -145,6 +144,33 @@ def test_record_of_groups_without_extraction_rows(spark, inputs, tmp_path):
     lineage = spark.read.parquet(f"{out}/lineage").toPandas().set_index("bucket").sort_index()
     assert lineage.index.tolist() == list(range(6))
     assert lineage["turns_in"].isna().tolist() == [False, False, True, True, False, False]
+
+
+def test_finalize_writes_empty_tables_when_no_group_linked(spark, inputs, tmp_path):
+    """One turn that hits no dictionary alias: both groups commit, but no
+    kg_edges or node-partial write leaves a data file. finalize() reads both
+    with the schemas the done markers record, so it writes empty kg_nodes
+    and kg_edge_stats and one lineage row per bucket instead of failing to
+    infer a schema."""
+    import datetime as dt
+
+    from knowledge_graph_integration_rag_biomedical_qna_spark.sources.io import (
+        TRANSCRIPTS_SCHEMA,
+    )
+
+    _, aliases = inputs
+    turn = spark.createDataFrame([("c1", 0, "user", "zzz qqq.", None, dt.datetime(2026, 1, 1))],
+                                 TRANSCRIPTS_SCHEMA)
+    out = str(tmp_path / "no_links")
+    run = ResumableKGRun(spark, out, buckets=2, group_size=1)
+    assert run.run(turn, aliases)["complete"]
+    run.finalize()
+    nodes = spark.read.parquet(f"{out}/kg_nodes")
+    stats = spark.read.parquet(f"{out}/kg_edge_stats")
+    assert nodes.columns == ["cui", "surfaces", "mention_count"] and nodes.count() == 0
+    assert stats.columns == ["subj_cui", "pred", "obj_cui", "n_evidence", "avg_confidence",
+                             "n_convs"] and stats.count() == 0
+    assert sorted(r.bucket for r in spark.read.parquet(f"{out}/lineage").collect()) == [0, 1]
 
 
 def test_finalize_without_resume_reads_only_marked_groups(spark, inputs, tmp_path, monkeypatch):

@@ -240,3 +240,62 @@ def test_in_pass_linking_scores_each_pair_once(monkeypatch, body):
         assert set(out.column("cui").drop_null().to_pylist()) == {"C1", "C4", "C6"}
     else:
         assert len(out) == 50 * len(pairs)
+
+
+# aspirin and headache link; belowx matches the index but scores below the floor
+FLAG_DICT = [("aspirin", "aspirin", "C1", 0.9), ("headache", "headache", "C4", 0.8),
+             ("belowx", "nothing alike", "B1", 0.1)]
+
+
+def test_conv_first_counts_a_conversation_once_across_batches(spark):
+    """Two-row Arrow batches split one conversation's six repeats of an edge
+    over three batches of its task: exactly one row carries conv_first, so
+    n_convs is 1, as count(DISTINCT conv_id) over kg_edges gives. A triple
+    whose subject does not link carries a null flag."""
+    from knowledge_graph_integration_rag_biomedical_qna_spark.operators.canonicalize import (
+        aggregate_edges,
+    )
+    from knowledge_graph_integration_rag_biomedical_qna_spark.session import scoped_conf
+
+    aliases = spark.createDataFrame(FLAG_DICT, DICT_DDL)
+    ts = dt.datetime(2026, 1, 1)
+    texts = ["Aspirin treats headache."] * 6 + ["belowx reduces aspirin."]
+    transcripts = spark.createDataFrame(
+        [("c1", t, "user", text, "", ts) for t, text in enumerate(texts)], TRANSCRIPTS_SCHEMA)
+    with scoped_conf(spark, "spark.sql.execution.arrow.maxRecordsPerBatch", "2"):
+        kg = build_kg(spark, transcripts, aliases)
+        try:
+            flags = sorted(
+                (r.subj_cui or "", r.conv_first)
+                for r in kg.unified.filter("kind = 't'").select("subj_cui", "conv_first").collect()
+            )
+            stats = [tuple(r) for r in kg.kg_edge_stats.collect()]
+            spec = [tuple(r) for r in aggregate_edges(kg.kg_edges).collect()]
+        finally:
+            kg.unpersist()
+    assert flags == [("", None)] + [("C1", False)] * 5 + [("C1", True)]
+    assert stats == spec
+    ((subj, _, obj, n_evidence, _, n_convs),) = stats
+    assert (subj, obj, n_evidence, n_convs) == ("C1", "C4", 6, 1)
+
+
+def test_conv_first_raises_when_conv_id_decreases_in_a_task():
+    """The pass body, run in-process on one task's batches, raises when
+    conv_id goes down instead of counting the later conversation's edges
+    again."""
+    import types
+
+    import pyarrow as pa
+
+    from knowledge_graph_integration_rag_biomedical_qna_spark.core.patterns import AliasIndex
+    from knowledge_graph_integration_rag_biomedical_qna_spark.operators.extraction import (
+        _collapsed_fn,
+    )
+
+    index = types.SimpleNamespace(
+        value=AliasIndex([r[0] for r in FLAG_DICT], candidates=tuple(zip(*FLAG_DICT))))
+    batches = [pa.RecordBatch.from_arrays(
+        [pa.array([conv]), pa.array([0], pa.int32()), pa.array(["Aspirin treats headache."])],
+        names=["conv_id", "turn_idx", "text"]) for conv in ("c2", "c1")]
+    with pytest.raises(ValueError, match="conv_id 'c1' after 'c2'"):
+        list(_collapsed_fn(index, pa.string())(iter(batches)))

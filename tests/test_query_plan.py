@@ -5,7 +5,8 @@ A persisted `build_kg` caches only the extraction, and that one Arrow pass
 also links every mention against the dictionary the matcher's index ships.
 So the `kg_edges` write is a filter of the cached pass (no join, no
 broadcast), the `kg_nodes` write has one vocabulary-sized exchange above it,
-and building the result starts no job and collects nothing to the driver.
+the `kg_edge_stats` write one exchange keyed by edge, and building the
+result starts no job and collects nothing to the driver.
 
 An ask is one adaptive query: `link_questions` builds a lazy plan, and
 `retrieve_evidence` plus the caller's orderBy run it with one Arrow pass that
@@ -20,6 +21,7 @@ from __future__ import annotations
 
 import contextlib
 import os
+import re
 
 import pytest
 
@@ -45,13 +47,17 @@ def write_plan(spark, path: str) -> str:
     """The final adaptive plan of the last write to `path`, from the SQL
     status store, cut to the written query's own final plan (a cached
     table's nested plans stay inside it). Drains the listener bus first:
-    the store receives the final plan after the action returns."""
+    the store receives the final plan after the action returns. The store
+    may keep the write's plan under "Current Plan" (no final-plan update
+    reaches it in a fresh session); the write has returned, so that plan
+    is the one that ran."""
     spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
     execs = spark._jsparkSession.sharedState().statusStore().executionsList()
     for i in reversed(range(execs.size())):
         desc = execs.apply(i).physicalPlanDescription()
         if "InsertIntoHadoopFsRelationCommand" in desc and path in desc:
-            return desc.split("== Final Plan ==", 1)[1].split("\n+- == Initial Plan ==")[0]
+            plan = re.split(r"== (?:Final|Current) Plan ==", desc, maxsplit=1)[1]
+            return plan.split("\n+- == Initial Plan ==")[0]
     raise AssertionError(f"no write to {path} in the status store")
 
 
@@ -132,14 +138,15 @@ def test_dictionary_probe_overflow_still_broadcasts(spark, tmp_path):
 
 
 def test_build_kg_job_count(spark, fixture_inputs, tmp_path):
-    """A persisted build_kg plus its three table writes takes at most 9
+    """A persisted build_kg plus its three table writes takes at most 8
     Spark jobs at local[4], dictionary probe included: linking runs inside
     the cached extraction pass, so nothing is collected or broadcast and no
-    vocabulary table is cached."""
+    vocabulary table is cached, and kg_edge_stats is one exchange (n_convs
+    from the pass's conv_first flags, no distinct-count job)."""
     _build_and_write(spark, fixture_inputs, str(tmp_path / "warm"))
     with job_group(spark, "build") as jobs:
         _build_and_write(spark, fixture_inputs, str(tmp_path / "kg"))
-    assert len(jobs) <= 9, jobs
+    assert len(jobs) <= 8, jobs
 
 
 def test_checkpoint_group_job_count(spark, fixture_inputs, tmp_path):
@@ -181,20 +188,37 @@ def test_kg_edges_write_reads_only_the_cached_pass(spark, fixture_inputs, tmp_pa
     assert "MapInArrow" in plan, plan
 
 
-def test_kg_nodes_write_has_one_exchange_above_the_cache(spark, fixture_inputs, tmp_path):
-    """kg_nodes groups the cached pass's linked vocabulary rows by cui: the
-    write's final plan has exactly one exchange above the cached extraction
-    (the cache's own plan holds only the turn-assembly exchange)."""
+def _plan_above_cache(spark, fixture_inputs, table: str, path: str) -> str:
+    """The final plan of a persisted build's `table` write, cut at the
+    cached extraction's scan (the cache's own plan holds only the
+    turn-assembly exchange)."""
     kg = build_kg(spark, *fixture_inputs)
     try:
-        path = str(tmp_path / "kg_nodes")
-        kg.kg_nodes.write.parquet(path)
+        getattr(kg, table).write.parquet(path)
         plan = write_plan(spark, path)
     finally:
         kg.unpersist()
     lines = plan.splitlines()
     cache = next(i for i, l in enumerate(lines) if "InMemoryTableScan" in l)
-    assert count_nodes("\n".join(lines[:cache]), "Exchange") == 1, plan
+    return "\n".join(lines[:cache])
+
+
+def test_kg_nodes_write_has_one_exchange_above_the_cache(spark, fixture_inputs, tmp_path):
+    """kg_nodes groups the cached pass's linked vocabulary rows by cui: the
+    write's final plan has exactly one exchange above the cached extraction."""
+    plan = _plan_above_cache(spark, fixture_inputs, "kg_nodes", str(tmp_path / "kg_nodes"))
+    assert count_nodes(plan, "Exchange") == 1, plan
+
+
+def test_kg_edge_stats_write_has_one_exchange_above_the_cache(spark, fixture_inputs, tmp_path):
+    """kg_edge_stats counts n_convs from the pass's conv_first flags: the
+    write's final plan has exactly one exchange above the cached extraction,
+    keyed by edge, and no Expand or (edge, conv_id) exchange for a distinct
+    count."""
+    plan = _plan_above_cache(spark, fixture_inputs, "kg_edge_stats",
+                             str(tmp_path / "kg_edge_stats"))
+    assert count_nodes(plan, "Exchange") == 1, plan
+    assert count_nodes(plan, "Expand") == 0, plan
 
 
 def test_lazy_resolution_scores_without_a_window_exchange(spark, fixture_inputs):
