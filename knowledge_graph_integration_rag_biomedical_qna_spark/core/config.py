@@ -7,21 +7,25 @@ Numeric defaults are carried over from the reference pipeline so the operator
   (reference: rag2-retriever/README.md:16, -k 10 in all experiments)
 - LINK_ACCEPT_FLOOR = 0.5 minimum accepted link score
   (reference cosine floor: similarity_pruning/context_pruning.py:13)
-- DELTA_THRESHOLD = 0.25  margin filter on score deltas
-  (reference: rag2-filtering/filtering_module.py:21, generate_labels.py:11)
-- PERCENTILE = 0.75       per-group percentile filter
-  (reference: similarity_pruning/context_pruning.py:14,40)
 - ARROW_BATCH = 1024      Arrow batch unit for every Python boundary
                           (mapInArrow and pandas UDFs alike; the session
-                          sends ARROW_BATCH * 32 rows per batch)
+                          sends ARROW_BATCH * 32 rows per batch). This is the
+                          TRANSFER unit, sized to amortize per-call cost; it
+                          bounds rows, not bytes
   (reference search batch: rag2-retriever/main.py:128-131)
+- KERNEL_SLICE_BYTES = 256 KiB  bound on the text one extraction kernel call
+                          sees: core.vectorized.extract_unified_batches cuts
+                          each Arrow batch into row ranges of at most this
+                          many text bytes (a longer row is a slice alone), so
+                          the kernel's working set (~40x its text) stays
+                          bounded whatever the batch holds
+  (reference: fixed-size encode batches, rag2-retriever/query_encode.py:51-78)
 """
 
 TOP_K_CANDIDATES = 10
 LINK_ACCEPT_FLOOR = 0.5
-DELTA_THRESHOLD = 0.25
-PERCENTILE = 0.75
 ARROW_BATCH = 1024
+KERNEL_SLICE_BYTES = 1 << 18
 
 # Max tokens in a mention n-gram (dictionary matcher tries longest-first).
 MAX_MENTION_TOKENS = 3

@@ -25,6 +25,12 @@ same greedy longest-first order, same normalization (predicates lower-only,
 aliases lower+edge-strip), same confidence rounding. Both paths take and
 return Arrow, so no pandas sits between mapInArrow and the kernel.
 
+The Arrow batch that crosses the UDF boundary is the transfer unit (rows,
+`config.ARROW_BATCH`); the kernel's own working set (~40x the text it
+holds) is bounded separately: `extract_unified_batches` cuts each batch into
+row ranges of at most `config.KERNEL_SLICE_BYTES` of text, so one book-length
+turn is processed alone and a 32k-row batch never meets the kernel whole.
+
 Reference analog: the engine-side replacement for the reference's batched
 encode loop (rag2-retriever/query_encode.py:51-78) — the per-item model call
 becomes a per-batch columnar pass.
@@ -34,7 +40,7 @@ from __future__ import annotations
 
 import numpy as np
 
-from .config import MAX_ARG_GAP
+from .config import KERNEL_SLICE_BYTES, MAX_ARG_GAP
 from .patterns import PREDICATE_LEXICON, AliasIndex, _as_index, extract_mentions_and_triples
 from .text import split_sentences
 
@@ -412,8 +418,15 @@ def extract_unified_batches(conv, turn, texts, alias_keys):
     of unified-extraction RecordBatches (UNIFIED_SCHEMA order), no pandas in
     EITHER direction — this is what mapInArrow calls. Texts are null-filled
     and cast to `pa.string()` once here, so both paths see int32-offset
-    buffers. A batch yields one RecordBatch per maximal fast/slow run of
-    rows, preserving exact row order."""
+    buffers.
+
+    Each kernel call takes one row range: the batch is cut greedily, from the
+    text offsets, into ranges of at most KERNEL_SLICE_BYTES of text (a longer
+    row is a range of its own), and those cuts are merged with the maximal
+    fast/slow runs. A range yields at most one RecordBatch, in row order.
+    Every output column is row-local (sentence, mention and token indices
+    never cross a turn), so the cut changes how the rows are batched, never
+    which rows come out or their order."""
     import pyarrow as pa
     import pyarrow.compute as pc
 
@@ -423,7 +436,12 @@ def extract_unified_batches(conv, turn, texts, alias_keys):
         return
     texts = pc.cast(pc.fill_null(texts, ""), pa.string())
     ok = _fast_path_ok_arrow(texts)
-    bounds = np.r_[0, np.flatnonzero(ok[1:] != ok[:-1]) + 1, n].tolist()
+    off = np.frombuffer(texts.buffers()[1], np.int32)[texts.offset : texts.offset + n + 1]
+    cuts = [0]
+    while cuts[-1] < n:
+        end = int(off[cuts[-1]]) + KERNEL_SLICE_BYTES
+        cuts.append(max(cuts[-1] + 1, int(np.searchsorted(off, end, "right")) - 1))
+    bounds = np.unique(np.r_[cuts, np.flatnonzero(ok[1:] != ok[:-1]) + 1]).tolist()
     for a, b in zip(bounds[:-1], bounds[1:]):
         path = _extract_fast if ok[a] else _extract_slow
         rb = path(conv.slice(a, b - a), turn.slice(a, b - a), texts.slice(a, b - a), idx)

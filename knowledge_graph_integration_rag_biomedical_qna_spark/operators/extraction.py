@@ -113,7 +113,7 @@ def extract_all_df(turns: DataFrame, alias_keys_bc) -> DataFrame:
     with a filter — persist the result so both branches reuse the pass.
 
     The kernel is the VECTORIZED pyarrow/numpy path (core.vectorized):
-    byte-LUT tokenization over whole Arrow batches + hash-join dictionary
+    byte-LUT tokenization over byte-bounded Arrow slices + hash-join dictionary
     probes, with interpreted Python only on hit positions. Property-tested
     row-for-row equal to the per-row matcher (`core.vectorized._extract_slow`,
     which also takes the rare non-ASCII rows); it replaced that matcher after

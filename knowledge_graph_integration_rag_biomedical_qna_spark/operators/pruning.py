@@ -1,71 +1,22 @@
-"""Context-pruning operators — the reference's four filtering strategies
-re-expressed over a generic (query_id, doc_id, score) evidence frame.
+"""Context-pruning operator over a generic (query_id, doc_id, score)
+evidence frame.
 
 | here | reference |
 |---|---|
-| delta_threshold_prune | FLAN-T5 helpfulness delta >= 0.25 (rag2-filtering/filtering_module.py:125-162) |
-| percentile_floor_prune | cos > per-query p75 AND > 0.5 (similarity_pruning/context_pruning.py:36-51) |
-| argmax_prune | CXMI per-query best sentence (cxmi/cxmi_pruning.py:161-165) |
 | threshold_sort_prune | Provence: keep score > th, sort desc (provence/provence.py:85-98) |
 
-All are pure DataFrame plans (window + filter); the expensive model scorers
-they consumed are deterministic column scores here (featurize.py provides the
-vectorized similarity scorer).
+The reference's other three filters (helpfulness delta, per-query percentile
+plus floor, per-query argmax) are registry queries over window plans
+(`entry_queries.py`: p2_delta_threshold_filter, p4_percentile_filter,
+a2_argmax_per_group). The expensive model scorers they consumed are
+deterministic column scores here (featurize.py provides the vectorized
+similarity scorer).
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
-
-from ..core.config import DELTA_THRESHOLD, LINK_ACCEPT_FLOOR, PERCENTILE
-
-
-def delta_threshold_prune(
-    scored: DataFrame,
-    base_scores: DataFrame,
-    threshold: float = DELTA_THRESHOLD,
-    query_col: str = "query_id",
-    score_col: str = "score",
-    base_score_col: str = "base_score",
-) -> DataFrame:
-    """Keep docs whose score beats the query-alone baseline by >= threshold.
-    `base_scores`: one row per query (broadcast — query-count sized)."""
-    return (
-        scored.join(F.broadcast(base_scores), query_col)
-        .filter(F.col(score_col) - F.col(base_score_col) >= threshold)
-        .drop(base_score_col)
-    )
-
-
-def percentile_floor_prune(
-    scored: DataFrame,
-    percentile: float = PERCENTILE,
-    floor: float = LINK_ACCEPT_FLOOR,
-    query_col: str = "query_id",
-    score_col: str = "score",
-) -> DataFrame:
-    """Keep docs above BOTH the per-query score percentile and a fixed floor
-    (per-group dynamic predicate)."""
-    w = Window.partitionBy(query_col)
-    return (
-        scored.withColumn("_p", F.expr(f"percentile({score_col}, {percentile})").over(w))
-        .filter((F.col(score_col) > F.col("_p")) & (F.col(score_col) > floor))
-        .drop("_p")
-    )
-
-
-def argmax_prune(
-    scored: DataFrame,
-    query_col: str = "query_id",
-    score_col: str = "score",
-    tiebreak_col: str = "doc_id",
-) -> DataFrame:
-    """Keep exactly the best-scored doc per query (deterministic tie-break)."""
-    w = Window.partitionBy(query_col).orderBy(
-        F.col(score_col).desc(), F.col(tiebreak_col).asc()
-    )
-    return scored.withColumn("_rn", F.row_number().over(w)).filter("_rn = 1").drop("_rn")
 
 
 def threshold_sort_prune(

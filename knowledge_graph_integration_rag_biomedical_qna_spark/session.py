@@ -50,6 +50,8 @@ def get_spark(
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
+        # the transfer unit of every Arrow boundary (rows, not bytes); the
+        # extraction kernel bounds its own working set by KERNEL_SLICE_BYTES
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", str(ARROW_BATCH * 32))
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")

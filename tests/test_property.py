@@ -288,6 +288,124 @@ def test_large_string_input_equals_string_input():
     pd.testing.assert_frame_equal(large, small)
 
 
+# --- the kernel's working set: each call sees <= KERNEL_SLICE_BYTES of text ---
+
+
+def _record_kernel_calls(monkeypatch) -> list:
+    """Wrap both kernel paths; each call appends (first conv_id, rows, text
+    bytes) to the returned list."""
+    import pyarrow.compute as pc
+
+    from knowledge_graph_integration_rag_biomedical_qna_spark.core import vectorized
+
+    calls = []
+    for name in ("_extract_fast", "_extract_slow"):
+        def wrapped(conv, turn, texts, idx, _path=getattr(vectorized, name)):
+            nbytes = pc.sum(pc.binary_length(texts)).as_py() or 0
+            calls.append((conv[0].as_py(), len(texts), nbytes))
+            return _path(conv, turn, texts, idx)
+
+        monkeypatch.setattr(vectorized, name, wrapped)
+    return calls
+
+
+def _run_kernel(texts) -> None:
+    import pyarrow as pa
+
+    from knowledge_graph_integration_rag_biomedical_qna_spark.core.patterns import AliasIndex
+    from knowledge_graph_integration_rag_biomedical_qna_spark.core.vectorized import (
+        extract_unified_batches,
+    )
+
+    conv = pa.array([f"c{i}" for i in range(len(texts))], type=pa.string())
+    turn = pa.array(range(len(texts)), type=pa.int32())
+    list(extract_unified_batches(conv, turn, pa.array(texts, pa.string()), AliasIndex(KEYS)))
+
+
+@given(
+    st.lists(
+        st.one_of(sentence_st, text_st, unicode_text_st, divergent_ws_text_st,
+                  st.none(), st.just("")),
+        min_size=0,
+        max_size=12,
+    ),
+    st.integers(min_value=1, max_value=96),
+)
+@settings(max_examples=200, deadline=None)
+def test_sliced_kernel_equals_unsliced_and_row_path(texts, slice_bytes):
+    """Cutting each batch into slices of a few bytes changes only how rows
+    are batched: the output equals the unsliced kernel's and `_extract_slow`'s
+    row for row, whatever rows (ASCII, non-ASCII, null, empty) the cuts and
+    the fast/slow run boundaries fall between."""
+    from unittest import mock
+
+    import pandas as pd
+
+    from knowledge_graph_integration_rag_biomedical_qna_spark.core import vectorized
+
+    whole = _assert_kernel_equals_row_path(texts)
+    with mock.patch.object(vectorized, "KERNEL_SLICE_BYTES", slice_bytes):
+        sliced = _assert_kernel_equals_row_path(texts)
+    pd.testing.assert_frame_equal(sliced, whole)
+
+
+def test_every_kernel_call_is_within_the_slice_bound(monkeypatch):
+    """Over a batch of many times the bound, every _extract_fast/_extract_slow
+    call holds at most KERNEL_SLICE_BYTES of text unless it holds exactly one
+    row. The byte cut before row 2 falls on a fast/slow run boundary; row 5
+    is larger than the bound and is a call of its own."""
+    from knowledge_graph_integration_rag_biomedical_qna_spark.core import vectorized
+
+    k = sorted(KEYS)
+    texts = [
+        f"{k[0]} treats {k[2]}.",                # 20 bytes
+        f"{k[2]} inhibits {k[3]}. ok.",          # 23: rows 0-1 fill the first slice
+        f"Caf\u00e9 {k[0]} treats {k[2]}.",      # non-ASCII: a slow run starts here too
+        None,
+        "",
+        f"The {k[1]} treats {k[4]}. " * 8,       # 280 bytes, over the bound
+        f"{k[3]} binds {k[0]}!  {k[2]} treats {k[1]}",
+        f"{k[0]}.\x0b{k[2]} treats {k[4]}.",     # divergent whitespace: slow
+        f"{k[4]} inhibits {k[0]}.",
+        f"na\u00efve {k[3]} inhibits {k[4]}.",
+    ]
+    bound = 48
+    monkeypatch.setattr(vectorized, "KERNEL_SLICE_BYTES", bound)
+    calls = _record_kernel_calls(monkeypatch)
+    _run_kernel(texts)
+    assert sum(rows for _, rows, _ in calls) == len(texts)
+    assert sum(nbytes for *_, nbytes in calls) == sum(len((t or "").encode()) for t in texts)
+    over = [c for c in calls if c[2] > bound]
+    assert all(rows == 1 for _, rows, _ in over), calls
+    starts = [c[0] for c in calls]
+    assert starts[:2] == ["c0", "c2"], calls
+    assert ("c5", 1, len(texts[5])) in calls, calls
+    monkeypatch.undo()
+    monkeypatch.setattr(vectorized, "KERNEL_SLICE_BYTES", bound)
+    _assert_kernel_equals_row_path(texts)
+
+
+def test_book_length_turn_is_processed_alone(monkeypatch):
+    """A single turn of over 2 MB between two short ones is one kernel call
+    on its own at the default bound, and the batch still equals
+    `_extract_slow` row for row."""
+    from knowledge_graph_integration_rag_biomedical_qna_spark.core.config import (
+        KERNEL_SLICE_BYTES,
+    )
+
+    k = sorted(KEYS)
+    para = f"The {k[0]} treats {k[2]}. {k[4]} inhibits {k[3]}! A {k[1]} binds {k[0]}; ok. "
+    book = para * (2 * 1024 * 1024 // len(para) + 1)
+    assert len(book) > max(2 * 1024 * 1024, KERNEL_SLICE_BYTES)
+    texts = [f"{k[0]} treats {k[2]}.", book, f"{k[2]} inhibits {k[3]}."]
+    calls = _record_kernel_calls(monkeypatch)
+    _run_kernel(texts)
+    assert ("c1", 1, len(book)) in calls, calls
+    monkeypatch.undo()
+    got = _assert_kernel_equals_row_path(texts)
+    assert (got["conv_id"] == "c1").sum() > len(book) // len(para)
+
+
 word_st = st.sampled_from(
     ["aspirin", "cox2", "beta", "blocker", "tnf", "alpha", "il-6", "treats",
      "inhibits", "the", "a", "risk", "of", "xyz"]

@@ -12,9 +12,6 @@ from knowledge_graph_integration_rag_biomedical_qna_spark.operators.featurize im
     with_embedding,
 )
 from knowledge_graph_integration_rag_biomedical_qna_spark.operators.pruning import (
-    argmax_prune,
-    delta_threshold_prune,
-    percentile_floor_prune,
     threshold_sort_prune,
 )
 
@@ -26,32 +23,6 @@ def scored(spark):
         for d in range(10):
             rows.append((q, d, round(0.1 * d + 0.01 * q, 4)))
     return spark.createDataFrame(rows, "query_id int, doc_id int, score double")
-
-
-def test_delta_threshold_prune(spark, scored):
-    base = spark.createDataFrame(
-        [(q, 0.5) for q in range(5)], "query_id int, base_score double"
-    )
-    kept = delta_threshold_prune(scored, base, threshold=0.25).toPandas()
-    assert (kept["score"] >= 0.75).all()
-    assert len(kept) == 5 * 2  # scores 0.8x, 0.9x per query
-
-
-def test_percentile_floor_prune(spark, scored):
-    kept = percentile_floor_prune(scored, percentile=0.75, floor=0.5).toPandas()
-    # p75 of (0.0x..0.9x) is 0.675+q*0.01: keep 0.7x,0.8x,0.9x (all > floor)
-    assert sorted(kept["doc_id"].unique()) == [7, 8, 9]
-    assert len(kept) == 15
-
-
-def test_argmax_prune(spark, scored):
-    kept = argmax_prune(scored).toPandas().sort_values("query_id")
-    assert kept["doc_id"].tolist() == [9] * 5
-    # deterministic tie-break: duplicate top score -> lowest doc_id wins
-    tied = spark.createDataFrame(
-        [(1, 5, 0.9), (1, 3, 0.9), (1, 7, 0.1)], "query_id int, doc_id int, score double"
-    )
-    assert argmax_prune(tied).first()["doc_id"] == 3
 
 
 def test_threshold_sort_prune(spark, scored):

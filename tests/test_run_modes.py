@@ -100,3 +100,44 @@ def test_modes_equal_on_hot_edge(spark, fixture_dir, tables, tmp_path):
     aliases = spark.read.parquet(f"{fixture_dir}/concept_aliases.parquet")
     stats = assert_modes_equal(spark, hot, aliases, tmp_path)
     assert stats["n_convs"].tolist() == [HOT_CONVS]
+
+
+def test_sliced_kernel_builds_the_same_kg(spark, fixture_dir, monkeypatch):
+    """The extraction kernel cut to 64-byte slices in every Python worker:
+    build_kg commits the same kg_edges, kg_nodes and kg_edge_stats as at the
+    default bound, n_convs included, on the fixture with its hot entity (the
+    per-task link memo, mention partials and conv_first flags span the
+    slices)."""
+    from knowledge_graph_integration_rag_biomedical_qna_spark.operators import extraction
+
+    transcripts = spark.read.parquet(f"{fixture_dir}/transcripts.parquet")
+    aliases = spark.read.parquet(f"{fixture_dir}/concept_aliases.parquet")
+
+    def built():
+        kg = build_kg(spark, transcripts, aliases)
+        out = [_canon(t) for t in (kg.kg_edges, kg.kg_nodes, kg.kg_edge_stats)]
+        kg.unpersist()
+        return out
+
+    want = built()
+    slices = spark.sparkContext.accumulator(0)
+
+    # the pass body pickles the module's kernel_batches by value at plan
+    # build, so this wrapper runs in the workers and sets their bound
+    def sliced(batches, index, kernel=extraction.kernel_batches):
+        from knowledge_graph_integration_rag_biomedical_qna_spark.core import vectorized
+
+        saved, vectorized.KERNEL_SLICE_BYTES = vectorized.KERNEL_SLICE_BYTES, 64
+        try:
+            for rb in kernel(batches, index):
+                slices.add(1)
+                yield rb
+        finally:
+            vectorized.KERNEL_SLICE_BYTES = saved
+
+    monkeypatch.setattr(extraction, "kernel_batches", sliced)
+    got = built()
+    assert slices.value > 500, slices.value  # the workers ran 64-byte slices
+    assert want[2]["n_convs"].max() > 1
+    for g, w in zip(got, want):
+        pd.testing.assert_frame_equal(g, w)
