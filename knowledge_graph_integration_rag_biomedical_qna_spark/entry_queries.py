@@ -1900,12 +1900,12 @@ def kg_streaming_ingest(spark, sf_dir):
 @_qm("kg_checkpointed_run")
 def kg_checkpointed_run(spark, sf_dir):
     """The resumable checkpointed runner under the oracle gate: bucket-group
-    materialization (build_kg per group, per-group node partials, atomic done
-    markers holding each group's per-bucket counts) over the synthesized
-    transcripts must produce EXACTLY the batch pipeline's edge set —
-    conversations never split across buckets and linking is a pure
-    per-(alias_key, surface) function. It reads a complete run's kg_edges,
-    so needs no finalize(). Oracle: the batch pipeline's pandas result.
+    materialization (build_kg and one unit write per group, atomic done
+    markers holding each group's per-bucket counts) and its finalize() over
+    the synthesized transcripts must produce EXACTLY the batch pipeline's
+    edge set — conversations never split across buckets and linking is a
+    pure per-(alias_key, surface) function. Oracle: the batch pipeline's
+    pandas result.
     Reference analog: the per-query checkpoint/skip loop
     (provence/provence.py:113-167) as bucket commits."""
     import os
@@ -1920,6 +1920,7 @@ def kg_checkpointed_run(spark, sf_dir):
     run = ResumableKGRun(spark, out_dir, buckets=8, group_size=4)
     summary = run.run(synth_transcripts(docs), synth_aliases(spark))
     assert summary["complete"], summary
+    run.finalize()
     edges = spark.read.parquet(os.path.join(out_dir, "kg_edges")).select(
         "conv_id", "turn_idx", "subj_cui", "pred", "obj_cui", "confidence"
     )

@@ -72,10 +72,10 @@ def _edge_stats(edges: DataFrame, n_convs_sql: str) -> DataFrame:
 
 def aggregate_edges(resolved_triples: DataFrame) -> DataFrame:
     """kg_edge_stats(subj_cui, pred, obj_cui, n_evidence, avg_confidence,
-    n_convs) — the deduplicated graph view over stored evidence-level edges
-    (ResumableKGRun.finalize). n_convs is an exact `count(DISTINCT conv_id)`,
-    which plans a second exchange keyed by (edge, conv_id): stored rows can
-    split one conversation across tasks, so they carry no first-row flag."""
+    n_convs) over edges with no `conv_first` flags, n_convs an exact
+    `count(DISTINCT conv_id)` (a second exchange keyed by (edge, conv_id)):
+    the specification that aggregate_flagged_edges, which build_kg and the
+    checkpointed finalize write, is tested against."""
     return _edge_stats(resolved_triples, "count(DISTINCT conv_id)")
 
 

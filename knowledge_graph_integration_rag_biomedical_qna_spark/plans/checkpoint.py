@@ -7,32 +7,32 @@ engine that becomes:
 - the conversation space is hashed into CHECKPOINT_BUCKETS buckets
   (`pmod(xxhash64(conv_id), B)`) — the unit of commit and of resume;
 - buckets are processed in groups; each group runs `plans.pipeline.build_kg`
-  (the one composition of stages [1]-[6]) over its conversations and commits
-  its kg_edges under `bucket=N` partition dirs and its kg_nodes as a node
-  partial under `commit_group=<min>-<max>`, followed by an atomic done marker
-  (the Iceberg analog is a snapshot commit per group): 5 Spark jobs a group;
+  (the one composition of stages [1]-[6]) uncached and commits its linked
+  pass in ONE write, its unit: `units/commit_group=<min>-<max>` (the
+  kg_edges rows with their `conv_first` flags, and the linked mention-stats
+  rows), then an atomic done marker (the Iceberg analog is a snapshot
+  commit per group): 2 Spark jobs a group;
 - the marker is the group's run record (`run()` returns them): per bucket
   `turns_in` (input rows, before stage [1]'s dedup and empty-text drop),
-  `raw_triples` and `edges`, counted by Observations riding the kg_edges
-  write (null where AQE pruned one), plus `wall_sec`, `committed_at` and
-  the schemas of the two tables it wrote, which `finalize()` reads with (a
-  write of no rows leaves no file to infer one from);
+  `raw_triples` and `edges`, counted by Observations riding the unit write
+  (null where AQE pruned one), plus `wall_sec`, `committed_at` and the
+  `units` schema, which `finalize()` reads with (a write of no rows leaves
+  no file to infer one from);
 - resume = skip buckets whose markers exist (LEFT ANTI semantics, P8/U3);
   each marker records the bucket count, and a resume or finalize under
   another count raises (its bucket ids name other conversations); each
   marker also records the dictionary's digest, and a resume with another
   dictionary, or a finalize over markers that disagree, raises (the
   dictionary decides every link, so mixing two would mix links silently);
-- `finalize()` reads the markers once and builds every table from them:
-  kg_nodes merges the marked groups' node partials (linking is a pure
-  per-(alias_key, surface) function, so the merge equals the batch
-  kg_nodes), kg_edge_stats aggregates the marked buckets' edges (exact
-  n_convs), and `lineage` holds one record row per marked bucket.
+- `finalize()` writes kg_edges, kg_nodes and kg_edge_stats from the marked
+  units with build_kg's own definitions (it rewrites the edges once), and
+  `lineage`, one record row per marked bucket. They equal the batch tables:
+  a conversation lives in one bucket, so in one task of one group's pass,
+  and mention counts are per-task partials of a pure per-pair link.
 
 Failure model: a crash mid-group leaves no marker; rerun reprocesses exactly
-those buckets (writes replace the bucket partition — idempotent). finalize
-reads only what the markers name, so a crashed group reaches no finalized
-table, resumed or not; until a resume, kg_edges still holds its buckets.
+those buckets (the write replaces the group's unit — idempotent). finalize
+reads only the units the markers name, so a crashed group reaches no table.
 """
 
 from __future__ import annotations
@@ -46,9 +46,9 @@ from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from ..core.config import CHECKPOINT_BUCKETS
-from ..operators.canonicalize import aggregate_edges
 from ..operators.dedup import _obs_ready
-from .pipeline import EDGE_RULE, broadcast_alias_keys, build_kg, kg_edges_of
+from .pipeline import EDGE_RULE, NODE_RULE, broadcast_alias_keys, build_kg
+from .pipeline import kg_edge_stats_of, kg_edges_of, kg_nodes_of
 
 # Unused here since build_kg became the only composition. perfbench's traced
 # checkpointed job patches these module attributes by name, so they stay
@@ -62,8 +62,9 @@ from ..operators.linking import (  # noqa: F401
 )
 from ..operators.turn_assembly import assemble_turns  # noqa: F401
 
-_BUCKET = "bucket"
-_GROUP = "commit_group"
+# what the pipeline's kg_*_of definitions read of the pass's rows
+_UNIT_COLUMNS = ("kind", "conv_id", "turn_idx", "subj_cui", "pred", "obj_cui", "subj_surface",
+                 "obj_surface", "confidence", "conv_first", "cui", "surface", "mention_idx")
 # per-bucket counts of a group's run record, in lineage column order
 _COUNTS = ("turns_in", "raw_triples", "edges")
 _LINEAGE_SCHEMA = ("bucket int, turns_in bigint, raw_triples bigint, edges bigint, "
@@ -78,17 +79,14 @@ def _group_key(bucket_group) -> str:
     return f"{min(bucket_group)}-{max(bucket_group)}"
 
 
-def _marker_path(out_dir: str, bucket_group: tuple[int, ...]) -> str:
-    return os.path.join(out_dir, "_done", f"group-{_group_key(bucket_group)}.json")
-
-
 def _done_markers(out_dir: str, n_buckets: int, dict_digest: str | None = None) -> list[dict]:
     """Every committed group's done marker (its run record), in file order.
     Bucket ids only mean something under the bucket count that wrote them,
     so a marker from another count (or one that predates the field) raises
     instead of skipping the wrong conversations. Likewise a marker written
     with another dictionary than `dict_digest` raises; with no digest given
-    (finalize) the markers must agree with each other."""
+    (finalize) the markers must agree with each other. A marker with no
+    `units` schema comes from the older per-table layout and raises."""
     d = os.path.join(out_dir, "_done")
     if not os.path.isdir(d):
         return []
@@ -103,6 +101,11 @@ def _done_markers(out_dir: str, n_buckets: int, dict_digest: str | None = None) 
                     f"n_buckets={marker.get('n_buckets')}, this run uses "
                     f"n_buckets={n_buckets}; resume with the original bucket "
                     "count or start a new output dir"
+                )
+            if "units" not in marker.get("schemas", {}):
+                raise ValueError(
+                    f"{out_dir}: done marker {f} records no units table (an output "
+                    "dir begun by the older per-table layout); start a new output dir"
                 )
             if dict_digest is not None and marker.get("dict_digest") != dict_digest:
                 raise ValueError(
@@ -120,22 +123,17 @@ def _done_markers(out_dir: str, n_buckets: int, dict_digest: str | None = None) 
     return markers
 
 
-def _done_buckets(out_dir: str, n_buckets: int, dict_digest: str) -> set[int]:
-    return {b for m in _done_markers(out_dir, n_buckets, dict_digest) for b in m["buckets"]}
-
-
 def _per_bucket(bucket, grp, name: str, cond):
     """`count_if(bucket = b AND cond) AS <name>_<b>` for each bucket of `grp`."""
     return [F.count_if((bucket == b) & cond).alias(f"{name}_{b}") for b in grp]
 
 
-def _overwrite(df: DataFrame, key: str, path: str) -> None:
-    """Dynamic partition overwrite keyed on `key`, NOT append: a crash between
-    this write and the done marker leaves the group unmarked, and the rerun
-    REPLACES the partitions it rewrites instead of double-counting them."""
-    df.write.mode("overwrite").partitionBy(key).option(
-        "partitionOverwriteMode", "dynamic"
-    ).parquet(path)
+def _overwrite(df: DataFrame, path: str) -> None:
+    """Overwrite the unit's own directory, NOT append: a crash between this
+    write and the done marker leaves the group unmarked, and the rerun
+    REPLACES its unit instead of double-counting it, even with no rows (a
+    dynamic partition overwrite of no rows would keep the crashed rows)."""
+    df.write.mode("overwrite").parquet(path)
 
 
 class ResumableKGRun:
@@ -156,31 +154,31 @@ class ResumableKGRun:
     def _path(self, table: str) -> str:
         return os.path.join(self.out_dir, table)
 
+    def _unit_path(self, grp) -> str:
+        return os.path.join(self.out_dir, "units", f"commit_group={_group_key(grp)}")
+
     def _commit_group(self, grp: tuple[int, ...], transcripts: DataFrame, aliases: DataFrame,
                       keys_bc) -> dict:
-        """Build one group's KG, write its edges and node partial, then its
-        done marker: the group's run record, returned. Its counts ride the
-        first write (which also fills the cache) as Observations, no job."""
+        """Build one group's KG uncached, write its linked pass as the
+        group's unit in one write, then its done marker: the group's run
+        record, returned. Its counts ride that write as Observations."""
         t0 = time.time()
         bucket = bucket_of("conv_id", self.buckets)
         seen, linked = Observation(), Observation()
         part = transcripts.filter(bucket.isin(list(grp))).observe(
             seen, *_per_bucket(bucket, grp, "turns_in", F.lit(True))
         )
-        kg = build_kg(self.spark, part, aliases, alias_index=keys_bc)
-        try:
-            unified = kg.unified.observe(
+        kg = build_kg(self.spark, part, aliases, persist=False, alias_index=keys_bc)
+        unit = (
+            kg.unified.observe(
                 linked,
                 *_per_bucket(bucket, grp, "raw_triples", F.col("kind") == "t"),
                 *_per_bucket(bucket, grp, "edges", F.expr(EDGE_RULE)),
             )
-            tables = {"kg_edges": (kg_edges_of(unified).withColumn(_BUCKET, bucket), _BUCKET),
-                      "node_partials": (kg.kg_nodes.withColumn(_GROUP, F.lit(_group_key(grp))),
-                                        _GROUP)}
-            for table, (df, key) in tables.items():
-                _overwrite(df, key, self._path(table))
-        finally:
-            kg.unpersist()
+            .filter(f"({EDGE_RULE}) OR ({NODE_RULE})")
+            .select(*_UNIT_COLUMNS)
+        )
+        _overwrite(unit, self._unit_path(grp))
         # the listener bus completes the Observations just after the write;
         # one whose node AQE pruned holds an empty row: its counts stay null
         self.spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
@@ -191,10 +189,10 @@ class ResumableKGRun:
             **{c: [counts.get(f"{c}_{b}") for b in grp] for c in _COUNTS},
             "wall_sec": round(time.time() - t0, 3),
             "committed_at": datetime.now(timezone.utc).isoformat(),
-            "schemas": {t: df.schema.toDDL() for t, (df, _) in tables.items()},
+            "schemas": {"units": unit.schema.toDDL()},
         }
         # atomic done marker AFTER the data is on disk
-        marker = _marker_path(self.out_dir, grp)
+        marker = os.path.join(self.out_dir, "_done", f"group-{_group_key(grp)}.json")
         tmp = marker + ".tmp"
         with open(tmp, "w") as fh:
             json.dump(record, fh)
@@ -214,18 +212,17 @@ class ResumableKGRun:
         """
         os.makedirs(os.path.join(self.out_dir, "_done"), exist_ok=True)
         keys_bc = broadcast_alias_keys(self.spark, aliases)
-        done = _done_buckets(self.out_dir, self.buckets, keys_bc.digest)
+        markers = _done_markers(self.out_dir, self.buckets, keys_bc.digest)
+        done = {b for m in markers for b in m["buckets"]}
 
         all_buckets = [b for b in range(self.buckets) if b not in done]
         groups = [
             tuple(all_buckets[i : i + self.group_size])
             for i in range(0, len(all_buckets), self.group_size)
-        ]
-        if max_groups is not None:
-            groups = groups[:max_groups]
+        ][:max_groups]
 
         records = [self._commit_group(grp, transcripts, aliases, keys_bc) for grp in groups]
-        done = _done_buckets(self.out_dir, self.buckets, keys_bc.digest)
+        done |= {b for grp in groups for b in grp}
         return {
             "groups_processed": len(groups),
             "buckets_done": sorted(done),
@@ -234,35 +231,25 @@ class ResumableKGRun:
         }
 
     def finalize(self) -> None:
-        """From one read of the done markers: the marked groups' node
-        partials -> kg_nodes, the marked buckets' edges -> kg_edge_stats
-        (exact n_convs, as in build_kg), and their run records -> lineage,
-        one row per bucket. A group without a marker (a crash) contributes
-        nothing. Raises if the markers name different dictionaries."""
+        """From one read of the done markers: the marked groups' units ->
+        kg_edges, kg_nodes and kg_edge_stats, each with build_kg's
+        definition, and their run records -> lineage, one row per bucket. A
+        group without a marker (a crash) contributes nothing. Raises if the
+        markers name different dictionaries."""
         markers = _done_markers(self.out_dir, self.buckets)
         if not markers:
             raise ValueError(f"{self.out_dir}: no committed group to finalize; run() first")
-
-        def read(table: str) -> DataFrame:
-            return self.spark.read.schema(markers[0]["schemas"][table]).parquet(self._path(table))
-
-        partials = read("node_partials").filter(
-            F.col(_GROUP).isin([_group_key(m["buckets"]) for m in markers])
+        units = self.spark.read.schema(markers[0]["schemas"]["units"]).parquet(
+            *[self._unit_path(m["buckets"]) for m in markers]
         )
-        nodes = partials.groupBy("cui").agg(
-            F.array_sort(F.array_distinct(F.flatten(F.collect_list("surfaces")))).alias("surfaces"),
-            F.sum("mention_count").alias("mention_count"),
-        )
-        nodes.write.mode("overwrite").parquet(self._path("kg_nodes"))
-        edges = read("kg_edges").filter(
-            F.col(_BUCKET).isin([b for m in markers for b in m["buckets"]])
-        )
-        aggregate_edges(edges).write.mode("overwrite").parquet(self._path("kg_edge_stats"))
+        for table, of in (("kg_edges", kg_edges_of), ("kg_nodes", kg_nodes_of),
+                          ("kg_edge_stats", kg_edge_stats_of)):
+            of(units).write.mode("overwrite").parquet(self._path(table))
         lineage = [
             (b, *(m[c][i] for c in _COUNTS), m["wall_sec"],
              datetime.fromisoformat(m["committed_at"]), _group_key(m["buckets"]))
             for m in markers for i, b in enumerate(m["buckets"])
         ]
         self.spark.createDataFrame(lineage, _LINEAGE_SCHEMA).write.mode("overwrite").partitionBy(
-            _BUCKET
+            "bucket"
         ).parquet(self._path("lineage"))

@@ -218,6 +218,8 @@ def _spill_index(proj: DataFrame, spill_dir: str | None) -> FileBackedAliasIndex
 
 # kg_edges: the triple rows of the linked pass whose two endpoints linked
 EDGE_RULE = "kind = 't' AND subj_cui IS NOT NULL AND obj_cui IS NOT NULL"
+# kg_nodes: the per-task mention-stats rows of the linked pass that linked
+NODE_RULE = "kind = 's' AND cui IS NOT NULL"
 
 
 def kg_edges_of(unified: DataFrame) -> DataFrame:
@@ -226,6 +228,18 @@ def kg_edges_of(unified: DataFrame) -> DataFrame:
         "conv_id", "turn_idx", "subj_cui", "pred", "obj_cui",
         "subj_surface", "obj_surface", "confidence",
     )
+
+
+def kg_nodes_of(unified: DataFrame) -> DataFrame:
+    """kg_nodes: the `NODE_RULE` rows' partial counts grouped by cui."""
+    return canonicalize_node_stats(
+        unified.filter(NODE_RULE).selectExpr("cui", "surface", "mention_idx AS n_mentions")
+    )
+
+
+def kg_edge_stats_of(unified: DataFrame) -> DataFrame:
+    """kg_edge_stats: the `EDGE_RULE` rows grouped by edge (n_convs exact)."""
+    return aggregate_flagged_edges(unified.filter(EDGE_RULE))
 
 
 def build_kg(
@@ -264,9 +278,9 @@ def build_kg(
     `persist=True` caches the collapsed extraction output, the one
     transcript-sized table every write reads (Catalyst has no cross-branch
     CSE); nothing else is cached or collected. Callers release the cache
-    with `KGResult.unpersist()`. For jobs too large to cache at once,
-    plans.checkpoint.ResumableKGRun calls this per bucket group and commits
-    each group to storage. `persist=False` stays lazy: nothing is cached.
+    with `KGResult.unpersist()`. `persist=False` stays lazy: nothing is
+    cached. The checkpointed and streamed runs build that way, because
+    each commits its pass in one write that reads it once.
 
     `assume_clustered=True` declares the input already bucketed by conv_id
     (sources.io.write_bucketed): stage [1] skips its repartition and the
@@ -302,12 +316,6 @@ def build_kg(
     candidates = candidate_table(mention_stats, aliases, alias_index=keys_bc)
     resolution = resolution_table(candidates)
 
-    kg_edges = kg_edges_of(unified)
-    kg_nodes = canonicalize_node_stats(
-        unified.filter("kind = 's' AND cui IS NOT NULL")
-        .selectExpr("cui", "surface", "mention_idx AS n_mentions")
-    )
-    kg_edge_stats = aggregate_flagged_edges(unified.filter(EDGE_RULE))
     return KGResult(
         turns=turns,
         unified=unified,
@@ -317,8 +325,8 @@ def build_kg(
         raw_triples=raw_triples,
         candidates=candidates,
         resolution=resolution,
-        kg_edges=kg_edges,
-        kg_edge_stats=kg_edge_stats,
-        kg_nodes=kg_nodes,
+        kg_edges=kg_edges_of(unified),
+        kg_edge_stats=kg_edge_stats_of(unified),
+        kg_nodes=kg_nodes_of(unified),
         mention_stats=mention_stats,
     )

@@ -73,19 +73,17 @@ def start_kg_stream(
     os.makedirs(out_dir, exist_ok=True)
 
     def process_batch(batch_df: DataFrame, epoch_id: int) -> None:
-        kg = build_kg(batch_df.sparkSession, batch_df, aliases, alias_index=keys_bc)
-        try:
-            edges = kg.kg_edges.withColumn("epoch", F.lit(epoch_id))
-            # foreachBatch is AT-LEAST-ONCE: an epoch replayed after a crash
-            # between the sink write and the offset commit must land in the
-            # SAME place, not append a second copy. Dynamic partition
-            # overwrite keyed on epoch makes the replay a no-op.
-            edges.write.mode("overwrite").partitionBy("epoch").option(
-                "partitionOverwriteMode", "dynamic"
-            ).parquet(os.path.join(out_dir, "kg_edges_stream"))
-        finally:
-            # a failed epoch write must not leave the cached tables pinned
-            kg.unpersist()
+        # the epoch's one write reads the pass once: nothing to cache
+        kg = build_kg(batch_df.sparkSession, batch_df, aliases, persist=False,
+                      alias_index=keys_bc)
+        edges = kg.kg_edges.withColumn("epoch", F.lit(epoch_id))
+        # foreachBatch is AT-LEAST-ONCE: an epoch replayed after a crash
+        # between the sink write and the offset commit must land in the
+        # SAME place, not append a second copy. Dynamic partition
+        # overwrite keyed on epoch makes the replay a no-op.
+        edges.write.mode("overwrite").partitionBy("epoch").option(
+            "partitionOverwriteMode", "dynamic"
+        ).parquet(os.path.join(out_dir, "kg_edges_stream"))
 
     writer = (
         turns.writeStream.foreachBatch(process_batch)

@@ -22,7 +22,6 @@ TRIPLE_KEY = ["conv_id", "turn_idx", "subj_cui", "pred", "obj_cui"]
 def _edges(spark, out_dir) -> pd.DataFrame:
     return (
         spark.read.parquet(f"{out_dir}/kg_edges")
-        .drop("bucket")
         .toPandas()
         .sort_values(TRIPLE_KEY + ["subj_surface", "obj_surface"])
         .reset_index(drop=True)
@@ -148,8 +147,8 @@ def test_record_of_groups_without_extraction_rows(spark, inputs, tmp_path):
 
 def test_finalize_writes_empty_tables_when_no_group_linked(spark, inputs, tmp_path):
     """One turn that hits no dictionary alias: both groups commit, but no
-    kg_edges or node-partial write leaves a data file. finalize() reads both
-    with the schemas the done markers record, so it writes empty kg_nodes
+    unit write leaves a data file. finalize() reads the units with the
+    schema the done markers record, so it writes empty kg_edges, kg_nodes
     and kg_edge_stats and one lineage row per bucket instead of failing to
     infer a schema."""
     import datetime as dt
@@ -165,6 +164,7 @@ def test_finalize_writes_empty_tables_when_no_group_linked(spark, inputs, tmp_pa
     run = ResumableKGRun(spark, out, buckets=2, group_size=1)
     assert run.run(turn, aliases)["complete"]
     run.finalize()
+    assert spark.read.parquet(f"{out}/kg_edges").count() == 0
     nodes = spark.read.parquet(f"{out}/kg_nodes")
     stats = spark.read.parquet(f"{out}/kg_edge_stats")
     assert nodes.columns == ["cui", "surfaces", "mention_count"] and nodes.count() == 0
@@ -174,10 +174,9 @@ def test_finalize_writes_empty_tables_when_no_group_linked(spark, inputs, tmp_pa
 
 
 def test_finalize_without_resume_reads_only_marked_groups(spark, inputs, tmp_path, monkeypatch):
-    """A group that crashed before its done marker has written its edges,
-    but finalize() without a resume must leave its buckets out of
-    kg_edge_stats and lineage, as it leaves its node partial out of
-    kg_nodes."""
+    """A group that crashed before its done marker has written its unit,
+    but finalize() without a resume must leave it out of every table and
+    its buckets out of lineage."""
     transcripts, aliases = inputs
     out = str(tmp_path / "crashed")
     real_replace = os.replace
@@ -192,16 +191,49 @@ def test_finalize_without_resume_reads_only_marked_groups(spark, inputs, tmp_pat
     with pytest.raises(OSError, match="injected crash"):
         run.run(transcripts, aliases)
     monkeypatch.undo()
-    edges = spark.read.parquet(f"{out}/kg_edges")
-    assert sorted(r.bucket for r in edges.select("bucket").distinct().collect()) == [0, 1, 2, 3]
+    assert os.path.isdir(f"{out}/units/commit_group=2-3")
+    units = spark.read.parquet(f"{out}/units")
+    assert sorted(r.commit_group for r in units.select("commit_group").distinct().collect()) == [
+        "0-1", "2-3"]
 
     run.finalize()
-    marked = edges.filter("bucket IN (0, 1)").count()
+    marked = units.filter("commit_group = '0-1' AND kind = 't'").count()
+    assert spark.read.parquet(f"{out}/kg_edges").count() == marked
     stats = spark.read.parquet(f"{out}/kg_edge_stats").toPandas()
     assert int(stats["n_evidence"].sum()) == marked
     lineage = spark.read.parquet(f"{out}/lineage").toPandas()
     assert sorted(lineage["bucket"]) == [0, 1]
     assert int(lineage["edges"].sum()) == marked
+
+
+def test_rewrite_of_no_rows_replaces_a_crashed_unit(spark, inputs, tmp_path, monkeypatch):
+    """A group crashes before its marker under one dictionary, and the
+    resume runs under a dictionary that links nothing (no marker records
+    the first). The resumed unit write has no rows but must still replace
+    the crashed unit, or its stale links reach the finalized tables."""
+    from pyspark.sql import functions as F
+
+    transcripts, aliases = inputs
+    out = str(tmp_path / "crashed")
+    real_replace = os.replace
+
+    def crash_on_marker(src, dst):
+        if dst.endswith(".json"):
+            raise OSError("injected crash before the done marker")
+        return real_replace(src, dst)
+
+    monkeypatch.setattr(os, "replace", crash_on_marker)
+    with pytest.raises(OSError, match="injected crash"):
+        ResumableKGRun(spark, out, buckets=8, group_size=2).run(transcripts, aliases)
+    monkeypatch.undo()
+    assert spark.read.parquet(f"{out}/units/commit_group=0-1").count() > 0
+
+    unlinkable = aliases.withColumn("alias_key", F.concat(F.lit("zzqq "), "alias_key"))
+    run = ResumableKGRun(spark, out, buckets=8, group_size=2)
+    assert run.run(transcripts, unlinkable)["complete"]
+    run.finalize()
+    for table in ("kg_edges", "kg_nodes", "kg_edge_stats"):
+        assert spark.read.parquet(f"{out}/{table}").count() == 0, table
 
 
 def _sorted_table(spark, path: str, key: list[str]) -> pd.DataFrame:
@@ -212,11 +244,11 @@ def _sorted_table(spark, path: str, key: list[str]) -> pd.DataFrame:
 
 
 def test_crash_before_marker_resume_with_other_group_size(spark, inputs, tmp_path, monkeypatch):
-    """A group that fails after its node-partial write and before its done
-    marker leaves a partial under an unmarked commit_group. A resume with
-    another group size re-covers those buckets under new group keys, so
-    finalize must read only the marked groups' partials, or the crashed
-    group's nodes count twice."""
+    """A group that fails after its unit write and before its done marker
+    leaves a unit under an unmarked commit_group. A resume with another
+    group size re-covers those buckets under new group keys, so finalize
+    must read only the marked groups' units, or the crashed group's rows
+    count twice."""
     transcripts, aliases = inputs
     single = str(tmp_path / "single")
     run = ResumableKGRun(spark, single, buckets=8, group_size=2)
@@ -235,7 +267,7 @@ def test_crash_before_marker_resume_with_other_group_size(spark, inputs, tmp_pat
     with pytest.raises(OSError, match="injected crash"):
         ResumableKGRun(spark, crashed, buckets=8, group_size=2).run(transcripts, aliases)
     monkeypatch.undo()
-    assert os.path.isdir(f"{crashed}/node_partials/commit_group=2-3")
+    assert os.path.isdir(f"{crashed}/units/commit_group=2-3")
 
     resumed = ResumableKGRun(spark, crashed, buckets=8, group_size=4)
     s = resumed.run(transcripts, aliases)
@@ -248,7 +280,8 @@ def test_crash_before_marker_resume_with_other_group_size(spark, inputs, tmp_pat
     assert sorted(lineage["bucket"]) == list(range(8))
     assert int(lineage["edges"].sum()) == spark.read.parquet(f"{crashed}/kg_edges").count()
 
-    for table, key in (("kg_nodes", ["cui"]),
+    for table, key in (("kg_edges", TRIPLE_KEY + ["subj_surface", "obj_surface"]),
+                       ("kg_nodes", ["cui"]),
                        ("kg_edge_stats", ["subj_cui", "pred", "obj_cui"])):
         pd.testing.assert_frame_equal(
             _sorted_table(spark, f"{crashed}/{table}", key),
@@ -309,3 +342,91 @@ def test_resume_with_a_changed_dictionary_raises(spark, inputs, tmp_path):
         json.dump(m, fh)
     with pytest.raises(ValueError, match="different dictionaries"):
         run.finalize()
+
+
+def test_marker_of_the_older_layout_raises(spark, inputs, tmp_path):
+    """A done marker that records no `units` schema was written by the
+    older per-table layout, whose groups finalize cannot read: a resume
+    and finalize name the output dir and raise."""
+    import json
+
+    transcripts, aliases = inputs
+    out = str(tmp_path / "old_layout")
+    run = ResumableKGRun(spark, out, buckets=8, group_size=2)
+    assert run.run(transcripts, aliases, max_groups=1)["buckets_done"] == [0, 1]
+    marker = os.path.join(out, "_done", "group-0-1.json")
+    with open(marker) as fh:
+        m = json.load(fh)
+    m["schemas"] = {"kg_edges": m["schemas"]["units"], "node_partials": "cui string"}
+    with open(marker, "w") as fh:
+        json.dump(m, fh)
+    with pytest.raises(ValueError, match=f"{out}: .*no units table"):
+        run.run(transcripts, aliases)
+    with pytest.raises(ValueError, match=f"{out}: .*no units table"):
+        run.finalize()
+
+
+def _tables(spark, out: str) -> dict[str, pd.DataFrame]:
+    """The four finalized tables in a total order; lineage without its
+    wall-clock columns."""
+    from test_run_modes import _canon
+
+    read = spark.read.parquet
+    return {
+        **{t: _canon(read(f"{out}/{t}")) for t in ("kg_edges", "kg_nodes", "kg_edge_stats")},
+        "lineage": _canon(read(f"{out}/lineage").drop("wall_sec", "committed_at")),
+    }
+
+
+@pytest.fixture(scope="module")
+def uninterrupted(spark, inputs, tmp_path_factory) -> dict[str, pd.DataFrame]:
+    out = str(tmp_path_factory.mktemp("uninterrupted"))
+    run = ResumableKGRun(spark, out, buckets=8, group_size=2)
+    assert run.run(*inputs)["complete"]
+    run.finalize()
+    return _tables(spark, out)
+
+
+# (commit point, the call to crash): the unit write and the done marker of
+# the second and of the last of four groups, and finalize's first write
+CRASH_POINTS = [("unit", 2), ("unit", 4), ("marker", 2), ("marker", 4), ("finalize", 1)]
+
+
+@pytest.mark.parametrize("point,k", CRASH_POINTS)
+def test_crash_at_a_commit_point_then_resume_equals_uninterrupted(
+        spark, inputs, uninterrupted, tmp_path, monkeypatch, point, k):
+    """The k-th call at one commit point raises. A resume and finalize
+    then write kg_edges, kg_nodes, kg_edge_stats and lineage equal to an
+    uninterrupted run's."""
+    from pyspark.sql import DataFrameWriter
+
+    from knowledge_graph_integration_rag_biomedical_qna_spark.plans import checkpoint
+
+    owner, name, hit = {
+        "unit": (checkpoint, "_overwrite", lambda df, path: True),
+        "marker": (os, "replace", lambda src, dst: dst.endswith(".json")),
+        "finalize": (DataFrameWriter, "parquet",
+                     lambda writer, path, *a, **kw: not path.endswith("units")),
+    }[point]
+    real, calls = getattr(owner, name), []
+
+    def crash(*a, **kw):
+        if hit(*a, **kw):
+            calls.append(a)
+            if len(calls) == k:
+                raise OSError(f"injected crash at {point} call {k}")
+        return real(*a, **kw)
+
+    out = str(tmp_path / "crashed")
+    run = ResumableKGRun(spark, out, buckets=8, group_size=2)
+    monkeypatch.setattr(owner, name, crash)
+    with pytest.raises(OSError, match="injected crash"):
+        run.run(*inputs)
+        run.finalize()
+    monkeypatch.undo()
+
+    assert run.run(*inputs)["complete"]
+    run.finalize()
+    got = _tables(spark, out)
+    for table, want in uninterrupted.items():
+        pd.testing.assert_frame_equal(got[table], want, obj=table)

@@ -150,10 +150,10 @@ def test_build_kg_job_count(spark, fixture_inputs, tmp_path):
 
 
 def test_checkpoint_group_job_count(spark, fixture_inputs, tmp_path):
-    """A checkpoint group commits in at most 5 Spark jobs (the kg_edges write
-    and the node partial write): its lineage counts ride the kg_edges write
-    as Observations. Four groups plus the dictionary probe; finalize() adds
-    one job, the lineage write, to the node and edge-stat writes."""
+    """A checkpoint group commits in at most 2 Spark jobs, its one unit
+    write: the pass is not cached, and its lineage counts ride the write as
+    Observations. Four groups plus the dictionary probe. finalize() writes
+    kg_edges, kg_nodes, kg_edge_stats and lineage in at most 6 jobs."""
     from knowledge_graph_integration_rag_biomedical_qna_spark.plans.checkpoint import (
         ResumableKGRun,
     )
@@ -161,10 +161,10 @@ def test_checkpoint_group_job_count(spark, fixture_inputs, tmp_path):
     run = ResumableKGRun(spark, str(tmp_path / "ckpt"), buckets=8, group_size=2)
     with job_group(spark, "ckpt_run") as jobs:
         assert run.run(*fixture_inputs)["groups_processed"] == 4
-    assert len(jobs) <= 1 + 4 * 5, jobs
+    assert len(jobs) <= 1 + 4 * 2, jobs
     with job_group(spark, "ckpt_finalize") as jobs:
         run.finalize()
-    assert len(jobs) <= 8, jobs
+    assert len(jobs) <= 6, jobs
 
 
 def test_kg_edges_write_reads_only_the_cached_pass(spark, fixture_inputs, tmp_path):

@@ -68,7 +68,7 @@ def assert_modes_equal(spark, transcripts: pd.DataFrame, aliases, tmp_path) -> p
     assert not q.isActive, "stream did not drain within 300 s"
 
     read = spark.read.parquet
-    pd.testing.assert_frame_equal(_canon(read(f"{ckpt}/kg_edges"), "bucket"), edges)
+    pd.testing.assert_frame_equal(_canon(read(f"{ckpt}/kg_edges")), edges)
     pd.testing.assert_frame_equal(_canon(read(f"{stream}/kg_edges_stream"), "epoch"), edges)
     pd.testing.assert_frame_equal(_canon(read(f"{ckpt}/kg_nodes")), nodes)
     pd.testing.assert_frame_equal(_canon(read(f"{ckpt}/kg_edge_stats")), stats)

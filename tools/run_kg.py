@@ -14,10 +14,11 @@ Local smoke:
         --aliases data/fixtures/concept_aliases.parquet --out /tmp/kg_out
 
 The job is checkpointed and resumable: rerunning after a crash skips committed
-bucket groups (see plans/checkpoint.py). Once all buckets are done it runs
-the phase-2 node / edge-stat aggregation and writes the lineage table;
-`--no-finalize` skips that step. The printed JSON summary carries the run
-record (per-bucket counts, wall time) of every group this call committed.
+bucket groups (see plans/checkpoint.py). Once all buckets are done it
+finalizes: it writes kg_edges, kg_nodes, kg_edge_stats and the lineage table
+from the committed groups (rerunning on a complete output does only that).
+The printed JSON summary carries the run record (per-bucket counts, wall
+time) of every group this call committed.
 
 Package the library for --py-files with:
     (cd /root/repo && zip -qr kg_pkg.zip knowledge_graph_integration_rag_biomedical_qna_spark)
@@ -42,7 +43,6 @@ def main() -> None:
     ap.add_argument("--group-size", type=int, default=8)
     ap.add_argument("--max-groups", type=int, default=None)
     ap.add_argument("--master", default=None, help="default: existing session / local[cpus]")
-    ap.add_argument("--no-finalize", dest="finalize", action="store_false")
     args = ap.parse_args()
 
     from knowledge_graph_integration_rag_biomedical_qna_spark.plans.checkpoint import (
@@ -60,7 +60,7 @@ def main() -> None:
 
     run = ResumableKGRun(spark, args.out, buckets=args.buckets, group_size=args.group_size)
     summary = run.run(transcripts, aliases, max_groups=args.max_groups)
-    if summary["complete"] and args.finalize:
+    if summary["complete"]:
         run.finalize()
         summary["finalized"] = True
     print(json.dumps(summary))
