@@ -47,6 +47,7 @@ from pyspark.sql import functions as F
 
 from ..core.config import CHECKPOINT_BUCKETS
 from ..operators.dedup import _obs_ready
+from ..sources.synth import values_df
 from .pipeline import EDGE_RULE, NODE_RULE, broadcast_alias_keys, build_kg
 from .pipeline import kg_edge_stats_of, kg_edges_of, kg_nodes_of
 
@@ -245,11 +246,13 @@ class ResumableKGRun:
         for table, of in (("kg_edges", kg_edges_of), ("kg_nodes", kg_nodes_of),
                           ("kg_edge_stats", kg_edge_stats_of)):
             of(units).write.mode("overwrite").parquet(self._path(table))
+        # a VALUES literal, not createDataFrame: no RDD scan, so no second
+        # Python worker pool; the CAST parses committed_at's ISO string
         lineage = [
-            (b, *(m[c][i] for c in _COUNTS), m["wall_sec"],
-             datetime.fromisoformat(m["committed_at"]), _group_key(m["buckets"]))
+            (b, *(m[c][i] for c in _COUNTS), m["wall_sec"], m["committed_at"],
+             _group_key(m["buckets"]))
             for m in markers for i, b in enumerate(m["buckets"])
         ]
-        self.spark.createDataFrame(lineage, _LINEAGE_SCHEMA).write.mode("overwrite").partitionBy(
+        values_df(self.spark, lineage, _LINEAGE_SCHEMA).write.mode("overwrite").partitionBy(
             "bucket"
         ).parquet(self._path("lineage"))

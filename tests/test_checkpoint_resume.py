@@ -76,6 +76,18 @@ def _bucket_counts(df, buckets: int) -> dict[int, int]:
     return {int(b): int(n) for b, n in pdf["bucket"].value_counts().items()}
 
 
+def _write_plan(spark, path: str) -> str:
+    """The physical plan of the last write to `path`, from the SQL status
+    store (drained first: it is filled after the action returns)."""
+    spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+    execs = spark._jsparkSession.sharedState().statusStore().executionsList()
+    for i in reversed(range(execs.size())):
+        desc = execs.apply(i).physicalPlanDescription()
+        if "InsertIntoHadoopFsRelationCommand" in desc and path in desc:
+            return desc
+    raise AssertionError(f"no write to {path} in the status store")
+
+
 def test_lineage_metrics(spark, inputs, tmp_path):
     """finalize() writes lineage from the done markers, one row per bucket,
     and each count equals a job-based recount: turns_in the bucket's input
@@ -91,6 +103,8 @@ def test_lineage_metrics(spark, inputs, tmp_path):
         "struct<turns_in:bigint,raw_triples:bigint,edges:bigint,wall_sec:double,"
         "committed_at:timestamp,commit_group:string,bucket:int>"
     )
+    # built from a VALUES literal: no RDD scan, so no second Python worker pool
+    assert "ExistingRDD" not in _write_plan(spark, f"{out}/lineage")
     lineage = lineage.toPandas().set_index("bucket").sort_index()
     assert lineage.index.tolist() == [0, 1, 2, 3]
     assert (lineage["commit_group"] == "0-3").all()
@@ -115,6 +129,9 @@ def test_lineage_metrics(spark, inputs, tmp_path):
     assert record["buckets"] == [0, 1, 2, 3]
     assert record["edges"] == lineage["edges"].tolist()
     assert record["wall_sec"] == lineage["wall_sec"].iloc[0]
+    # the session time zone is UTC; the marker's ISO string carries +00:00
+    committed = lineage["committed_at"].dt.tz_localize("UTC")
+    assert (committed == pd.Timestamp(record["committed_at"])).all()
 
 
 def test_record_of_groups_without_extraction_rows(spark, inputs, tmp_path):

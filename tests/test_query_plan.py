@@ -20,8 +20,10 @@ splits a plan again goes red here before it shows up as latency.
 from __future__ import annotations
 
 import contextlib
+import itertools
 import os
 import re
+import shutil
 
 import pytest
 
@@ -103,15 +105,134 @@ def _index_keys(index) -> set:
     return set(index.singles) | {k for ks in index.multi_first.values() for _, k in ks}
 
 
-def test_small_parquet_dictionary_ships_in_one_job(spark, fixture_inputs):
+def _dictionary_copy(fixture_dir, tmp_path) -> str:
+    """A private copy of the fixture dictionary: a first ship of it cannot
+    hit a handle another test's ship stored."""
+    path = str(tmp_path / "concept_aliases.parquet")
+    shutil.copyfile(f"{fixture_dir}/concept_aliases.parquet", path)
+    return path
+
+
+_SHIPS = itertools.count()
+
+
+def _ship(spark, path: str, **kw):
+    """Read `path` (its schema job runs outside the count) and ship it:
+    (handle, ids of the jobs the ship started)."""
+    aliases = spark.read.parquet(path)
+    with job_group(spark, f"ship-{next(_SHIPS)}") as jobs:
+        handle = broadcast_alias_keys(spark, aliases, **kw)
+    return handle, jobs
+
+
+def test_small_parquet_dictionary_ships_in_one_job(spark, fixture_dir, tmp_path):
     """A parquet dictionary under the probe cap is read and shipped in one
-    Spark job: one task reads its raw rows, and the driver dedups the keys."""
-    aliases = fixture_inputs[1]
-    with job_group(spark, "probe") as jobs:
-        bc = broadcast_alias_keys(spark, aliases)
+    Spark job: one task reads its raw rows, and the driver dedups the keys.
+    A second ship of the unchanged files starts no job and returns the
+    same handle."""
+    path = _dictionary_copy(fixture_dir, tmp_path)
+    bc, jobs = _ship(spark, path)
     assert len(jobs) == 1, jobs
-    want = {r[0] for r in aliases.select("alias_key").distinct().collect()}
+    want = {r[0] for r in spark.read.parquet(path).select("alias_key").distinct().collect()}
     assert _index_keys(bc.value) == want
+    again, jobs = _ship(spark, path)
+    assert jobs == [] and again is bc
+
+
+def test_a_changed_prior_is_another_dictionary(spark, fixture_dir, tmp_path):
+    """A `withColumn` over the same files changes the shipped plan: the ship
+    misses the memo and names other content, and the unchanged dictionary
+    still hits."""
+    from pyspark.sql import functions as F
+
+    path = _dictionary_copy(fixture_dir, tmp_path)
+    bc, _ = _ship(spark, path)
+    changed = spark.read.parquet(path).withColumn(
+        "prior", F.when(F.col("alias_key") == F.lit(bc.value.candidates[0][0]),
+                        F.col("prior") + 0.01).otherwise(F.col("prior")))
+    with job_group(spark, "changed") as jobs:
+        other = broadcast_alias_keys(spark, changed)
+    assert jobs and other is not bc and other.digest != bc.digest
+    assert _ship(spark, path)[0] is bc
+
+
+def test_an_overwrite_of_the_same_path_misses(spark, fixture_dir, tmp_path):
+    """A Spark overwrite of the dictionary's path writes other files: the
+    ship misses the memo, and the new handle's digest still names the
+    (unchanged) content, as a resume compares it."""
+    src = _dictionary_copy(fixture_dir, tmp_path)
+    path = str(tmp_path / "aliases")
+    spark.read.parquet(src).write.parquet(path)
+    bc, _ = _ship(spark, path)
+    spark.read.parquet(src).write.mode("overwrite").parquet(path)
+    again, jobs = _ship(spark, path)
+    assert jobs and again is not bc and again.digest == bc.digest
+
+
+def test_an_in_place_rewrite_of_another_size_misses(spark, fixture_dir, tmp_path):
+    """A pyarrow rewrite of the dictionary file in place, one row shorter
+    and with its modification time put back, misses on the size alone."""
+    import pyarrow.parquet as pq
+
+    path = _dictionary_copy(fixture_dir, tmp_path)
+    bc, _ = _ship(spark, path)
+    st = os.stat(path)
+    table = pq.read_table(path)
+    pq.write_table(table.slice(0, table.num_rows - 1), path)
+    os.utime(path, ns=(st.st_atime_ns, st.st_mtime_ns))
+    assert os.stat(path).st_size != st.st_size
+    again, jobs = _ship(spark, path)
+    assert jobs and again is not bc and again.digest != bc.digest
+
+
+def test_spill_arguments_key_the_memo(spark, fixture_dir, tmp_path):
+    """`max_broadcast_keys` and `spill_dir` are part of the dictionary's
+    identity: a spilling ship gets its own handle, a repeat of it hits, and
+    another `spill_dir` or a spill directory that is gone ships again."""
+    from knowledge_graph_integration_rag_biomedical_qna_spark.plans.pipeline import (
+        FileBackedAliasIndex,
+    )
+
+    path = _dictionary_copy(fixture_dir, tmp_path)
+    bc, _ = _ship(spark, path)
+    spill = dict(max_broadcast_keys=3, spill_dir=str(tmp_path / "spill"))
+    fb, _ = _ship(spark, path, **spill)
+    assert isinstance(fb, FileBackedAliasIndex)
+    again, jobs = _ship(spark, path, **spill)
+    assert jobs == [] and again is fb
+    other, _ = _ship(spark, path, max_broadcast_keys=3, spill_dir=str(tmp_path / "spill2"))
+    assert other is not fb and other.digest == fb.digest
+    shutil.rmtree(fb.path)
+    assert _ship(spark, path, **spill)[0] is not fb
+    assert _ship(spark, path)[0] is bc
+
+
+def test_a_new_spark_context_ships_again(spark, fixture_dir, tmp_path, monkeypatch):
+    """Handles belong to the SparkContext that shipped them: under another
+    applicationId the same dictionary ships again."""
+    from pyspark import SparkContext
+
+    path = _dictionary_copy(fixture_dir, tmp_path)
+    bc, _ = _ship(spark, path)
+    monkeypatch.setattr(SparkContext, "applicationId", property(lambda sc: "local-other"))
+    again, jobs = _ship(spark, path)
+    assert jobs and again is not bc
+
+
+def test_build_kg_after_a_memo_hit_writes_the_same_tables(spark, fixture_dir, tmp_path):
+    """A build whose dictionary ship hits the memo writes the same three
+    tables as the build that shipped it."""
+    path = _dictionary_copy(fixture_dir, tmp_path)
+    transcripts = spark.read.parquet(f"{fixture_dir}/transcripts.parquet")
+    _build_and_write(spark, (transcripts, spark.read.parquet(path)), str(tmp_path / "first"))
+    assert _ship(spark, path)[1] == []
+    _build_and_write(spark, (transcripts, spark.read.parquet(path)), str(tmp_path / "second"))
+
+    def rows(run, name):
+        return sorted(map(repr, spark.read.parquet(str(tmp_path / run / name)).collect()))
+
+    for name in ("kg_edges", "kg_nodes", "kg_edge_stats"):
+        assert rows("first", name) == rows("second", name), name
 
 
 def test_dictionary_probe_overflow_still_broadcasts(spark, tmp_path):
@@ -138,15 +259,16 @@ def test_dictionary_probe_overflow_still_broadcasts(spark, tmp_path):
 
 
 def test_build_kg_job_count(spark, fixture_inputs, tmp_path):
-    """A persisted build_kg plus its three table writes takes at most 8
-    Spark jobs at local[4], dictionary probe included: linking runs inside
-    the cached extraction pass, so nothing is collected or broadcast and no
-    vocabulary table is cached, and kg_edge_stats is one exchange (n_convs
-    from the pass's conv_first flags, no distinct-count job)."""
+    """A persisted build_kg plus its three table writes takes at most 7
+    Spark jobs at local[4]: the warm-up build shipped the dictionary, so
+    this build's ship hits the memo and starts no probe; linking runs
+    inside the cached extraction pass, so nothing is collected or broadcast
+    and no vocabulary table is cached, and kg_edge_stats is one exchange
+    (n_convs from the pass's conv_first flags, no distinct-count job)."""
     _build_and_write(spark, fixture_inputs, str(tmp_path / "warm"))
     with job_group(spark, "build") as jobs:
         _build_and_write(spark, fixture_inputs, str(tmp_path / "kg"))
-    assert len(jobs) <= 8, jobs
+    assert len(jobs) <= 7, jobs
 
 
 def test_checkpoint_group_job_count(spark, fixture_inputs, tmp_path):

@@ -1,0 +1,145 @@
+"""Synthetic-dictionary probe: what shipping a large alias dictionary costs,
+on a first and on a repeat ship in one session. Needs no download.
+
+    python tools/dict_probe.py [--aliases 1000000] [--master local[4]]
+
+Writes `--aliases` synthetic aliases (1-3 token keys, two aliases per cui)
+as a 4-file parquet dictionary under a temp dir, then runs twice, each time
+over a fresh read of that dictionary:
+
+- `broadcast_alias_keys`: Spark jobs and driver wall time;
+- one SQL task per core that times how long its Python worker takes to
+  have the index ready (the broadcast value, `candidates_by_key` and the
+  kernel's vocabulary arrays), with the worker's peak RSS;
+- one `link_questions` pass over 16 questions: Spark jobs and wall time.
+
+Prints one JSON object. On the repeat run the ship is expected to hit the
+session's memo (0 jobs) and the workers to keep the index they built.
+"""
+
+from __future__ import annotations
+
+import argparse
+import json
+import os
+import shutil
+import sys
+import tempfile
+import time
+
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+
+FILES = 4
+
+
+def write_aliases(path: str, n: int) -> list[str]:
+    """`n` aliases over a synthetic vocabulary into `FILES` parquet files;
+    returns 16 of the aliases for the questions."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    def word(i: int) -> str:
+        s = ""
+        i += 26 * 26  # at least three letters
+        while i:
+            i, r = divmod(i, 26)
+            s += chr(97 + r)
+        return s
+
+    os.makedirs(path)
+    names = []
+    per = -(-n // FILES)
+    for f in range(FILES):
+        keys, aliases, cuis, priors = [], [], [], []
+        for i in range(f * per, min(n, (f + 1) * per)):
+            key = " ".join(word(i * 3 + t) for t in range(1 + i % 3))
+            keys.append(key)
+            aliases.append(key.title())
+            cuis.append(f"C{i // 2:07d}")
+            priors.append((i * 7919 % 100) / 100)
+        pq.write_table(pa.table({"alias_key": keys, "alias": aliases, "cui": cuis,
+                                 "prior": priors}), os.path.join(path, f"part-{f}.parquet"))
+        names += aliases[:4]
+    return names[:16]
+
+
+def index_ready(handle):
+    """A mapInArrow body: this worker's pid, seconds until its index is
+    ready, and peak RSS in MB. A SQL pass, so it runs in the Python workers
+    the link pass uses (an RDD job starts a pool of its own)."""
+
+    def ready(batches):
+        import resource
+
+        import pyarrow as pa
+
+        from knowledge_graph_integration_rag_biomedical_qna_spark.core.vectorized import (
+            _pa_vocab,
+        )
+
+        for _ in batches:
+            t0 = time.perf_counter()
+            idx = handle.value
+            idx.candidates_by_key()
+            _pa_vocab(idx)
+            rss = resource.getrusage(resource.RUSAGE_SELF).ru_maxrss / 1024
+            yield pa.RecordBatch.from_pydict({
+                "pid": [os.getpid()], "ready_s": [round(time.perf_counter() - t0, 3)],
+                "rss_mb": [round(rss)]})
+
+    return ready
+
+
+def main() -> int:
+    ap = argparse.ArgumentParser(description=__doc__.splitlines()[0])
+    ap.add_argument("--aliases", type=int, default=1_000_000)
+    ap.add_argument("--master", default="local[4]")
+    args = ap.parse_args()
+
+    from knowledge_graph_integration_rag_biomedical_qna_spark.plans.pipeline import (
+        broadcast_alias_keys,
+    )
+    from knowledge_graph_integration_rag_biomedical_qna_spark.plans.query import link_questions
+    from knowledge_graph_integration_rag_biomedical_qna_spark.session import get_spark
+    from knowledge_graph_integration_rag_biomedical_qna_spark.sources.io import read_aliases
+    from knowledge_graph_integration_rag_biomedical_qna_spark.sources.synth import values_df
+
+    work = tempfile.mkdtemp(prefix="dict_probe-")
+    try:
+        path = os.path.join(work, "aliases")
+        t0 = time.perf_counter()
+        names = write_aliases(path, args.aliases)
+        out = {"aliases": args.aliases, "master": args.master,
+               "write_s": round(time.perf_counter() - t0, 2)}
+        spark = get_spark(app_name="dict_probe", master=args.master)
+        sc = spark.sparkContext
+        cores = sc.defaultParallelism
+        questions = values_df(spark, [(i, f"what does {a} treat?") for i, a in enumerate(names)],
+                              "question_id int, text string")
+
+        def timed(fn):
+            jobs = sc._jsc.sc().dagScheduler().nextJobId()
+            t0 = time.perf_counter()
+            res = fn()
+            return res, {"jobs": sc._jsc.sc().dagScheduler().nextJobId() - jobs,
+                         "wall_s": round(time.perf_counter() - t0, 3)}
+
+        for run in ("first", "repeat"):
+            aliases = read_aliases(spark, path)
+            handle, ship = timed(lambda: broadcast_alias_keys(spark, aliases))
+            workers = spark.range(0, cores, 1, cores).mapInArrow(
+                index_ready(handle), "pid long, ready_s double, rss_mb long").collect()
+            links, link = timed(
+                lambda: link_questions(spark, questions, aliases, handle).collect())
+            out[run] = {"ship": ship, "link": {**link, "rows": len(links)},
+                        "workers": [w.asDict() for w in sorted(workers)]}
+        out["same_handle"] = handle is broadcast_alias_keys(spark, read_aliases(spark, path))
+        print(json.dumps(out))
+        spark.stop()
+    finally:
+        shutil.rmtree(work, ignore_errors=True)
+    return 0
+
+
+if __name__ == "__main__":
+    sys.exit(main())
