@@ -112,33 +112,22 @@ MAX_BROADCAST_KEYS = 20_000_000
 _SHIPPED = ["alias_key", "alias", "cui", "prior"]
 
 
-def _rows_digest(rows) -> str:
-    """sha256 over the sorted `_SHIPPED` rows: the dictionary's content name."""
+def _ship_index(spark: SparkSession, rows):
+    """Broadcast an AliasIndex over already-collected dictionary rows
+    (`_SHIPPED` columns). The handle's `digest` is a sha256 over the sorted
+    rows, computed here from the rows the driver already holds."""
     import hashlib
 
-    return "sha256-" + hashlib.sha256("\n".join(sorted(map(repr, rows))).encode()).hexdigest()
-
-
-def _ship_index(spark: SparkSession, rows, digest: str | None = None):
-    """Broadcast an AliasIndex over already-collected dictionary rows
-    (`_SHIPPED` columns). The handle's `digest` is `_rows_digest` of the
-    rows, computed from the rows the driver already holds."""
     from ..core.patterns import AliasIndex
 
     rows = [tuple(r) for r in rows]
     cols = tuple(zip(*rows)) or ((),) * len(_SHIPPED)
     idx = AliasIndex(frozenset(cols[0]), candidates=cols)
     handle = spark.sparkContext.broadcast(idx)
-    handle.digest = digest or _rows_digest(rows)
+    handle.digest = "sha256-" + hashlib.sha256(
+        "\n".join(sorted(map(repr, rows))).encode()
+    ).hexdigest()
     return handle
-
-
-# driver-side memo of shipped dictionaries for the live SparkContext:
-# "ctx" is its (applicationId, startTime), "handles" maps a dictionary
-# identity to (shipped projection or None, handle), oldest first
-_SHIP_MEMO: dict = {"ctx": None, "handles": {}}
-# handles kept per SparkContext; each pins its broadcast until evicted
-_SHIP_MEMO_SIZE = 8
 
 
 def _files_identity(proj: DataFrame):
@@ -164,28 +153,10 @@ def _files_identity(proj: DataFrame):
     return tuple(sorted(files))
 
 
-def _memoized(spark: SparkSession, key, proj: DataFrame | None, ship):
-    """The handle stored under `key` for this SparkContext, else `ship()`'s,
-    stored. A `proj` must have the same semantics as the stored one; a
-    spill whose directory is gone ships again. `key=None`: not memoized."""
-    if key is None:
-        return ship()
-    sc = spark.sparkContext
-    ctx = (sc.applicationId, sc.startTime)
-    if _SHIP_MEMO["ctx"] != ctx:
-        _SHIP_MEMO.update(ctx=ctx, handles={})
-    handles = _SHIP_MEMO["handles"]
-    hit = handles.pop(key, None)
-    if hit is not None and (proj is None or proj.sameSemantics(hit[0])) and (
-        not isinstance(hit[1], FileBackedAliasIndex)
-        or os.path.exists(os.path.join(hit[1].path, "_SUCCESS"))
-    ):
-        handles[key] = hit
-        return hit[1]
-    handles[key] = (proj, ship())
-    while len(handles) > _SHIP_MEMO_SIZE:
-        handles.pop(next(iter(handles)))
-    return handles[key][1]
+# the last file-backed dictionary shipped in this process, as (identity,
+# shipped projection, handle): one entry, as each Python worker keeps one
+# built index (_PA_VOCAB_CACHE, _FILE_INDEX_CACHE)
+_LAST_SHIP: list = [None]
 
 
 def broadcast_alias_keys(
@@ -203,9 +174,9 @@ def broadcast_alias_keys(
 
     Cost: the broadcast carries three more columns per alias than a
     keys-only index, an estimated ~100 pickled bytes per alias, so about
-    1.6 GB at UMLS scale (~16M aliases), paid once per dictionary version
-    per session (memo below). No dictionary of that size has been run, so
-    the regime is unmeasured.
+    1.6 GB at UMLS scale (~16M aliases), broadcast once per job, or once
+    per session for a long-lived caller (memo below). No dictionary of
+    that size has been run, so the regime is unmeasured.
     Beyond `max_broadcast_keys` distinct keys the dictionary is not
     broadcast: its rows are spilled to a parquet side-file
     (executor-written) and workers build the index themselves
@@ -214,21 +185,23 @@ def broadcast_alias_keys(
     pass `spill_dir` on SHARED storage (HDFS/S3 fuse mount); the default
     tempdir is correct only for local mode.
 
-    Memo: the handles shipped in the live SparkContext are kept (dropped
-    when its applicationId or start time changes; the newest
-    `_SHIP_MEMO_SIZE`), so a repeat ship of an unchanged dictionary starts
-    no Spark job, builds and broadcasts nothing, and the Python workers
-    keep the index they built from it. A dictionary's identity, computed
-    without a Spark job, is the digest of its shipped rows when the driver
-    holds them (a LocalRelation); otherwise, when every leaf of its plan is
-    a file relation, the shipped projection's semanticHash (confirmed by
-    sameSemantics, so a `withColumn` makes another dictionary) plus the
-    sorted (path, length, modification time) of the files listed when the
-    DataFrame was created. Any other plan ships every time.
-    `max_broadcast_keys` and `spill_dir` are part of the identity. A
-    same-path rewrite that keeps every file's length and modification time
-    is not seen, as with Spark's own file-listing cache. The handle is
-    shared by every caller in the session: do not destroy it.
+    Memo: the last file-backed dictionary shipped is kept with its handle,
+    for the long-lived caller that re-reads its dictionary per request so
+    that a rewrite is picked up (`tools/kg_query.py serve`). A repeat ship
+    of the unchanged dictionary in the same SparkContext starts no Spark
+    job, builds and broadcasts nothing, and the Python workers keep the
+    index they built from it. Its identity, computed without a Spark job:
+    the SparkContext's applicationId and start time, the shipped
+    projection's semanticHash (confirmed by sameSemantics, so a `withColumn`
+    makes another dictionary), the sorted (path, length, modification time)
+    of the files listed when the DataFrame was created, `max_broadcast_keys`
+    and `spill_dir`. Shipping another dictionary replaces the entry. A plan
+    with any other leaf is not memoized (a LocalRelation ships with no job
+    anyway). A same-path rewrite that keeps every file's length and
+    modification time is not seen, as with Spark's own file-listing cache.
+    The handle is shared by every caller in the session: do not destroy it.
+    A one-shot caller (build_kg, ResumableKGRun.run, `kg_query ask`) ships
+    once and gains nothing from it.
 
     The returned handle's `digest` names the dictionary's content (a resume
     compares it, plans.checkpoint); computing it starts no Spark job."""
@@ -241,37 +214,48 @@ def broadcast_alias_keys(
     # past max_broadcast_keys distinct keys they spill like any dictionary.
     opt = proj._jdf.queryExecution().optimizedPlan()
     if opt.getClass().getSimpleName() == "LocalRelation":
-        rows = [tuple(r) for r in proj.collect()]
-        digest = _rows_digest(rows)
-
-        def ship_rows():
-            if len({r[0] for r in rows}) > max_broadcast_keys:
-                return _spill_index(proj, spill_dir)
-            return _ship_index(spark, rows, digest)
-
-        return _memoized(spark, (digest, max_broadcast_keys, spill_dir), None, ship_rows)
-
-    def ship():
-        # size probe: one task reads at most 1M+1 RAW rows, so a dictionary
-        # of up to 1M rows (~tens of MB — harmless), the overwhelmingly
-        # common case, is detected and fetched in one Spark job. Only when
-        # the probe overflows does a distributed distinct count of alias_key
-        # decide broadcast-vs-spill, so the driver never receives
-        # max_broadcast_keys(=20M) rows just to notice there are too many
-        # of them (r2 advice). Cost: a dictionary of more than 1M rows but
-        # at most max_broadcast_keys distinct keys overflows the raw probe
-        # and takes the probe, the distinct count and a collect of every row.
-        probe_cap = min(max_broadcast_keys, 1_000_000)
-        probe = proj.coalesce(1).limit(probe_cap + 1).collect()
-        if len(probe) <= probe_cap:
-            return _ship_index(spark, probe)
-        if proj.select("alias_key").distinct().count() > max_broadcast_keys:
+        rows = proj.collect()
+        if len({r[0] for r in rows}) > max_broadcast_keys:
             return _spill_index(proj, spill_dir)
-        return _ship_index(spark, proj.collect())
+        return _ship_index(spark, rows)
 
     files = _files_identity(proj)
-    key = None if files is None else (proj.semanticHash(), files, max_broadcast_keys, spill_dir)
-    return _memoized(spark, key, proj, ship)
+    if files is None:
+        return _probe_and_ship(spark, proj, max_broadcast_keys, spill_dir)
+    sc = spark.sparkContext
+    key = (sc.applicationId, sc.startTime, proj.semanticHash(), files,
+           max_broadcast_keys, spill_dir)
+    last = _LAST_SHIP[0]
+    if last is not None and last[0] == key and proj.sameSemantics(last[1]) and (
+        # a spill whose directory is gone ships again
+        not isinstance(last[2], FileBackedAliasIndex)
+        or os.path.exists(os.path.join(last[2].path, "_SUCCESS"))
+    ):
+        return last[2]
+    handle = _probe_and_ship(spark, proj, max_broadcast_keys, spill_dir)
+    _LAST_SHIP[0] = (key, proj, handle)
+    return handle
+
+
+def _probe_and_ship(spark: SparkSession, proj: DataFrame, max_broadcast_keys: int,
+                    spill_dir: str | None):
+    """Broadcast (or spill) a dictionary the driver does not hold."""
+    # size probe: one task reads at most 1M+1 RAW rows, so a dictionary of
+    # up to 1M rows (~tens of MB — harmless), the overwhelmingly common case,
+    # is detected and fetched in one Spark job. Only when the probe
+    # overflows does a distributed distinct count of alias_key decide
+    # broadcast-vs-spill, so the driver never receives
+    # max_broadcast_keys(=20M) rows just to notice there are too many of
+    # them (r2 advice). Cost: a dictionary of more than 1M rows but at most
+    # max_broadcast_keys distinct keys overflows the raw probe and takes
+    # the probe, the distinct count and a collect of every row.
+    probe_cap = min(max_broadcast_keys, 1_000_000)
+    probe = proj.coalesce(1).limit(probe_cap + 1).collect()
+    if len(probe) <= probe_cap:
+        return _ship_index(spark, probe)
+    if proj.select("alias_key").distinct().count() > max_broadcast_keys:
+        return _spill_index(proj, spill_dir)
+    return _ship_index(spark, proj.collect())
 
 
 def _spill_index(proj: DataFrame, spill_dir: str | None) -> FileBackedAliasIndex:
@@ -372,10 +356,11 @@ def build_kg(
 
     `alias_index`: a prebuilt broadcast_alias_keys() result. It carries the
     matcher's keys and the link candidates, so linking reads no dictionary
-    table: `aliases` only types the cui (and prior) columns. The default
-    ships it here; a repeat build against an unchanged dictionary gets the
-    session's memoized handle (broadcast_alias_keys), so it starts no Spark
-    job for it.
+    table: `aliases` only types the cui (and prior) columns. Steady-state
+    callers (bench, the checkpointed and streaming runs) hoist it; the
+    default ships it here, and a repeat build against the unchanged
+    file-backed dictionary last shipped gets its handle again
+    (broadcast_alias_keys), so it starts no Spark job for it.
 
     Driver-side plan-construction cost: one warm lazy build_kg call with a
     hoisted alias_index is 274 py4j round-trips; their median of 15 took

@@ -163,6 +163,59 @@ def test_kg_query_cli_smoke(spark, fixture_dir, tmp_path, capsys, monkeypatch):
     assert by_q[1] == by_q[0]
 
 
+def test_kg_query_serve_answers_batches_in_one_session(spark, fixture_dir, tmp_path, capsys,
+                                                      monkeypatch):
+    """`tools/kg_query.py serve` answers every stdin batch as `ask` answers
+    it. A batch over the unchanged dictionary gets the handle already
+    shipped (nothing is shipped again); a batch after the dictionary was
+    rewritten ships it again."""
+    import json
+    import os
+    import sys
+
+    sys.path.insert(0, os.path.join(os.path.dirname(__file__), "..", "tools"))
+    import kg_query
+
+    from knowledge_graph_integration_rag_biomedical_qna_spark.plans import pipeline
+
+    src = f"{fixture_dir}/concept_aliases.parquet"
+    aliases_path = str(tmp_path / "aliases")
+    spark.read.parquet(src).write.parquet(aliases_path)
+    transcripts = spark.read.parquet(f"{fixture_dir}/transcripts.parquet")
+    kg = pipeline.build_kg(spark, transcripts, spark.read.parquet(aliases_path))
+    out = str(tmp_path / "kg_out")
+    kg.kg_edge_stats.write.parquet(os.path.join(out, "kg_edge_stats"))
+    cui = kg.kg_edge_stats.select("subj_cui").first()[0]
+    kg.unpersist()
+    alias = spark.read.parquet(src).where(f"cui = '{cui}'").select("alias").first()[0]
+    questions = [f"what about {alias}?", "tell me about nothing."]
+    args = ["--kg", out, "--aliases", aliases_path, "-k", "3"]
+
+    handles = []
+    ship = pipeline.broadcast_alias_keys
+    monkeypatch.setattr(pipeline, "broadcast_alias_keys",
+                        lambda *a, **kw: handles.append(ship(*a, **kw)) or handles[-1])
+    assert kg_query.main(["ask", *args, *questions]) == 0
+    want = [json.loads(l) for l in capsys.readouterr().out.splitlines()]
+    assert want
+
+    def batches():
+        yield json.dumps(questions) + "\n"
+        yield "\n"
+        yield json.dumps(questions) + "\n"
+        spark.read.parquet(src).write.mode("overwrite").parquet(aliases_path)
+        yield json.dumps(questions) + "\n"
+
+    monkeypatch.setattr(sys, "stdin", batches())
+    assert kg_query.main(["serve", *args]) == 0
+    rows = [json.loads(l) for l in capsys.readouterr().out.splitlines()]
+    for batch in range(3):
+        assert [{k: v for k, v in r.items() if k != "batch"}
+                for r in rows if r["batch"] == batch] == want, batch
+    assert handles[1] is handles[0] and handles[2] is handles[0]
+    assert handles[3] is not handles[0] and handles[3].digest == handles[0].digest
+
+
 def test_t_wide_widens_single_file_scan(spark):
     """_t_wide must widen a deficient (single-file) scan to the session's
     parallelism and leave the row set untouched; it must be identity-shaped

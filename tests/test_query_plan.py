@@ -141,8 +141,8 @@ def test_small_parquet_dictionary_ships_in_one_job(spark, fixture_dir, tmp_path)
 
 def test_a_changed_prior_is_another_dictionary(spark, fixture_dir, tmp_path):
     """A `withColumn` over the same files changes the shipped plan: the ship
-    misses the memo and names other content, and the unchanged dictionary
-    still hits."""
+    misses the memo and names other content. The memo keeps one dictionary,
+    so the unchanged one then ships again, under its own digest."""
     from pyspark.sql import functions as F
 
     path = _dictionary_copy(fixture_dir, tmp_path)
@@ -153,7 +153,8 @@ def test_a_changed_prior_is_another_dictionary(spark, fixture_dir, tmp_path):
     with job_group(spark, "changed") as jobs:
         other = broadcast_alias_keys(spark, changed)
     assert jobs and other is not bc and other.digest != bc.digest
-    assert _ship(spark, path)[0] is bc
+    again, jobs = _ship(spark, path)
+    assert jobs and again is not bc and again.digest == bc.digest
 
 
 def test_an_overwrite_of_the_same_path_misses(spark, fixture_dir, tmp_path):
@@ -188,7 +189,7 @@ def test_an_in_place_rewrite_of_another_size_misses(spark, fixture_dir, tmp_path
 def test_spill_arguments_key_the_memo(spark, fixture_dir, tmp_path):
     """`max_broadcast_keys` and `spill_dir` are part of the dictionary's
     identity: a spilling ship gets its own handle, a repeat of it hits, and
-    another `spill_dir` or a spill directory that is gone ships again."""
+    a spill directory that is gone or another `spill_dir` ships again."""
     from knowledge_graph_integration_rag_biomedical_qna_spark.plans.pipeline import (
         FileBackedAliasIndex,
     )
@@ -197,14 +198,14 @@ def test_spill_arguments_key_the_memo(spark, fixture_dir, tmp_path):
     bc, _ = _ship(spark, path)
     spill = dict(max_broadcast_keys=3, spill_dir=str(tmp_path / "spill"))
     fb, _ = _ship(spark, path, **spill)
-    assert isinstance(fb, FileBackedAliasIndex)
+    assert isinstance(fb, FileBackedAliasIndex) and fb is not bc
     again, jobs = _ship(spark, path, **spill)
     assert jobs == [] and again is fb
-    other, _ = _ship(spark, path, max_broadcast_keys=3, spill_dir=str(tmp_path / "spill2"))
-    assert other is not fb and other.digest == fb.digest
     shutil.rmtree(fb.path)
-    assert _ship(spark, path, **spill)[0] is not fb
-    assert _ship(spark, path)[0] is bc
+    again = _ship(spark, path, **spill)[0]
+    assert again is not fb and os.path.exists(os.path.join(again.path, "_SUCCESS"))
+    other, _ = _ship(spark, path, max_broadcast_keys=3, spill_dir=str(tmp_path / "spill2"))
+    assert other is not again and other.digest == fb.digest
 
 
 def test_a_new_spark_context_ships_again(spark, fixture_dir, tmp_path, monkeypatch):

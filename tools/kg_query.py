@@ -9,6 +9,11 @@ constructed graph that is:
         --aliases data/fixtures/concept_aliases.parquet \
         -k 10 "what inhibits cox2?" "does aspirin treat headache?"
 
+    # a long-lived session answering question batches as they arrive: one
+    # JSON list of questions per stdin line, its answers tagged "batch"
+    python tools/kg_query.py serve --kg /path/to/kg_out \
+        --aliases data/fixtures/concept_aliases.parquet -k 10 < batches.jsonl
+
     # subgraph / neighborhood fetch around seed CUIs
     python tools/kg_query.py neighbors --kg /path/to/kg_out \
         --hops 2 -k 25 C0000123 C0000456
@@ -16,6 +21,11 @@ constructed graph that is:
 `--kg` is the output directory of tools/run_kg.py (contains kg_edge_stats/
 kg_nodes parquet, or Iceberg tables via --catalog). Results print as JSON
 lines on stdout, ranked best-first.
+
+`serve` re-reads the dictionary and the KG for every batch, so a batch
+sees a rewrite of either made before it; an unchanged dictionary is not
+shipped again (`broadcast_alias_keys` keeps the last one it shipped), so a
+batch starts no Spark job for it.
 """
 
 from __future__ import annotations
@@ -28,16 +38,39 @@ import sys
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 
+def answer(spark, args, questions: list[str]) -> list:
+    """Ranked evidence edges for `questions`, over the dictionary and the KG
+    as they are on disk now."""
+    from knowledge_graph_integration_rag_biomedical_qna_spark.plans.pipeline import (
+        broadcast_alias_keys,
+    )
+    from knowledge_graph_integration_rag_biomedical_qna_spark.plans.query import (
+        link_questions,
+        retrieve_evidence,
+    )
+    from knowledge_graph_integration_rag_biomedical_qna_spark.sources.io import read_aliases
+    from knowledge_graph_integration_rag_biomedical_qna_spark.sources.synth import values_df
+
+    edge_stats = spark.read.parquet(os.path.join(args.kg, "kg_edge_stats"))
+    aliases = read_aliases(spark, args.aliases)
+    qs = values_df(spark, list(enumerate(questions)), "question_id int, text string")
+    links = link_questions(spark, qs, aliases, broadcast_alias_keys(spark, aliases))
+    return retrieve_evidence(links, edge_stats, k=args.k).orderBy("question_id", "rank").collect()
+
+
 def main(argv: list[str] | None = None) -> int:
     ap = argparse.ArgumentParser(description=__doc__)
     sub = ap.add_subparsers(dest="cmd", required=True)
 
-    ask = sub.add_parser("ask", help="question -> ranked evidence edges")
+    asking = argparse.ArgumentParser(add_help=False)
+    asking.add_argument("--kg", required=True, help="run_kg.py output dir")
+    asking.add_argument("--aliases", required=True, help="concept_aliases parquet")
+    asking.add_argument("-k", type=int, default=10)
+    asking.add_argument("--master", default=None)
+    ask = sub.add_parser("ask", parents=[asking], help="question -> ranked evidence edges")
     ask.add_argument("questions", nargs="+")
-    ask.add_argument("--kg", required=True, help="run_kg.py output dir")
-    ask.add_argument("--aliases", required=True, help="concept_aliases parquet")
-    ask.add_argument("-k", type=int, default=10)
-    ask.add_argument("--master", default=None)
+    sub.add_parser("serve", parents=[asking],
+                   help="stdin lines, one JSON list of questions each -> ranked evidence edges")
 
     nb = sub.add_parser("neighbors", help="seed CUIs -> ranked subgraph edges")
     nb.add_argument("cuis", nargs="+")
@@ -52,34 +85,21 @@ def main(argv: list[str] | None = None) -> int:
     from knowledge_graph_integration_rag_biomedical_qna_spark.sources.synth import values_df
 
     spark = get_spark(app_name="kg_query", master=args.master)
-    edge_stats = spark.read.parquet(os.path.join(args.kg, "kg_edge_stats"))
 
     if args.cmd == "neighbors":
         from knowledge_graph_integration_rag_biomedical_qna_spark.plans.query import neighborhood
 
+        edge_stats = spark.read.parquet(os.path.join(args.kg, "kg_edge_stats"))
         seeds = values_df(spark, [(c,) for c in args.cuis], "seed_cui string")
         rows = neighborhood(edge_stats, seeds, hops=args.hops, k=args.k).collect()
+    elif args.cmd == "ask":
+        rows = answer(spark, args, args.questions)
     else:
-        from knowledge_graph_integration_rag_biomedical_qna_spark.plans.pipeline import (
-            broadcast_alias_keys,
-        )
-        from knowledge_graph_integration_rag_biomedical_qna_spark.plans.query import (
-            link_questions,
-            retrieve_evidence,
-        )
-        from knowledge_graph_integration_rag_biomedical_qna_spark.sources.io import read_aliases
-
-        aliases = read_aliases(spark, args.aliases)
-        questions = values_df(
-            spark, list(enumerate(args.questions)), "question_id int, text string"
-        )
-        keys_bc = broadcast_alias_keys(spark, aliases)
-        links = link_questions(spark, questions, aliases, keys_bc)
-        rows = (
-            retrieve_evidence(links, edge_stats, k=args.k)
-            .orderBy("question_id", "rank")
-            .collect()
-        )
+        for batch, line in enumerate(l for l in sys.stdin if l.strip()):
+            for r in answer(spark, args, json.loads(line)):
+                print(json.dumps({"batch": batch, **r.asDict()}, default=str))
+            sys.stdout.flush()
+        return 0
 
     for r in rows:
         print(json.dumps(r.asDict(), default=str))
