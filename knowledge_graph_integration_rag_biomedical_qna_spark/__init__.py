@@ -13,15 +13,14 @@ reference biomedical RAG pipeline
       -> [5] link scoring         (ngram/prior scoring + per-surface top-1 and floor;
                                    [2]-[5] are one mapInArrow, each task linking its own surfaces)
       -> [6] canonicalization     (groupBy cui -> nodes, CUI-resolved edges)
-      -> [7] materialization      (parquet/Iceberg tables + lineage, resumable)
+      -> [7] materialization      (parquet tables + lineage, resumable)
 
 Package map:
     core/       pure-Python semantics shared by Spark UDFs AND the pandas oracle
     fixtures/   deterministic (seed=42) synthetic transcripts/concepts/aliases
     oracle/     pandas reference implementation (the P/R >= 0.95 gate)
-    sources/    readers/writers (parquet now, Iceberg behind import-try)
+    sources/    input readers (parquet path or catalog table), synthetic inputs
     operators/  the Spark stages + training-data ops (dedup, ANN, text analysis)
-    functions/  reusable column expression helpers
     plans/      end-to-end pipeline composition, checkpoint/resume, lineage
     streaming/  Structured Streaming ingest variant
 """

@@ -32,10 +32,6 @@ MAX_MENTION_TOKENS = 3
 # Max token gap between a predicate phrase and its subject/object mention.
 MAX_ARG_GAP = 5
 
-# Salting factor for hot-key canonicalization groupBy (north rule: explicit
-# skew handling). Two-phase aggregate: partial agg on (cui, salt), final on cui.
-CANON_SALT_BUCKETS = 16
-
 # Number of conv_id hash buckets used for checkpointed, resumable materialize.
 CHECKPOINT_BUCKETS = 32
 

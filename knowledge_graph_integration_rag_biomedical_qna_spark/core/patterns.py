@@ -56,7 +56,6 @@ _PRED_PHRASES = sorted(
     ((tuple(p.split()), norm) for p, norm in PREDICATE_LEXICON.items()),
     key=lambda kv: -len(kv[0]),
 )
-MAX_PRED_TOKENS = max(len(p) for p, _ in _PRED_PHRASES)
 
 # First-word index: only phrases starting with the current token can match
 # there, so the per-position scan is a dict hit instead of a 26-phrase loop.

@@ -58,7 +58,6 @@ _PRED_BY_LEN: dict[int, dict[str, str]] = {}
 for _phrase, _norm in PREDICATE_LEXICON.items():
     _parts = _phrase.split()
     _PRED_BY_LEN.setdefault(len(_parts), {})[" ".join(_parts)] = _norm
-_PRED_LENS_DESC = sorted(_PRED_BY_LEN, reverse=True)
 
 # confidence = max(0.1, round(1 - 0.1*(subj_gap+obj_gap), 4)); gaps bounded by
 # MAX_ARG_GAP, so precompute with PYTHON round (np.round can differ by 1 ulp)

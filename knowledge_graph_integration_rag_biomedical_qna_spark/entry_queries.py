@@ -1683,7 +1683,7 @@ def f_math_functions(spark, sf_dir):
 )
 def merge_upsert_orders(spark, sf_dir):
     """MERGE INTO emulation (CDC upsert): anti-join + union (no lakehouse
-    MERGE in this image; TableIO swaps in Iceberg MERGE when present)."""
+    MERGE in this image)."""
     from .operators.upsert import merge_upsert
 
     o = _t(spark, sf_dir, "orders")

@@ -1,12 +1,13 @@
-"""Text-analysis operators: language ID, quality scoring, token counting,
-document fingerprinting. All pure column expressions (JVM-side, codegen) —
-no Python in the hot path. Each has an exact ANSI-SQL twin used as the DuckDB
-correctness oracle (__spark_entry__.oracle_sql).
+"""Text-analysis operators: language ID, token counting, document
+fingerprinting, and the stopword list the quality score counts. All pure
+column expressions (JVM-side, codegen) — no Python in the hot path. Each has
+an exact ANSI-SQL twin used as the DuckDB correctness oracle
+(__spark_entry__.oracle_sql).
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 # Tiny per-language stopword marker lists for the n-gram/lexical language-ID
@@ -40,30 +41,6 @@ def bpe_ish_token_count(text_col: str = "text") -> Column:
     """BPE-ish sub-token count: alpha runs, digit runs, and punct singletons
     (regex approximation of byte-pair pretokenization)."""
     return F.size(F.regexp_extract_all(F.col(text_col), F.lit(r"[A-Za-z]+|[0-9]+|[^A-Za-z0-9 \t\n\x0b\f\r]"), 0))
-
-
-def punct_ratio(text_col: str = "text") -> Column:
-    n_punct = F.length(F.regexp_replace(F.col(text_col), r"[A-Za-z0-9 \t\n\x0b\f\r]", ""))
-    return F.round(n_punct / F.greatest(F.length(F.col(text_col)), F.lit(1)), 6)
-
-
-def stopword_ratio(text_col: str = "text") -> Column:
-    toks = tokens_col(text_col)
-    n_stop = F.size(F.filter(toks, lambda t: t.isin(STOPWORDS)))
-    return F.round(n_stop / F.greatest(F.size(toks), F.lit(1)), 6)
-
-
-def quality_score(text_col: str = "text") -> Column:
-    """Composite [0,1] quality heuristic: length band + low punctuation +
-    moderate stopword presence (shape of the reference's filter stack:
-    threshold filters over scalar scores, filtering_module.py:125-162)."""
-    length_ok = (F.length(F.col(text_col)) >= 30) & (F.length(F.col(text_col)) <= 10000)
-    return F.round(
-        0.4 * length_ok.cast("double")
-        + 0.3 * (1.0 - F.least(punct_ratio(text_col) * 4, F.lit(1.0)))
-        + 0.3 * F.least(stopword_ratio(text_col) * 5, F.lit(1.0)),
-        6,
-    )
 
 
 def lang_scores(text_col: str = "text") -> dict[str, Column]:
@@ -105,17 +82,4 @@ def doc_fingerprint(text_col: str = "text") -> Column:
         toks,
         F.lit(0).cast("bigint"),
         lambda acc, t: (acc * FINGERPRINT_MULT + th(t)) % FINGERPRINT_MOD,
-    )
-
-
-def analyze_documents(docs: DataFrame, text_col: str = "text") -> DataFrame:
-    """Convenience: attach all text-analysis columns."""
-    return (
-        docs.withColumn("n_tokens", token_count(text_col))
-        .withColumn("n_subtokens", bpe_ish_token_count(text_col))
-        .withColumn("punct_ratio", punct_ratio(text_col))
-        .withColumn("stopword_ratio", stopword_ratio(text_col))
-        .withColumn("quality", quality_score(text_col))
-        .withColumn("lang_pred", lang_id(text_col))
-        .withColumn("fingerprint", doc_fingerprint(text_col))
     )

@@ -1,16 +1,11 @@
-"""MERGE/upsert + SCD2 emulation without a lakehouse MERGE INTO.
+"""MERGE/upsert emulation without a lakehouse MERGE INTO.
 
-The v1 image has no Delta/Iceberg runtime, so upserts compose from primitives
-(guide: "CDC / SCD2 -> emulate with anti-join + union + window"):
+The image has no Delta/Iceberg runtime, so an upsert composes from
+primitives (anti-join + union + window):
 
-- `merge_upsert`: last-writer-wins per key — dedupe updates by a version
-  column, then `current LEFT ANTI updates` ∪ `updates`.
-- `scd2_apply`: slowly-changing-dimension type 2 — close current rows whose
-  key gets a new version (valid_to = new valid_from), append the new rows
-  open-ended.
-
-When an Iceberg catalog is attached, swap these for `MERGE INTO` — the
-TableIO interface isolates callers from the choice.
+- `latest_per_key`: collapse an update batch to its highest version per key.
+- `merge_upsert`: last-writer-wins per key — `current LEFT ANTI updates` ∪
+  `updates`. The registry query `merge_upsert_orders` runs it.
 """
 
 from __future__ import annotations
@@ -43,38 +38,3 @@ def merge_upsert(
         updates = latest_per_key(updates, key_cols, version_col)
     kept = current.join(updates.select(*key_cols).distinct(), key_cols, "left_anti")
     return kept.unionByName(updates.select(*current.columns))
-
-
-def scd2_apply(
-    current: DataFrame,
-    updates: DataFrame,
-    key_cols: list[str],
-    ts_col: str = "valid_from",
-    end_col: str = "valid_to",
-) -> DataFrame:
-    """SCD2: `current` rows carry [ts_col, end_col) validity (open rows have
-    null end). Updates CHAIN per key in ts order: the key's open row closes
-    at the FIRST update's ts, each update row closes at the NEXT update's ts
-    (lead window), and only the last update stays open — so a batch holding
-    several updates for one key yields one contiguous history, not duplicated
-    closed rows + multiple open rows (r4 review finding). ts must be unique
-    per key within a batch (same contract as latest_per_key's version)."""
-    end_type = current.schema[end_col].dataType
-    first_from = updates.groupBy(*key_cols).agg(F.min(ts_col).alias("_new_from"))
-    closed = (
-        current.filter(F.col(end_col).isNull())
-        .join(first_from, key_cols, "inner")
-        .withColumn(end_col, F.col("_new_from").cast(end_type))
-        .drop("_new_from")
-    )
-    untouched_open = current.filter(F.col(end_col).isNull()).join(
-        first_from.select(*key_cols), key_cols, "left_anti"
-    )
-    history = current.filter(F.col(end_col).isNotNull())
-    w = Window.partitionBy(*key_cols).orderBy(F.col(ts_col).asc())
-    new_rows = updates.withColumn(
-        end_col, F.lead(F.col(ts_col)).over(w).cast(end_type)
-    )
-    return history.unionByName(closed).unionByName(untouched_open).unionByName(
-        new_rows.select(*current.columns)
-    )

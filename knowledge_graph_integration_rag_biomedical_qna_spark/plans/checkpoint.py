@@ -147,6 +147,10 @@ class ResumableKGRun:
         buckets: int = CHECKPOINT_BUCKETS,
         group_size: int = 8,
     ):
+        # 0 buckets would report complete with nothing committed; a group
+        # size below 1 makes no groups, so no run ever completes
+        if buckets < 1 or group_size < 1:
+            raise ValueError(f"buckets={buckets} and group_size={group_size} must be >= 1")
         self.spark = spark
         self.out_dir = out_dir
         self.buckets = buckets
@@ -211,6 +215,9 @@ class ResumableKGRun:
         Returns summary metrics, with the run record of every group this
         call committed. Call `finalize()` after all groups are done.
         """
+        # a negative slice bound would silently drop the last groups
+        if max_groups is not None and max_groups < 0:
+            raise ValueError(f"max_groups={max_groups} must be >= 0")
         os.makedirs(os.path.join(self.out_dir, "_done"), exist_ok=True)
         keys_bc = broadcast_alias_keys(self.spark, aliases)
         markers = _done_markers(self.out_dir, self.buckets, keys_bc.digest)

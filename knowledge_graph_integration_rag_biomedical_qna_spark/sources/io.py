@@ -1,19 +1,16 @@
-"""Table IO: Iceberg-first with a transparent parquet fallback.
+"""Input readers and the bucketed-table writer.
 
-The production deployment target is an Iceberg catalog
-(`spark.read.table("cat.db.transcripts")`, `df.writeTo(...).createOrReplace()`
-— reference's JSON-file stage boundaries become atomic table commits, SURVEY.md
-§1.4). The sandbox image has no Iceberg runtime jar, so `TableIO` probes for it
-once and otherwise uses parquet directories with the same atomic-replace
-semantics (write to tmp, rename). All pipeline code goes through this
-interface only.
+`read_transcripts` / `read_aliases` take a parquet path (a `.parquet` file
+or a directory) or a catalog table name: `spark.read.table(name)` is how an
+Iceberg input table comes in when the session has a catalog attached. The
+run modes write their own outputs as parquet; `write_bucketed` lays out a
+conv_id-bucketed input table.
 """
 
 from __future__ import annotations
 
 import os
 import shutil
-import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
@@ -37,83 +34,6 @@ ALIASES_SCHEMA = T.StructType(
         T.StructField("prior", T.DoubleType(), False),
     ]
 )
-
-
-def _iceberg_available(spark: SparkSession) -> bool:
-    try:
-        jvm = spark.sparkContext._jvm
-        jvm.java.lang.Class.forName("org.apache.iceberg.spark.SparkCatalog")
-        return True
-    except Exception:
-        return False
-
-
-class TableIO:
-    """read/write named tables; Iceberg when available, else parquet dirs."""
-
-    def __init__(self, spark: SparkSession, warehouse: str, catalog: str = "local"):
-        self.spark = spark
-        self.warehouse = warehouse
-        self.catalog = catalog
-        self.iceberg = _iceberg_available(spark) and bool(
-            spark.conf.get(f"spark.sql.catalog.{catalog}", None)
-        )
-
-    def _path(self, name: str) -> str:
-        return os.path.join(self.warehouse, name)
-
-    def read(self, name: str, schema: T.StructType | None = None) -> DataFrame:
-        if self.iceberg:
-            return self.spark.read.table(f"{self.catalog}.db.{name}")
-        r = self.spark.read
-        if schema is not None:
-            r = r.schema(schema)
-        return r.parquet(self._path(name))
-
-    def exists(self, name: str) -> bool:
-        if self.iceberg:
-            return self.spark.catalog.tableExists(f"{self.catalog}.db.{name}")
-        p = self._path(name)
-        return os.path.isdir(p) and bool(os.listdir(p))
-
-    def replace(self, df: DataFrame, name: str, partition_by: list[str] | None = None) -> None:
-        """Atomic create-or-replace (Iceberg createOrReplace / tmp+rename)."""
-        if self.iceberg:
-            w = df.writeTo(f"{self.catalog}.db.{name}")
-            if partition_by:
-                from pyspark.sql import functions as F
-
-                w = w.partitionedBy(*[F.col(c) for c in partition_by])
-            w.createOrReplace()
-            return
-        final = self._path(name)
-        tmp = final + ".tmp-" + uuid.uuid4().hex[:8]
-        w = df.write.mode("overwrite")
-        if partition_by:
-            w = w.partitionBy(*partition_by)
-        w.parquet(tmp)
-        # crash-safe swap: park the old table under a .old name FIRST so the
-        # final path is never unbound (rmtree-then-rename had a window where
-        # a crash lost the live table and left only the .tmp dir — r4 review)
-        old = final + ".old-" + uuid.uuid4().hex[:8]
-        if os.path.isdir(final):
-            os.replace(final, old)
-        try:
-            os.replace(tmp, final)
-        except Exception:
-            if os.path.isdir(old):  # roll the old table back into place
-                os.replace(old, final)
-            raise
-        shutil.rmtree(old, ignore_errors=True)
-
-    def append(self, df: DataFrame, name: str, partition_by: list[str] | None = None) -> None:
-        if self.iceberg:
-            df.writeTo(f"{self.catalog}.db.{name}").append()
-            return
-        w = df.write.mode("append")
-        if partition_by:
-            w = w.partitionBy(*partition_by)
-        w.parquet(self._path(name))
 
 
 def read_transcripts(spark: SparkSession, path: str) -> DataFrame:

@@ -324,6 +324,23 @@ def test_resume_with_other_bucket_count_raises(spark, inputs, tmp_path):
         other.finalize()
 
 
+@pytest.mark.parametrize("init,max_groups", [
+    ({"buckets": 0}, None),        # would report complete with no group committed
+    ({"group_size": 0}, None),     # would make no groups: never complete
+    ({"group_size": -1}, None),
+    ({}, -1),                      # would silently drop the last group
+])
+def test_counts_that_do_no_work_raise_before_spark(tmp_path, init, max_groups):
+    """Bucket counts, group sizes and group limits come from run_kg.py's
+    command line; one that commits nothing, or drops a group, raises before
+    any Spark call (no session and no inputs are passed) and writes
+    nothing."""
+    out = tmp_path / "out"
+    with pytest.raises(ValueError, match=r"must be >= [01]"):
+        ResumableKGRun(None, str(out), **init).run(None, None, max_groups=max_groups)
+    assert not out.exists()
+
+
 def test_resume_with_a_changed_dictionary_raises(spark, inputs, tmp_path):
     """The dictionary decides every link, so groups committed under one
     dictionary must not be mixed with groups linked by another: a resume

@@ -1,124 +1,7 @@
-"""Source tests: tolerant JSONL ingestion + table IO abstraction."""
+"""Source tests: the input readers, dictionary shipping (broadcast and
+spilled) and driver-local input tables."""
 
 from __future__ import annotations
-
-from knowledge_graph_integration_rag_biomedical_qna_spark.sources.io import TableIO
-from knowledge_graph_integration_rag_biomedical_qna_spark.sources.jsonl import (
-    read_transcripts_jsonl,
-)
-
-
-def test_jsonl_permissive_ingest(spark, tmp_path):
-    p = tmp_path / "in.jsonl"
-    lines = [
-        '{"conv_id": "c1", "turn_idx": 0, "role": "user", "text": "hello.", "tool": "", "ts": "2026-01-01T00:00:00"}',
-        '{"conv_id": "c1", "turn_idx": 1, "role": "assistant", "text": "hi.", "tool": "", "ts": "2026-01-01T00:00:01"}',
-        "this is not json at all {{{",
-        '{"conv_id": null, "turn_idx": 5, "text": "orphan"}',
-        '{"conv_id": "c2", "turn_idx": 0, "text": "minimal"}',
-    ]
-    p.write_text("\n".join(lines))
-    good, bad = read_transcripts_jsonl(spark, str(p))
-    g = good.toPandas().sort_values(["conv_id", "turn_idx"]).reset_index(drop=True)
-    assert len(g) == 3
-    # defaults filled for the minimal record
-    row = g[g["conv_id"] == "c2"].iloc[0]
-    assert row["role"] == "user" and row["tool"] == ""
-    assert bad.count() == 2
-
-
-def test_table_io_replace_roundtrip(spark, tmp_path):
-    io = TableIO(spark, str(tmp_path))
-    assert not io.iceberg  # no Iceberg runtime in this image -> parquet mode
-    df = spark.range(10).withColumnRenamed("id", "x")
-    io.replace(df, "t1")
-    assert io.exists("t1")
-    assert io.read("t1").count() == 10
-    # replace is atomic create-or-replace
-    io.replace(spark.range(3).withColumnRenamed("id", "x"), "t1")
-    assert io.read("t1").count() == 3
-    io.append(spark.range(2).withColumnRenamed("id", "x"), "t1")
-    assert io.read("t1").count() == 5
-
-
-def test_json_array_scan(spark, tmp_path):
-    from knowledge_graph_integration_rag_biomedical_qna_spark.sources.jsonl import (
-        read_json_array,
-    )
-
-    p = tmp_path / "arr.json"
-    p.write_text('[{"a": 1, "b": "x"}, {"a": 2, "b": "y"}]')
-    df = read_json_array(spark, str(p))
-    rows = sorted((r["a"], r["b"]) for r in df.collect())
-    assert rows == [(1, "x"), (2, "y")]
-
-
-# --- Iceberg-branch contract (catalog mocked: the jar is absent in this
-# container, but the branch's Python — naming, call chains, partitionedBy
-# argument construction — must not be dead code) ---------------------------
-
-
-class _Recorder:
-    def __init__(self, calls, name):
-        self._calls = calls
-        self._name = name
-
-    def __call__(self, *a, **k):
-        self._calls.append((self._name, a))
-        return self
-
-    def __getattr__(self, attr):
-        return _Recorder(self._calls, f"{self._name}.{attr}")
-
-
-def test_tableio_iceberg_branch_contract(spark, tmp_path):
-    from knowledge_graph_integration_rag_biomedical_qna_spark.sources.io import TableIO
-
-    io = TableIO(spark, str(tmp_path), catalog="cat")
-    io.iceberg = True  # force the branch; catalog surfaces are recorded fakes
-
-    calls = []
-    df = spark.range(3).selectExpr("id", "id % 2 AS p")
-
-    class _FakeDF:
-        def writeTo(self, name):
-            calls.append(("writeTo", (name,)))
-            return _Recorder(calls, "w")
-
-    io.replace(_FakeDF(), "edges", partition_by=["p"])
-    assert calls[0] == ("writeTo", ("cat.db.edges",))
-    assert any(n.endswith("partitionedBy") for n, _ in calls[1:]), calls
-    assert any(n.endswith("createOrReplace") for n, _ in calls[1:]), calls
-
-    calls.clear()
-    io.append(_FakeDF(), "edges")
-    assert calls[0] == ("writeTo", ("cat.db.edges",))
-    assert any(n.endswith("append") for n, _ in calls[1:]), calls
-
-    class _FakeCatalog:
-        def tableExists(self, name):
-            calls.append(("tableExists", (name,)))
-            return True
-
-    class _FakeReader:
-        def table(self, name):
-            calls.append(("read.table", (name,)))
-            return df
-
-    class _FakeSpark:
-        catalog = _FakeCatalog()
-        read = _FakeReader()
-
-    io.spark = _FakeSpark()
-    calls.clear()
-    assert io.exists("edges") is True
-    assert calls == [("tableExists", ("cat.db.edges",))]
-    got = io.read("edges")
-    assert got is df and ("read.table", ("cat.db.edges",)) in calls
-
-    # partitionedBy builds real Column objects from the live session
-    io2 = TableIO(spark, str(tmp_path))
-    assert io2.iceberg is False  # probe correctly reports the jar absent
 
 
 def test_alias_broadcast_file_backed_escape_hatch(spark, fixture_dir, tmp_path):
@@ -281,3 +164,26 @@ def test_local_dictionary_over_the_key_cap_spills(spark, tmp_path):
         return {k: sorted(v) for k, v in index.value.candidates_by_key().items()}
 
     assert by_key(fb) == by_key(bc)
+
+
+def test_readers_take_a_path_or_a_table_name(spark, fixture_dir):
+    """read_transcripts / read_aliases read a parquet path with the contract
+    schema, and anything else as a catalog table name (how an Iceberg input
+    table comes in); both give the same rows."""
+    from knowledge_graph_integration_rag_biomedical_qna_spark.sources.io import (
+        ALIASES_SCHEMA,
+        TRANSCRIPTS_SCHEMA,
+        read_aliases,
+        read_transcripts,
+    )
+
+    for read, name, schema in ((read_transcripts, "transcripts", TRANSCRIPTS_SCHEMA),
+                               (read_aliases, "concept_aliases", ALIASES_SCHEMA)):
+        by_path = read(spark, f"{fixture_dir}/{name}.parquet")
+        assert by_path.schema.fieldNames() == schema.fieldNames()
+        by_path.createOrReplaceTempView(f"readers_{name}")
+        try:
+            by_name = read(spark, f"readers_{name}")
+            assert by_name.exceptAll(by_path).isEmpty() and by_path.exceptAll(by_name).isEmpty()
+        finally:
+            spark.catalog.dropTempView(f"readers_{name}")

@@ -28,7 +28,10 @@ from knowledge_graph_integration_rag_biomedical_qna_spark.operators.similarity i
     ivf_topk,
 )
 from knowledge_graph_integration_rag_biomedical_qna_spark.operators.text_analysis import (
-    analyze_documents,
+    bpe_ish_token_count,
+    doc_fingerprint,
+    lang_id,
+    token_count,
 )
 
 SF = "/root/testdata/sf0.001"
@@ -135,16 +138,24 @@ def test_ivf_recall_vs_bruteforce(spark, emb):
 
 
 def test_text_analysis_columns(spark, docs):
-    out = analyze_documents(docs).toPandas()
-    assert (out["n_tokens"] > 0).all()
-    assert ((out["punct_ratio"] >= 0) & (out["punct_ratio"] <= 1)).all()
-    assert ((out["quality"] >= 0) & (out["quality"] <= 1)).all()
+    out = docs.select(
+        "text",
+        token_count("text").alias("n_tokens"),
+        bpe_ish_token_count("text").alias("n_subtokens"),
+        lang_id("text").alias("lang_pred"),
+        doc_fingerprint("text").alias("fingerprint"),
+    ).toPandas()
+    assert (out["n_tokens"] > 0).all() and (out["n_subtokens"] > 0).all()
     assert (out["fingerprint"] >= 0).all()
     # docs are the same vocabulary soup -> lang_id mostly 'en' or 'und'
     assert set(out["lang_pred"].unique()) <= {"en", "fr", "es", "de", "und"}
     # fingerprint is deterministic and text-keyed
     dup_fp = out.groupby("text")["fingerprint"].nunique()
     assert (dup_fp == 1).all()
+    # whitespace tokens vs alpha runs, digit runs and punctuation singletons
+    small = spark.createDataFrame([("Aspirin, 81mg treats pain.",), ("   ",)], "text string")
+    got = small.select(token_count("text"), bpe_ish_token_count("text")).collect()
+    assert [tuple(r) for r in got] == [(4, 7), (0, 0)]
 
 
 def test_multimodal_decode_plumbing(spark, docs):

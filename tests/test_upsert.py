@@ -1,13 +1,10 @@
-"""Tests for MERGE/SCD2 emulation operators."""
+"""Tests for the MERGE/upsert emulation operators."""
 
 from __future__ import annotations
-
-import datetime as dt
 
 from knowledge_graph_integration_rag_biomedical_qna_spark.operators.upsert import (
     latest_per_key,
     merge_upsert,
-    scd2_apply,
 )
 
 
@@ -34,55 +31,3 @@ def test_latest_per_key(spark):
     )
     out = latest_per_key(updates, ["k"], "ver").toPandas().set_index("k")
     assert out.loc[1, "v"] == "y" and out.loc[2, "v"] == "z"
-
-
-def test_scd2_apply(spark):
-    t0 = dt.datetime(2026, 1, 1)
-    t1 = dt.datetime(2026, 2, 1)
-    current = spark.createDataFrame(
-        [
-            (1, "a0", dt.datetime(2025, 1, 1), t0),   # closed history row
-            (1, "a1", t0, None),                       # open
-            (2, "b0", t0, None),                       # open, untouched
-        ],
-        "k int, v string, valid_from timestamp, valid_to timestamp",
-    )
-    updates = spark.createDataFrame(
-        [(1, "a2", t1)], "k int, v string, valid_from timestamp"
-    )
-    out = scd2_apply(current, updates, ["k"]).toPandas()
-    assert len(out) == 4
-    open_rows = out[out["valid_to"].isna()]
-    assert sorted(zip(open_rows["k"], open_rows["v"])) == [(1, "a2"), (2, "b0")]
-    closed_a1 = out[(out["v"] == "a1")].iloc[0]
-    assert closed_a1["valid_to"] == t1
-
-
-def test_scd2_apply_chains_multiple_updates_per_key(spark):
-    """Two updates for one key in a single batch must produce a contiguous
-    history: open row closed at the first update's ts, first update closed at
-    the second's, only the last update open (r4 review: the previous
-    implementation duplicated the closed row per update and left multiple
-    open rows)."""
-    import pandas as pd
-
-    current = spark.createDataFrame(
-        [("k1", "v0", 10, None)],
-        "k string, val string, valid_from int, valid_to int",
-    )
-    updates = spark.createDataFrame(
-        [("k1", "v1", 20, None), ("k1", "v2", 30, None)],
-        "k string, val string, valid_from int, valid_to int",
-    )
-    out = (
-        scd2_apply(current, updates, ["k"])
-        .toPandas()
-        .sort_values("valid_from")
-        .reset_index(drop=True)
-    )
-    assert len(out) == 3
-    assert out.loc[0, "val"] == "v0" and out.loc[0, "valid_to"] == 20
-    assert out.loc[1, "val"] == "v1" and out.loc[1, "valid_to"] == 30
-    assert out.loc[2, "val"] == "v2" and pd.isna(out.loc[2, "valid_to"])
-    # exactly one open row
-    assert out["valid_to"].isna().sum() == 1

@@ -26,8 +26,7 @@ changes). What to look for, per the scale-design goals:
   the extraction `MapInArrow` links both triple endpoints in its pass.
 - kg_nodes groups the pass's linked per-task vocabulary rows by cui: one
   map-side-combined (partial_collect_set/partial_sum) vocabulary-sized
-  exchange, no join — the salted two-phase shape is the row-level
-  `canonicalize_nodes` (see its section below).
+  exchange, no join.
 - Scans show `PushedFilters` and pruned `ReadSchema`.
 
 """
@@ -49,16 +48,6 @@ def main() -> None:
     al = spark.read.parquet(f"{fixtures}/concept_aliases.parquet")
     kg = build_kg(spark, tr, al, persist=False)
 
-    def _salted_nodes(kg):
-        from knowledge_graph_integration_rag_biomedical_qna_spark.operators.canonicalize import (
-            canonicalize_nodes,
-        )
-        from knowledge_graph_integration_rag_biomedical_qna_spark.operators.linking import (
-            resolve_mentions,
-        )
-
-        return canonicalize_nodes(resolve_mentions(kg.mentions, kg.resolution))
-
     def fmt(df):
         return df._jdf.queryExecution().explainString(
             spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString("formatted")
@@ -68,7 +57,6 @@ def main() -> None:
     sections = [
         ("kg_edges (stages [1]-[5]: window -> one extraction+linking pass -> filter, no join)", kg.kg_edges),
         ("kg_nodes (stage [6]: groupBy(cui) over the pass's linked vocabulary rows)", kg.kg_nodes),
-        ("canonicalize_nodes (row-level salted two-phase operator, not on the build_kg path)", _salted_nodes(kg)),
         ("q1_pricing_summary (pushdown + partial aggregation)", REGISTRY["q1_pricing_summary"][0](spark, sf)),
         ("q5_join_breadth (broadcast star join)", REGISTRY["q5_join_breadth"][0](spark, sf)),
         ("ann_cosine_topk (JVM-side vector math + WindowGroupLimit top-k)", REGISTRY["ann_cosine_topk"][0](spark, sf)),

@@ -10,7 +10,8 @@ constructed graph that is:
         -k 10 "what inhibits cox2?" "does aspirin treat headache?"
 
     # a long-lived session answering question batches as they arrive: one
-    # JSON list of questions per stdin line, its answers tagged "batch"
+    # JSON list of questions per stdin line, its answers tagged "batch"; any
+    # other line gets one {"batch": n, "error": ...} line and is skipped
     python tools/kg_query.py serve --kg /path/to/kg_out \
         --aliases data/fixtures/concept_aliases.parquet -k 10 < batches.jsonl
 
@@ -19,8 +20,7 @@ constructed graph that is:
         --hops 2 -k 25 C0000123 C0000456
 
 `--kg` is the output directory of tools/run_kg.py (contains kg_edge_stats/
-kg_nodes parquet, or Iceberg tables via --catalog). Results print as JSON
-lines on stdout, ranked best-first.
+kg_nodes parquet). Results print as JSON lines on stdout, ranked best-first.
 
 `serve` re-reads the dictionary and the KG for every batch, so a batch
 sees a rewrite of either made before it; an unchanged dictionary is not
@@ -56,6 +56,15 @@ def answer(spark, args, questions: list[str]) -> list:
     qs = values_df(spark, list(enumerate(questions)), "question_id int, text string")
     links = link_questions(spark, qs, aliases, broadcast_alias_keys(spark, aliases))
     return retrieve_evidence(links, edge_stats, k=args.k).orderBy("question_id", "rank").collect()
+
+
+def _questions(line: str) -> list[str]:
+    """A serve batch's questions: the line must be a non-empty JSON list of
+    strings, else ValueError."""
+    batch = json.loads(line)
+    if not (isinstance(batch, list) and batch and all(isinstance(q, str) for q in batch)):
+        raise ValueError(f"expected a non-empty JSON list of strings, got {type(batch).__name__}")
+    return batch
 
 
 def main(argv: list[str] | None = None) -> int:
@@ -96,8 +105,13 @@ def main(argv: list[str] | None = None) -> int:
         rows = answer(spark, args, args.questions)
     else:
         for batch, line in enumerate(l for l in sys.stdin if l.strip()):
-            for r in answer(spark, args, json.loads(line)):
-                print(json.dumps({"batch": batch, **r.asDict()}, default=str))
+            try:
+                questions = _questions(line)
+            except ValueError as e:  # a bad line is reported; the session goes on
+                print(json.dumps({"batch": batch, "error": str(e)}))
+            else:
+                for r in answer(spark, args, questions):
+                    print(json.dumps({"batch": batch, **r.asDict()}, default=str))
             sys.stdout.flush()
         return 0
 
