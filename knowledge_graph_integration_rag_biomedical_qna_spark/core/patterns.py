@@ -97,8 +97,8 @@ class AliasIndex:
 
     `singles` answers 1-token lookups; `multi_first` maps a first token to its
     multi-token keys longest-first, so a position whose token starts no alias
-    costs two set probes instead of three string joins. Build once per
-    dictionary and ship via SparkContext broadcast (executors share one copy).
+    costs two set probes instead of three string joins. Each Python worker
+    builds one per shipped dictionary (plans.pipeline.broadcast_alias_keys).
     Matching semantics are identical to probing the flat key set.
 
     `candidates`: the dictionary as four parallel columns (alias_key, alias,
@@ -114,25 +114,12 @@ class AliasIndex:
         alias_keys = tuple(alias_keys)  # guard: __init__ iterates twice
         self.singles: frozenset[str] = frozenset(k for k in alias_keys if " " not in k)
         multi: dict[str, list[tuple[tuple[str, ...], str]]] = {}
-        dropped = 0
         for k in alias_keys:
             parts = tuple(k.split(" "))
+            # a key longer than the matcher's longest n-gram is unreachable
+            # (plans.pipeline.broadcast_alias_keys warns when it ships one)
             if 1 < len(parts) <= MAX_MENTION_TOKENS:
                 multi.setdefault(parts[0], []).append((parts, k))
-            elif len(parts) > MAX_MENTION_TOKENS:
-                dropped += 1
-        if dropped:
-            # silently unreachable keys are a recall hole with zero diagnostic
-            # (r4 review) — the matcher never probes n-grams longer than
-            # MAX_MENTION_TOKENS, so say so loudly once per index build
-            import warnings
-
-            warnings.warn(
-                f"AliasIndex: {dropped} alias key(s) longer than "
-                f"MAX_MENTION_TOKENS={MAX_MENTION_TOKENS} tokens are "
-                "unreachable by the matcher and were dropped from the index; "
-                "raise core.config.MAX_MENTION_TOKENS to cover them"
-            )
         for v in multi.values():
             v.sort(key=lambda pk: -len(pk[0]))
         self.multi_first = multi
@@ -142,8 +129,8 @@ class AliasIndex:
 
     def keys_by_len(self) -> "dict[int, frozenset[str]]":
         """Token-length -> key-set view (for the vectorized kernel's per-length
-        isin probes). Built lazily, cached on the instance — executors holding
-        the broadcast AliasIndex pay the build once per worker, not per task."""
+        isin probes). Built lazily, cached on the instance — a Python worker
+        holding the shipped AliasIndex pays the build once, not per task."""
         if self._by_len is None:
             by_len: dict[int, set[str]] = {1: set(self.singles)}
             for bucket in self.multi_first.values():

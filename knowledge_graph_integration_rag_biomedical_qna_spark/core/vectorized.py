@@ -68,7 +68,7 @@ _CONF_TABLE = np.array(
 
 # per-process cache: id(AliasIndex) -> (AliasIndex strong ref, {len: pa.Array})
 # The strong ref pins the index so the id can't be reused; at most one
-# dictionary per broadcast per worker, so the "leak" is bounded and shared.
+# shipped dictionary per worker, so the "leak" is bounded and shared.
 _PA_VOCAB_CACHE: dict[int, tuple] = {}
 
 

@@ -2280,11 +2280,11 @@ def kg_mention_detect_synth(spark, sf_dir):
 
 @q("kg_mention_detect_spill", _MENTION_SYNTH_SQL)
 def kg_mention_detect_spill(spark, sf_dir):
-    """The alias-dictionary FILE-BACKED escape hatch under the driver gate:
-    identical semantics to kg_mention_detect_synth, but max_broadcast_keys=1
-    forces the dictionary through the executor-written parquet side-file and
-    each python worker builds the AliasIndex itself (no driver collect) —
-    the >20M-key code path exercised end-to-end with a hash-checked oracle."""
+    """The dictionary ship's job-backed collect under the driver gate:
+    identical semantics to kg_mention_detect_synth, whose LocalRelation
+    dictionary the driver already holds, but the dictionary is repartitioned,
+    so broadcast_alias_keys collects it with a Spark job before it writes
+    and adds the Arrow file each Python worker builds its AliasIndex from."""
     from .operators.extraction import detect_mentions_df
     from .operators.turn_assembly import assemble_turns
     from .plans.pipeline import broadcast_alias_keys
@@ -2293,8 +2293,8 @@ def kg_mention_detect_spill(spark, sf_dir):
     docs = _t(spark, sf_dir, "documents")
     aliases = synth_aliases(spark)
     turns = assemble_turns(synth_transcripts(docs))
-    keys_fb = broadcast_alias_keys(spark, aliases, max_broadcast_keys=1)
-    return detect_mentions_df(turns, keys_fb).select("conv_id", "turn_idx", "alias_key")
+    keys_bc = broadcast_alias_keys(spark, aliases.repartition(2))
+    return detect_mentions_df(turns, keys_bc).select("conv_id", "turn_idx", "alias_key")
 
 
 @q(

@@ -4,10 +4,11 @@ Both run as one `mapInArrow` over the turn table: Arrow-batched, per-turn
 stateless, NO shuffle (they inherit the conv_id partitioning from stage [1]).
 The build's pass (`extract_collapsed_df`) also links each mention there
 (stages [4]+[5], operators.linking.pair_linker).
-The alias-key dictionary is shipped once per executor as a SparkContext
-broadcast (the reference instead held article dictionaries in driver RAM,
-rag2-filtering/filtering_module.py:44,62 — here the dictionary rides the
-broadcast bus and the data never visits the driver).
+The alias dictionary is shipped once per SparkContext as one Arrow file
+(plans.pipeline.broadcast_alias_keys), which each Python worker reads once.
+The reference held its article dictionaries in driver RAM
+(rag2-filtering/filtering_module.py:44,62); here the dictionary passes
+through the driver once, and the transcripts never visit it.
 
 Reference analogs:
 - sentence split: rag2-retriever/query_encode.py:10-48 (scispacy .sents)
@@ -251,7 +252,7 @@ def extract_collapsed_df(
     surface does not link. Scoring is proportional to the distinct pairs in
     each task, not to the global vocabulary: a pair seen by every task is
     scored once per task. Every worker builds the index's per-key
-    candidates, so `alias_keys_bc` must carry them (broadcast_alias_keys).
+    candidates, so `alias_keys_bc` must carry them (broadcast_alias_keys does).
 
     Each 't' row also gets `conv_first`: true on the first row of its
     (conv_id, subj_cui, pred, obj_cui) in the task, false on later ones,

@@ -132,9 +132,9 @@ def candidate_table(
     way `aliases` only types the cui and prior columns. An index built
     without candidates raises when the plan runs. The lookup, scoring and
     top-k run in one Arrow pass that keeps its input's partitioning, so
-    there is no join, no dictionary scan and no window exchange; a
-    >20M-alias dictionary reaches the pass as broadcast_alias_keys' spill
-    file, read once per Python worker."""
+    there is no join, no dictionary scan and no window exchange; each
+    Python worker reads the dictionary once, from the file
+    broadcast_alias_keys ships."""
     if alias_index is None:
         # lazy import: plans.pipeline composes this module
         from ..plans.pipeline import broadcast_alias_keys

@@ -41,8 +41,7 @@ MATMUL_MIN_DIM = 256
 # contract, but "by contract" is not a guard: above this many collected rows
 # (queries for cosine_topk; query x nprobe probes for ivf_topk) the kernel
 # routes back to the fold/broadcast path with a warning instead of OOMing
-# the driver — the same limit(cap+1) probe pattern as the alias-dictionary
-# spill (plans/pipeline.py broadcast_alias_keys).
+# the driver, found by a limit(cap+1) probe (`_guarded_collect`).
 MATMUL_MAX_QUERY_ROWS = 100_000
 
 

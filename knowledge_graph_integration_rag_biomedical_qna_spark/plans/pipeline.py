@@ -28,12 +28,14 @@ micro-batch; the run modes differ only in their sinks.
 from __future__ import annotations
 
 import os
+import tempfile
 from dataclasses import dataclass
 from functools import cached_property
 
 from py4j.protocol import Py4JError
 from pyspark.sql import DataFrame, SparkSession
 
+from ..core.config import MAX_MENTION_TOKENS
 from ..operators.canonicalize import aggregate_edges  # noqa: F401 -- importable here for perfbench
 from ..operators.canonicalize import aggregate_flagged_edges, canonicalize_node_stats
 from ..operators.extraction import extract_all_df, mentions_view, triples_view
@@ -66,67 +68,82 @@ class KGResult:
         self.unified.unpersist()
 
 
-# per-python-worker cache for file-backed dictionaries: (path, mtime) -> index
-_FILE_INDEX_CACHE: dict = {}
+# the dictionary columns the index ships: matcher keys plus link candidates
+_SHIPPED = ["alias_key", "alias", "cui", "prior"]
+# where the driver writes the shipped dictionary files, one per content digest
+_SHIP_DIR = os.path.join(tempfile.gettempdir(), "kg_aliases")
+# per-Python-worker cache of the last dictionary read: (digest, AliasIndex)
+_WORKER_INDEX: list = [None]
 
 
-class FileBackedAliasIndex:
-    """Escape hatch for dictionaries too large to route through the driver:
-    the dictionary's four columns are written to a parquet side-file by
-    Spark executors (never collected), and each PYTHON WORKER lazily builds
-    the AliasIndex, keys and candidates, from that file on first `.value`
-    access, caching it per (path, mtime). Pickles as just the path, so task
-    closures stay tiny. Same `.value` interface as a broadcast."""
+class ShippedAliases:
+    """A shipped dictionary, named by its content digest. The digest also
+    names the Arrow file `SparkContext.addFile` distributed. Pickles as the
+    digest alone, so task closures stay tiny. `.value` is the AliasIndex:
+    each Python worker memory-maps the file and builds it once per digest."""
 
-    __slots__ = ("path",)
+    __slots__ = ("digest",)
 
-    def __init__(self, path: str):
-        self.path = path
+    def __init__(self, digest: str):
+        self.digest = digest
 
     @property
-    def digest(self) -> str:
-        """The dictionary's content digest: the spill directory's name."""
-        return os.path.basename(self.path.rstrip(os.sep))
+    def file_name(self) -> str:
+        return f"aliases-{self.digest}.arrow"
 
     @property
     def value(self):
-        from ..core.patterns import AliasIndex
+        hit = _WORKER_INDEX[0]
+        if hit is None or hit[0] != self.digest:
+            import pyarrow as pa
+            from pyspark import SparkFiles
 
-        key = (self.path, os.stat(self.path).st_mtime_ns)
-        hit = _FILE_INDEX_CACHE.get(key)
-        if hit is None:
-            import pyarrow.parquet as pq
+            from ..core.patterns import AliasIndex
 
-            # path may be a single file or a multi-part parquet directory
-            # (pyarrow reads both); parts are read in one dataset scan
-            cols = [c.to_pylist() for c in pq.read_table(self.path, columns=_SHIPPED).columns]
-            hit = AliasIndex(frozenset(cols[0]), candidates=cols)
-            _FILE_INDEX_CACHE.clear()
-            _FILE_INDEX_CACHE[key] = hit
-        return hit
+            with pa.memory_map(SparkFiles.get(self.file_name)) as f:
+                cols = [c.to_pylist() for c in pa.ipc.open_file(f).read_all().columns]
+            hit = _WORKER_INDEX[0] = (self.digest, AliasIndex(frozenset(cols[0]), candidates=cols))
+        return hit[1]
 
 
-# above this many distinct keys, stop collecting the dictionary to the driver
-MAX_BROADCAST_KEYS = 20_000_000
-# the dictionary columns the index ships: matcher keys plus link candidates
-_SHIPPED = ["alias_key", "alias", "cui", "prior"]
-
-
-def _ship_index(spark: SparkSession, rows):
-    """Broadcast an AliasIndex over already-collected dictionary rows
-    (`_SHIPPED` columns). The handle's `digest` is a sha256 over the sorted
-    rows, computed here from the rows the driver already holds."""
+def _ship(spark: SparkSession, proj: DataFrame) -> ShippedAliases:
+    """Collect the `_SHIPPED` rows, name them by content, write them once as
+    an Arrow file sorted by all four columns, and add that file to the
+    SparkContext once."""
     import hashlib
+    import warnings
 
-    from ..core.patterns import AliasIndex
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_type
 
-    rows = [tuple(r) for r in rows]
-    cols = tuple(zip(*rows)) or ((),) * len(_SHIPPED)
-    idx = AliasIndex(frozenset(cols[0]), candidates=cols)
-    handle = spark.sparkContext.broadcast(idx)
-    handle.digest = "sha256-" + hashlib.sha256(
+    rows = [tuple(r) for r in proj.collect()]
+    handle = ShippedAliases("sha256-" + hashlib.sha256(
         "\n".join(sorted(map(repr, rows))).encode()
-    ).hexdigest()
+    ).hexdigest())
+    cols = tuple(zip(*rows)) or ((),) * len(_SHIPPED)
+    # the matcher never probes n-grams longer than MAX_MENTION_TOKENS: say so
+    # here, where the user sees it, not in every worker that builds the index
+    unreachable = {k for k in cols[0] if k.count(" ") >= MAX_MENTION_TOKENS}
+    if unreachable:
+        warnings.warn(
+            f"{len(unreachable)} alias key(s) longer than "
+            f"MAX_MENTION_TOKENS={MAX_MENTION_TOKENS} tokens are unreachable by "
+            "the matcher; raise core.config.MAX_MENTION_TOKENS to cover them"
+        )
+    path = os.path.join(_SHIP_DIR, handle.file_name)
+    if not os.path.exists(path):
+        table = pa.table([pa.array(list(c), to_arrow_type(f.dataType))
+                          for c, f in zip(cols, proj.schema)], names=_SHIPPED)
+        os.makedirs(_SHIP_DIR, exist_ok=True)
+        # renamed into place whole: a crashed write leaves no file that the
+        # exists() check above would take for the dictionary
+        tmp = f"{path}.{os.getpid()}.tmp"
+        with pa.OSFile(tmp, "wb") as sink, pa.ipc.new_file(sink, table.schema) as out:
+            out.write_table(table.sort_by([(c, "ascending") for c in _SHIPPED]))
+        os.replace(tmp, path)
+    sc = spark.sparkContext
+    if handle.file_name not in {f.rsplit("/", 1)[-1] for f in sc.listFiles}:
+        sc.addFile(path)
     return handle
 
 
@@ -155,132 +172,62 @@ def _files_identity(proj: DataFrame):
 
 # the last file-backed dictionary shipped in this process, as (identity,
 # shipped projection, handle): one entry, as each Python worker keeps one
-# built index (_PA_VOCAB_CACHE, _FILE_INDEX_CACHE)
+# built index (_WORKER_INDEX, _PA_VOCAB_CACHE)
 _LAST_SHIP: list = [None]
 
 
-def broadcast_alias_keys(
-    spark: SparkSession,
-    aliases: DataFrame,
-    max_broadcast_keys: int = MAX_BROADCAST_KEYS,
-    spill_dir: str | None = None,
-):
-    """Ship the alias dictionary to executors once as an AliasIndex: the
-    first-token index the matcher probes (two sets per token instead of
-    joining n-grams) and the (alias_key, alias, cui, prior) rows that the
-    extraction and question passes and `candidate_table` look candidates up
-    in, so linking reads no dictionary table of its own. Rows with a null
-    alias_key link nothing and are dropped.
+def broadcast_alias_keys(spark: SparkSession, aliases: DataFrame) -> ShippedAliases:
+    """Ship the alias dictionary to executors once: its (alias_key, alias,
+    cui, prior) rows, from which each Python worker builds the AliasIndex,
+    the first-token index the matcher probes (two sets per token instead of
+    joining n-grams) and the rows that the extraction and question passes
+    and `candidate_table` look candidates up in, so linking reads no
+    dictionary table of its own. Rows with a null alias_key link nothing
+    and are dropped.
 
-    Cost: the broadcast carries three more columns per alias than a
-    keys-only index, an estimated ~100 pickled bytes per alias, so about
-    1.6 GB at UMLS scale (~16M aliases), broadcast once per job, or once
-    per session for a long-lived caller (memo below). No dictionary of
-    that size has been run, so the regime is unmeasured.
-    Beyond `max_broadcast_keys` distinct keys the dictionary is not
-    broadcast: its rows are spilled to a parquet side-file
-    (executor-written) and workers build the index themselves
-    (FileBackedAliasIndex). Only a dictionary already held by the driver (a
-    LocalRelation) is collected before the count decides. On a real cluster
-    pass `spill_dir` on SHARED storage (HDFS/S3 fuse mount); the default
-    tempdir is correct only for local mode.
+    The driver collects the rows (no Spark job for a dictionary it already
+    holds, a LocalRelation; one job otherwise), names them by a sha256 over
+    the sorted rows, writes them once as `aliases-<digest>.arrow` under the
+    temp dir and adds that file to the SparkContext (`addFile`, no job).
+    Executors fetch it from the driver, so a cluster needs no shared
+    storage; each Python worker memory-maps it and builds the index once
+    per digest (`ShippedAliases.value`). A key longer than
+    MAX_MENTION_TOKENS tokens warns here, once per ship. Cost: every row
+    passes through the driver, as in the reference, which held its
+    dictionaries in driver RAM. No dictionary of UMLS size (~16M aliases)
+    has been run.
 
     Memo: the last file-backed dictionary shipped is kept with its handle,
     for the long-lived caller that re-reads its dictionary per request so
     that a rewrite is picked up (`tools/kg_query.py serve`). A repeat ship
     of the unchanged dictionary in the same SparkContext starts no Spark
-    job, builds and broadcasts nothing, and the Python workers keep the
-    index they built from it. Its identity, computed without a Spark job:
-    the SparkContext's applicationId and start time, the shipped
-    projection's semanticHash (confirmed by sameSemantics, so a `withColumn`
-    makes another dictionary), the sorted (path, length, modification time)
-    of the files listed when the DataFrame was created, `max_broadcast_keys`
-    and `spill_dir`. Shipping another dictionary replaces the entry. A plan
-    with any other leaf is not memoized (a LocalRelation ships with no job
-    anyway). A same-path rewrite that keeps every file's length and
-    modification time is not seen, as with Spark's own file-listing cache.
-    The handle is shared by every caller in the session: do not destroy it.
-    A one-shot caller (build_kg, ResumableKGRun.run, `kg_query ask`) ships
-    once and gains nothing from it.
+    job and returns the same handle, and the Python workers keep the index
+    they built from it. Its identity, computed without a Spark job: the
+    SparkContext's applicationId and start time, the shipped projection's
+    semanticHash (confirmed by sameSemantics, so a `withColumn` makes
+    another dictionary) and the sorted (path, length, modification time) of
+    the files listed when the DataFrame was created. Shipping another
+    dictionary replaces the entry. A plan with any other leaf is not
+    memoized (a LocalRelation ships with no job anyway). A same-path
+    rewrite that keeps every file's length and modification time is not
+    seen, as with Spark's own file-listing cache. A one-shot caller
+    (build_kg, ResumableKGRun.run, `kg_query ask`) ships once and gains
+    nothing from it.
 
     The returned handle's `digest` names the dictionary's content (a resume
-    compares it, plans.checkpoint); computing it starts no Spark job."""
+    compares it, plans.checkpoint)."""
     proj = aliases.select(*_SHIPPED).where("alias_key IS NOT NULL")
-    # LocalRelation fast path (r6): a dictionary built from driver-resident
-    # literals (VALUES / parallelized local data the optimizer folded) never
-    # needs the cluster — collect() executes driver-side with zero Spark
-    # jobs, where the probe below costs at least one. The rows already live
-    # in driver memory, so collecting them is not a new driver-size risk;
-    # past max_broadcast_keys distinct keys they spill like any dictionary.
-    opt = proj._jdf.queryExecution().optimizedPlan()
-    if opt.getClass().getSimpleName() == "LocalRelation":
-        rows = proj.collect()
-        if len({r[0] for r in rows}) > max_broadcast_keys:
-            return _spill_index(proj, spill_dir)
-        return _ship_index(spark, rows)
-
     files = _files_identity(proj)
     if files is None:
-        return _probe_and_ship(spark, proj, max_broadcast_keys, spill_dir)
+        return _ship(spark, proj)
     sc = spark.sparkContext
-    key = (sc.applicationId, sc.startTime, proj.semanticHash(), files,
-           max_broadcast_keys, spill_dir)
+    key = (sc.applicationId, sc.startTime, proj.semanticHash(), files)
     last = _LAST_SHIP[0]
-    if last is not None and last[0] == key and proj.sameSemantics(last[1]) and (
-        # a spill whose directory is gone ships again
-        not isinstance(last[2], FileBackedAliasIndex)
-        or os.path.exists(os.path.join(last[2].path, "_SUCCESS"))
-    ):
+    if last is not None and last[0] == key and proj.sameSemantics(last[1]):
         return last[2]
-    handle = _probe_and_ship(spark, proj, max_broadcast_keys, spill_dir)
+    handle = _ship(spark, proj)
     _LAST_SHIP[0] = (key, proj, handle)
     return handle
-
-
-def _probe_and_ship(spark: SparkSession, proj: DataFrame, max_broadcast_keys: int,
-                    spill_dir: str | None):
-    """Broadcast (or spill) a dictionary the driver does not hold."""
-    # size probe: one task reads at most 1M+1 RAW rows, so a dictionary of
-    # up to 1M rows (~tens of MB — harmless), the overwhelmingly common case,
-    # is detected and fetched in one Spark job. Only when the probe
-    # overflows does a distributed distinct count of alias_key decide
-    # broadcast-vs-spill, so the driver never receives
-    # max_broadcast_keys(=20M) rows just to notice there are too many of
-    # them (r2 advice). Cost: a dictionary of more than 1M rows but at most
-    # max_broadcast_keys distinct keys overflows the raw probe and takes
-    # the probe, the distinct count and a collect of every row.
-    probe_cap = min(max_broadcast_keys, 1_000_000)
-    probe = proj.coalesce(1).limit(probe_cap + 1).collect()
-    if len(probe) <= probe_cap:
-        return _ship_index(spark, probe)
-    if proj.select("alias_key").distinct().count() > max_broadcast_keys:
-        return _spill_index(proj, spill_dir)
-    return _ship_index(spark, proj.collect())
-
-
-def _spill_index(proj: DataFrame, spill_dir: str | None) -> FileBackedAliasIndex:
-    """Write the `_SHIPPED` dictionary rows to a content-addressed parquet
-    directory under `spill_dir` (executor-written) and return its index."""
-    import tempfile
-
-    from pyspark.sql import functions as F
-
-    base = spill_dir or os.path.join(tempfile.gettempdir(), "kg_alias_spill")
-    os.makedirs(base, exist_ok=True)
-    # content-addressed spill dir: (row count, order-insensitive digest of
-    # all four columns) — rerunning with the same dictionary reuses the
-    # existing spill, and a changed prior or cui gets a new one
-    # bit_xor: order-insensitive and can't overflow (ANSI mode)
-    n_rows, digest = proj.agg(
-        F.count(F.lit(1)), F.expr(f"bit_xor(xxhash64({', '.join(_SHIPPED)}))")
-    ).first()
-    out_dir = os.path.join(base, f"aliases-{n_rows}-{(digest or 0) & (1 << 64) - 1:016x}")
-    if not os.path.exists(os.path.join(out_dir, "_SUCCESS")):
-        # multi-part write (no coalesce(1) single-task funnel); the reader
-        # scans the directory as one dataset
-        proj.write.mode("overwrite").parquet(out_dir)
-    return FileBackedAliasIndex(out_dir)
-
 
 # kg_edges: the triple rows of the linked pass whose two endpoints linked
 EDGE_RULE = "kind = 't' AND subj_cui IS NOT NULL AND obj_cui IS NOT NULL"
@@ -354,13 +301,13 @@ def build_kg(
     tests/test_bucketing.py) — the right storage layout at 100 TB, where
     one bucketed write amortizes the shuffle across every downstream job.
 
-    `alias_index`: a prebuilt broadcast_alias_keys() result. It carries the
-    matcher's keys and the link candidates, so linking reads no dictionary
-    table: `aliases` only types the cui (and prior) columns. Steady-state
-    callers (bench, the checkpointed and streaming runs) hoist it; the
-    default ships it here, and a repeat build against the unchanged
-    file-backed dictionary last shipped gets its handle again
-    (broadcast_alias_keys), so it starts no Spark job for it.
+    `alias_index`: a prebuilt broadcast_alias_keys() handle, the shipped
+    Arrow file of the matcher's keys and the link candidates, so linking
+    reads no dictionary table: `aliases` only types the cui (and prior)
+    columns. Steady-state callers (bench, the checkpointed and streaming
+    runs) hoist it; the default ships it here, and a repeat build against
+    the unchanged parquet dictionary last shipped gets its handle again
+    (broadcast_alias_keys' memo), so it starts no Spark job for it.
 
     Driver-side plan-construction cost: one warm lazy build_kg call with a
     hoisted alias_index is 274 py4j round-trips; their median of 15 took

@@ -1,10 +1,12 @@
 """Input readers and the bucketed-table writer.
 
-`read_transcripts` / `read_aliases` take a parquet path (a `.parquet` file
-or a directory) or a catalog table name: `spark.read.table(name)` is how an
-Iceberg input table comes in when the session has a catalog attached. The
-run modes write their own outputs as parquet; `write_bucketed` lays out a
-conv_id-bucketed input table.
+`read_transcripts` / `read_aliases` take a parquet path or a catalog table
+name. A path is anything with a `/` (so every URI: `s3://...`,
+`file:///...`) or a `.parquet` suffix. Anything else is a table name, read
+with `spark.read.table(name)`, which is how an Iceberg input table comes in
+when the session has a catalog attached. The run modes write their own
+outputs as parquet; `write_bucketed` lays out a conv_id-bucketed input
+table.
 """
 
 from __future__ import annotations
@@ -36,18 +38,20 @@ ALIASES_SCHEMA = T.StructType(
 )
 
 
+def _read(spark: SparkSession, path: str, schema: T.StructType) -> DataFrame:
+    if "/" in path or path.endswith(".parquet"):
+        return spark.read.schema(schema).parquet(path)
+    return spark.read.table(path)
+
+
 def read_transcripts(spark: SparkSession, path: str) -> DataFrame:
     """Read the transcripts input table with its contract schema
     (conv_id, turn_idx, role, text, tool, ts) — BASELINE.json input_hint."""
-    if path.endswith(".parquet") or os.path.isdir(path):
-        return spark.read.schema(TRANSCRIPTS_SCHEMA).parquet(path)
-    return spark.read.table(path)
+    return _read(spark, path, TRANSCRIPTS_SCHEMA)
 
 
 def read_aliases(spark: SparkSession, path: str) -> DataFrame:
-    if path.endswith(".parquet") or os.path.isdir(path):
-        return spark.read.schema(ALIASES_SCHEMA).parquet(path)
-    return spark.read.table(path)
+    return _read(spark, path, ALIASES_SCHEMA)
 
 
 def write_bucketed(

@@ -80,8 +80,8 @@ def values_df(spark: SparkSession, rows, schema: str) -> DataFrame:
 
 
 def synth_aliases(spark: SparkSession) -> DataFrame:
-    """The dictionary as a LocalRelation (see values_df) so
-    broadcast_alias_keys's fast path collects it with zero Spark jobs."""
+    """The dictionary as a LocalRelation (see values_df), so
+    broadcast_alias_keys collects it with zero Spark jobs."""
     rows = [(normalize_alias(a), a, cui, p) for a, cui, p in ALIAS_SPEC]
     return values_df(
         spark, rows, "alias_key string, alias string, cui string, prior double"

@@ -464,3 +464,23 @@ def test_crash_at_a_commit_point_then_resume_equals_uninterrupted(
     got = _tables(spark, out)
     for table, want in uninterrupted.items():
         pd.testing.assert_frame_equal(got[table], want, obj=table)
+
+
+def test_resume_with_the_same_rows_held_by_the_driver(spark, inputs, uninterrupted, tmp_path):
+    """The dictionary's digest names its rows, not how they were read: a run
+    with the dictionary read from parquet (collected by a Spark job),
+    resumed with the same rows as a LocalRelation (collected with none),
+    does not raise, and finalize writes the uninterrupted run's tables."""
+    from knowledge_graph_integration_rag_biomedical_qna_spark.sources.synth import values_df
+
+    transcripts, aliases = inputs
+    driver_held = values_df(spark, [tuple(r) for r in aliases.collect()],
+                            "alias_key string, alias string, cui string, prior double")
+    out = str(tmp_path / "crashed")
+    run = ResumableKGRun(spark, out, buckets=8, group_size=2)
+    assert run.run(transcripts, aliases, max_groups=1)["buckets_done"] == [0, 1]
+    assert run.run(transcripts, driver_held)["complete"]
+    run.finalize()
+    got = _tables(spark, out)
+    for table, want in uninterrupted.items():
+        pd.testing.assert_frame_equal(got[table], want, obj=table)

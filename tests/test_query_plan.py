@@ -116,20 +116,19 @@ def _dictionary_copy(fixture_dir, tmp_path) -> str:
 _SHIPS = itertools.count()
 
 
-def _ship(spark, path: str, **kw):
+def _ship(spark, path: str):
     """Read `path` (its schema job runs outside the count) and ship it:
     (handle, ids of the jobs the ship started)."""
     aliases = spark.read.parquet(path)
     with job_group(spark, f"ship-{next(_SHIPS)}") as jobs:
-        handle = broadcast_alias_keys(spark, aliases, **kw)
+        handle = broadcast_alias_keys(spark, aliases)
     return handle, jobs
 
 
 def test_small_parquet_dictionary_ships_in_one_job(spark, fixture_dir, tmp_path):
-    """A parquet dictionary under the probe cap is read and shipped in one
-    Spark job: one task reads its raw rows, and the driver dedups the keys.
-    A second ship of the unchanged files starts no job and returns the
-    same handle."""
+    """A parquet dictionary is read and shipped in one Spark job, its
+    collect. A second ship of the unchanged files starts no job and returns
+    the same handle."""
     path = _dictionary_copy(fixture_dir, tmp_path)
     bc, jobs = _ship(spark, path)
     assert len(jobs) == 1, jobs
@@ -186,26 +185,31 @@ def test_an_in_place_rewrite_of_another_size_misses(spark, fixture_dir, tmp_path
     assert jobs and again is not bc and again.digest != bc.digest
 
 
-def test_spill_arguments_key_the_memo(spark, fixture_dir, tmp_path):
-    """`max_broadcast_keys` and `spill_dir` are part of the dictionary's
-    identity: a spilling ship gets its own handle, a repeat of it hits, and
-    a spill directory that is gone or another `spill_dir` ships again."""
-    from knowledge_graph_integration_rag_biomedical_qna_spark.plans.pipeline import (
-        FileBackedAliasIndex,
+def test_a_memo_hit_needs_no_file_on_the_driver(spark, fixture_dir, tmp_path):
+    """The memo keys on the dictionary alone. Executors read the copy the
+    SparkContext distributed, so a repeat ship hits even after the driver's
+    temp file is gone, and a pass over the handle still detects the same
+    mentions. A later miss of the same content writes the file again under
+    the same digest."""
+    from pyspark.sql import functions as F
+
+    from knowledge_graph_integration_rag_biomedical_qna_spark.operators.extraction import (
+        detect_mentions_df,
     )
+    from knowledge_graph_integration_rag_biomedical_qna_spark.plans.pipeline import _SHIP_DIR
 
     path = _dictionary_copy(fixture_dir, tmp_path)
+    turns = spark.read.parquet(f"{fixture_dir}/transcripts.parquet").limit(100)
     bc, _ = _ship(spark, path)
-    spill = dict(max_broadcast_keys=3, spill_dir=str(tmp_path / "spill"))
-    fb, _ = _ship(spark, path, **spill)
-    assert isinstance(fb, FileBackedAliasIndex) and fb is not bc
-    again, jobs = _ship(spark, path, **spill)
-    assert jobs == [] and again is fb
-    shutil.rmtree(fb.path)
-    again = _ship(spark, path, **spill)[0]
-    assert again is not fb and os.path.exists(os.path.join(again.path, "_SUCCESS"))
-    other, _ = _ship(spark, path, max_broadcast_keys=3, spill_dir=str(tmp_path / "spill2"))
-    assert other is not again and other.digest == fb.digest
+    want = sorted(map(tuple, detect_mentions_df(turns, bc).collect()))
+    os.remove(os.path.join(_SHIP_DIR, bc.file_name))
+    again, jobs = _ship(spark, path)
+    assert jobs == [] and again is bc
+    assert sorted(map(tuple, detect_mentions_df(turns, again).collect())) == want
+    broadcast_alias_keys(spark, spark.read.parquet(path).withColumn("prior", F.col("prior") / 2))
+    again, jobs = _ship(spark, path)
+    assert jobs and again is not bc and again.digest == bc.digest
+    assert os.path.exists(os.path.join(_SHIP_DIR, bc.file_name))
 
 
 def test_a_new_spark_context_ships_again(spark, fixture_dir, tmp_path, monkeypatch):
@@ -236,12 +240,12 @@ def test_build_kg_after_a_memo_hit_writes_the_same_tables(spark, fixture_dir, tm
         assert rows("first", name) == rows("second", name), name
 
 
-def test_dictionary_probe_overflow_still_broadcasts(spark, tmp_path):
-    """8 raw rows over 4 distinct keys overflow a 5-key raw probe; the
-    distinct count then fits, so the dictionary still ships as a broadcast
-    index of its 4 keys, not a spill, carrying both rows of every key as
-    link candidates."""
-    from pyspark.broadcast import Broadcast
+def test_duplicate_keys_ship_every_row_as_a_candidate(spark, tmp_path):
+    """8 rows over 4 distinct keys ship in one Spark job as an index of the
+    4 keys, carrying both rows of every key as link candidates. The shipped
+    file holds the 8 rows sorted by (alias_key, alias, cui, prior)."""
+    import pyarrow as pa
+    from pyspark import SparkFiles
 
     keys = ["aspirin", "heart attack", "ibuprofen", "type 2 diabetes"]
     rows = [(k, k.upper(), f"C{i}", i / 10) for i, k in enumerate(keys * 2)]
@@ -249,20 +253,20 @@ def test_dictionary_probe_overflow_still_broadcasts(spark, tmp_path):
     spark.createDataFrame(
         rows, "alias_key string, alias string, cui string, prior double"
     ).write.parquet(path)
-    spill = tmp_path / "spill"
-    bc = broadcast_alias_keys(spark, spark.read.parquet(path),
-                              max_broadcast_keys=5, spill_dir=str(spill))
-    assert isinstance(bc, Broadcast)
+    bc, jobs = _ship(spark, path)
+    assert len(jobs) == 1, jobs
     assert _index_keys(bc.value) == set(keys)
     assert {k: sorted(v) for k, v in bc.value.candidates_by_key().items()} == {
         k: sorted((c, a, p) for kk, a, c, p in rows if kk == k) for k in keys}
-    assert not spill.exists()
+    with pa.memory_map(SparkFiles.get(bc.file_name)) as f:
+        shipped = pa.ipc.open_file(f).read_all()
+    assert list(zip(*(c.to_pylist() for c in shipped.columns))) == sorted(rows)
 
 
 def test_build_kg_job_count(spark, fixture_inputs, tmp_path):
     """A persisted build_kg plus its three table writes takes at most 7
     Spark jobs at local[4]: the warm-up build shipped the dictionary, so
-    this build's ship hits the memo and starts no probe; linking runs
+    this build's ship hits the memo and starts no job; linking runs
     inside the cached extraction pass, so nothing is collected or broadcast
     and no vocabulary table is cached, and kg_edge_stats is one exchange
     (n_convs from the pass's conv_first flags, no distinct-count job)."""
@@ -275,7 +279,7 @@ def test_build_kg_job_count(spark, fixture_inputs, tmp_path):
 def test_checkpoint_group_job_count(spark, fixture_inputs, tmp_path):
     """A checkpoint group commits in at most 2 Spark jobs, its one unit
     write: the pass is not cached, and its lineage counts ride the write as
-    Observations. Four groups plus the dictionary probe. finalize() writes
+    Observations. Four groups plus the dictionary's collect. finalize() writes
     kg_edges, kg_nodes, kg_edge_stats and lineage in at most 6 jobs."""
     from knowledge_graph_integration_rag_biomedical_qna_spark.plans.checkpoint import (
         ResumableKGRun,

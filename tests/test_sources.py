@@ -1,83 +1,105 @@
-"""Source tests: the input readers, dictionary shipping (broadcast and
-spilled) and driver-local input tables."""
+"""Source tests: the input readers, dictionary shipping and driver-local
+input tables."""
 
 from __future__ import annotations
 
+import os
 
-def test_alias_broadcast_file_backed_escape_hatch(spark, fixture_dir, tmp_path):
-    """Above max_broadcast_keys the dictionary never rides the driver: the
-    index is built per-worker from an executor-written parquet side-file, and
-    the extraction output is IDENTICAL to the broadcast path."""
+import pytest
+
+ALIASES_DDL = "alias_key string, alias string, cui string, prior double"
+
+
+def _driver_held(spark, aliases):
+    """The same rows as a LocalRelation, which the driver already holds."""
+    from knowledge_graph_integration_rag_biomedical_qna_spark.sources.synth import values_df
+
+    return values_df(spark, [tuple(r) for r in aliases.collect()], ALIASES_DDL)
+
+
+def test_a_dictionary_ships_the_same_from_a_file_or_the_driver(spark, fixture_dir):
+    """A parquet dictionary (collected by a Spark job) and the same rows
+    held by the driver (collected with none) ship under one digest, and the
+    extraction output over the two handles is IDENTICAL."""
+    import pandas as pd
+
     from knowledge_graph_integration_rag_biomedical_qna_spark.operators.extraction import (
         extract_all_df,
     )
     from knowledge_graph_integration_rag_biomedical_qna_spark.plans.pipeline import (
-        FileBackedAliasIndex,
         broadcast_alias_keys,
     )
 
     transcripts = spark.read.parquet(f"{fixture_dir}/transcripts.parquet").limit(200)
     aliases = spark.read.parquet(f"{fixture_dir}/concept_aliases.parquet")
 
-    bc = broadcast_alias_keys(spark, aliases)
-    fb = broadcast_alias_keys(
-        spark, aliases, max_broadcast_keys=3, spill_dir=str(tmp_path)
-    )
-    assert isinstance(fb, FileBackedAliasIndex)
+    by_file = broadcast_alias_keys(spark, aliases)
+    by_driver = broadcast_alias_keys(spark, _driver_held(spark, aliases))
+    assert by_driver is not by_file and by_driver.digest == by_file.digest
 
     cols = ["conv_id", "turn_idx", "sent_idx", "kind", "mention_idx",
             "surface", "alias_key", "subj_key", "pred", "obj_key"]
-    a = extract_all_df(transcripts, bc).select(cols).toPandas()
-    b = extract_all_df(transcripts, fb).select(cols).toPandas()
+    a = extract_all_df(transcripts, by_file).select(cols).toPandas()
+    b = extract_all_df(transcripts, by_driver).select(cols).toPandas()
     a = a.sort_values(cols).reset_index(drop=True)
     b = b.sort_values(cols).reset_index(drop=True)
-    import pandas as pd
-
     pd.testing.assert_frame_equal(a, b)
 
 
-def test_spilled_dictionary_ships_the_same_candidates(spark, fixture_dir, tmp_path):
-    """The spill file carries the whole dictionary: a FileBackedAliasIndex
-    yields the same per-key candidates, and so the same candidate table, as
-    the broadcast index. Its directory is named by all four columns, so
-    changing one prior spills to a new directory instead of reusing a stale
-    one."""
+def test_fixture_dictionary_digest_is_unchanged(spark, fixture_dir):
+    """The fixture dictionary's digest is the one the broadcast shipping
+    computed, so done markers written before the Arrow-file shipping still
+    name this dictionary and their output directories still resume."""
+    from knowledge_graph_integration_rag_biomedical_qna_spark.plans.pipeline import (
+        broadcast_alias_keys,
+    )
+
+    aliases = spark.read.parquet(f"{fixture_dir}/concept_aliases.parquet")
+    assert broadcast_alias_keys(spark, aliases).digest == (
+        "sha256-bafd721d40f9320489ccdb1bddfc595805aaf4cb4de4448d4517e39536c42c2f")
+
+
+def test_shipped_dictionary_carries_every_candidate(spark, fixture_dir):
+    """The shipped file carries the whole dictionary: its index yields every
+    dictionary row as a candidate of its key, and so the same candidate
+    table over two ships. The file is named by all four columns, so
+    changing one prior ships a new digest in a new file instead of reusing
+    a stale one, and the unchanged dictionary ships to its old file."""
     from pyspark.sql import functions as F
 
     from knowledge_graph_integration_rag_biomedical_qna_spark.operators.linking import (
         candidate_table,
     )
     from knowledge_graph_integration_rag_biomedical_qna_spark.plans.pipeline import (
-        FileBackedAliasIndex,
+        _SHIP_DIR,
         broadcast_alias_keys,
     )
 
     aliases = spark.read.parquet(f"{fixture_dir}/concept_aliases.parquet")
     bc = broadcast_alias_keys(spark, aliases)
-    fb = broadcast_alias_keys(spark, aliases, max_broadcast_keys=3, spill_dir=str(tmp_path))
-    assert isinstance(fb, FileBackedAliasIndex)
+    by_driver = broadcast_alias_keys(spark, _driver_held(spark, aliases))
 
-    def by_key(index):
-        return {k: sorted(v) for k, v in index.value.candidates_by_key().items()}
-
-    assert by_key(fb) == by_key(bc)
+    want: dict = {}
+    for k, a, c, p in aliases.collect():
+        want.setdefault(k, []).append((c, a, p))
+    assert {k: sorted(v) for k, v in bc.value.candidates_by_key().items()} == {
+        k: sorted(v) for k, v in want.items()}
     surfaces = aliases.select("alias_key", F.col("alias").alias("surface"))
 
     def cands(index):
         return sorted(map(tuple, candidate_table(surfaces, aliases, alias_index=index).collect()))
 
-    assert cands(fb) == cands(bc)
+    assert cands(by_driver) == cands(bc)
 
     first = aliases.orderBy("alias_key", "cui", "alias").first()
     changed = aliases.withColumn("prior", F.when(
         (F.col("alias_key") == first["alias_key"]) & (F.col("cui") == first["cui"])
         & (F.col("alias") == first["alias"]), F.col("prior") + 0.01,
     ).otherwise(F.col("prior")))
-    fb2 = broadcast_alias_keys(spark, changed, max_broadcast_keys=3, spill_dir=str(tmp_path))
-    assert fb2.path != fb.path
-    assert fb2.digest != fb.digest
-    assert broadcast_alias_keys(
-        spark, aliases, max_broadcast_keys=3, spill_dir=str(tmp_path)).path == fb.path
+    bc2 = broadcast_alias_keys(spark, changed)
+    assert bc2.digest != bc.digest and bc2.file_name != bc.file_name
+    assert os.path.exists(os.path.join(_SHIP_DIR, bc2.file_name))
+    assert broadcast_alias_keys(spark, aliases).file_name == bc.file_name
 
 
 def test_values_df_matches_createdataframe(spark):
@@ -140,36 +162,64 @@ def test_broadcast_alias_keys_local_fast_path(spark):
     assert bc.value.multi_first == bc2.value.multi_first
 
 
-def test_local_dictionary_over_the_key_cap_spills(spark, tmp_path):
-    """The LocalRelation fast path honours max_broadcast_keys: a driver-held
-    dictionary with more distinct keys than the cap spills to a
-    FileBackedAliasIndex with the same keys and candidates as the
-    broadcast index."""
+def test_same_content_ships_one_file_added_once(spark, monkeypatch):
+    """Ships of one dictionary's rows, held by the driver or repartitioned
+    (collected by a job), share one digest and one file under the ship
+    directory, which is added to the SparkContext once, and their indexes
+    hold the same keys and candidates."""
+    import uuid
+
+    from pyspark import SparkContext
+
     from knowledge_graph_integration_rag_biomedical_qna_spark.plans.pipeline import (
-        FileBackedAliasIndex,
+        _SHIP_DIR,
         broadcast_alias_keys,
     )
-    from knowledge_graph_integration_rag_biomedical_qna_spark.sources.synth import (
-        synth_aliases,
+    from knowledge_graph_integration_rag_biomedical_qna_spark.sources.synth import values_df
+
+    added = []
+    add = SparkContext.addFile
+    monkeypatch.setattr(SparkContext, "addFile",
+                        lambda sc, path, *a: added.append(path) or add(sc, path, *a))
+    cui = f"C-{uuid.uuid4().hex}"  # content no earlier ship added
+    rows = [("aspirin", "Aspirin", cui, 0.9), ("heart attack", "heart attack", cui, 0.4)]
+    handles = [broadcast_alias_keys(spark, values_df(spark, rows, ALIASES_DDL)),
+               broadcast_alias_keys(spark, values_df(spark, rows, ALIASES_DDL)),
+               broadcast_alias_keys(spark, values_df(spark, rows, ALIASES_DDL).repartition(2))]
+    assert len({h.digest for h in handles}) == 1
+    name = handles[0].file_name
+    assert [n for n in os.listdir(_SHIP_DIR) if handles[0].digest in n] == [name]
+    assert [os.path.basename(p) for p in added] == [name]
+    assert len([f for f in spark.sparkContext.listFiles if f.endswith("/" + name)]) == 1
+    a, b = handles[0].value, handles[2].value
+    assert a.singles == b.singles and a.multi_first == b.multi_first
+    assert a.candidates_by_key() == b.candidates_by_key()
+
+
+def test_a_key_longer_than_the_matcher_reaches_warns_on_ship(spark):
+    """A key of more than MAX_MENTION_TOKENS tokens can never match. The
+    ship warns on the driver, where the user sees it, and the index leaves
+    the key out."""
+    from knowledge_graph_integration_rag_biomedical_qna_spark.plans.pipeline import (
+        broadcast_alias_keys,
     )
+    from knowledge_graph_integration_rag_biomedical_qna_spark.sources.synth import values_df
 
-    bc = broadcast_alias_keys(spark, synth_aliases(spark))
-    fb = broadcast_alias_keys(spark, synth_aliases(spark), max_broadcast_keys=1,
-                              spill_dir=str(tmp_path))
-    assert isinstance(fb, FileBackedAliasIndex)
-    assert fb.value.singles == bc.value.singles
-    assert fb.value.multi_first == bc.value.multi_first
-
-    def by_key(index):
-        return {k: sorted(v) for k, v in index.value.candidates_by_key().items()}
-
-    assert by_key(fb) == by_key(bc)
+    long_key = "one two three four five six seven eight nine"
+    rows = [("aspirin", "Aspirin", "C1", 0.9), (long_key, long_key.title(), "C2", 0.5)]
+    with pytest.warns(UserWarning, match="1 alias key.* longer than MAX_MENTION_TOKENS"):
+        index = broadcast_alias_keys(spark, values_df(spark, rows, ALIASES_DDL)).value
+    assert index.singles == {"aspirin"} and long_key not in str(index.multi_first)
 
 
-def test_readers_take_a_path_or_a_table_name(spark, fixture_dir):
+def test_readers_take_a_path_or_a_table_name(spark, fixture_dir, tmp_path):
     """read_transcripts / read_aliases read a parquet path with the contract
-    schema, and anything else as a catalog table name (how an Iceberg input
-    table comes in); both give the same rows."""
+    schema, a directory given as a `file://` URI too, and anything else as a
+    catalog table name (how an Iceberg input table comes in); all give the
+    same rows. A missing directory is a path that is not found, not a table
+    name."""
+    from pyspark.errors import AnalysisException
+
     from knowledge_graph_integration_rag_biomedical_qna_spark.sources.io import (
         ALIASES_SCHEMA,
         TRANSCRIPTS_SCHEMA,
@@ -177,13 +227,19 @@ def test_readers_take_a_path_or_a_table_name(spark, fixture_dir):
         read_transcripts,
     )
 
+    def same(a, b):
+        return a.exceptAll(b).isEmpty() and b.exceptAll(a).isEmpty()
+
     for read, name, schema in ((read_transcripts, "transcripts", TRANSCRIPTS_SCHEMA),
                                (read_aliases, "concept_aliases", ALIASES_SCHEMA)):
         by_path = read(spark, f"{fixture_dir}/{name}.parquet")
         assert by_path.schema.fieldNames() == schema.fieldNames()
+        by_path.write.parquet(str(tmp_path / name))
+        assert same(read(spark, (tmp_path / name).as_uri()), by_path)
+        with pytest.raises(AnalysisException, match="PATH_NOT_FOUND"):
+            read(spark, str(tmp_path / "missing" / name))
         by_path.createOrReplaceTempView(f"readers_{name}")
         try:
-            by_name = read(spark, f"readers_{name}")
-            assert by_name.exceptAll(by_path).isEmpty() and by_path.exceptAll(by_name).isEmpty()
+            assert same(read(spark, f"readers_{name}"), by_path)
         finally:
             spark.catalog.dropTempView(f"readers_{name}")

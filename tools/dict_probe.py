@@ -7,14 +7,16 @@ Writes `--aliases` synthetic aliases (1-3 token keys, two aliases per cui)
 as a 4-file parquet dictionary under a temp dir, then runs twice, each time
 over a fresh read of that dictionary:
 
-- `broadcast_alias_keys`: Spark jobs and driver wall time;
+- `broadcast_alias_keys`: Spark jobs, driver wall time and the size of
+  the Arrow file it ships;
 - one SQL task per core that times how long its Python worker takes to
   have the index ready (the broadcast value, `candidates_by_key` and the
   kernel's vocabulary arrays), with the worker's peak RSS;
 - one `link_questions` pass over 16 questions: Spark jobs and wall time.
 
-Prints one JSON object. On the repeat run the ship is expected to hit the
-session's memo (0 jobs) and the workers to keep the index they built.
+Prints one JSON object, with the driver's peak RSS (the Python process
+and its JVM) after both runs. On the repeat run the ship is expected to hit
+the session's memo (0 jobs) and the workers to keep the index they built.
 """
 
 from __future__ import annotations
@@ -96,6 +98,10 @@ def main() -> int:
     ap.add_argument("--master", default="local[4]")
     args = ap.parse_args()
 
+    import resource
+
+    from pyspark import SparkFiles
+
     from knowledge_graph_integration_rag_biomedical_qna_spark.plans.pipeline import (
         broadcast_alias_keys,
     )
@@ -131,9 +137,15 @@ def main() -> int:
                 index_ready(handle), "pid long, ready_s double, rss_mb long").collect()
             links, link = timed(
                 lambda: link_questions(spark, questions, aliases, handle).collect())
+            ship["file_mb"] = round(os.path.getsize(SparkFiles.get(handle.file_name)) / 2**20, 1)
             out[run] = {"ship": ship, "link": {**link, "rows": len(links)},
                         "workers": [w.asDict() for w in sorted(workers)]}
         out["same_handle"] = handle is broadcast_alias_keys(spark, read_aliases(spark, path))
+        with open(f"/proc/{spark._jvm.ProcessHandle.current().pid()}/status") as fh:
+            jvm_kb = next(int(ln.split()[1]) for ln in fh if ln.startswith("VmHWM:"))
+        out["driver_peak_rss_mb"] = {
+            "python": round(resource.getrusage(resource.RUSAGE_SELF).ru_maxrss / 1024),
+            "jvm": round(jvm_kb / 1024)}
         print(json.dumps(out))
         spark.stop()
     finally:
