@@ -10,16 +10,16 @@ Shuffle budget of the whole plan (the thing that decides 100 TB viability):
   1 shuffle   stage [6] kg_edge_stats groupBy(subj_cui, pred, obj_cui),
               counters only, map-side combined   [edge groups x tasks rows]
 
-Only the extraction is cached, and nothing is collected to the driver: each
-task links its own surfaces against the dictionary the matcher's index
-ships, so kg_edges is a filter of the cached pass (no join, no broadcast)
-and kg_nodes one vocabulary-sized exchange above it. kg_edge_stats counts
-n_convs from the pass's per-conversation `conv_first` flag, so no
-exchange is keyed by (edge, conv_id). Build plus the three writes: 7 Spark
-jobs on the construct_x5 benchmark.
+Only the extraction is stored (a serialized local checkpoint), and nothing
+is collected to the driver: each task links its own surfaces against the
+dictionary the matcher's index ships, so kg_edges is a filter of the stored
+pass (no join, no broadcast) and kg_nodes one vocabulary-sized exchange
+above it. kg_edge_stats counts n_convs from the pass's per-conversation
+`conv_first` flag, so no exchange is keyed by (edge, conv_id). Build plus
+the three writes: 6 Spark jobs and 30 tasks on the construct_x5 benchmark.
 
 Everything transcript-sized shuffles at most once and is read once, from
-the cached extraction. `build_kg` is the only composition of stages
+the stored extraction. `build_kg` is the only composition of stages
 [1]-[6]: the checkpointed runner (plans.checkpoint) calls it once per
 bucket group and the streaming ingest (streaming.ingest) once per
 micro-batch; the run modes differ only in their sinks.
@@ -27,12 +27,16 @@ micro-batch; the run modes differ only in their sinks.
 
 from __future__ import annotations
 
+import atexit
 import os
+import secrets
+import shutil
 import tempfile
 from dataclasses import dataclass
 from functools import cached_property
 
 from py4j.protocol import Py4JError
+from pyspark import StorageLevel
 from pyspark.sql import DataFrame, SparkSession
 
 from ..core.config import MAX_MENTION_TOKENS
@@ -65,15 +69,30 @@ class KGResult:
         return self._mentions_fn()
 
     def unpersist(self) -> None:
-        self.unified.unpersist()
+        """Drop the stored pass of a persisted build (a no-op otherwise):
+        the blocks belong to the checkpointed RDD that the pass's
+        `LogicalRDD` holds, which `DataFrame.unpersist` does not reach."""
+        plan = self.unified._jdf.queryExecution().analyzed()
+        if plan.getClass().getSimpleName() == "LogicalRDD":
+            plan.rdd().unpersist(False)
 
 
 # the dictionary columns the index ships: matcher keys plus link candidates
 _SHIPPED = ["alias_key", "alias", "cui", "prior"]
-# where the driver writes the shipped dictionary files, one per content digest
-_SHIP_DIR = os.path.join(tempfile.gettempdir(), "kg_aliases")
+# where the driver writes the shipped dictionary files, one per content
+# digest: a directory of this process's own, made by its first ship and
+# removed at interpreter exit
+_SHIP_DIR = os.path.join(tempfile.gettempdir(),
+                         f"kg_aliases-{os.getpid()}-{secrets.token_hex(4)}")
 # per-Python-worker cache of the last dictionary read: (digest, AliasIndex)
 _WORKER_INDEX: list = [None]
+
+
+def _remove_ship_dir() -> None:
+    shutil.rmtree(_SHIP_DIR, ignore_errors=True)
+
+
+atexit.register(_remove_ship_dir)
 
 
 class ShippedAliases:
@@ -134,7 +153,7 @@ def _ship(spark: SparkSession, proj: DataFrame) -> ShippedAliases:
     if not os.path.exists(path):
         table = pa.table([pa.array(list(c), to_arrow_type(f.dataType))
                           for c, f in zip(cols, proj.schema)], names=_SHIPPED)
-        os.makedirs(_SHIP_DIR, exist_ok=True)
+        os.makedirs(_SHIP_DIR, 0o700, exist_ok=True)
         # renamed into place whole: a crashed write leaves no file that the
         # exists() check above would take for the dictionary
         tmp = f"{path}.{os.getpid()}.tmp"
@@ -188,14 +207,14 @@ def broadcast_alias_keys(spark: SparkSession, aliases: DataFrame) -> ShippedAlia
     The driver collects the rows (no Spark job for a dictionary it already
     holds, a LocalRelation; one job otherwise), names them by a sha256 over
     the sorted rows, writes them once as `aliases-<digest>.arrow` under the
-    temp dir and adds that file to the SparkContext (`addFile`, no job).
-    Executors fetch it from the driver, so a cluster needs no shared
-    storage; each Python worker memory-maps it and builds the index once
-    per digest (`ShippedAliases.value`). A key longer than
-    MAX_MENTION_TOKENS tokens warns here, once per ship. Cost: every row
-    passes through the driver, as in the reference, which held its
-    dictionaries in driver RAM. No dictionary of UMLS size (~16M aliases)
-    has been run.
+    process's own temp directory (removed at interpreter exit) and adds
+    that file to the SparkContext (`addFile`, no job). Executors fetch it
+    from the driver, so a cluster needs no shared storage; each Python
+    worker memory-maps it and builds the index once per digest
+    (`ShippedAliases.value`). A key longer than MAX_MENTION_TOKENS tokens
+    warns here, once per ship. Cost: every row passes through the driver,
+    as in the reference, which held its dictionaries in driver RAM. No
+    dictionary of UMLS size (~16M aliases) has been run.
 
     Memo: the last file-backed dictionary shipped is kept with its handle,
     for the long-lived caller that re-reads its dictionary per request so
@@ -281,19 +300,30 @@ def build_kg(
     so kg_edges keeps the triples whose two endpoints linked (a filter, no
     join), kg_nodes groups the linked per-task stats by cui, and
     kg_edge_stats groups the linked triples by edge, with the exact n_convs
-    counted from the pass's `conv_first` flags (extract_collapsed_df). Building
-    the result starts no Spark job when `alias_index` is given. The driver
-    never receives the resolved vocabulary, so `spark.driver.maxResultSize`
-    does not bound a build. `candidates`, `resolution` and `mention_stats`
-    are lazy specification views over the same pass (tools and tests read
-    them); no write runs them.
+    counted from the pass's `conv_first` flags (extract_collapsed_df). The
+    driver never receives the resolved vocabulary, so
+    `spark.driver.maxResultSize` does not bound a build. `candidates`,
+    `resolution` and `mention_stats` are lazy specification views over the
+    same pass (tools and tests read them); no write runs them.
 
-    `persist=True` caches the collapsed extraction output, the one
+    `persist=True` stores the collapsed extraction output, the one
     transcript-sized table every write reads (Catalyst has no cross-branch
-    CSE); nothing else is cached or collected. Callers release the cache
-    with `KGResult.unpersist()`. `persist=False` stays lazy: nothing is
-    cached. The checkpointed and streamed runs build that way, because
-    each commits its pass in one write that reads it once.
+    CSE); nothing else is stored or collected. The store is a lazy local
+    checkpoint, serialized at MEMORY_AND_DISK: the first write fills it
+    and later writes scan it as an `ExistingRDD`. A columnar cache
+    (`persist()`) spent a job of its own filling it and re-listed stage
+    [1]'s exchange in every later job (construct_x5: 7 jobs and 54 tasks,
+    against 6 and 30). Two costs come with the checkpoint. Cutting the
+    lineage plans stage [1], so the build call itself runs its exchange
+    (1 Spark job; a build plus its three writes runs no more jobs in
+    total). And the stored blocks are the only copy: an executor lost
+    after the first write makes a later write fail instead of
+    recomputing, so long runs on clusters that lose executors belong on
+    plans.checkpoint.ResumableKGRun. `KGResult.unpersist()` releases the
+    blocks. `persist=False` stays lazy: nothing is stored, and the build
+    starts no job beyond the dictionary's ship. The checkpointed and
+    streamed runs build that way, because each commits its pass in one
+    write that reads it once.
 
     `assume_clustered=True` declares the input already bucketed by conv_id
     (sources.io.write_bucketed): stage [1] skips its repartition and the
@@ -321,11 +351,11 @@ def build_kg(
     turns = assemble_turns(transcripts, assume_clustered=assume_clustered)
     keys_bc = alias_index if alias_index is not None else broadcast_alias_keys(spark, aliases)
     # one Arrow pass over the turn text produces the linked triples and the
-    # linked mention stats; the persisted unified table is the stage
-    # boundary every write reads
+    # linked mention stats; the stored unified table is the stage boundary
+    # every write reads
     unified = extract_collapsed_df(turns, keys_bc, aliases.schema["cui"].dataType)
     if persist:
-        unified = unified.persist()
+        unified = unified.localCheckpoint(eager=False, storageLevel=StorageLevel.MEMORY_AND_DISK)
     raw_triples = triples_view(unified)
     mention_stats = mention_stats_view(unified)
     candidates = candidate_table(mention_stats, aliases, alias_index=keys_bc)

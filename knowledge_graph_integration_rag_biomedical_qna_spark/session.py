@@ -56,6 +56,13 @@ def get_spark(
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
+        # The two columnar-cache settings below concern only what still
+        # caches with persist()/cache(): bench.py's steady lines, which
+        # re-cache the extraction each rep, and two entry queries. A
+        # persisted build_kg stores its pass as a serialized local
+        # checkpoint instead (plans.pipeline), which neither setting
+        # touches.
+        #
         # Columnar-cache compression stays at the DEFAULT (on). r4 measured
         # both ways, interleaved: in a FRESH session the uncompressed cache
         # wins (-16% on the steady pipeline — compression CPU dominates a
@@ -66,7 +73,7 @@ def get_spark(
         # Compressed is also the scale-correct choice — cache memory is the
         # scarce resource at 100 TB. Full numbers: BENCH/PERF_NOTES.md.
         #
-        # Columnar-cache batch size 100k (default 10k): the steady pipeline's
+        # Columnar-cache batch size 100k (default 10k): the steady line's
         # dominant cost is building the unified-extraction cache (62% of
         # wall), and 10k-row batches pay 10x the per-batch setup +
         # compression-block overhead for slim extraction rows (~10 MB/batch

@@ -1,12 +1,13 @@
 """Plan-shape and job-count tests for a KG build, a checkpoint group, an ask
 (and one dedup plan).
 
-A persisted `build_kg` caches only the extraction, and that one Arrow pass
-also links every mention against the dictionary the matcher's index ships.
-So the `kg_edges` write is a filter of the cached pass (no join, no
-broadcast), the `kg_nodes` write has one vocabulary-sized exchange above it,
-the `kg_edge_stats` write one exchange keyed by edge, and building the
-result starts no job and collects nothing to the driver.
+A persisted `build_kg` stores only the extraction, as a local checkpoint,
+and that one Arrow pass also links every mention against the dictionary the
+matcher's index ships. So the `kg_edges` write is a filter of the stored
+pass's `ExistingRDD` scan (no join, no broadcast), the `kg_nodes` write has
+one vocabulary-sized exchange above it, the `kg_edge_stats` write one
+exchange keyed by edge, and building the result starts only the turn
+assembly's exchange job (none when lazy) and collects nothing to the driver.
 
 An ask is one adaptive query: `link_questions` builds a lazy plan, and
 `retrieve_evidence` plus the caller's orderBy run it with one Arrow pass that
@@ -46,20 +47,20 @@ def final_plan(df) -> str:
 
 
 def write_plan(spark, path: str) -> str:
-    """The final adaptive plan of the last write to `path`, from the SQL
-    status store, cut to the written query's own final plan (a cached
-    table's nested plans stay inside it). Drains the listener bus first:
-    the store receives the final plan after the action returns. The store
-    may keep the write's plan under "Current Plan" (no final-plan update
-    reaches it in a fresh session); the write has returned, so that plan
-    is the one that ran."""
+    """The plan tree of the last write to `path`, from the SQL status
+    store: the final adaptive plan, or the physical plan of a write with no
+    exchange (which runs without adaptive execution). Drains the listener
+    bus first: the store receives the final plan after the action returns.
+    The store may keep the write's plan under "Current Plan" (no final-plan
+    update reaches it in a fresh session); the write has returned, so that
+    plan is the one that ran."""
     spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
     execs = spark._jsparkSession.sharedState().statusStore().executionsList()
     for i in reversed(range(execs.size())):
         desc = execs.apply(i).physicalPlanDescription()
         if "InsertIntoHadoopFsRelationCommand" in desc and path in desc:
-            plan = re.split(r"== (?:Final|Current) Plan ==", desc, maxsplit=1)[1]
-            return plan.split("\n+- == Initial Plan ==")[0]
+            plan = re.split(r"== (?:Final|Current|Physical) Plan ==", desc)[-1]
+            return plan.split("\n+- == Initial Plan ==")[0].split("\n\n")[0]
     raise AssertionError(f"no write to {path} in the status store")
 
 
@@ -264,16 +265,31 @@ def test_duplicate_keys_ship_every_row_as_a_candidate(spark, tmp_path):
 
 
 def test_build_kg_job_count(spark, fixture_inputs, tmp_path):
-    """A persisted build_kg plus its three table writes takes at most 7
-    Spark jobs at local[4]: the warm-up build shipped the dictionary, so
-    this build's ship hits the memo and starts no job; linking runs
-    inside the cached extraction pass, so nothing is collected or broadcast
-    and no vocabulary table is cached, and kg_edge_stats is one exchange
-    (n_convs from the pass's conv_first flags, no distinct-count job)."""
+    """A persisted build_kg plus its three table writes takes 6 Spark jobs
+    at local[4] (7 with the columnar cache the stored pass replaced): the
+    warm-up build shipped the dictionary, so this build's ship hits the
+    memo and starts no job; linking runs inside the stored extraction
+    pass, so nothing is collected or broadcast and no vocabulary table is
+    stored, and kg_edge_stats is one exchange (n_convs from the pass's
+    conv_first flags, no distinct-count job)."""
     _build_and_write(spark, fixture_inputs, str(tmp_path / "warm"))
     with job_group(spark, "build") as jobs:
         _build_and_write(spark, fixture_inputs, str(tmp_path / "kg"))
-    assert len(jobs) <= 7, jobs
+    assert len(jobs) == 6, jobs
+
+
+def test_build_kg_starts_one_job_only_when_persisted(spark, fixture_inputs):
+    """Given a prebuilt alias index, a lazy build_kg starts no Spark job. A
+    persisted one starts exactly one: the local checkpoint cuts the pass's
+    lineage, which runs the turn-assembly exchange's stage."""
+    index = broadcast_alias_keys(spark, fixture_inputs[1])
+    with job_group(spark, "lazy_build") as jobs:
+        build_kg(spark, *fixture_inputs, persist=False, alias_index=index)
+    assert jobs == []
+    with job_group(spark, "persisted_build") as jobs:
+        kg = build_kg(spark, *fixture_inputs, alias_index=index)
+    kg.unpersist()
+    assert len(jobs) == 1, jobs
 
 
 def test_checkpoint_group_job_count(spark, fixture_inputs, tmp_path):
@@ -294,31 +310,35 @@ def test_checkpoint_group_job_count(spark, fixture_inputs, tmp_path):
     assert len(jobs) <= 6, jobs
 
 
-def test_kg_edges_write_reads_only_the_cached_pass(spark, fixture_inputs, tmp_path):
-    """Given a prebuilt alias index, build_kg starts no Spark job. The
-    kg_edges write's final plan reads the cached extraction, whose pass
-    already linked both endpoints: no join and no broadcast."""
-    index = broadcast_alias_keys(spark, fixture_inputs[1])
-    with job_group(spark, "build_only") as jobs:
-        kg = build_kg(spark, *fixture_inputs, alias_index=index)
-    try:
-        assert jobs == []
-        path = str(tmp_path / "kg_edges")
-        kg.kg_edges.write.parquet(path)
-        plan = write_plan(spark, path)
-    finally:
-        kg.unpersist()
-    assert count_nodes(plan, "BroadcastExchange") == 0, plan
-    assert "Join" not in plan, plan
-    # one cache, and it holds the extraction (its nested plan runs the kernel)
-    assert count_nodes(plan, "InMemoryRelation") == 1, plan
-    assert "MapInArrow" in plan, plan
+def test_unpersist_drops_the_stored_pass(spark, fixture_inputs, tmp_path):
+    """After a write fills a persisted build's stored pass, unpersist()
+    leaves no storage entry for it, and a second call does nothing. A lazy
+    build holds no blocks, and its unpersist() does nothing."""
+    sc = spark.sparkContext._jsc.sc()
+
+    def stored() -> set:
+        return {i.id() for i in sc.getRDDStorageInfo()}
+
+    before = stored()
+    kg = build_kg(spark, *fixture_inputs)
+    rdd_id = kg.unified._jdf.queryExecution().analyzed().rdd().id()
+    kg.kg_edges.write.parquet(str(tmp_path / "kg_edges"))
+    assert rdd_id in stored()
+    kg.unpersist()
+    assert rdd_id not in stored()
+    kg.unpersist()
+    assert stored() <= before
+
+    lazy = build_kg(spark, *fixture_inputs, persist=False)
+    lazy.kg_edges.write.parquet(str(tmp_path / "lazy_edges"))
+    assert stored() <= before
+    lazy.unpersist()
+    assert stored() <= before
 
 
-def _plan_above_cache(spark, fixture_inputs, table: str, path: str) -> str:
+def _plan_above_stored_pass(spark, fixture_inputs, table: str, path: str) -> str:
     """The final plan of a persisted build's `table` write, cut at the
-    cached extraction's scan (the cache's own plan holds only the
-    turn-assembly exchange)."""
+    stored extraction's `ExistingRDD` scan, which must be its only scan."""
     kg = build_kg(spark, *fixture_inputs)
     try:
         getattr(kg, table).write.parquet(path)
@@ -326,25 +346,42 @@ def _plan_above_cache(spark, fixture_inputs, table: str, path: str) -> str:
     finally:
         kg.unpersist()
     lines = plan.splitlines()
-    cache = next(i for i, l in enumerate(lines) if "InMemoryTableScan" in l)
-    return "\n".join(lines[:cache])
+    scan = next(i for i, l in enumerate(lines) if "Scan ExistingRDD" in l)
+    assert [l for l in lines if "Scan" in l] == [lines[scan]], plan
+    return "\n".join(lines[:scan])
+
+
+def test_kg_edges_write_reads_only_the_cached_pass(spark, fixture_inputs, tmp_path):
+    """The kg_edges write of a persisted build is a filter of the stored
+    extraction's `ExistingRDD` scan, whose pass already linked both
+    endpoints: no exchange, no join, no broadcast, and neither the kernel
+    nor the transcripts' scan runs again."""
+    plan = _plan_above_stored_pass(spark, fixture_inputs, "kg_edges",
+                                   str(tmp_path / "kg_edges"))
+    assert count_nodes(plan, "Exchange") == 0, plan
+    assert "Join" not in plan and count_nodes(plan, "BroadcastExchange") == 0, plan
+    assert "MapInArrow" not in plan, plan
 
 
 def test_kg_nodes_write_has_one_exchange_above_the_cache(spark, fixture_inputs, tmp_path):
-    """kg_nodes groups the cached pass's linked vocabulary rows by cui: the
-    write's final plan has exactly one exchange above the cached extraction."""
-    plan = _plan_above_cache(spark, fixture_inputs, "kg_nodes", str(tmp_path / "kg_nodes"))
+    """kg_nodes groups the stored pass's linked vocabulary rows by cui: the
+    write's final plan has exactly one exchange above the stored
+    extraction, and no join or broadcast."""
+    plan = _plan_above_stored_pass(spark, fixture_inputs, "kg_nodes",
+                                   str(tmp_path / "kg_nodes"))
     assert count_nodes(plan, "Exchange") == 1, plan
+    assert "Join" not in plan and count_nodes(plan, "BroadcastExchange") == 0, plan
 
 
 def test_kg_edge_stats_write_has_one_exchange_above_the_cache(spark, fixture_inputs, tmp_path):
     """kg_edge_stats counts n_convs from the pass's conv_first flags: the
-    write's final plan has exactly one exchange above the cached extraction,
-    keyed by edge, and no Expand or (edge, conv_id) exchange for a distinct
-    count."""
-    plan = _plan_above_cache(spark, fixture_inputs, "kg_edge_stats",
-                             str(tmp_path / "kg_edge_stats"))
+    write's final plan has exactly one exchange above the stored
+    extraction, keyed by edge, no join or broadcast, and no Expand or
+    (edge, conv_id) exchange for a distinct count."""
+    plan = _plan_above_stored_pass(spark, fixture_inputs, "kg_edge_stats",
+                                   str(tmp_path / "kg_edge_stats"))
     assert count_nodes(plan, "Exchange") == 1, plan
+    assert "Join" not in plan and count_nodes(plan, "BroadcastExchange") == 0, plan
     assert count_nodes(plan, "Expand") == 0, plan
 
 

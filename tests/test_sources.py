@@ -196,6 +196,42 @@ def test_same_content_ships_one_file_added_once(spark, monkeypatch):
     assert a.candidates_by_key() == b.candidates_by_key()
 
 
+def test_the_exit_hook_removes_every_shipped_file(spark):
+    """The ship directory belongs to this process: the hook registered for
+    interpreter exit leaves no shipped file, and a later ship writes its
+    file again. A child interpreter that makes the directory leaves none
+    behind when it exits."""
+    import glob
+    import subprocess
+    import sys
+    import uuid
+
+    from knowledge_graph_integration_rag_biomedical_qna_spark.plans import pipeline
+    from knowledge_graph_integration_rag_biomedical_qna_spark.sources.synth import values_df
+
+    rows = [("aspirin", "Aspirin", f"C-{uuid.uuid4().hex}", 0.9)]
+    bc = pipeline.broadcast_alias_keys(spark, values_df(spark, rows, ALIASES_DDL))
+    assert glob.glob(os.path.join(pipeline._SHIP_DIR, "aliases-*.arrow"))
+    pipeline._remove_ship_dir()
+    assert not glob.glob(os.path.join(pipeline._SHIP_DIR, "aliases-*.arrow"))
+    again = pipeline.broadcast_alias_keys(spark, values_df(spark, rows, ALIASES_DDL))
+    assert again.digest == bc.digest
+    assert os.path.exists(os.path.join(pipeline._SHIP_DIR, bc.file_name))
+
+    child = subprocess.run(
+        [sys.executable, "-c",
+         "import os\n"
+         "from knowledge_graph_integration_rag_biomedical_qna_spark.plans import pipeline as p\n"
+         "os.makedirs(p._SHIP_DIR)\n"
+         "open(os.path.join(p._SHIP_DIR, 'aliases-x.arrow'), 'w').close()\n"
+         "print(p._SHIP_DIR)"],
+        capture_output=True, text=True, check=True,
+        cwd=os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+    )
+    ship_dir = child.stdout.strip()
+    assert ship_dir != pipeline._SHIP_DIR and not os.path.exists(ship_dir)
+
+
 def test_a_key_longer_than_the_matcher_reaches_warns_on_ship(spark):
     """A key of more than MAX_MENTION_TOKENS tokens can never match. The
     ship warns on the driver, where the user sees it, and the index leaves
