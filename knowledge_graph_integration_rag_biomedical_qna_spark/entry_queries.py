@@ -928,14 +928,15 @@ def dedup_ngram_jaccard(spark, sf_dir):
     shared shingles (a pair is scored iff it shares >= 1 shingle, which any
     pair at jaccard >= threshold > 0 must), exact Jaccard, threshold filter.
     This is the dedup family's exact baseline; the MinHash/SimHash variants
-    are its sub-quadratic approximations — at 100 TB use those, or pass
-    max_shingle_df to inverted_index_candidates (hot boilerplate shingles
-    leave candidate generation with a logged drop line).
+    are its sub-quadratic approximations — at 100 TB use those. The join is
+    quadratic in each shingle's document frequency, so a corpus with hot
+    boilerplate shingles needs exact dedup first.
 
     r7: verification now runs against a per-doc (n, hs) stats aggregate
-    (array_jaccard_verify) instead of re-joining the shingle table — the old
-    jaccard_verify shape re-derived and re-shuffled shingles three more
-    times (sa, sb, sizes) after candidate generation."""
+    (array_jaccard_verify) instead of re-joining the shingle table — the
+    join form (oracle.dedup.jaccard_verify, the tests' reference)
+    re-derives and re-shuffles shingles three more times (sa, sb, sizes)
+    after candidate generation."""
     from .operators.dedup import array_jaccard_verify, inverted_index_candidates, with_shingles
 
     docs = _t_wide(spark, sf_dir, "documents")

@@ -15,90 +15,8 @@ near-dup. Design notes for 100 TB:
 
 from __future__ import annotations
 
-from collections import deque
-
-from pyspark.sql import DataFrame, Observation
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-# --- hot-key cap warnings ----------------------------------------------------
-
-# (Observation, operator name, message) per capped plan whose first action
-# flush_hot_warnings has not read yet; bounded so plans that are built and
-# never run cannot accumulate (the oldest entry is dropped). deque
-# append/popleft are atomic, so concurrent plan builders and flushers need
-# no lock.
-_PENDING_OBS: deque = deque(maxlen=64)
-
-
-def _obs_ready(obs) -> bool:
-    """Non-blocking probe: has the observed DataFrame finished its first
-    action? Asks the classic JVM handle whether its result future has
-    completed; the public python `get` blocks until the action runs, and
-    the JVM `getRowOrEmpty` waits up to 100 ms per call.
-    tests/test_training_ops pins the handle on the installed Spark, so an
-    upgrade that removes it fails loudly."""
-    return obs._jo.future().isCompleted()
-
-
-def _distinct_counting_hot(marked: DataFrame, label: str, message: str) -> DataFrame:
-    """Distinct pairs of `marked`, plus a hot-key cap warning. `marked` holds
-    the pair rows (`_hot` null) and marker rows (pair columns null, `_hot`
-    a count of capped rows). The sum of `_hot` is counted by an Observation
-    riding the caller's OWN first action (plan builders stay lazy, no extra
-    job) and queued for `flush_hot_warnings()`, which warns
-    `"<label>: " + message.format(n=<sum>)` when it is non-zero.
-
-    The markers carry the count through the final aggregate, so the
-    Observation sits on top of the operator's plan. Below the final shuffle
-    it would be lost whenever that shuffle comes out empty (no pairs, e.g.
-    an all-hot corpus): AQE then replaces the plan, observed node included,
-    with an empty relation."""
-    import uuid
-
-    cols = [c for c in marked.columns if c != "_hot"]
-    out = marked.groupBy(*cols).agg(F.sum("_hot").alias("_hot"))
-    obs = Observation(f"{label}_{uuid.uuid4().hex[:8]}")
-    out = out.observe(obs, F.sum("_hot").alias("n_hot_rows"))
-    _PENDING_OBS.append((obs, label, message))
-    return out.filter(F.col(cols[0]).isNotNull()).drop("_hot")
-
-
-def flush_hot_warnings() -> None:
-    """Warn, in the calling thread, for every queued capped plan whose first
-    action has finished; plans not yet run stay queued. Spark completes an
-    Observation from its listener bus, just after the observed action
-    returns, so the flush first lets the bus deliver the events already
-    posted (LiveListenerBus.waitUntilEmpty: returns at once on an idle bus,
-    measured 0.1 ms median and 14 ms max right after an action, and raises
-    past its 10 s bound). Without that, 3 of 150 observations read right
-    after their action were not complete yet.
-
-    A finished Observation can hold an empty row: when a stage the caller
-    put above the operator comes out empty, AQE replaces the plan, observed
-    node included, with an empty relation. The count is then unknown, and
-    that is warned instead of a count."""
-    import warnings
-
-    from pyspark import SparkContext
-
-    if not _PENDING_OBS:
-        return
-    SparkContext._active_spark_context._jsc.sc().listenerBus().waitUntilEmpty()
-    for _ in range(len(_PENDING_OBS)):
-        try:
-            obs, label, message = entry = _PENDING_OBS.popleft()
-        except IndexError:  # drained by a concurrent flush
-            return
-        if not _obs_ready(obs):
-            _PENDING_OBS.append(entry)
-        elif obs._jo.getRow().length() == 0:
-            warnings.warn(
-                f"{label}: hot-key cap count unavailable (the observed plan "
-                "was pruned by AQE after a later stage came out empty)"
-            )
-        elif n := obs.get["n_hot_rows"]:
-            warnings.warn(f"{label}: " + message.format(n=n))
-
 
 # --- exact -----------------------------------------------------------------
 
@@ -175,22 +93,12 @@ def lsh_candidate_pairs(
     signatures: DataFrame,
     num_hashes: int = 16,
     bands: int = 4,
-    max_bucket: int | None = None,
 ) -> DataFrame:
     """Band the signature, bucket-join, emit candidate (id_a < id_b) pairs.
 
-    `max_bucket` is the hot-bucket cap: a degenerate corpus (millions of
-    identical boilerplate docs -> one band key) makes the bucket self-join
-    quadratic in the bucket size. With a cap, buckets larger than
-    `max_bucket` are excluded from the pairwise join and instead contribute
-    only FULL-SIGNATURE-identical pairs (grouped to one representative:
-    (min_id, other) per signature group — linear in bucket size, and
-    identical signatures are near-certain duplicates anyway, which is what
-    degenerate buckets are made of). The banded rows in capped buckets are
-    counted by an Observation on the caller's own action (no extra job) and
-    warned by `flush_hot_warnings()`. Cap default is None so the
-    plan stays single-pass; production callers at web scale should set it
-    (minhash_dedup forwards its own `max_bucket`)."""
+    The bucket self-join is quadratic in a bucket's size, so a degenerate
+    corpus (many identical boilerplate docs -> one band key) costs the
+    square of its copy count: collapse exact copies first (`exact_dedup`)."""
     rows_per_band = num_hashes // bands
     band_cols = []
     for b in range(bands):
@@ -201,115 +109,32 @@ def lsh_candidate_pairs(
     banded = signatures.select(
         "id", F.explode(F.array(*band_cols)).alias("bk")
     ).select("id", F.col("bk.band").alias("band"), F.col("bk.key").alias("key"))
-    if max_bucket is not None:
-        from pyspark.sql import Window
-
-        bsz = F.count(F.lit(1)).over(Window.partitionBy("band", "key"))
-        banded = banded.withColumn("bsz", bsz)
-        # per hot doc: its banded rows in capped buckets (the warned count)
-        hot_ids = (
-            banded.filter(F.col("bsz") > max_bucket)
-            .groupBy("id").agg(F.count(F.lit(1)).alias("_hot"))
-        )
-        sig_key = F.concat_ws("|", *[F.col(f"h{i}") for i in range(num_hashes)])
-        # linear rep-join, never a per-group array: groups in a degenerate
-        # bucket can hold millions of ids
-        hot_sigs = (
-            hot_ids.join(signatures, "id")
-            .select("id", sig_key.alias("sk"))
-        )
-        reps = hot_sigs.groupBy("sk").agg(F.min("id").alias("id_a"))
-        capped_pairs = (
-            hot_sigs.join(reps, "sk")
-            .filter(F.col("id") > F.col("id_a"))
-            .select("id_a", F.col("id").alias("id_b"))
-        )
-        banded = banded.filter(F.col("bsz") <= max_bucket).drop("bsz")
     a = banded.alias("a")
     b = banded.alias("b")
-    pairs = (
+    return (
         a.join(b, ["band", "key"])
         .filter(F.col("a.id") < F.col("b.id"))
         .select(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
-    )
-    if max_bucket is None:
-        return pairs.distinct()
-    return _distinct_counting_hot(
-        pairs.unionByName(capped_pairs)
-        .unionByName(hot_ids.select("_hot"), allowMissingColumns=True),
-        "lsh_candidate_pairs",
-        "{n} banded row(s) in buckets over "
-        f"max_bucket={max_bucket} excluded from the pairwise join; capped "
-        "buckets contribute identical-signature pairs only",
+        .distinct()
     )
 
 
-def inverted_index_candidates(
-    shingles: DataFrame,
-    max_shingle_df: int | None = None,
-) -> DataFrame:
+def inverted_index_candidates(shingles: DataFrame) -> DataFrame:
     """Exact candidate pairs via the inverted-index self-join: (id_a < id_b)
-    iff the docs share at least one (kept) shingle.
+    iff the docs share at least one shingle.
 
-    `max_shingle_df` caps a shingle's document frequency before the join: a
-    globally hot shingle (boilerplate n-gram present in millions of docs)
-    makes the self-join quadratic in its df. Hot shingles are dropped FROM
-    CANDIDATE GENERATION ONLY (verification still scores the full shingle
-    sets), with a logged drop line. Recall caveat: a pair sharing ONLY
-    capped shingles is missed — at a Jaccard threshold t, such a pair has
-    all its common shingles in the hot set, which boilerplate-heavy corpora
-    should handle with exact-dedup first (same design note as the LSH
-    hot-bucket cap)."""
-    if max_shingle_df is None:
-        # uncapped: plain posting-list self-join on the 8-byte shingle hash
-        # (a 64-bit collision can only ADD a candidate pair, which exact
-        # Jaccard verification then rejects)
-        a = shingles.select(F.col("id").alias("id_a"), F.xxhash64("shingle").alias("sh_k"))
-        b = shingles.select(F.col("id").alias("id_b"), F.xxhash64("shingle").alias("sh_k"))
-        return (
-            a.join(b, "sh_k")
-            .filter(F.col("id_a") < F.col("id_b"))
-            .select("id_a", "id_b")
-            .distinct()
-        )
-    # capped: ONE posting-table shuffle. The df count runs as a window over
-    # the shingle partitioning (sort-based, SPILLABLE — a degenerate
-    # 100M-doc shingle streams through it; a plain collect_list-with-count
-    # aggregate would have to materialize that group's full id array just
-    # to discover it is over the cap). The groupBy reuses the window's
-    # hashpartitioning(shingle), so no second exchange, and collects only
-    # the ids of KEPT shingles (each ≤ max_shingle_df by construction) into
-    # sorted arrays for map-side pair emission. A hot shingle emits one
-    # marker row carrying its df instead of pairs.
-    from pyspark.sql import Window
-
-    kept = F.col("_df") <= max_shingle_df
-    posts = (
-        shingles.withColumn("_df", F.count(F.lit(1)).over(Window.partitionBy("shingle")))
-        .groupBy("shingle")
-        .agg(
-            F.max("_df").alias("_df"),
-            F.sort_array(F.collect_list(F.when(kept, F.col("id")))).alias("ids"),
-        )
-    )
-    no_id = F.lit(None).cast(shingles.schema["id"].dataType)
-    no_hot = F.lit(None).cast("long")
-    pairs = F.flatten(
-        F.transform(
-            F.col("ids"),
-            lambda x, i: F.transform(
-                F.slice(F.col("ids"), i + F.lit(2), F.size(F.col("ids"))),
-                lambda y: F.struct(x.alias("id_a"), y.alias("id_b"), no_hot.alias("_hot")),
-            ),
-        )
-    )
-    marker = F.array(F.struct(no_id.alias("id_a"), no_id.alias("id_b"), F.col("_df").alias("_hot")))
-    return _distinct_counting_hot(
-        posts.select(F.explode(F.when(kept, pairs).otherwise(marker)).alias("p")).select("p.*"),
-        "inverted_index_candidates",
-        "{n} posting row(s) of shingles over "
-        f"max_shingle_df={max_shingle_df} dropped from candidate "
-        "generation (verification still uses full shingle sets)",
+    The join keys on the 8-byte shingle hash: a 64-bit collision can only
+    ADD a candidate pair, which exact Jaccard verification then rejects. A
+    shingle in d docs emits d^2/2 pairs, so a globally hot boilerplate
+    n-gram makes the join quadratic in its document frequency: collapse
+    exact copies first (`exact_dedup`)."""
+    a = shingles.select(F.col("id").alias("id_a"), F.xxhash64("shingle").alias("sh_k"))
+    b = shingles.select(F.col("id").alias("id_b"), F.xxhash64("shingle").alias("sh_k"))
+    return (
+        a.join(b, "sh_k")
+        .filter(F.col("id_a") < F.col("id_b"))
+        .select("id_a", "id_b")
+        .distinct()
     )
 
 
@@ -323,10 +148,10 @@ def array_jaccard_verify(
     xxhash64(shingle) over the doc's (already distinct) shingles and n the
     exact shingle count. n_inter = size(array_intersect(hs_a, hs_b)) — no
     join against the shingle table, so verification adds ZERO shingle-sized
-    shuffles (the r7 shape; `jaccard_verify` below remains the join-based
-    twin for callers without a stats aggregate). Same 64-bit-collision
-    tolerance as the hashed-key join it replaces. Pairs sharing no shingle
-    are dropped at any threshold, as the join form never forms them."""
+    shuffles (the r7 shape; `oracle.dedup.jaccard_verify` is the join-based
+    reference the tests compare it against). Same 64-bit-collision
+    tolerance as that hashed-key join. Pairs sharing no shingle are
+    dropped at any threshold, as the join form never forms them."""
     va = doc_stats.select(
         F.col("id").alias("id_a"), F.col("n").alias("n_a"), F.col("hs").alias("hs_a")
     )
@@ -346,47 +171,6 @@ def array_jaccard_verify(
     )
 
 
-def jaccard_verify(
-    pairs: DataFrame,
-    shingles: DataFrame,
-    threshold: float = 0.7,
-    sizes: DataFrame | None = None,
-) -> DataFrame:
-    """Exact shingle-Jaccard on candidate pairs; keep pairs >= threshold.
-
-    Pass `sizes` (id, n) if the caller already aggregated per-doc shingle
-    counts (minhash_dedup folds them into the signature groupBy) — it saves a
-    full shuffle over the shingle table.
-
-    The intersection join keys on xxhash64(shingle), not the shingle string:
-    the two shingle-sized shuffles then carry 8-byte keys instead of ~24-char
-    strings, and the intersection COUNT — all the join contributes — is
-    unchanged unless two distinct shingles of the same doc pair collide in
-    64 bits (~(n_a*n_b)/2^64 per pair — vanishing, and the exact-Jaccard
-    DuckDB oracles stay valid without modification)."""
-    key = F.xxhash64("shingle")
-    sa = shingles.select(F.col("id").alias("id_a"), key.alias("sh_k"))
-    sb = shingles.select(F.col("id").alias("id_b"), key.alias("sh_k"))
-    inter = (
-        pairs.join(sa, "id_a")
-        .join(sb, ["id_b", "sh_k"])
-        .groupBy("id_a", "id_b")
-        .agg(F.count(F.lit(1)).alias("n_inter"))
-    )
-    if sizes is None:
-        sizes = shingles.groupBy("id").agg(F.count(F.lit(1)).alias("n"))
-    return (
-        inter.join(sizes.select(F.col("id").alias("id_a"), F.col("n").alias("n_a")), "id_a")
-        .join(sizes.select(F.col("id").alias("id_b"), F.col("n").alias("n_b")), "id_b")
-        .withColumn(
-            "jaccard",
-            F.round(F.col("n_inter") / (F.col("n_a") + F.col("n_b") - F.col("n_inter")), 6),
-        )
-        .filter(F.col("jaccard") >= threshold)
-        .select("id_a", "id_b", "jaccard")
-    )
-
-
 def minhash_dedup(
     docs: DataFrame,
     n: int = 3,
@@ -396,7 +180,6 @@ def minhash_dedup(
     text_col: str = "text",
     id_col: str = "doc_id",
     family: str = "md5",
-    max_bucket: int | None = None,
 ) -> DataFrame:
     """Full MinHash-LSH near-dup pipeline: verified duplicate pairs.
 
@@ -405,14 +188,13 @@ def minhash_dedup(
     is identical either way (exact Jaccard verification); candidate recall is
     the banded-LSH probability 1-(1-j^r)^b for each family's random draw.
 
-    Shuffle budget: the signature groupBy also carries the per-doc shingle
-    COUNT, so exactly two shingle-sized shuffles run (signatures,
-    intersection). (A per-row array_min(transform(...)) formulation avoids
-    the first shuffle entirely but measured 2x SLOWER: higher-order array
-    functions are interpreted, not whole-stage-codegen'd, and the md5 CSE
-    across substrings is lost across lambda boundaries.) The shingle table is
-    recomputed from the scan rather than persisted — the right trade at
-    100 TB (shingles are ~n_gram x input).
+    Shuffle budget: two shingle-sized shuffles, one per aggregate over the
+    shingle table (see VERIFY SHAPE). (A per-row array_min(transform(...))
+    formulation avoids the signature shuffle but measured 2x SLOWER:
+    higher-order array functions are interpreted, not whole-stage-codegen'd,
+    and the md5 CSE across substrings is lost across lambda boundaries.)
+    The shingle table is recomputed from the scan rather than persisted —
+    the right trade at 100 TB (shingles are ~n_gram x input).
 
     The xxhash64 family additionally collapses each shingle STRING to one
     int64 (xxhash64) before everything downstream: the two shingle-sized
@@ -436,19 +218,23 @@ def minhash_dedup(
     pins both families' behavior against the exact all-pairs oracle on a
     near-dup (not identical-dup) corpus.
 
-    VERIFY SHAPE (r7): the signature groupBy additionally carries each doc's
-    8-byte shingle-hash SET (collect_list of xxhash64(shingle) — per-doc
-    distinct by construction), and candidate pairs are verified by
-    size(array_intersect(hs_a, hs_b)) against that one aggregate. The
-    previous shape re-derived the shingle table twice more (sa/sb sides of a
-    hash self-join) and shuffled it twice more; measured at sf1.0/local[32],
-    verification was ~60% of the query wall. Now the shingle table is
-    computed ONCE and shuffled ONCE (the signature exchange, reused by both
-    the banding and the verify joins), and verification is two joins of the
-    pair table against the per-doc arrays. n_inter semantics: identical up
-    to in-doc 64-bit hash collisions (probability ~n_doc_shingles^2/2^64 —
-    vanishing; cross-doc collisions were already the documented tolerance of
-    the hashed-key join, and the exact-Jaccard oracles pass unchanged)."""
+    VERIFY SHAPE (r7): the per-doc aggregate also carries each doc's 8-byte
+    shingle-hash SET (collect_list of xxhash64(shingle) — per-doc distinct
+    by construction), and candidate pairs are verified by
+    size(array_intersect(hs_a, hs_b)): two joins of the pair table against
+    the per-doc arrays. The previous shape re-derived the shingle table
+    twice more (sa/sb sides of a hash self-join) and shuffled it twice
+    more; measured at sf1.0/local[32], verification was ~60% of the query
+    wall. Column pruning splits the aggregate per consumer: the banding
+    branch computes (id, h0..h{m-1}) and the verify branch (id, n, hs), so
+    the corpus is scanned and shingled twice, once per aggregate (the band
+    self-join's two sides share the signature exchange). A no-op filter on
+    hs does not merge them: the verify side still prunes to its own twin
+    (tests/test_query_plan.py::test_minhash_dedup_plan pins the plan).
+    n_inter semantics: identical up to in-doc 64-bit hash collisions
+    (probability ~n_doc_shingles^2/2^64 — vanishing; cross-doc collisions
+    were already the documented tolerance of the hashed-key join, and the
+    exact-Jaccard oracles pass unchanged)."""
     sh = with_shingles(docs, n=n, text_col=text_col, id_col=id_col)
     if family == "xxhash64":
         sh = sh.withColumn("shingle", F.xxhash64("shingle"))
@@ -458,15 +244,7 @@ def minhash_dedup(
         F.count(F.lit(1)).alias("n"),
         F.collect_list(F.xxhash64("shingle")).alias("hs"),
     )
-    # no-op filter (hs is never null): BLOCKS column pruning on the banding
-    # branch so its aggregate stays bit-identical to the verify branches' —
-    # all four consumers then read ONE reused exchange at runtime instead of
-    # Catalyst splitting off a pruned (hs-less) twin aggregate that re-scans
-    # and re-shingles the corpus (measured ~0.4 s at sf1.0/local[32])
-    cand = lsh_candidate_pairs(
-        agg.filter(F.size("hs") >= 0), num_hashes=num_hashes, bands=bands,
-        max_bucket=max_bucket,
-    )
+    cand = lsh_candidate_pairs(agg, num_hashes=num_hashes, bands=bands)
     return array_jaccard_verify(cand, agg.select("id", "n", "hs"), threshold=threshold)
 
 
@@ -499,7 +277,6 @@ def simhash_near_dups(
     band_bits: int = 16,
     bands: int = 4,
     bits: int = 32,
-    max_bucket: int | None = None,
 ) -> DataFrame:
     """Candidate near-dup pairs via ROTATED banding: band i buckets on
     `band_bits` bits of the hash rotated by i*bits/bands. Every bit lies
@@ -508,7 +285,10 @@ def simhash_near_dups(
     bit is outside 2 of the 4 bands); larger distances are caught
     probabilistically by the remaining bands. This replaces the single
     high-prefix bucket, which silently missed pairs differing only inside the
-    prefix. Returns distinct (id_a < id_b) pairs with full-hash hamming."""
+    prefix. Returns distinct (id_a < id_b) pairs with full-hash hamming.
+    As in `lsh_candidate_pairs`, the bucket self-join is quadratic in a
+    bucket's size, and identical docs share every bucket: collapse exact
+    copies first (`exact_dedup`)."""
     rot = bits // bands
     mask = (1 << band_bits) - 1
     h = F.col("simhash")
@@ -528,29 +308,8 @@ def simhash_near_dups(
     banded = sim.select(
         "id", "simhash", F.explode(F.array(*band_structs)).alias("bk")
     ).select("id", "simhash", F.col("bk.band").alias("band"), F.col("bk.key").alias("key"))
-    if max_bucket is not None:
-        # hot-bucket cap, same scheme as lsh_candidate_pairs: oversized
-        # buckets leave the pairwise join and contribute identical-simhash
-        # (hamming 0) pairs via a linear rep-join
-        from pyspark.sql import Window
-
-        banded = banded.withColumn(
-            "bsz", F.count(F.lit(1)).over(Window.partitionBy("band", "key"))
-        )
-        # per hot doc: its banded rows in capped buckets (the warned count)
-        hot_ids = (
-            banded.filter(F.col("bsz") > max_bucket)
-            .groupBy("id", "simhash").agg(F.count(F.lit(1)).alias("_hot"))
-        )
-        reps = hot_ids.groupBy("simhash").agg(F.min("id").alias("id_a"))
-        capped_pairs = (
-            hot_ids.join(reps, "simhash")
-            .filter(F.col("id") > F.col("id_a"))
-            .select("id_a", F.col("id").alias("id_b"), F.lit(0).alias("hamming"))
-        )
-        banded = banded.filter(F.col("bsz") <= max_bucket).drop("bsz")
     a, b = banded.alias("a"), banded.alias("b")
-    pairs = (
+    return (
         a.join(b, ["band", "key"])
         .filter(F.col("a.id") < F.col("b.id"))
         .select(
@@ -558,16 +317,7 @@ def simhash_near_dups(
             F.col("b.id").alias("id_b"),
             F.bit_count(F.col("a.simhash").bitwiseXOR(F.col("b.simhash"))).alias("hamming"),
         )
-    )
-    if max_bucket is None:
-        return pairs.distinct()
-    return _distinct_counting_hot(
-        pairs.unionByName(capped_pairs.select("id_a", "id_b", F.col("hamming").cast("int")))
-        .unionByName(hot_ids.select("_hot"), allowMissingColumns=True),
-        "simhash_near_dups",
-        "{n} banded row(s) in buckets over "
-        f"max_bucket={max_bucket} excluded from the pairwise join; capped "
-        "buckets contribute identical-simhash pairs only",
+        .distinct()
     )
 
 

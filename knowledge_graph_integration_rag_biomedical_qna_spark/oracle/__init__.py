@@ -1,4 +1,5 @@
-"""Pure-pandas reference implementation (the P/R >= 0.95 oracle)."""
+"""Reference implementations: the pure-pandas P/R >= 0.95 oracle, the
+materialized query oracles, and the join-based dedup verify."""
 
 from .pipeline import oracle_mentions, oracle_nodes, oracle_triples, oracle_turns
 

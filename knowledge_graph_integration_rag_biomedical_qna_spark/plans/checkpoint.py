@@ -46,7 +46,6 @@ from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from ..core.config import CHECKPOINT_BUCKETS
-from ..operators.dedup import _obs_ready
 from ..sources.synth import values_df
 from .pipeline import EDGE_RULE, NODE_RULE, broadcast_alias_keys, build_kg
 from .pipeline import kg_edge_stats_of, kg_edges_of, kg_nodes_of
@@ -122,6 +121,16 @@ def _done_markers(out_dir: str, n_buckets: int, dict_digest: str | None = None) 
             f"{sorted(map(str, digests))}; rebuild into a new output dir"
         )
     return markers
+
+
+def _obs_ready(obs) -> bool:
+    """Non-blocking probe: has the observed DataFrame finished its first
+    action? Asks the classic JVM handle whether its result future has
+    completed; the public python `get` blocks until the action runs, and
+    the JVM `getRowOrEmpty` waits up to 100 ms per call.
+    tests/test_training_ops pins the handle on the installed Spark, so an
+    upgrade that removes it fails loudly."""
+    return obs._jo.future().isCompleted()
 
 
 def _per_bucket(bucket, grp, name: str, cond):

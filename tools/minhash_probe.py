@@ -30,7 +30,6 @@ def main() -> None:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf1.0"
     from knowledge_graph_integration_rag_biomedical_qna_spark.entry_queries import _t_wide
     from knowledge_graph_integration_rag_biomedical_qna_spark.operators.dedup import (
-        jaccard_verify,
         lsh_candidate_pairs,
         minhash_dedup,
         minhash_hash_expr,
