@@ -38,6 +38,8 @@ becomes a per-batch columnar pass.
 
 from __future__ import annotations
 
+import functools
+
 import numpy as np
 
 from .config import KERNEL_SLICE_BYTES, MAX_ARG_GAP
@@ -65,12 +67,6 @@ _CONF_TABLE = np.array(
     [max(0.1, round(1.0 - 0.1 * g, 4)) for g in range(2 * MAX_ARG_GAP + 1)],
     dtype=np.float64,
 )
-
-# per-process cache: id(AliasIndex) -> (AliasIndex strong ref, {len: pa.Array})
-# The strong ref pins the index so the id can't be reused; at most one
-# shipped dictionary per worker, so the "leak" is bounded and shared.
-_PA_VOCAB_CACHE: dict[int, tuple] = {}
-
 
 def _vocab_arrays(keys_by_len: dict) -> dict:
     """{span: (keys arrow array,)} plus a "_union" entry: (union word arrow
@@ -112,25 +108,19 @@ def _vocab_arrays(keys_by_len: dict) -> dict:
     return out
 
 
+# one entry: a Python worker links against one shipped dictionary's index
+# at a time (plans.pipeline.ShippedAliases.value keeps one too)
+@functools.lru_cache(maxsize=1)
 def _pa_vocab(idx: AliasIndex):
-    hit = _PA_VOCAB_CACHE.get(id(idx))
-    if hit is not None and hit[0] is idx:
-        return hit[1]
-    arrays = _vocab_arrays(idx.keys_by_len())
-    _PA_VOCAB_CACHE.clear()
-    _PA_VOCAB_CACHE[id(idx)] = (idx, arrays)
-    return arrays
+    return _vocab_arrays(idx.keys_by_len())
 
 
+@functools.cache
 def _pred_vocab():
-    key = "__preds__"
-    hit = _PA_VOCAB_CACHE.get(key)
-    if hit is None:
-        hit = (None, _vocab_arrays(_PRED_BY_LEN))
-        _PA_VOCAB_CACHE[key] = hit
-    return hit[1]
+    return _vocab_arrays(_PRED_BY_LEN)
 
 
+@functools.cache
 def _pred_norm_map():
     """(phrases arrow array, aligned norms arrow array) for the whole
     predicate lexicon — lets the triple stage map matched phrase -> canonical
@@ -138,17 +128,12 @@ def _pred_norm_map():
     (that pass was ~2/3 of the triple stage's wall)."""
     import pyarrow as pa
 
-    key = "__pred_norms__"
-    hit = _PA_VOCAB_CACHE.get(key)
-    if hit is None:
-        phrases, norms = [], []
-        for by in _PRED_BY_LEN.values():
-            for ph, nm in by.items():
-                phrases.append(ph)
-                norms.append(nm)
-        hit = (pa.array(phrases, type=pa.string()), pa.array(norms, type=pa.string()))
-        _PA_VOCAB_CACHE[key] = hit
-    return hit
+    phrases, norms = [], []
+    for by in _PRED_BY_LEN.values():
+        for ph, nm in by.items():
+            phrases.append(ph)
+            norms.append(nm)
+    return pa.array(phrases, type=pa.string()), pa.array(norms, type=pa.string())
 
 
 def _ngram_masks(values, sent_of: np.ndarray, vocab_by_len: dict, pc):
@@ -390,26 +375,22 @@ def _fast_path_ok_arrow(texts) -> np.ndarray:
     return pc.and_(ascii_ok, pc.invert(bad)).to_numpy(zero_copy_only=False)
 
 
+@functools.cache
 def _unified_pa_schema():
     import pyarrow as pa
 
-    key = "__unified_schema__"
-    hit = _PA_VOCAB_CACHE.get(key)
-    if hit is None:
-        hit = pa.schema(
-            [
-                ("conv_id", pa.string()), ("turn_idx", pa.int32()),
-                ("sent_idx", pa.int32()), ("kind", pa.string()),
-                ("mention_idx", pa.int32()), ("surface", pa.string()),
-                ("alias_key", pa.string()), ("tok_start", pa.int32()),
-                ("tok_end", pa.int32()), ("subj_surface", pa.string()),
-                ("subj_key", pa.string()), ("pred", pa.string()),
-                ("obj_surface", pa.string()), ("obj_key", pa.string()),
-                ("confidence", pa.float64()),
-            ]
-        )
-        _PA_VOCAB_CACHE[key] = hit
-    return hit
+    return pa.schema(
+        [
+            ("conv_id", pa.string()), ("turn_idx", pa.int32()),
+            ("sent_idx", pa.int32()), ("kind", pa.string()),
+            ("mention_idx", pa.int32()), ("surface", pa.string()),
+            ("alias_key", pa.string()), ("tok_start", pa.int32()),
+            ("tok_end", pa.int32()), ("subj_surface", pa.string()),
+            ("subj_key", pa.string()), ("pred", pa.string()),
+            ("obj_surface", pa.string()), ("obj_key", pa.string()),
+            ("confidence", pa.float64()),
+        ]
+    )
 
 
 def extract_unified_batches(conv, turn, texts, alias_keys):

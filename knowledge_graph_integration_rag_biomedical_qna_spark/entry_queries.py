@@ -1218,22 +1218,21 @@ def dedup_minhash_pairs_fast(spark, sf_dir):
     """,
 )
 def ann_cosine_topk(spark, sf_dir):
-    """Brute-force cosine top-k (FAISS IndexFlatIP analog) — JVM-side math.
-    kernel='fold' EXPLICITLY: the oracle is the sequential-fold twin, and an
-    explicit kernel keeps plan construction lazy (no auto dim-probe job).
-    r7 note: a bit-exact Arrow-batched fold twin (sequential accumulation
-    across dims in numpy, JVM round/divide/window unchanged; exceptAll-empty
-    vs fold at sf0.1 and sf1.0) measured SLOWER here (0.63 vs 0.45 s at
-    sf1.0/local[32]): the guarded query-side collect is a plan-time job and
-    the Python stage overhead exceeds the interpreted-fold cost at
-    20k x 64-d x 5 queries. The 768-d design point already takes matmul."""
+    """Brute-force cosine top-k (FAISS IndexFlatIP analog) — JVM-side math:
+    sequential-fold column expressions, which the oracle twins, and plan
+    construction starts no Spark job. r7 note: a bit-exact Arrow-batched
+    fold twin (sequential accumulation across dims in numpy, JVM
+    round/divide/window unchanged; exceptAll-empty vs fold at sf0.1 and
+    sf1.0) measured SLOWER here (0.63 vs 0.45 s at sf1.0/local[32]): its
+    query-side collect is a plan-time job and the Python stage overhead
+    exceeds the interpreted-fold cost at 20k x 64-d x 5 queries."""
     from .operators.similarity import cosine_topk
 
     emb = _t_wide(spark, sf_dir, "embeddings")
     queries = emb.filter("vec_id < 5").select(
         F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")
     )
-    return cosine_topk(emb, queries, k=10, kernel="fold")
+    return cosine_topk(emb, queries, k=10)
 
 
 @q(
@@ -1551,19 +1550,18 @@ def ann_ivf_topk(spark, sf_dir):
         F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")
     )
     assignments, centroids = build_ivf_index(emb, n_centroids=16)
-    # explicit fold kernel: the materialized numpy oracle is its bit-exact
-    # twin, and plan construction stays lazy (no auto dim-probe job)
-    return ivf_topk(assignments, centroids, queries, k=10, nprobe=4, kernel="fold")
+    return ivf_topk(assignments, centroids, queries, k=10, nprobe=4)
 
 
 @_qm("multimodal_decode")
 def multimodal_decode(spark, sf_dir):
     """Multimodal decode plumbing (binary payload -> metadata + features via
-    Arrow-batched mapInPandas; codec stubbed deterministically)."""
+    Arrow-batched mapInPandas). The payloads are document text, so the codec
+    is the deterministic sha256 stand-in the oracle re-derives."""
     from .operators.multimodal import decode_media, documents_as_media
 
     docs = _t_wide(spark, sf_dir, "documents")
-    return decode_media(documents_as_media(docs), fake=True).select(
+    return decode_media(documents_as_media(docs)).select(
         "media_id", "media_type", "n_bytes", "width", "height", "n_frames"
     )
 
@@ -1576,7 +1574,7 @@ def multimodal_frame_sample(spark, sf_dir):
     from .operators.multimodal import decode_media, documents_as_media, sample_frames
 
     docs = _t_wide(spark, sf_dir, "documents")
-    return sample_frames(decode_media(documents_as_media(docs), fake=True), every_n=8)
+    return sample_frames(decode_media(documents_as_media(docs)), every_n=8)
 
 
 @q(

@@ -11,12 +11,16 @@ near-dup. Design notes for 100 TB:
   product. Hash functions are md5-based so any SQL engine reproduces them
   bit-for-bit (the correctness oracle runs the same formula in DuckDB).
 - pair verification: exact Jaccard on shingle sets of candidate pairs only.
+- embedding near-dup: exact cosine within a blocking column's groups (a
+  self-join on the block key), never across them.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from ..session import unpersist_checkpoint
 
 # --- exact -----------------------------------------------------------------
 
@@ -323,139 +327,31 @@ def simhash_near_dups(
 
 # --- embedding near-dup --------------------------------------------------------
 
-def _hyperplane_signs(num_planes: int, dim: int) -> list[list[float]]:
-    """Deterministic +/-1 hyperplane matrix: sign j,k = parity of
-    md5(f"{j}:{k}"). No RNG (reproducible across engines and rounds)."""
-    import hashlib
-
-    return [
-        [1.0 if hashlib.md5(f"{j}:{k}".encode()).digest()[0] % 2 == 0 else -1.0
-         for k in range(dim)]
-        for j in range(num_planes)
-    ]
-
-
-def _sign_lsh_sig_udf(num_planes: int, dim: int):
-    """Arrow-batched signature: ONE numpy matmul (n x dim) @ (dim x planes)
-    per batch instead of `num_planes` interpreted aggregate(zip_with(...))
-    expressions (~dim*planes interpreted ops per ROW). Bit j of the
-    signature = sign of the dot with deterministic hyperplane j. Products are
-    exact (+/-1.0 coefficients) but matmul may SUM in a different order than
-    the expression form's left fold, so a dot within rounding error of zero
-    could in principle bucket differently — affects candidate recall only
-    (verification is exact), and matched bit-for-bit on every tested input."""
-    import numpy as np
-    from pyspark.sql.functions import pandas_udf
-
-    planes_t = np.asarray(_hyperplane_signs(num_planes, dim), dtype=np.float64).T
-    weights = np.asarray([1 << j for j in range(num_planes)], dtype=np.int64)
-
-    @pandas_udf("long")
-    def sig(v):
-        import pandas as pd
-
-        mat = np.array([np.asarray(x, dtype=np.float64) for x in v])
-        if mat.size == 0:
-            return pd.Series(np.zeros(len(v), dtype=np.int64))
-        bits = (mat @ planes_t) > 0
-        return pd.Series(bits @ weights)
-
-    return sig
-
-
-# below this cosine threshold, 8-plane sign-LSH recall degrades enough that
-# silent use is wrong: route to brute-force (with a warning) instead
-_SIGN_LSH_MIN_THRESHOLD = 0.8
-
-
 def embedding_near_dups(
     embeddings: DataFrame,
     threshold: float = 0.95,
-    block_col: str | None = "label",
+    block_col: str = "label",
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    num_planes: int = 8,
 ) -> DataFrame:
-    """Cosine >= threshold pairs. Blocking on `block_col`, or — when None —
-    sign-LSH over `num_planes` deterministic +/-1 hyperplanes (2^b buckets)
-    with hamming-1 MULTI-PROBE: the left side probes its own bucket plus each
-    single-bit flip, so a near-dup pair straddling one hyperplane still
-    collides. Expected bucket size n/2^b keeps the verify join sub-quadratic;
-    pairs separated by >=2 hyperplanes are the tolerated recall loss.
-
-    Design center: NEAR-DUP thresholds (>= ~0.9, measured recall 0.989 at
-    0.95 on a planted 480-vector corpus). At thresholds below
-    `_SIGN_LSH_MIN_THRESHOLD` (0.5 = 60 degrees means ~1/3 separation
-    probability PER plane) sign-LSH recall collapses, so the un-blocked path
-    warns and routes to the brute-force all-pairs join instead (quadratic —
-    at scale, callers wanting loose thresholds should pass `block_col`)."""
+    """Cosine >= threshold pairs (id_a < id_b) among rows that share a
+    `block_col` value. The candidate join is the block self-join, so its
+    cost is the sum of the squared block sizes, at any threshold."""
     # shared vector-math helpers (similarity.py) — a private copy here is how
     # the r4 ANSI divide-by-zero fix missed this call site (r4 review)
     from .similarity import _as_double, _dot, _norm
 
     v = _as_double(F.col(vec_col))
-    norm = _norm(v)
     base = embeddings.select(
         F.col(id_col).alias("id"),
         v.alias("v"),
-        norm.alias("nrm"),
-        *([F.col(block_col).alias("blk")] if block_col else []),
+        _norm(v).alias("nrm"),
+        F.col(block_col).alias("blk"),
     )
-    if block_col:
-        a, b = base.alias("a"), base.alias("b")
-        joined = a.join(b, "blk")
-    elif threshold < _SIGN_LSH_MIN_THRESHOLD:
-        import warnings
-
-        warnings.warn(
-            f"embedding_near_dups: threshold={threshold} is below the sign-LSH "
-            f"design floor {_SIGN_LSH_MIN_THRESHOLD}; routing to brute-force "
-            "all-pairs (quadratic) — pass block_col for a scalable loose-"
-            "threshold search"
-        )
-        # crossJoin (partition-pairwise CartesianProduct), NOT a join on a
-        # constant key, which would shuffle every row to one partition
-        joined = base.alias("a").crossJoin(base.alias("b"))
-    else:
-        first = embeddings.select(vec_col).first()
-        if first is None:  # empty input: no pairs (and no dim to be read)
-            return (
-                base.select(
-                    F.col("id").alias("id_a"),
-                    F.col("id").alias("id_b"),
-                    F.lit(0.0).alias("cosine"),
-                ).limit(0)
-            )
-        dim = len(first[0])
-        if dim >= 256:
-            # wide vectors: one Arrow-batched numpy matmul per batch beats
-            # num_planes interpreted aggregate(zip_with()) expressions
-            # (measured 1.4x at 768-d, value-identical signatures); below
-            # ~256-d the Python-worker round-trip costs more than it saves
-            base = base.withColumn("sig", _sign_lsh_sig_udf(num_planes, dim)(F.col("v")))
-        else:
-            planes = _hyperplane_signs(num_planes, dim)
-            sig = F.lit(0)
-            for j, w in enumerate(planes):
-                wcol = F.array(*[F.lit(x) for x in w])
-                dot_j = F.aggregate(
-                    F.zip_with(F.col("v"), wcol, lambda x, y: x * y),
-                    F.lit(0.0),
-                    lambda acc, x: acc + x,
-                )
-                sig = sig + F.when(dot_j > 0, F.lit(1 << j)).otherwise(F.lit(0))
-            base = base.withColumn("sig", sig)
-        # left side probes its bucket + every hamming-1 neighbor; right side
-        # stays in its own bucket -> any pair within hamming 1 collides
-        probes = F.array(
-            F.col("sig"), *[F.col("sig").bitwiseXOR(F.lit(1 << j)) for j in range(num_planes)]
-        )
-        a = base.select("id", "v", "nrm", F.explode(probes).alias("blk")).alias("a")
-        b = base.withColumnRenamed("sig", "blk").alias("b")
-        joined = a.join(b, "blk")
     dot = _dot(F.col("a.v"), F.col("b.v"))
     return (
-        joined.filter(F.col("a.id") < F.col("b.id"))
+        base.alias("a").join(base.alias("b"), "blk")
+        .filter(F.col("a.id") < F.col("b.id"))
         # try_divide: a zero-norm embedding has undefined cosine — ANSI mode
         # (Spark 4 default) THROWS on a bare `/`; NULL is then dropped by the
         # threshold filter (NULL >= t is NULL -> false)
@@ -492,7 +388,9 @@ def connected_components(
     Each iteration's labels are localCheckpoint'ed: iterative DataFrame
     self-joins grow the LOGICAL plan (persist alone does not truncate it),
     and past ~20 nested iterations the analyzer/AQE cost explodes — lineage
-    truncation is what keeps iteration k as cheap as iteration 1."""
+    truncation is what keeps iteration k as cheap as iteration 1. Each
+    superseded snapshot, and the edge checkpoint after the loop, is freed
+    as it goes: the returned labels are the one snapshot left stored."""
     e = pairs.select(F.col(id_a).alias("src"), F.col(id_b).alias("dst"))
     edges = e.unionByName(
         e.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
@@ -526,17 +424,15 @@ def connected_components(
             .filter(F.col("n.label") != F.col("o.label"))
             .count()
         )
-        # free the previous iteration's checkpoint: without this, up to
-        # max_iters full label snapshots pin executor storage until session
-        # end (r4 review) — the new snapshot is already materialized (eager)
-        try:
-            labels.unpersist()
-        except Exception:
-            pass
+        # free the superseded snapshot: the new one is already stored
+        # (eager), and without this up to max_iters snapshots stay stored
+        # until the session ends
+        unpersist_checkpoint(labels)
         labels = new_labels
         if changed == 0:
             converged = True
             break
+    unpersist_checkpoint(edges)
     if not converged:
         import warnings
 

@@ -1,14 +1,11 @@
 """Multimodal column plumbing: opaque binary payloads + typed metadata.
 
 The engine treats image/audio/video as `binary` columns with a metadata
-struct; decode / feature-extract / resize / frame-sample run as Arrow-batched
-pandas UDFs over `mapInPandas`. Real pure-python codecs exist for PNG headers
-(image dims) and RIFF/WAVE (audio frame count); compressed codecs (JPEG,
-video containers) remain STUBBED in this container (no image/audio libs) —
-those raise NotImplementedError unless `fake=True`, in which case a
-deterministic fake decoder (seeded by the payload hash) produces plausible
-metadata. The Spark-side plumbing (schema, partitioning, UDF signature,
-Arrow batch shape) is identical either way and tested on both paths.
+struct; decode / feature-extract / frame-sample run as Arrow-batched pandas
+UDFs over `mapInPandas`. No codec library is in the container, so the
+decoder is a deterministic stand-in: metadata and a feature vector derived
+from the payload's sha256. The Spark-side plumbing (schema, partitioning,
+UDF signature, Arrow batch shape) is what a real codec would plug into.
 """
 
 from __future__ import annotations
@@ -47,83 +44,23 @@ def documents_as_media(docs: DataFrame) -> DataFrame:
     )
 
 
-def _parse_png(payload: bytes):
-    """Pure-python PNG IHDR parse: (width, height). The IHDR chunk is
-    mandatory and first (PNG spec 5.6), 8-byte signature + 4-byte length +
-    'IHDR' + big-endian W, H."""
-    import struct
-
-    if len(payload) < 24 or payload[:8] != b"\x89PNG\r\n\x1a\n" or payload[12:16] != b"IHDR":
-        return None
-    w, h = struct.unpack(">II", payload[16:24])
-    return int(w), int(h)
-
-
-def _parse_wav(payload: bytes):
-    """Pure-python RIFF/WAVE parse: n_frames (samples per channel) from the
-    fmt and data chunks."""
-    import struct
-
-    if len(payload) < 12 or payload[:4] != b"RIFF" or payload[8:12] != b"WAVE":
-        return None
-    pos, channels, bits = 12, None, None
-    n_frames = None
-    while pos + 8 <= len(payload):
-        cid = payload[pos : pos + 4]
-        (size,) = struct.unpack("<I", payload[pos + 4 : pos + 8])
-        body = payload[pos + 8 : pos + 8 + size]
-        if cid == b"fmt " and len(body) >= 16:
-            channels, = struct.unpack("<H", body[2:4])
-            bits, = struct.unpack("<H", body[14:16])
-        elif cid == b"data" and channels and bits:
-            # malformed fmt chunks can declare bits<8 (frame size 0) — reject
-            # the payload instead of ZeroDivisionError-ing the executor task
-            if bits < 8 or (channels * bits) % 8 != 0:
-                return None
-            n_frames = size // (channels * bits // 8)
-        pos += 8 + size + (size % 2)  # chunks are word-aligned
-    return n_frames
-
-
-def _real_decode(payload: bytes, media_type: str):
-    """Real (non-stub) decode for the formats a pure-python parser can
-    handle: PNG headers (image dims) and RIFF/WAVE (audio frame count).
-    Compressed codecs (JPEG entropy decode, video containers) stay honestly
-    stubbed — no codec libs in this container. Reference analog: the
-    tagged-union media-ish record decode (rag2-retriever/retrieve.py:133-256)."""
-    if media_type == "image":
-        dims = _parse_png(payload)
-        if dims is not None:
-            w, h = dims
-            return w, h, 1, None
-    elif media_type == "audio":
-        nf = _parse_wav(payload)
-        if nf is not None:
-            return None, None, nf, None
-    raise NotImplementedError(
-        f"no pure-python codec for this {media_type} payload (PNG and WAV "
-        "headers are supported); run with fake=True for the deterministic "
-        "stub decoder"
-    )
-
-
-def _fake_decode(payload: bytes, media_type: str, feat_dim: int = 8):
+def _fake_decode(payload: bytes, media_type: str):
     """Deterministic fake decode: metadata + feature vector derived from the
     payload digest, so tests are stable and the Arrow plumbing is exercised."""
     d = hashlib.sha256(payload).digest()
     width = 64 + d[0]
     height = 64 + d[1]
     n_frames = 1 + d[2] % 32 if media_type == "video" else (1 if media_type == "image" else None)
-    feature = [round(b / 255.0, 6) for b in d[:feat_dim]]
+    feature = [round(b / 255.0, 6) for b in d[:8]]  # 8-d feature vector
     return width, height, n_frames, feature
 
 
-def decode_media(media: DataFrame, fake: bool = True, feat_dim: int = 8) -> DataFrame:
+def decode_media(media: DataFrame) -> DataFrame:
     """mapInPandas decode/feature-extract. Arrow-batched; one output row per
     input row; nullable fields depend on media_type.
 
     The per-row Python loop is the DESIGN here, not an accident (r3 verdict
-    item 8): codec parsing — real or digest-fake — consumes one opaque
+    item 8): a codec — here the digest stand-in — consumes one opaque
     variable-length payload at a time (no vectorized sha256/codec exists;
     hashlib releases the GIL on large buffers), and the loop runs once per
     Arrow batch per partition, so the driver never touches a payload and
@@ -138,10 +75,7 @@ def decode_media(media: DataFrame, fake: bool = True, feat_dim: int = 8) -> Data
             }
             for mid, payload, mtype in zip(pdf["media_id"], pdf["payload"], pdf["media_type"]):
                 raw = bytes(payload)
-                if fake:
-                    w, h, nf, feat = _fake_decode(raw, mtype, feat_dim)
-                else:
-                    w, h, nf, feat = _real_decode(raw, mtype)
+                w, h, nf, feat = _fake_decode(raw, mtype)
                 out["media_id"].append(mid)
                 out["media_type"].append(mtype)
                 out["n_bytes"].append(len(raw))

@@ -420,7 +420,7 @@ def ann_ivf_topk_pdf(sf_dir: str, n_centroids: int = 16, lloyd_iters: int = 1,
     """Independent numpy re-derivation of the IVF index + probe search
     (operators/similarity.py build_ivf_index/ivf_topk with the r3 defaults).
     Reproducible because the Spark side quantizes every partition-order-
-    sensitive quantity: Lloyd means round to 6dp (mean_precision=6), folds are
+    sensitive quantity: Lloyd means round to 6dp (as build_ivf_index does), folds are
     sequential (matched here with cumsum), and cosines round to 6dp HALF_UP.
     Seeds = n_centroids smallest (md5(str(id)), id); train = full corpus at
     test scales (<= 200k cap)."""

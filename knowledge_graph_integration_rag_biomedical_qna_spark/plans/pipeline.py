@@ -28,6 +28,7 @@ micro-batch; the run modes differ only in their sinks.
 from __future__ import annotations
 
 import atexit
+import functools
 import os
 import secrets
 import shutil
@@ -46,6 +47,7 @@ from ..operators.extraction import extract_all_df, mentions_view, triples_view
 from ..operators.linking import candidate_table, resolution_table
 from ..operators.linking import resolve_triples  # noqa: F401 -- importable here for perfbench
 from ..operators.turn_assembly import assemble_turns
+from ..session import unpersist_checkpoint
 
 
 @dataclass
@@ -69,12 +71,8 @@ class KGResult:
         return self._mentions_fn()
 
     def unpersist(self) -> None:
-        """Drop the stored pass of a persisted build (a no-op otherwise):
-        the blocks belong to the checkpointed RDD that the pass's
-        `LogicalRDD` holds, which `DataFrame.unpersist` does not reach."""
-        plan = self.unified._jdf.queryExecution().analyzed()
-        if plan.getClass().getSimpleName() == "LogicalRDD":
-            plan.rdd().unpersist(False)
+        """Drop the stored pass of a persisted build (a no-op otherwise)."""
+        unpersist_checkpoint(self.unified)
 
 
 # the dictionary columns the index ships: matcher keys plus link candidates
@@ -84,8 +82,6 @@ _SHIPPED = ["alias_key", "alias", "cui", "prior"]
 # removed at interpreter exit
 _SHIP_DIR = os.path.join(tempfile.gettempdir(),
                          f"kg_aliases-{os.getpid()}-{secrets.token_hex(4)}")
-# per-Python-worker cache of the last dictionary read: (digest, AliasIndex)
-_WORKER_INDEX: list = [None]
 
 
 def _remove_ship_dir() -> None:
@@ -112,17 +108,20 @@ class ShippedAliases:
 
     @property
     def value(self):
-        hit = _WORKER_INDEX[0]
-        if hit is None or hit[0] != self.digest:
-            import pyarrow as pa
-            from pyspark import SparkFiles
+        return _worker_index(self.digest)
 
-            from ..core.patterns import AliasIndex
 
-            with pa.memory_map(SparkFiles.get(self.file_name)) as f:
-                cols = [c.to_pylist() for c in pa.ipc.open_file(f).read_all().columns]
-            hit = _WORKER_INDEX[0] = (self.digest, AliasIndex(frozenset(cols[0]), candidates=cols))
-        return hit[1]
+# one entry per Python worker: the index of the last dictionary it read
+@functools.lru_cache(maxsize=1)
+def _worker_index(digest: str):
+    import pyarrow as pa
+    from pyspark import SparkFiles
+
+    from ..core.patterns import AliasIndex
+
+    with pa.memory_map(SparkFiles.get(ShippedAliases(digest).file_name)) as f:
+        cols = [c.to_pylist() for c in pa.ipc.open_file(f).read_all().columns]
+    return AliasIndex(frozenset(cols[0]), candidates=cols)
 
 
 def _ship(spark: SparkSession, proj: DataFrame) -> ShippedAliases:
@@ -191,7 +190,7 @@ def _files_identity(proj: DataFrame):
 
 # the last file-backed dictionary shipped in this process, as (identity,
 # shipped projection, handle): one entry, as each Python worker keeps one
-# built index (_WORKER_INDEX, _PA_VOCAB_CACHE)
+# built index (_worker_index, core.vectorized._pa_vocab)
 _LAST_SHIP: list = [None]
 
 

@@ -11,7 +11,7 @@ from __future__ import annotations
 import contextlib
 import os
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
 from .core.config import ARROW_BATCH
 
@@ -30,6 +30,15 @@ def scoped_conf(spark: SparkSession, key: str, value: str):
             spark.conf.unset(key)
         else:
             spark.conf.set(key, old)
+
+
+def unpersist_checkpoint(df: DataFrame) -> None:
+    """Drop the stored blocks of a local checkpoint (a no-op for any other
+    DataFrame): they belong to the checkpointed RDD that its `LogicalRDD`
+    holds, which `DataFrame.unpersist` does not reach."""
+    plan = df._jdf.queryExecution().analyzed()
+    if plan.getClass().getSimpleName() == "LogicalRDD":
+        plan.rdd().unpersist(False)
 
 
 def get_spark(

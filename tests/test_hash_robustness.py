@@ -248,24 +248,3 @@ def test_materialized_oracles_never_use_pandas_round():
         f"pandas/np .round() at materialize.py lines {offenders} — use the "
         "Decimal ROUND_HALF_UP twins (_round_half_up6 / Decimal.quantize)"
     )
-
-
-def test_gate_ann_queries_stay_on_fold_kernel():
-    """The materialized ANN oracles are bit-exact twins of the FOLD kernel
-    (sequential sums + Decimal rounding). The matmul kernel (BLAS-order
-    sums) must never auto-engage at the gate's embedding dimensionality —
-    pin the crossover above it."""
-    import pyarrow.parquet as pq
-
-    from knowledge_graph_integration_rag_biomedical_qna_spark.operators.similarity import (
-        MATMUL_MIN_DIM,
-    )
-
-    t = pq.read_table(os.path.join(SF_DIR, "embeddings.parquet"),
-                      columns=["embedding"])
-    dim = len(t.column("embedding")[0].as_py())
-    assert dim < MATMUL_MIN_DIM, (
-        f"gate embeddings are {dim}-d >= MATMUL_MIN_DIM={MATMUL_MIN_DIM}: "
-        "the hash-gated ANN queries would silently switch off the "
-        "oracle-twin fold kernel"
-    )

@@ -159,7 +159,7 @@ def test_text_analysis_columns(spark, docs):
 
 def test_multimodal_decode_plumbing(spark, docs):
     media = documents_as_media(docs.limit(50))
-    decoded = decode_media(media, fake=True)
+    decoded = decode_media(media)
     pdf = decoded.toPandas()
     assert len(pdf) == 50
     assert (pdf["n_bytes"] > 0).all()
@@ -172,25 +172,6 @@ def test_multimodal_decode_plumbing(spark, docs):
     assert pdf["feature"].map(len).eq(8).all()
     frames = sample_frames(decoded, every_n=8).toPandas()
     assert (frames["frame_idx"] % 8 == 0).all()
-
-
-def test_multimodal_real_decode_is_stubbed(spark, docs):
-    media = documents_as_media(docs.limit(1))
-    with pytest.raises(Exception) as ei:
-        decode_media(media, fake=False).collect()
-    assert "NotImplementedError" in str(ei.value) or isinstance(ei.value, NotImplementedError)
-
-
-def test_embedding_near_dups_sign_lsh_blocking(spark, emb):
-    """block_col=None path: sign-LSH bucket blocking still finds the planted
-    exact duplicate (same vector -> same bucket by construction)."""
-    v0 = emb.filter("vec_id = 0").select(
-        F.lit(999999).cast("long").alias("vec_id"), "embedding", "label"
-    )
-    pairs = embedding_near_dups(
-        emb.unionByName(v0), threshold=0.999, block_col=None
-    ).toPandas()
-    assert ((pairs["id_a"] == 0) & (pairs["id_b"] == 999999)).any()
 
 
 def test_simhash_rotated_bands_catch_prefix_bit_flip(spark, docs):
@@ -214,56 +195,6 @@ def test_simhash_rotated_bands_catch_prefix_bit_flip(spark, docs):
     got = set(map(tuple, pairs[["id_a", "id_b", "hamming"]].itertuples(index=False)))
     assert (1, 2, 1) in got, got  # old prefix bucketing never produced this
     assert (1, 3, 1) in got, got
-
-
-def test_embedding_near_dups_multiprobe_crosses_hyperplane(spark):
-    """block_col=None: a near-dup pair that lands in DIFFERENT sign buckets
-    (one hyperplane separates them) is still found via hamming-1 multi-probe,
-    and candidate generation is sub-quadratic on a planted corpus."""
-    import numpy as np
-
-    from knowledge_graph_integration_rag_biomedical_qna_spark.operators.dedup import (
-        _hyperplane_signs,
-        embedding_near_dups,
-    )
-
-    dim, b = 16, 8
-    planes = np.array(_hyperplane_signs(b, dim))
-    rng = np.random.default_rng(7)
-    rows = []
-    for i in range(400):
-        v = rng.normal(size=dim)
-        rows.append((i, [float(x) for x in v], "x"))
-    # planted pair: v straddling plane 0 -> tiny positive / tiny negative dot
-    base = rng.normal(size=dim)
-    base -= planes[0] * (planes[0] @ base) / (planes[0] @ planes[0])  # on plane 0
-    eps = planes[0] / np.linalg.norm(planes[0])
-    va, vb = base + 1e-3 * eps, base - 1e-3 * eps
-    sig_a = sum((1 << j) for j in range(b) if planes[j] @ va > 0)
-    sig_b = sum((1 << j) for j in range(b) if planes[j] @ vb > 0)
-    assert sig_a != sig_b and bin(sig_a ^ sig_b).count("1") == 1  # truly cross-bucket
-    rows.append((100001, [float(x) for x in va], "x"))
-    rows.append((100002, [float(x) for x in vb], "x"))
-    emb = spark.createDataFrame(rows, "vec_id long, embedding array<double>, label string")
-    pairs = embedding_near_dups(emb, threshold=0.999, block_col=None, num_planes=b).toPandas()
-    assert ((pairs["id_a"] == 100001) & (pairs["id_b"] == 100002)).any(), pairs
-
-    # sub-quadratic blocking: count candidate rows before the cosine filter
-    from pyspark.sql import functions as SF
-
-    sig = None  # candidate count proxy: bucket sizes from the signature
-    # recompute signatures exactly as the operator does
-    sigs = []
-    for i, v, _ in rows:
-        s = sum((1 << j) for j in range(b) if planes[j] @ np.array(v) > 0)
-        sigs.append(s)
-    from collections import Counter
-
-    c = Counter(sigs)
-    n = len(rows)
-    # each left row probes b+1 buckets; candidates = sum over probes of bucket size
-    cand = sum((c[s] + sum(c[s ^ (1 << j)] for j in range(b))) for s in sigs)
-    assert cand < n * n / 4, (cand, n * n)  # far below all-pairs
 
 
 def test_minhash_fast_family_matches_md5_on_planted_dups(spark, docs):
@@ -385,38 +316,46 @@ def test_simhash_python_oracle_matches_spark_on_tricky_text(spark):
 
 
 def test_embedding_near_dups_loose_threshold_routes_to_bruteforce(spark, emb):
-    """VERDICT r2 item 8: below the sign-LSH design floor the un-blocked path
-    must warn and fall back to exact all-pairs (full recall)."""
-    import warnings
+    """At the loose threshold `ann_threshold_pairs` runs (0.5), the blocked
+    self-join keeps full recall: its pairs equal the exact all-pairs
+    reference restricted to same-label pairs. No two corpus vectors are that
+    close, so two noisy copies of vector 0 are planted, one with its label
+    and one with another, which must not pair with it."""
+    base = emb.filter("vec_id < 60").select("vec_id", "embedding", "label")
+    v0 = base.filter("vec_id = 0").first()
+    rng = np.random.default_rng(1)
+    x0 = np.asarray(v0["embedding"], dtype=np.float64)
 
-    small = emb.limit(60)
-    with warnings.catch_warnings(record=True) as caught:
-        warnings.simplefilter("always")
-        got = embedding_near_dups(small, threshold=0.5, block_col=None).toPandas()
-    assert any("brute-force" in str(w.message) for w in caught)
-    # exact reference: all pairs with cosine >= 0.5
-    import numpy as np
+    def noisy():
+        return (x0 + 0.3 * np.abs(x0).mean() * rng.standard_normal(len(x0))).tolist()
 
-    pdf = small.select("vec_id", "embedding").toPandas()
+    planted = spark.createDataFrame(
+        [(900001, noisy(), v0["label"]), (900002, noisy(), v0["label"] + 1)], base.schema
+    )
+    small = base.unionByName(planted)
+    got = embedding_near_dups(small, threshold=0.5, block_col="label").toPandas()
+    pdf = small.toPandas()
     mat = np.array([np.asarray(v, dtype=np.float64) for v in pdf["embedding"]])
     ids = pdf["vec_id"].to_numpy()
+    labels = pdf["label"].to_numpy()
     nrm = np.linalg.norm(mat, axis=1)
-    want = set()
+    want, cross = set(), set()
     for i in range(len(ids)):
         for j in range(len(ids)):
             if ids[i] < ids[j]:
                 c = round(float(mat[i] @ mat[j]) / float(nrm[i] * nrm[j]), 6)
                 if c >= 0.5:
-                    want.add((ids[i], ids[j]))
+                    (want if labels[i] == labels[j] else cross).add((ids[i], ids[j]))
+    assert (0, 900001) in want and (0, 900002) in cross
     got_pairs = set(zip(got["id_a"], got["id_b"]))
     assert got_pairs == want
 
 
 def test_embedding_near_dups_empty_input(spark):
-    """ADVICE r2: empty input must return an empty result, not crash on
-    first()[0]."""
+    """ADVICE r2: empty input must return an empty result with the pair
+    schema, not crash."""
     empty = spark.createDataFrame([], "vec_id long, embedding array<float>, label string")
-    out = embedding_near_dups(empty, threshold=0.95, block_col=None)
+    out = embedding_near_dups(empty, threshold=0.95)
     assert out.count() == 0
     assert [f.name for f in out.schema.fields] == ["id_a", "id_b", "cosine"]
 
@@ -448,52 +387,6 @@ def test_minhash_fast_oracle_corpus_precondition(spark, docs):
         "(banded-LSH miss probability is no longer negligible) — raise the "
         "query/oracle threshold or re-band"
     )
-
-
-def test_multimodal_real_png_and_wav_decode(spark):
-    """VERDICT r2 item 9: real pure-python codecs. A genuine zlib-built PNG
-    and a hand-built RIFF/WAVE decode through the SAME mapInPandas plumbing
-    as the stub path (fake=False)."""
-    import struct
-    import zlib
-
-    from knowledge_graph_integration_rag_biomedical_qna_spark.operators.multimodal import (
-        decode_media,
-    )
-
-    def chunk(tag, body):
-        return struct.pack(">I", len(body)) + tag + body + struct.pack(
-            ">I", zlib.crc32(tag + body)
-        )
-
-    w, h = 3, 2
-    ihdr = struct.pack(">IIBBBBB", w, h, 8, 2, 0, 0, 0)  # 8-bit RGB
-    raw = b"".join(b"\x00" + bytes(3 * w) for _ in range(h))  # filter 0 rows
-    png = (
-        b"\x89PNG\r\n\x1a\n"
-        + chunk(b"IHDR", ihdr)
-        + chunk(b"IDAT", zlib.compress(raw))
-        + chunk(b"IEND", b"")
-    )
-
-    n_samples, channels, bits, rate = 40, 1, 16, 8000
-    data = bytes(n_samples * channels * bits // 8)
-    fmt = struct.pack("<HHIIHH", 1, channels, rate, rate * channels * bits // 8,
-                      channels * bits // 8, bits)
-    wav = (
-        b"RIFF" + struct.pack("<I", 4 + 8 + len(fmt) + 8 + len(data)) + b"WAVE"
-        + b"fmt " + struct.pack("<I", len(fmt)) + fmt
-        + b"data" + struct.pack("<I", len(data)) + data
-    )
-
-    media = spark.createDataFrame(
-        [(1, bytearray(png), "image", {}), (2, bytearray(wav), "audio", {})],
-        "media_id long, payload binary, media_type string, meta map<string,string>",
-    )
-    out = {r["media_id"]: r for r in decode_media(media, fake=False).collect()}
-    assert (out[1]["width"], out[1]["height"], out[1]["n_frames"]) == (3, 2, 1)
-    assert out[2]["n_frames"] == n_samples
-    assert out[2]["width"] is None
 
 
 def test_connected_components_transitive_chain(spark):
@@ -552,6 +445,22 @@ def test_connected_components_random_graphs_match_union_find(spark):
         assert got == want, (n, m, seed)
 
 
+def test_connected_components_frees_its_snapshots(spark):
+    """Each iteration's label snapshot and the edge table are local
+    checkpoints, whose blocks `DataFrame.unpersist` does not reach. Once the
+    result is read, one more RDD is stored than before: the returned labels."""
+    from knowledge_graph_integration_rag_biomedical_qna_spark.operators.dedup import (
+        connected_components,
+    )
+
+    sc = spark.sparkContext._jsc.sc()
+    before = len(sc.getRDDStorageInfo())
+    pairs = spark.createDataFrame([(i, i + 1) for i in range(1, 12)], "id_a long, id_b long")
+    got = {r["id"]: r["group_id"] for r in connected_components(pairs).collect()}
+    assert got == {i: 1 for i in range(1, 13)}
+    assert len(sc.getRDDStorageInfo()) <= before + 1
+
+
 def test_ivf_reference_design_point_768d(spark):
     """IVF at the reference's vector geometry (768-d MedCPT embeddings,
     retrieve.py:22,34): deterministic clustered corpus, 64 lists, nprobe 8 —
@@ -590,97 +499,15 @@ def test_ivf_reference_design_point_768d(spark):
     assert all(list(x) == list(y) for x, y in zip(p1["c"], p2["c"]))
 
 
-def test_cosine_topk_matmul_kernel_parity_768d(spark):
-    """The adaptive matmul kernel (auto at >= 256-d) must return the same
-    top-k sets as the engine-reproducible fold kernel, with cosines equal to
-    within a last-ulp-at-6dp rounding tie (matmul sums in BLAS order; the
-    fold is the sequential oracle twin). This is the r3 verdict's residual
-    interpreted-expression flag, closed with a measured-equivalent path."""
-    import numpy as np
-
-    rng = np.random.default_rng(7)
-    dim = 768
-    centers = rng.standard_normal((8, dim)) * 4
-    vecs = (centers.repeat(30, axis=0)
-            + rng.standard_normal((240, dim))).astype(np.float32)
-    rows = [(int(i), vecs[i].tolist()) for i in range(len(vecs))]
-    emb = spark.createDataFrame(rows, "vec_id long, embedding array<float>").repartition(5)
-    queries = emb.filter("vec_id < 4").select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")
-    )
-    fold = cosine_topk(emb, queries, k=10, kernel="fold").toPandas()
-    mm = cosine_topk(emb, queries, k=10, kernel="matmul").toPandas()
-    assert len(fold) == len(mm) == 40
-    for q in range(4):
-        f = fold[fold["query_id"] == q].sort_values("rank")
-        m = mm[mm["query_id"] == q].sort_values("rank")
-        assert list(f["vec_id"]) == list(m["vec_id"])
-        assert np.max(np.abs(f["cosine"].to_numpy() - m["cosine"].to_numpy())) <= 2e-6
-
-
-def test_ivf_topk_matmul_kernel_parity_768d(spark):
-    """IVF scoring through the matmul kernel must return the same top-k sets
-    as the fold kernel for the same index (identical probes by construction;
-    only the candidate scoring path differs)."""
-    import numpy as np
-
-    rng = np.random.default_rng(11)
-    dim = 768
-    centers = rng.standard_normal((8, dim)) * 4
-    vecs = (centers.repeat(30, axis=0)
-            + rng.standard_normal((240, dim))).astype(np.float32)
-    rows = [(int(i), vecs[i].tolist()) for i in range(len(vecs))]
-    emb = spark.createDataFrame(rows, "vec_id long, embedding array<float>").repartition(5)
-    queries = emb.filter("vec_id < 4").select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")
-    )
-    assignments, centroids = build_ivf_index(emb, n_centroids=16, train_sample=None)
-    fold = ivf_topk(assignments, centroids, queries, k=10, nprobe=4, kernel="fold").toPandas()
-    mm = ivf_topk(assignments, centroids, queries, k=10, nprobe=4, kernel="matmul").toPandas()
-    assert len(fold) == len(mm) > 0
-    for q in range(4):
-        f = fold[fold["query_id"] == q].sort_values("rank")
-        m = mm[mm["query_id"] == q].sort_values("rank")
-        assert list(f["vec_id"]) == list(m["vec_id"])
-        assert np.max(np.abs(f["cosine"].to_numpy() - m["cosine"].to_numpy())) <= 2e-6
-
-
-def test_wav_malformed_fmt_rejected_not_crash():
-    """A fmt chunk declaring bits-per-sample < 8 (frame size 0) must reject
-    the payload (None) instead of ZeroDivisionError-ing the executor task."""
-    import struct
-
-    from knowledge_graph_integration_rag_biomedical_qna_spark.operators.multimodal import (
-        _parse_wav,
-    )
-
-    fmt = struct.pack("<HHIIHH", 1, 1, 8000, 8000, 1, 4)  # 4 bits/sample
-    data = b"\x00" * 16
-    payload = (
-        b"RIFF" + struct.pack("<I", 4 + 8 + len(fmt) + 8 + len(data)) + b"WAVE"
-        + b"fmt " + struct.pack("<I", len(fmt)) + fmt
-        + b"data" + struct.pack("<I", len(data)) + data
-    )
-    assert _parse_wav(payload) is None
-    # and a well-formed 16-bit mono file still parses
-    fmt_ok = struct.pack("<HHIIHH", 1, 1, 8000, 16000, 2, 16)
-    ok = (
-        b"RIFF" + struct.pack("<I", 4 + 8 + len(fmt_ok) + 8 + len(data)) + b"WAVE"
-        + b"fmt " + struct.pack("<I", len(fmt_ok)) + fmt_ok
-        + b"data" + struct.pack("<I", len(data)) + data
-    )
-    assert _parse_wav(ok) == 8
-
-
 def test_cosine_topk_zero_norm_vector_excluded_both_kernels(spark):
-    """A zero-norm embedding has undefined cosine: the fold kernel's
-    division yields NULL, the matmul kernel 0/0 NaN — and Spark's DESC
-    window ranks NaN ABOVE every real value. Both kernels must exclude such
-    candidates entirely (r4 review finding)."""
+    """A zero-norm embedding has undefined cosine: the division yields NULL,
+    which must never be ranked (r4 review finding). Checked on both scorers,
+    exact `cosine_topk` and `ivf_topk`; with every list probed, IVF ranks
+    the same candidates as the exact search."""
     import numpy as np
 
     rng = np.random.default_rng(3)
-    dim = 300  # >= MATMUL_MIN_DIM so 'auto' would pick matmul
+    dim = 300
     vecs = rng.standard_normal((30, dim)).astype(np.float32)
     vecs[7] = 0.0  # the zero-norm candidate
     rows = [(int(i), vecs[i].tolist()) for i in range(len(vecs))]
@@ -688,69 +515,13 @@ def test_cosine_topk_zero_norm_vector_excluded_both_kernels(spark):
     queries = emb.filter("vec_id = 0").select(
         F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")
     )
-    fold = cosine_topk(emb, queries, k=29, kernel="fold").toPandas()
-    mm = cosine_topk(emb, queries, k=29, kernel="matmul").toPandas()
-    assert 7 not in set(fold["vec_id"]) and 7 not in set(mm["vec_id"])
-    assert list(fold.sort_values("rank")["vec_id"]) == list(mm.sort_values("rank")["vec_id"])
-    assert fold["cosine"].notna().all() and np.isfinite(mm["cosine"]).all()
-
-
-def test_matmul_query_collect_guard_routes_to_fold(spark, monkeypatch):
-    """The matmul kernels collect the query side into the task closure; that
-    collect is size-guarded (r4 verdict item 2): above MATMUL_MAX_QUERY_ROWS
-    the kernel must warn and fall back to the distributed fold/broadcast
-    path instead of materializing an unbounded query table on the driver.
-    Exercised by shrinking the cap so a 5-query batch overflows it; results
-    must equal the fold kernel's exactly (it IS the fold kernel after the
-    route)."""
-    import warnings as _w
-
-    from knowledge_graph_integration_rag_biomedical_qna_spark.operators import similarity
-
-    rng = np.random.default_rng(11)
-    dim = 300  # >= MATMUL_MIN_DIM: matmul is the natural route
-    vecs = rng.standard_normal((40, dim)).astype(np.float32)
-    rows = [(int(i), vecs[i].tolist()) for i in range(len(vecs))]
-    emb = spark.createDataFrame(rows, "vec_id long, embedding array<float>").repartition(3)
-    queries = emb.filter("vec_id < 5").select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")
-    )
-    fold = cosine_topk(emb, queries, k=5, kernel="fold").toPandas()
-
-    monkeypatch.setattr(similarity, "MATMUL_MAX_QUERY_ROWS", 3)
-    with _w.catch_warnings(record=True) as caught:
-        _w.simplefilter("always")
-        guarded = cosine_topk(emb, queries, k=5, kernel="matmul").toPandas()
-    assert any("falling back" in str(c.message) for c in caught), (
-        "overflow route must warn"
-    )
-    f = fold.sort_values(["query_id", "rank"]).reset_index(drop=True)
-    g = guarded.sort_values(["query_id", "rank"]).reset_index(drop=True)
-    assert list(f["vec_id"]) == list(g["vec_id"])
-    assert (f["cosine"] == g["cosine"]).all()  # same kernel -> bit-equal
-
-    # IVF: probe rows = queries x nprobe overflow the same guard
+    exact = cosine_topk(emb, queries, k=29).toPandas()
     assignments, centroids = build_ivf_index(emb, n_centroids=4, train_sample=None)
-    ivf_fold = ivf_topk(assignments, centroids, queries, k=5, nprobe=2, kernel="fold").toPandas()
-    with _w.catch_warnings(record=True) as caught:
-        _w.simplefilter("always")
-        ivf_guarded = ivf_topk(
-            assignments, centroids, queries, k=5, nprobe=2, kernel="matmul"
-        ).toPandas()
-    assert any("falling back" in str(c.message) for c in caught)
-    a = ivf_fold.sort_values(["query_id", "rank"]).reset_index(drop=True)
-    b = ivf_guarded.sort_values(["query_id", "rank"]).reset_index(drop=True)
-    assert list(a["vec_id"]) == list(b["vec_id"])
-    assert (a["cosine"] == b["cosine"]).all()
-
-    # under the cap the matmul path still engages (no warning)
-    monkeypatch.setattr(similarity, "MATMUL_MAX_QUERY_ROWS", 100_000)
-    with _w.catch_warnings(record=True) as caught:
-        _w.simplefilter("always")
-        mm = cosine_topk(emb, queries, k=5, kernel="matmul").toPandas()
-    assert not any("falling back" in str(c.message) for c in caught)
-    m = mm.sort_values(["query_id", "rank"]).reset_index(drop=True)
-    assert list(f["vec_id"]) == list(m["vec_id"])
+    ivf = ivf_topk(assignments, centroids, queries, k=29, nprobe=4).toPandas()
+    for got in (exact, ivf):
+        assert len(got) == 28 and 7 not in set(got["vec_id"])
+        assert got["cosine"].notna().all()
+    assert list(ivf.sort_values("rank")["vec_id"]) == list(exact.sort_values("rank")["vec_id"])
 
 
 def test_observation_private_handle_pinned(spark):
