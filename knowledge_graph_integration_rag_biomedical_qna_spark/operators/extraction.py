@@ -265,8 +265,7 @@ def extract_collapsed_df(
     fails instead of overcounting.
 
     Callers needing per-occurrence mention rows (tok spans) run
-    `extract_all_df` instead — build_kg keeps its `.mentions` view lazily on
-    that path."""
+    `extract_all_df` instead; no build runs it (tests and perfbench do)."""
     from pyspark.sql.pandas.types import to_arrow_type
 
     linked = [T.StructField("subj_cui", cui_type), T.StructField("obj_cui", cui_type),

@@ -13,14 +13,13 @@ rag2-retriever/main.py:119-167 + rerank.py:37-75 + context_pruning.py:36-51):
    partitioning, so it adds no exchange.
 2. top-1 + floor acceptance (A2 + the 0.5 cosine floor): `resolution_table`.
 
-Steps 1+2 are the specification of linking and serve the lazy
-`KGResult.candidates`/`resolution` views. The build and the ask do not run
-them: their extraction passes link each task's distinct pairs in place
-with `pair_linker`, which ranks by the same rule (`_ranked`) and accepts
-by the same floor (`_accepted`), so linking costs no job, join, broadcast
-or exchange of its own. Scoring then runs once per distinct pair per task,
-proportional to the pairs each task already ships, not to the global
-vocabulary.
+Steps 1+2 are the specification of linking; tests and perfbench run them.
+The build and the ask do not: their extraction passes link each task's
+distinct pairs in place with `pair_linker`, which ranks by the same rule
+(`_ranked`) and accepts by the same floor (`_accepted`), so linking costs
+no job, join, broadcast or exchange of its own. Scoring then runs once per
+distinct pair per task, proportional to the pairs each task already ships,
+not to the global vocabulary.
 """
 
 from __future__ import annotations

@@ -24,35 +24,26 @@ from pyspark.sql import DataFrame
 TURN_ORDER = ["ts", "role", "text", "tool"]
 
 
-def assemble_turns(
-    transcripts: DataFrame,
-    num_partitions: int | None = None,
-    assume_clustered: bool = False,
-) -> DataFrame:
+def assemble_turns(transcripts: DataFrame, assume_clustered: bool = False) -> DataFrame:
     """Dedup duplicate (conv_id, turn_idx) first-wins under the stable order,
     drop empty/whitespace-only texts, and keep the contract columns.
 
+    The input is hash-repartitioned by conv_id into `defaultParallelism`
+    partitions BEFORE the window. HashPartitioning(conv_id) satisfies the
+    window's ClusteredDistribution (conv_id, turn_idx), so this is the plan's
+    ONLY data-sized shuffle — and it pins the parallelism of every downstream
+    Arrow/pandas stage. Without it, AQE coalesces small-byte text partitions
+    to a handful of tasks and the Python extraction stages lose their
+    row-based parallelism (text bytes are small; Python CPU per row is the
+    actual cost).
+
     `assume_clustered=True` skips the repartition for inputs already bucketed
     by conv_id (sources.io.write_bucketed) — the whole stage then runs with
-    zero exchanges.
-
-    `num_partitions`: explicit hash-repartition by conv_id BEFORE the window.
-    HashPartitioning(conv_id) satisfies the window's ClusteredDistribution
-    (conv_id, turn_idx), so this is the plan's ONLY data-sized shuffle — and it
-    pins the parallelism of every downstream Arrow/pandas stage. Without it,
-    AQE coalesces small-byte text partitions to a handful of tasks and the
-    Python extraction stages lose their row-based parallelism (text bytes are
-    small; Python CPU per row is the actual cost).
+    zero exchanges; the window still satisfies its distribution.
     """
     df = transcripts
-    if assume_clustered:
-        # input already bucketed/partitioned by conv_id (write_bucketed):
-        # skip the repartition; the window still satisfies its distribution
-        pass
-    else:
-        if num_partitions is None:
-            num_partitions = transcripts.sparkSession.sparkContext.defaultParallelism
-        df = df.repartition(num_partitions, "conv_id")
+    if not assume_clustered:
+        df = df.repartition(transcripts.sparkSession.sparkContext.defaultParallelism, "conv_id")
     # one SQL-string window expression instead of a Window-spec object tree:
     # parses JVM-side in a single round trip (r6 plan-construction diet);
     # ASC NULLS LAST matches the previous asc_nulls_last() exactly

@@ -34,41 +34,34 @@ import secrets
 import shutil
 import tempfile
 from dataclasses import dataclass
-from functools import cached_property
+from typing import ClassVar
 
 from py4j.protocol import Py4JError
 from pyspark import StorageLevel
 from pyspark.sql import DataFrame, SparkSession
 
 from ..core.config import MAX_MENTION_TOKENS
-from ..operators.canonicalize import aggregate_edges  # noqa: F401 -- importable here for perfbench
 from ..operators.canonicalize import aggregate_flagged_edges, canonicalize_node_stats
-from ..operators.extraction import extract_all_df, mentions_view, triples_view
-from ..operators.linking import candidate_table, resolution_table
-from ..operators.linking import resolve_triples  # noqa: F401 -- importable here for perfbench
 from ..operators.turn_assembly import assemble_turns
 from ..session import unpersist_checkpoint
+
+# Unused here since build_kg builds only what its writes read. perfbench's
+# traced build patches these module attributes by name, so they stay
+# importable from this module.
+from ..operators.canonicalize import aggregate_edges  # noqa: F401
+from ..operators.extraction import triples_view  # noqa: F401
+from ..operators.linking import candidate_table, resolution_table, resolve_triples  # noqa: F401
 
 
 @dataclass
 class KGResult:
-    turns: DataFrame
     unified: DataFrame       # collapsed single-pass extraction (triples + mention stats)
-    raw_triples: DataFrame
-    candidates: DataFrame
-    resolution: DataFrame
     kg_edges: DataFrame      # evidence-level CUI-resolved triples (provenance kept)
-    kg_edge_stats: DataFrame  # deduplicated graph edges with counters
     kg_nodes: DataFrame
-    mention_stats: DataFrame | None = None  # vocab-sized (alias_key, surface, n)
-    # per-occurrence mentions: a thunk resolved on first access (the plan is
-    # never constructed unless a consumer actually reads token spans — plan
-    # construction itself costs driver time, see build_kg docstring)
-    _mentions_fn: object | None = None
-
-    @cached_property
-    def mentions(self) -> DataFrame:
-        return self._mentions_fn()
+    kg_edge_stats: DataFrame  # deduplicated graph edges with counters
+    # no view of either is built; bench.py reads both and skips None
+    mention_stats: ClassVar[None] = None
+    resolution: ClassVar[None] = None
 
     def unpersist(self) -> None:
         """Drop the stored pass of a persisted build (a no-op otherwise)."""
@@ -289,10 +282,7 @@ def build_kg(
     already collapsed to per-task partial (alias_key, surface, n) stats
     (extract_collapsed_df): the mentions are only ever re-read as the
     vocab-sized aggregate, so the collapse removes most of the Arrow->JVM
-    transfer, the cache build and the kg_nodes shuffle. `.mentions`
-    stays per-occurrence via a LAZY uncached second extraction pass —
-    consumers of token spans pay for that pass only if they read it (tests
-    and tools do; the nodes+edges product never does).
+    transfer, the cache build and the kg_nodes shuffle.
 
     Linking rides that pass too: each task resolves its own distinct
     (alias_key, surface) pairs against the candidates `alias_index` ships,
@@ -301,9 +291,9 @@ def build_kg(
     kg_edge_stats groups the linked triples by edge, with the exact n_convs
     counted from the pass's `conv_first` flags (extract_collapsed_df). The
     driver never receives the resolved vocabulary, so
-    `spark.driver.maxResultSize` does not bound a build. `candidates`,
-    `resolution` and `mention_stats` are lazy specification views over the
-    same pass (tools and tests read them); no write runs them.
+    `spark.driver.maxResultSize` does not bound a build. The result holds
+    the pass and the three tables its writes read, and builds no other
+    plan.
 
     `persist=True` stores the collapsed extraction output, the one
     transcript-sized table every write reads (Catalyst has no cross-branch
@@ -339,13 +329,13 @@ def build_kg(
     (broadcast_alias_keys' memo), so it starts no Spark job for it.
 
     Driver-side plan-construction cost: one warm lazy build_kg call with a
-    hoisted alias_index is 274 py4j round-trips; their median of 15 took
-    0.08-0.39 s (n_conv=200 fixture, local[4] on a shared 4-vCPU host,
-    which moves it that much between runs), paid once per checkpoint group
-    — down from ~3,100 round-trips before the selectExpr rewrites.
+    hoisted alias_index is 186 py4j round-trips, 0.08-0.13 s (n_conv=200
+    fixture, local[2] on a shared 4-vCPU host), paid once per checkpoint
+    group and stream epoch — down from 270 while it also built the linking
+    specification's views, and from ~3,100 before the selectExpr rewrites.
     Amortize it by reusing the plan (bench.py).
     """
-    from ..operators.extraction import extract_collapsed_df, mention_stats_view
+    from ..operators.extraction import extract_collapsed_df
 
     turns = assemble_turns(transcripts, assume_clustered=assume_clustered)
     keys_bc = alias_index if alias_index is not None else broadcast_alias_keys(spark, aliases)
@@ -355,22 +345,9 @@ def build_kg(
     unified = extract_collapsed_df(turns, keys_bc, aliases.schema["cui"].dataType)
     if persist:
         unified = unified.localCheckpoint(eager=False, storageLevel=StorageLevel.MEMORY_AND_DISK)
-    raw_triples = triples_view(unified)
-    mention_stats = mention_stats_view(unified)
-    candidates = candidate_table(mention_stats, aliases, alias_index=keys_bc)
-    resolution = resolution_table(candidates)
-
     return KGResult(
-        turns=turns,
         unified=unified,
-        # per-occurrence view: a LAZY uncached second extraction pass, built
-        # only if a consumer reads .mentions (plan construction deferred too)
-        _mentions_fn=lambda: mentions_view(extract_all_df(turns, keys_bc)),
-        raw_triples=raw_triples,
-        candidates=candidates,
-        resolution=resolution,
         kg_edges=kg_edges_of(unified),
         kg_edge_stats=kg_edge_stats_of(unified),
         kg_nodes=kg_nodes_of(unified),
-        mention_stats=mention_stats,
     )

@@ -10,6 +10,7 @@ import os
 import pandas as pd
 import pytest
 
+from knowledge_graph_integration_rag_biomedical_qna_spark.operators.extraction import triples_view
 from knowledge_graph_integration_rag_biomedical_qna_spark.plans.checkpoint import (
     ResumableKGRun,
     bucket_of,
@@ -116,7 +117,7 @@ def test_lineage_metrics(spark, inputs, tmp_path):
     try:
         expected = {
             "turns_in": _bucket_counts(transcripts, 4),
-            "raw_triples": _bucket_counts(kg.raw_triples, 4),
+            "raw_triples": _bucket_counts(triples_view(kg.unified), 4),
             "edges": _bucket_counts(kg.kg_edges, 4),
         }
     finally:

@@ -21,6 +21,8 @@ from knowledge_graph_integration_rag_biomedical_qna_spark.operators.canonicalize
 )
 from knowledge_graph_integration_rag_biomedical_qna_spark.operators.extraction import (
     detect_mentions_df,
+    mention_stats_view,
+    triples_view,
 )
 from knowledge_graph_integration_rag_biomedical_qna_spark.operators.linking import (
     candidate_table,
@@ -117,14 +119,16 @@ def fixture_inputs(spark, fixture_dir):
 @pytest.mark.parametrize("inputs", ["fixture", "adversarial"])
 def test_build_links_equal_the_specification(spark, fixture_inputs, inputs):
     """kg_edges and kg_nodes equal resolve_triples and
-    canonicalize_node_stats over the build's own lazy resolution table,
-    row for row and type for type."""
+    canonicalize_node_stats over the resolution table of the build's own
+    pass, row for row and type for type."""
     transcripts, aliases, index = (
         fixture_inputs if inputs == "fixture" else _adversarial_inputs(spark))
     kg = build_kg(spark, transcripts, aliases, alias_index=index)
     try:
-        _assert_same(kg.kg_edges, resolve_triples(kg.raw_triples, kg.resolution))
-        _assert_same(kg.kg_nodes, canonicalize_node_stats(kg.resolution))
+        resolution = resolution_table(
+            candidate_table(mention_stats_view(kg.unified), aliases, alias_index=index))
+        _assert_same(kg.kg_edges, resolve_triples(triples_view(kg.unified), resolution))
+        _assert_same(kg.kg_nodes, canonicalize_node_stats(resolution))
         nodes = {r["cui"] for r in kg.kg_nodes.collect()}
         assert kg.kg_edges.count() > 0
     finally:
@@ -183,7 +187,7 @@ def test_a_null_cui_links_nothing(spark):
     transcripts = spark.createDataFrame(
         [("c1", 1, "user", text, "", dt.datetime(2026, 1, 1))], TRANSCRIPTS_SCHEMA)
     kg = build_kg(spark, transcripts, aliases, persist=False, alias_index=index)
-    assert kg.raw_triples.count() == 2
+    assert triples_view(kg.unified).count() == 2
     assert kg.kg_edges.collect() == []
     assert [r["cui"] for r in kg.kg_nodes.collect()] == ["K1"]
     qs = spark.createDataFrame([(1, text)], "question_id int, text string")

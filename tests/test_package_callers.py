@@ -80,3 +80,33 @@ def test_every_public_def_has_a_shipped_caller():
         "public names referenced only from tests (delete them with their tests, "
         f"or call them from shipped code): {orphans}"
     )
+
+
+def _noqa_reexports() -> dict[str, str]:
+    """`<module path>::<name>` -> name, for every name imported by a
+    `from ... import` whose first line carries `# noqa: F401`."""
+    names = {}
+    for path in PKG.rglob("*.py"):
+        lines = path.read_text().splitlines()
+        for node in ast.walk(ast.parse("\n".join(lines), str(path))):
+            if isinstance(node, ast.ImportFrom) and "# noqa: F401" in lines[node.lineno - 1]:
+                for alias in node.names:
+                    name = alias.asname or alias.name
+                    names[f"{path.relative_to(PKG).as_posix()}::{name}"] = name
+    return names
+
+
+def test_every_reexport_is_a_name_perfbench_patches():
+    """A name the package imports only to re-export (`# noqa: F401`) is
+    kept for perfbench, which patches module attributes by name: each must
+    appear as a string constant in perfbench. Once perfbench stops naming
+    one, its re-export goes too."""
+    strings = set()
+    for path in sorted((ROOT / "perfbench").glob("*.py")):
+        for node in ast.walk(ast.parse(path.read_text(), str(path))):
+            if isinstance(node, ast.Constant) and isinstance(node.value, str):
+                strings.add(node.value)
+    reexports = _noqa_reexports()
+    assert reexports, "no `# noqa: F401` re-export found: the scan is broken"
+    stale = sorted(k for k, name in reexports.items() if name not in strings)
+    assert not stale, f"re-exports perfbench no longer names (delete them): {stale}"

@@ -12,22 +12,47 @@ from __future__ import annotations
 import pandas as pd
 import pytest
 
+from knowledge_graph_integration_rag_biomedical_qna_spark.operators.extraction import (
+    extract_all_df,
+    mention_stats_view,
+    mentions_view,
+)
+from knowledge_graph_integration_rag_biomedical_qna_spark.operators.linking import (
+    candidate_table,
+    resolution_table,
+)
+from knowledge_graph_integration_rag_biomedical_qna_spark.operators.turn_assembly import (
+    assemble_turns,
+)
 from knowledge_graph_integration_rag_biomedical_qna_spark.oracle.pipeline import (
     oracle_mentions,
     oracle_nodes,
     oracle_triples,
     oracle_turns,
 )
-from knowledge_graph_integration_rag_biomedical_qna_spark.plans.pipeline import build_kg
+from knowledge_graph_integration_rag_biomedical_qna_spark.plans.pipeline import (
+    broadcast_alias_keys,
+    build_kg,
+)
 
 TRIPLE_KEY = ["conv_id", "turn_idx", "subj_cui", "pred", "obj_cui"]
 
 
 @pytest.fixture(scope="module")
-def kg(spark, fixture_dir):
-    transcripts = spark.read.parquet(f"{fixture_dir}/transcripts.parquet")
-    aliases = spark.read.parquet(f"{fixture_dir}/concept_aliases.parquet")
-    return build_kg(spark, transcripts, aliases)
+def inputs(spark, fixture_dir):
+    return (spark.read.parquet(f"{fixture_dir}/transcripts.parquet"),
+            spark.read.parquet(f"{fixture_dir}/concept_aliases.parquet"))
+
+
+@pytest.fixture(scope="module")
+def kg(spark, inputs):
+    return build_kg(spark, *inputs)
+
+
+@pytest.fixture(scope="module")
+def candidates(kg, inputs):
+    """The specification's candidate table over the build's own pass."""
+    return candidate_table(mention_stats_view(kg.unified), inputs[1])
 
 
 @pytest.fixture(scope="module")
@@ -50,10 +75,10 @@ def _pr(pred: pd.DataFrame, gold: pd.DataFrame, key: list[str]) -> tuple[float, 
     return inter / len(p), inter / len(g)
 
 
-def test_turn_text_equality(kg, gold):
+def test_turn_text_equality(inputs, gold):
     """Per-turn text equality under stable (conv_id, turn_idx) ordering."""
     got = (
-        kg.turns.select("conv_id", "turn_idx", "text")
+        assemble_turns(inputs[0]).select("conv_id", "turn_idx", "text")
         .toPandas()
         .sort_values(["conv_id", "turn_idx"])
         .reset_index(drop=True)
@@ -66,8 +91,11 @@ def test_turn_text_equality(kg, gold):
     pd.testing.assert_frame_equal(got, want)
 
 
-def test_mention_parity(kg, gold):
-    got = kg.mentions.toPandas()
+def test_mention_parity(spark, inputs, gold):
+    transcripts, aliases = inputs
+    got = mentions_view(
+        extract_all_df(assemble_turns(transcripts), broadcast_alias_keys(spark, aliases))
+    ).toPandas()
     key = ["conv_id", "turn_idx", "sent_idx", "mention_idx", "alias_key", "surface"]
     prec, rec = _pr(got, gold["mentions"], key)
     assert prec == 1.0 and rec == 1.0, (prec, rec, len(got), len(gold["mentions"]))
@@ -95,10 +123,10 @@ def test_node_parity(kg, tables, gold):
         assert list(a) == list(b)
 
 
-def test_candidates_topk_deterministic(kg):
+def test_candidates_topk_deterministic(candidates):
     """Candidate table: rank unique per (alias_key, surface), rank<=10,
     scores non-increasing with rank."""
-    pdf = kg.candidates.toPandas()
+    pdf = candidates.toPandas()
     assert pdf["rank"].max() <= 10
     grp = pdf.sort_values(["alias_key", "surface", "rank"]).groupby(["alias_key", "surface"])
     for _, g in grp:
@@ -106,10 +134,10 @@ def test_candidates_topk_deterministic(kg):
         assert (g["score"].diff().dropna() <= 1e-12).all()
 
 
-def test_linking_functional(kg):
+def test_linking_functional(candidates):
     """Linking is functional: at most one accepted CUI per (alias_key, surface)."""
     dup = (
-        kg.resolution.groupBy("alias_key", "surface")
+        resolution_table(candidates).groupBy("alias_key", "surface")
         .count()
         .filter("count > 1")
         .count()
@@ -129,7 +157,6 @@ def test_empty_inputs_produce_empty_outputs(spark):
     """Degenerate inputs must not error: empty transcripts, an empty
     dictionary or one with no hits yield empty (but well-typed) outputs,
     lazy or persisted."""
-    from knowledge_graph_integration_rag_biomedical_qna_spark.plans.pipeline import build_kg
     from knowledge_graph_integration_rag_biomedical_qna_spark.sources.io import (
         ALIASES_SCHEMA,
         TRANSCRIPTS_SCHEMA,
@@ -144,14 +171,18 @@ def test_empty_inputs_produce_empty_outputs(spark):
     kg1 = build_kg(spark, empty_t, empty_a, persist=False)
     assert kg1.kg_edges.count() == 0 and kg1.kg_nodes.count() == 0
     kg2 = build_kg(spark, some_t, empty_a, persist=False)
-    assert kg2.kg_edges.count() == 0 and kg2.mentions.count() == 0
+    assert kg2.kg_edges.count() == 0
+    keys = broadcast_alias_keys(spark, empty_a)
+    assert mentions_view(extract_all_df(assemble_turns(some_t), keys)).count() == 0
     # persisted builds link inside the cached pass: an empty dictionary,
     # and a dictionary none of the text mentions
     no_hits_a = spark.createDataFrame([("zzqx", "zzqx", "C9999", 1.0)], ALIASES_SCHEMA)
     for aliases in (empty_a, no_hits_a):
         kg = build_kg(spark, some_t, aliases, persist=True)
         try:
-            assert kg.resolution.collect() == []
+            resolution = resolution_table(
+                candidate_table(mention_stats_view(kg.unified), aliases))
+            assert resolution.collect() == []
             for df in (kg.kg_edges, kg.kg_nodes, kg.kg_edge_stats):
                 assert df.collect() == []
         finally:
@@ -246,7 +277,7 @@ def test_duplicate_turn_dedup_matches_oracle(spark):
     assert got["text"].tolist() == ["first version.", "assistant text.", "aaa.", "kept."]
 
 
-def test_candidate_ranking_parity_with_oracle(kg, gold, tables):
+def test_candidate_ranking_parity_with_oracle(candidates, gold, tables):
     """Stage [4]-[5] in isolation: the Spark candidate table's ranked (cui,
     score, rank) per surface must equal the oracle's rank_candidates on the
     same mentions."""
@@ -255,7 +286,7 @@ def test_candidate_ranking_parity_with_oracle(kg, gold, tables):
     )
 
     want = oracle_links(gold["mentions"].head(300), tables["concept_aliases"])
-    got = kg.candidates.toPandas()
+    got = candidates.toPandas()
     got_map = {
         (r["surface"], r["rank"]): (r["cui"], round(r["score"], 6))
         for _, r in got.iterrows()

@@ -28,6 +28,13 @@ import shutil
 
 import pytest
 
+from knowledge_graph_integration_rag_biomedical_qna_spark.operators.extraction import (
+    mention_stats_view,
+)
+from knowledge_graph_integration_rag_biomedical_qna_spark.operators.linking import (
+    candidate_table,
+    resolution_table,
+)
 from knowledge_graph_integration_rag_biomedical_qna_spark.plans.pipeline import (
     broadcast_alias_keys,
     build_kg,
@@ -292,6 +299,32 @@ def test_build_kg_starts_one_job_only_when_persisted(spark, fixture_inputs):
     assert len(jobs) == 1, jobs
 
 
+def test_lazy_build_kg_plan_costs_at_most_190_py4j_calls(spark, fixture_inputs):
+    """A warm lazy build_kg with a hoisted alias index builds only the plans
+    its writes read: at most 190 py4j commands (270 while it also built the
+    linking specification's views). Counted on the gateway client, as
+    perfbench's tracer counts them. The minimum of three builds is taken,
+    because py4j also sends one command per JVM handle that Python garbage
+    collects, which can land inside any one build."""
+    index = broadcast_alias_keys(spark, fixture_inputs[1])
+    build_kg(spark, *fixture_inputs, persist=False, alias_index=index)
+    client = spark.sparkContext._gateway._gateway_client
+    send, calls = client.send_command, []
+
+    def counting_send(*a, **k):
+        calls[-1] += 1
+        return send(*a, **k)
+
+    client.send_command = counting_send
+    try:
+        for _ in range(3):
+            calls.append(0)
+            build_kg(spark, *fixture_inputs, persist=False, alias_index=index)
+    finally:
+        client.send_command = send
+    assert min(calls) <= 190, calls
+
+
 def test_checkpoint_group_job_count(spark, fixture_inputs, tmp_path):
     """A checkpoint group commits in at most 2 Spark jobs, its one unit
     write: the pass is not cached, and its lineage counts ride the write as
@@ -386,10 +419,12 @@ def test_kg_edge_stats_write_has_one_exchange_above_the_cache(spark, fixture_inp
 
 
 def test_lazy_resolution_scores_without_a_window_exchange(spark, fixture_inputs):
-    """At local[4] a lazy build scores its vocabulary in one task and the
-    scoring pass keeps that partition, so the resolution's final plan has
-    only the turn-assembly and mention-stats exchanges."""
-    res = build_kg(spark, *fixture_inputs, persist=False).resolution
+    """At local[4] the specification's resolution over a lazy build's pass
+    scores its vocabulary in one task and the scoring pass keeps that
+    partition, so its final plan has only the turn-assembly and
+    mention-stats exchanges."""
+    kg = build_kg(spark, *fixture_inputs, persist=False)
+    res = resolution_table(candidate_table(mention_stats_view(kg.unified), fixture_inputs[1]))
     assert res.collect()
     plan = final_plan(res)
     assert count_nodes(plan, "Exchange") == 2, plan

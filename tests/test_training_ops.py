@@ -351,6 +351,56 @@ def test_embedding_near_dups_loose_threshold_routes_to_bruteforce(spark, emb):
     assert got_pairs == want
 
 
+def test_ann_threshold_pairs_equals_its_oracle_on_pairs_that_pass(spark, tmp_path):
+    """`ann_threshold_pairs` and its DuckDB oracle agree, under
+    tools/check_oracle.py's comparison, on an embeddings table where pairs
+    pass the 0.5 threshold (at sf0.01 none does, so the gate there compares
+    two empty results): same-label pairs above it, pairs below it, and one
+    cross-label pair above it that label blocking must drop."""
+    import os
+    import sys
+
+    import duckdb
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    sys.path.insert(0, os.path.join(os.path.dirname(__file__), "..", "tools"))
+    from check_oracle import canon
+
+    from knowledge_graph_integration_rag_biomedical_qna_spark.entry_queries import REGISTRY
+
+    rows = [  # (vec_id, embedding, label)
+        (1, [1.0, 0.0, 0.0, 0.0], 0),
+        (2, [0.9, 0.3, 0.0, 0.0], 0),
+        (3, [0.0, 0.0, 1.0, 0.0], 0),
+        (4, [0.6, 0.2, 0.6, 0.2], 0),
+        (5, [0.0, 1.0, 0.0, 0.0], 1),
+        (6, [0.0, 0.8, 0.0, 0.6], 1),
+        (7, [0.95, 0.05, 0.0, 0.0], 1),  # cosine 0.9986 with vec 1, another label
+        (8, [0.0, 0.0, 0.0, 1.0], 2),
+    ]
+    ids, vecs, labels = zip(*rows)
+    pq.write_table(pa.table({
+        "vec_id": pa.array(ids, pa.int64()),
+        "embedding": pa.array(vecs, pa.list_(pa.float32())),
+        "label": pa.array(labels, pa.int32()),
+    }), str(tmp_path / "embeddings.parquet"))
+
+    fn, sql = REGISTRY["ann_threshold_pairs"]
+    df = fn(spark, str(tmp_path))
+    got = canon([tuple(r) for r in df.collect()], df.columns)
+    con = duckdb.connect()
+    con.execute("CREATE VIEW embeddings AS SELECT * FROM "
+                f"read_parquet('{tmp_path / 'embeddings.parquet'}')")
+    res = con.execute(sql)
+    want = canon(res.fetchall(), [d[0] for d in res.description])
+    assert got == want
+    # non-empty: exactly the same-label pairs at or above 0.5 (canon orders
+    # the columns by name: cosine, id_a, id_b)
+    assert sorted(tuple(map(int, r[1:])) for r in got) == [
+        (1, 2), (1, 4), (2, 4), (3, 4), (5, 6)], got
+
+
 def test_embedding_near_dups_empty_input(spark):
     """ADVICE r2: empty input must return an empty result with the pair
     schema, not crash."""
