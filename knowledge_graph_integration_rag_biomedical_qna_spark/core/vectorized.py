@@ -1,11 +1,11 @@
-"""Vectorized (pyarrow/numpy) extraction kernel — stages [2]+[3] fast path.
+"""Vectorized (pyarrow/numpy) extraction kernel — stages [2]+[3].
 
 Replaces the per-token interpreted-Python matcher of `core.patterns` with
 Arrow compute kernels over a flattened token stream:
 
 - sentence split / ws-normalize: RE2 `replace_substring_regex` + C split
-  (Python's lookbehind split is re-expressed as terminator-capture + \\x00
-  sentinel insertion, bit-identical on ASCII input)
+  (Python's lookbehind split is re-expressed as terminator-capture + \\x00\\x02
+  separator insertion; a text's own \\x00 is escaped around the split)
 - tokenize: numpy byte-class LUTs over the sentence buffer find the maximal
   [A-Za-z0-9'-] runs; a token is each run's suffix from its first
   alphanumeric (exactly `re.finditer(text._TOKEN)`), lowered by a byte LUT
@@ -17,13 +17,14 @@ Arrow compute kernels over a flattened token stream:
 - greedy longest-match non-overlap resolution + SVO assembly: Python, but
   only over HIT positions (output-sized, not token-sized)
 
-Rows whose text is non-ASCII (or contains the \\x00 sentinel) take the exact
-per-row Python path `_extract_slow` — RE2's ASCII `\\s` differs from Python's
-Unicode `\\s` there. That path is also the specification: the fast path is
-row-for-row identical to it (property-tested in tests/test_property.py):
-same greedy longest-first order, same normalization (predicates lower-only,
-aliases lower+edge-strip), same confidence rounding. Both paths take and
-return Arrow, so no pandas sits between mapInArrow and the kernel.
+Every row takes this one path, whatever its characters. RE2's `\\s` is
+only `[\\t\\n\\f\\r ]`, so the patterns spell out `_WS`, the 29 code points
+of Python's `\\s` and `str.strip()`. The kernel is row-for-row identical to
+the per-row specification `oracle.extraction._extract_slow`
+(property-tested in tests/test_property.py): same greedy longest-first
+order, same normalization (predicates lower-only, aliases
+lower+edge-strip), same confidence rounding. Both take and return Arrow,
+so no pandas sits between mapInArrow and the kernel.
 
 The Arrow batch that crosses the UDF boundary is the transfer unit (rows,
 `config.ARROW_BATCH`); the kernel's own working set (~40x the text it
@@ -43,17 +44,18 @@ import functools
 import numpy as np
 
 from .config import KERNEL_SLICE_BYTES, MAX_ARG_GAP
-from .patterns import PREDICATE_LEXICON, AliasIndex, _as_index, extract_mentions_and_triples
-from .text import split_sentences
+from .patterns import PREDICATE_LEXICON, AliasIndex, _as_index
 
-_SENT_MARK_PAT = r"([.!?;])\s+"     # lookbehind-free form of text._SENT_BOUNDARY
+# every str.isspace() code point but " ": Python's re \s and str.strip() use
+# this set, pc.utf8_trim_whitespace trims it, and RE2's \s holds only 5 of it
+_OTHER_WS = "\t-\r\x1c-\x1f\x85\xa0\u1680\u2000-\u200a\u2028\u2029\u202f\u205f\u3000"
+_WS = f"[ {_OTHER_WS}]"
+_SENT_MARK_PAT = rf"([.!?;]){_WS}+"   # lookbehind-free form of text._SENT_BOUNDARY
 _TRAIL_PUNCT_PAT = r"['\-]+$"
-_WS_PAT = r"\s+"
-_SEP = "\x00"
-# Routing chars (see _fast_path_ok_arrow): \x00 is our sentence-separator
-# sentinel; \x0b and \x1c-\x1f are whitespace to Python's re (\s) but NOT
-# to RE2's ASCII \s, so the Arrow pipeline would split sentences differently
-# (\x0c/formfeed matches in both engines, so it stays on the fast path).
+_WS_PAT = rf"{_WS}+"
+# sentence separator; a text's own \x00 is escaped to \x00\x01 around the
+# split, so \x00\x02 occurs only where the marker put it
+_SEP = "\x00\x02"
 
 # predicate phrases bucketed by token length: length -> {space-joined: norm}
 _PRED_BY_LEN: dict[int, dict[str, str]] = {}
@@ -248,15 +250,15 @@ def _gather_strings_arrow(pos: np.ndarray, span: np.ndarray, masks_desc, pc):
             ix = p if kpos is None else np.searchsorted(kpos, p)
             parts.append(pc.take(keys, pa.array(ix)))
             sel_parts.append(sel)
-    cat = pa.concat_arrays([p.combine_chunks() if isinstance(p, pa.ChunkedArray) else p
-                            for p in parts])
+    cat = pa.concat_arrays(parts)
     inv = np.empty(n, dtype=np.int64)
     inv[np.concatenate(sel_parts)] = np.arange(len(cat))
     return cat.take(pa.array(inv))
 
 
-# byte classification LUTs for the zero-regex tokenizer (ASCII input only —
-# non-ASCII rows take the slow path before we get here)
+# byte classification LUTs for the zero-regex tokenizer: a token is ASCII,
+# and every byte of a multi-byte UTF-8 character is >= 0x80, so no such byte
+# is a token byte
 _LUT_CONT = np.zeros(256, dtype=bool)   # token continuation: [A-Za-z0-9'-]
 _LUT_START = np.zeros(256, dtype=bool)  # token start: [A-Za-z0-9]
 for _c in range(256):
@@ -282,8 +284,8 @@ def _tokenize_arrow(sent_arr, pa):
     re.finditer(text._TOKEN). `sent_arr` is a null-free `pa.string()` array
     of non-empty sentences (extract_unified_batches casts its input once).
     Returns (low arrow array, sent_of, pos_in_sent, abs_start, abs_end, data
-    bytes view) with ABSOLUTE char offsets into the shared sentence buffer
-    (ASCII: bytes == chars), or "EMPTY" when no sentence holds a token."""
+    bytes view) with ABSOLUTE byte offsets into the shared sentence buffer
+    (char offsets on ASCII text), or "EMPTY" when no sentence holds a token."""
     n = len(sent_arr)
     bufs = sent_arr.buffers()
     off = np.frombuffer(bufs[1], dtype=np.int32)[sent_arr.offset : sent_arr.offset + n + 1]
@@ -336,45 +338,6 @@ def _tokenize_arrow(sent_arr, pa):
     return low, sent_of.astype(np.int64), pos_in_sent, tok_start, tok_end, d
 
 
-def _extract_slow(conv, turn, texts, idx: AliasIndex):
-    """Exact per-row path: (conv, turn, texts) Arrow arrays -> one unified
-    RecordBatch (or None when there is nothing to emit). Takes the rows the
-    fast path can't (non-ASCII / routing chars, rare), and is the
-    specification the fast path is property-tested against: per sentence,
-    mention rows (kind='m') then triple rows (kind='t'); columns a kind does
-    not use carry -1 / NaN / null."""
-    import pyarrow as pa
-
-    rows = []
-    for conv_id, turn_idx, text in zip(conv.to_pylist(), turn.to_pylist(), texts.to_pylist()):
-        for si, sent in enumerate(split_sentences(text)):
-            mentions, triples = extract_mentions_and_triples(sent, idx)
-            for mi, m in enumerate(mentions):
-                rows.append((conv_id, turn_idx, si, "m", mi, m.surface, m.alias_key,
-                             m.tok_start, m.tok_end, None, None, None, None, None, np.nan))
-            for t in triples:
-                rows.append((conv_id, turn_idx, si, "t", -1, None, None, -1, -1,
-                             t.subj_surface, t.subj_key, t.pred, t.obj_surface, t.obj_key,
-                             t.confidence))
-    if not rows:
-        return None
-    schema = _unified_pa_schema()
-    return pa.RecordBatch.from_arrays(
-        [pa.array(col, type=f.type) for col, f in zip(zip(*rows), schema)], schema=schema
-    )
-
-
-def _fast_path_ok_arrow(texts) -> np.ndarray:
-    """Per-row fast-path eligibility over an Arrow string array: pure ASCII
-    (utf8 codepoint count == byte count) and none of the routing chars
-    (\\x00 sentinel, \\x0b\\x1c-\\x1f whitespace-divergence set)."""
-    import pyarrow.compute as pc
-
-    ascii_ok = pc.equal(pc.utf8_length(texts), pc.binary_length(texts))
-    bad = pc.match_substring_regex(texts, "[\x00\x0b\x1c-\x1f]")
-    return pc.and_(ascii_ok, pc.invert(bad)).to_numpy(zero_copy_only=False)
-
-
 @functools.cache
 def _unified_pa_schema():
     import pyarrow as pa
@@ -394,19 +357,18 @@ def _unified_pa_schema():
 
 
 def extract_unified_batches(conv, turn, texts, alias_keys):
-    """Arrow-native core: (conv_id, turn_idx, text) Arrow arrays -> iterator
+    """Arrow-native core: (conv_id, turn_idx, text) `pa.Array`s -> iterator
     of unified-extraction RecordBatches (UNIFIED_SCHEMA order), no pandas in
     EITHER direction — this is what mapInArrow calls. Texts are null-filled
-    and cast to `pa.string()` once here, so both paths see int32-offset
+    and cast to `pa.string()` once here, so the kernel sees int32-offset
     buffers.
 
     Each kernel call takes one row range: the batch is cut greedily, from the
     text offsets, into ranges of at most KERNEL_SLICE_BYTES of text (a longer
-    row is a range of its own), and those cuts are merged with the maximal
-    fast/slow runs. A range yields at most one RecordBatch, in row order.
-    Every output column is row-local (sentence, mention and token indices
-    never cross a turn), so the cut changes how the rows are batched, never
-    which rows come out or their order."""
+    row is a range of its own). A range yields at most one RecordBatch, in
+    row order. Every output column is row-local (sentence, mention and token
+    indices never cross a turn), so the cut changes how the rows are
+    batched, never which rows come out or their order."""
     import pyarrow as pa
     import pyarrow.compute as pc
 
@@ -415,41 +377,41 @@ def extract_unified_batches(conv, turn, texts, alias_keys):
     if n == 0:
         return
     texts = pc.cast(pc.fill_null(texts, ""), pa.string())
-    ok = _fast_path_ok_arrow(texts)
     off = np.frombuffer(texts.buffers()[1], np.int32)[texts.offset : texts.offset + n + 1]
-    cuts = [0]
-    while cuts[-1] < n:
-        end = int(off[cuts[-1]]) + KERNEL_SLICE_BYTES
-        cuts.append(max(cuts[-1] + 1, int(np.searchsorted(off, end, "right")) - 1))
-    bounds = np.unique(np.r_[cuts, np.flatnonzero(ok[1:] != ok[:-1]) + 1]).tolist()
-    for a, b in zip(bounds[:-1], bounds[1:]):
-        path = _extract_fast if ok[a] else _extract_slow
-        rb = path(conv.slice(a, b - a), turn.slice(a, b - a), texts.slice(a, b - a), idx)
+    a = 0
+    while a < n:
+        end = int(off[a]) + KERNEL_SLICE_BYTES
+        b = max(a + 1, int(np.searchsorted(off, end, "right")) - 1)
+        rb = _extract_fast(conv.slice(a, b - a), turn.slice(a, b - a), texts.slice(a, b - a), idx)
         if rb is not None:
             yield rb
+        a = b
 
 
 def _extract_fast(conv, turn, texts, idx: AliasIndex):
-    """All-ASCII fast path: (conv, turn, texts) Arrow arrays -> one unified
-    RecordBatch (or None when there is nothing to emit), row-for-row equal
-    to `_extract_slow`. Arrow/numpy end to end; Python touches only hit
-    positions."""
+    """The kernel over one row range: (conv, turn, texts) Arrow arrays -> one
+    unified RecordBatch (or None when there is nothing to emit), row-for-row
+    equal to `oracle.extraction._extract_slow`. Arrow/numpy end to end;
+    Python touches only hit positions."""
     import pyarrow as pa
     import pyarrow.compute as pc
 
     # --- sentences: strip -> mark terminator boundaries -> split -> ws-normalize ---
-    arr = texts.combine_chunks() if isinstance(texts, pa.ChunkedArray) else texts
+    has_nul = pc.any(pc.match_substring(texts, "\x00")).as_py()
+    arr = pc.replace_substring(texts, "\x00", "\x00\x01") if has_nul else texts
     marked = pc.replace_substring_regex(
         pc.utf8_trim_whitespace(arr), pattern=_SENT_MARK_PAT, replacement="\\1" + _SEP
     )
     parts = pc.split_pattern(marked, pattern=_SEP)
     p_off = parts.offsets.to_numpy()
     flat = parts.flatten()
+    if has_nul:
+        flat = pc.replace_substring(flat, "\x00\x01", "\x00")
     # ws-normalize only when some sentence needs it: the boundary \s+ was
     # consumed by the marker and the text edge-trimmed, so a part is already
     # normalized unless it has edge ws, a double ws, or a non-space ws char —
     # one match scan replaces two full rewrite passes on clean batches
-    dirty = pc.match_substring_regex(flat, r"^\s|\s\s|[\t\n\f\r]|\s$")
+    dirty = pc.match_substring_regex(flat, f"^{_WS}|{_WS}{_WS}|[{_OTHER_WS}]|{_WS}$")
     if pc.any(dirty).as_py():
         sent_norm = pc.utf8_trim_whitespace(
             pc.replace_substring_regex(flat, pattern=_WS_PAT, replacement=" ")
@@ -565,7 +527,7 @@ def _extract_fast(conv, turn, texts, idx: AliasIndex):
 
     # every column is assembled as an Arrow array (m-part ++ t-part, one
     # permuted take) and the batch goes straight back through mapInArrow —
-    # no pandas object arrays in EITHER direction on the fast path
+    # no pandas object arrays in EITHER direction
     order_pa = pa.array(order)
     row_take = pa.array(row_of_sent[sent_sel])
     nulls_m = pa.nulls(n_m, pa.string())
@@ -582,11 +544,9 @@ def _extract_fast(conv, turn, texts, idx: AliasIndex):
             .astype(np.int32)
         )
 
-    conv_a = conv.combine_chunks() if isinstance(conv, pa.ChunkedArray) else conv
-    turn_a = turn.combine_chunks() if isinstance(turn, pa.ChunkedArray) else turn
     cols = [
-        conv_a.take(row_take),
-        pc.cast(turn_a.take(row_take), pa.int32()),
+        conv.take(row_take),
+        pc.cast(turn.take(row_take), pa.int32()),
         pa.array(sent_idx_arr[sent_sel].astype(np.int32)),
         pc.if_else(pa.array(is_m), pa.scalar("m"), pa.scalar("t")),
         _i32(ment_midx, -1),
@@ -596,8 +556,7 @@ def _extract_fast(conv, turn, texts, idx: AliasIndex):
         _i32(ment_te, -1),
         _s(nulls_m, ment_surf_arr.take(tsubj_pa) if n_t else nulls_t),
         _s(nulls_m, ment_key_arr.take(tsubj_pa) if n_t else nulls_t),
-        _s(nulls_m, tri_pred_arr.combine_chunks()
-           if isinstance(tri_pred_arr, pa.ChunkedArray) else tri_pred_arr),
+        _s(nulls_m, tri_pred_arr),
         _s(nulls_m, ment_surf_arr.take(tobj_pa) if n_t else nulls_t),
         _s(nulls_m, ment_key_arr.take(tobj_pa) if n_t else nulls_t),
         pa.array(np.concatenate([np.full(n_m, np.nan), tri_conf])[order]),

@@ -85,11 +85,10 @@ def minhash_hash_expr_fast(i: int, col=None):
     return F.xxhash64(F.lit(f"{i}:"), col)
 
 
-def minhash_signatures(shingles: DataFrame, num_hashes: int = 16, family: str = "md5") -> DataFrame:
-    """(id, h0..h{m-1}) — hash i = min over shingles of the chosen family
-    ('md5' = oracle-reproducible hex, 'xxhash64' = fast production bigint)."""
-    expr = minhash_hash_expr if family == "md5" else minhash_hash_expr_fast
-    aggs = [F.min(expr(i)).alias(f"h{i}") for i in range(num_hashes)]
+def minhash_signatures(shingles: DataFrame, num_hashes: int = 16) -> DataFrame:
+    """(id, h0..h{m-1}) — hash i = min over shingles of the md5 family
+    (`minhash_hash_expr`, the oracle-reproducible hex)."""
+    aggs = [F.min(minhash_hash_expr(i)).alias(f"h{i}") for i in range(num_hashes)]
     return shingles.groupBy("id").agg(*aggs)
 
 

@@ -78,8 +78,8 @@ def detect_mentions_df(turns: DataFrame, alias_keys_bc) -> DataFrame:
     )
 
 
-# extract_collapsed_df appends five nullable columns to these: subj_cui,
-# obj_cui and conv_first on 't' rows, cui and link_score on 's' rows.
+# extract_collapsed_df appends four nullable columns to these: subj_cui,
+# obj_cui and conv_first on 't' rows, cui on 's' rows.
 # conv_first holds only on stage [1]'s output (each conversation's turns in
 # one task, tasks sorted by conv_id), which the pass checks as it goes.
 UNIFIED_SCHEMA = T.StructType(
@@ -115,9 +115,9 @@ def extract_all_df(turns: DataFrame, alias_keys_bc) -> DataFrame:
 
     The kernel is the VECTORIZED pyarrow/numpy path (core.vectorized):
     byte-LUT tokenization over byte-bounded Arrow slices + hash-join dictionary
-    probes, with interpreted Python only on hit positions. Property-tested
-    row-for-row equal to the per-row matcher (`core.vectorized._extract_slow`,
-    which also takes the rare non-ASCII rows); it replaced that matcher after
+    probes, with interpreted Python only on hit positions. Every row, ASCII or
+    not, takes it. Property-tested row-for-row equal to the per-row matcher
+    (`oracle.extraction._extract_slow`); it replaced that matcher after
     profiling showed the per-token Python loop at ~20k turns/s/core was the
     pipeline's 100x-scale bottleneck. The stage runs through mapInArrow — the
     kernel is Arrow-native in both directions, so no pandas conversion layer
@@ -146,7 +146,7 @@ def _collapsed_fn(alias_index, cui_type):
         link = pair_linker(alias_index)
         fields = [*_unified_pa_schema(), pa.field("subj_cui", cui_type),
                   pa.field("obj_cui", cui_type), pa.field("conv_first", pa.bool_()),
-                  pa.field("cui", cui_type), pa.field("link_score", pa.float64())]
+                  pa.field("cui", cui_type)]
 
         def rows(n, **cols):
             """One output batch of n rows: `cols` by name, nulls elsewhere."""
@@ -187,12 +187,8 @@ def _collapsed_fn(alias_index, cui_type):
                 ["alias_key", "surface"]
             )
             if len(m_tbl):
-                part = m_tbl.group_by(["alias_key", "surface"]).aggregate([([], "count_all")])
-                partials.append(part)
-                # score the batch's distinct pairs here, so the triple rows
-                # below only look their endpoints up
-                for pair in zip(part["alias_key"].to_pylist(), part["surface"].to_pylist()):
-                    link(*pair)
+                partials.append(m_tbl.group_by(["alias_key", "surface"])
+                                .aggregate([([], "count_all")]))
             t_rb = rb.filter(is_t)
             if len(t_rb):
                 subj, obj = endpoint_cuis(t_rb, "subj"), endpoint_cuis(t_rb, "obj")
@@ -209,15 +205,15 @@ def _collapsed_fn(alias_index, cui_type):
             )
             n = len(agg)
             alias_key, surface = (agg.column(c).combine_chunks() for c in ("alias_key", "surface"))
-            hits = list(map(link, alias_key.to_pylist(), surface.to_pylist()))
             zeros = pa.array([0] * n, pa.int32())
             yield rows(
                 n, conv_id=pa.array([""] * n, pa.string()), turn_idx=zeros, sent_idx=zeros,
                 kind=pa.array(["s"] * n, pa.string()),
                 # the partial count rides in mention_idx (mention_stats_view)
                 mention_idx=pc.cast(agg.column("count_all_sum").combine_chunks(), pa.int32()),
-                surface=surface, alias_key=alias_key, cui=pa.array(cuis(hits), cui_type),
-                link_score=pa.array([h[1] if h else None for h in hits], pa.float64()),
+                surface=surface, alias_key=alias_key,
+                cui=pa.array(cuis(map(link, alias_key.to_pylist(), surface.to_pylist())),
+                             cui_type),
             )
 
     return collapsed
@@ -247,9 +243,9 @@ def extract_collapsed_df(
     (alias_key, surface) pairs — the pairs its 's' rows already carry — once,
     against the candidates `alias_keys_bc` ships
     (operators.linking.pair_linker), and the output gains nullable
-    `subj_cui`, `obj_cui` on 't' rows and `cui`, `link_score` on 's' rows,
-    the CUIs typed `cui_type` (pass the dictionary's cui type), null where the
-    surface does not link. Scoring is proportional to the distinct pairs in
+    `subj_cui`, `obj_cui` on 't' rows and `cui` on 's' rows, typed
+    `cui_type` (pass the dictionary's cui type), null where the surface
+    does not link. Scoring is proportional to the distinct pairs in
     each task, not to the global vocabulary: a pair seen by every task is
     scored once per task. Every worker builds the index's per-key
     candidates, so `alias_keys_bc` must carry them (broadcast_alias_keys does).
@@ -269,8 +265,7 @@ def extract_collapsed_df(
     from pyspark.sql.pandas.types import to_arrow_type
 
     linked = [T.StructField("subj_cui", cui_type), T.StructField("obj_cui", cui_type),
-              T.StructField("conv_first", T.BooleanType()), T.StructField("cui", cui_type),
-              T.StructField("link_score", T.DoubleType())]
+              T.StructField("conv_first", T.BooleanType()), T.StructField("cui", cui_type)]
     # plan-level marker: mentions_view raises on a collapsed input instead of
     # silently returning zero rows (there are no 'm' rows to project)
     return (

@@ -4,7 +4,8 @@ The build's extraction pass and the question pass resolve each distinct
 (alias_key, surface) of their task against the dictionary the matcher's
 index ships. These tests hold both passes to the specification they
 replace: `resolution_table(candidate_table(...))`, joined onto the triples
-with `resolve_triples` and grouped with `canonicalize_node_stats`.
+with `resolve_triples` and grouped with `canonicalize_node_stats`. Without
+Spark, `pair_linker` is held to the oracle's rule, `core.linking.resolve`.
 """
 
 from __future__ import annotations
@@ -13,9 +14,13 @@ import datetime as dt
 from collections import Counter
 
 import pytest
+from hypothesis import given, settings
+from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
 from knowledge_graph_integration_rag_biomedical_qna_spark.core.config import TOP_K_CANDIDATES
+from knowledge_graph_integration_rag_biomedical_qna_spark.core.linking import link_score, resolve
+from knowledge_graph_integration_rag_biomedical_qna_spark.core.patterns import AliasIndex
 from knowledge_graph_integration_rag_biomedical_qna_spark.operators.canonicalize import (
     canonicalize_node_stats,
 )
@@ -26,6 +31,7 @@ from knowledge_graph_integration_rag_biomedical_qna_spark.operators.extraction i
 )
 from knowledge_graph_integration_rag_biomedical_qna_spark.operators.linking import (
     candidate_table,
+    pair_linker,
     resolution_table,
     resolve_triples,
 )
@@ -96,8 +102,6 @@ def _assert_same(got, want) -> None:
 def _adversarial_inputs(spark):
     aliases = spark.createDataFrame(ADVERSARIAL, DICT_DDL)
     shipped = broadcast_alias_keys(spark, aliases).value
-    from knowledge_graph_integration_rag_biomedical_qna_spark.core.patterns import AliasIndex
-
     index = spark.sparkContext.broadcast(AliasIndex(
         [*{r[0] for r in ADVERSARIAL}, GHOST], candidates=shipped.candidates))
     ts = dt.datetime(2026, 1, 1)
@@ -204,7 +208,6 @@ def test_in_pass_linking_scores_each_pair_once(monkeypatch, body):
 
     import pyarrow as pa
 
-    from knowledge_graph_integration_rag_biomedical_qna_spark.core.patterns import AliasIndex
     from knowledge_graph_integration_rag_biomedical_qna_spark.operators import linking
     from knowledge_graph_integration_rag_biomedical_qna_spark.operators.extraction import (
         _collapsed_fn,
@@ -244,6 +247,51 @@ def test_in_pass_linking_scores_each_pair_once(monkeypatch, body):
         assert set(out.column("cui").drop_null().to_pylist()) == {"C1", "C4", "C6"}
     else:
         assert len(out) == 50 * len(pairs)
+
+
+def _linker(rows):
+    """pair_linker over an index shipping `rows` (alias_key, alias, cui, prior)."""
+    import types
+
+    return pair_linker(types.SimpleNamespace(
+        value=AliasIndex({r[0] for r in rows}, candidates=tuple(zip(*rows)))))
+
+
+# few cuis, aliases and priors, so lists repeat rows and tie on score; the
+# priors 0.26, 0.8 / 3 and 0.27 put surface "ASPIRIN x" on alias "aspirin"
+# just under, on and just over the acceptance floor (0.73, 0.74: "aspirin"
+# on "aspirin tablet" either side of it)
+_CAND = st.tuples(
+    st.sampled_from(["C0", "C1", "C2", "C3"]),
+    st.sampled_from(["aspirin", "asa", "aspirin tablet", "nothing alike"]),
+    st.one_of(st.sampled_from([0.0, 0.1, 0.26, 0.8 / 3, 0.27, 0.5, 0.73, 0.74, 1.0]),
+              st.floats(min_value=0.0, max_value=1.0)),
+)
+
+
+@given(st.lists(_CAND, max_size=10), st.sampled_from(["aspirin", "Aspirin", "asa", "ASPIRIN x"]))
+@settings(max_examples=300, deadline=None)
+def test_pair_linker_equals_core_resolve(cands, surface):
+    """With finite priors and named cuis, the in-pass linker's accepted top-1
+    link of a pair is `core.linking.resolve` of its candidates: same
+    ranking, tie-breaks, floor and score, for duplicate rows and ties too."""
+    link = _linker([("k", alias, cui, prior) for cui, alias, prior in cands])
+    assert link("k", surface) == resolve(surface, cands)
+
+
+def test_pair_linker_pins_what_core_linking_cannot_take():
+    """Null priors, NaN priors and null cuis, which `core.linking` cannot
+    rank, get Spark's order: a null prior scores null and ranks last, NaN
+    ranks first and passes the floor, a null cui links nothing and sorts
+    first among ties."""
+    link = _linker(ADVERSARIAL)
+    assert link("nullprior", "nullprior") is None
+    assert link("mixprior", "mixprior") == ("X2", link_score("mixprior", "mixprior", 0.2))
+    cui, score = link("nanprior", "nanprior")
+    assert cui == "N1" and score != score
+    assert link("lowcui", "lowcui") == ("L1", link_score("lowcui", "lowcui", 0.9))
+    tied = _linker([("nullcui", "nullcui", None, 0.5), ("nullcui", "nullcui", "Z0", 0.5)])
+    assert tied("nullcui", "nullcui") is None
 
 
 # aspirin and headache link; belowx matches the index but scores below the floor
@@ -291,7 +339,6 @@ def test_conv_first_raises_when_conv_id_decreases_in_a_task():
 
     import pyarrow as pa
 
-    from knowledge_graph_integration_rag_biomedical_qna_spark.core.patterns import AliasIndex
     from knowledge_graph_integration_rag_biomedical_qna_spark.operators.extraction import (
         _collapsed_fn,
     )

@@ -157,11 +157,11 @@ def test_alias_index_equals_naive_matcher(s, keys):
     assert got == _naive_longest_match(s, frozenset(keys))
 
 
-# --- vectorized kernel == per-row kernel (the r2 fast-path equivalence) ---
+# --- vectorized kernel == per-row specification ---
 
 unicode_text_st = st.text(min_size=0, max_size=120)  # full unicode incl. \x00
-# chars where Python-\s and RE2-\s disagree (vertical tab + FS/GS/RS/US) —
-# these must be routed to the slow path or sentence splits diverge (ADVICE r2)
+# chars where Python-\s and RE2-\s disagree (vertical tab + FS/GS/RS/US):
+# the kernel spells Python's set out, or sentence splits would diverge
 divergent_ws_text_st = st.lists(
     st.sampled_from(
         list("\x0b\x1c\x1d\x1e\x1f\x0c.!? ") + sorted(KEYS)[:3] + ["treats", "a"]
@@ -169,11 +169,27 @@ divergent_ws_text_st = st.lists(
     min_size=0,
     max_size=25,
 ).map("".join)
+# the 29 str.isspace() code points and the kernel's separator bytes, beside
+# multi-byte letters glued to tokens (IL\u20116 has a non-breaking hyphen),
+# dictionary aliases and predicate words
+UNICODE_WS = [chr(c) for c in range(0x3001) if chr(c).isspace()]
+_MIX_WORDS = sorted(KEYS) + ["treats", "inhibits", "binds", "to", "is", "a", "treatment", "for"]
+unicode_mix_st = st.lists(
+    st.one_of(
+        st.sampled_from(UNICODE_WS + ["\x00", "\x00\x01", "\x00\x02", ".", ". ", "!", ";"]),
+        st.sampled_from(["5\u00b5g", "\u03b1-blocker", "IL\u20116", "\u00b5", "\u00b12\u00b0",
+                         "aspirin\u03b1", "\u03b2cox2", "caf\u00e9"]),
+        st.sampled_from(_MIX_WORDS),
+        st.sampled_from(_MIX_WORDS).map(lambda w: w + " "),
+    ),
+    min_size=0,
+    max_size=30,
+).map("".join)
 
 
 def _assert_kernel_equals_row_path(texts, text_type=None):
-    """Feed the same Arrow arrays to the kernel (fast path + slow-path runs)
-    and to the per-row specification `_extract_slow`; the two tables must
+    """Feed the same Arrow arrays to the kernel and to the per-row
+    specification `_extract_slow`; the two tables must
     match in row set, row ORDER and values (NaN mention confidences compare
     equal). Returns the kernel's table as a DataFrame."""
     import pandas as pd
@@ -181,9 +197,11 @@ def _assert_kernel_equals_row_path(texts, text_type=None):
 
     from knowledge_graph_integration_rag_biomedical_qna_spark.core.patterns import AliasIndex
     from knowledge_graph_integration_rag_biomedical_qna_spark.core.vectorized import (
-        _extract_slow,
         _unified_pa_schema,
         extract_unified_batches,
+    )
+    from knowledge_graph_integration_rag_biomedical_qna_spark.oracle.extraction import (
+        _extract_slow,
     )
 
     conv = pa.array([f"c{i}" for i in range(len(texts))], type=pa.string())
@@ -204,15 +222,16 @@ def _assert_kernel_equals_row_path(texts, text_type=None):
 
 @given(
     st.lists(
-        st.one_of(sentence_st, text_st, unicode_text_st, divergent_ws_text_st),
+        st.one_of(sentence_st, text_st, unicode_text_st, divergent_ws_text_st,
+                  unicode_mix_st),
         min_size=0,
         max_size=8,
     )
 )
 @settings(max_examples=200, deadline=None)
 def test_vectorized_kernel_equals_row_path(texts):
-    """extract_unified_batches (pyarrow fast path + per-row slow-path runs)
-    produces the exact row set, row ORDER, and values of `_extract_slow`."""
+    """extract_unified_batches produces the exact row set, row ORDER, and
+    values of `_extract_slow`, on ASCII, Unicode and control-character text."""
     _assert_kernel_equals_row_path(texts)
 
 
@@ -256,10 +275,10 @@ def test_byte_tokenizer_equals_regex_tokenize(sents):
 
 
 def test_divergent_whitespace_chars_route_to_slow_path():
-    """Pinned regression (ADVICE r2): \\x0b and \\x1c-\\x1f are whitespace to
-    Python's re but not RE2's ASCII \\s; rows containing them must produce
-    identical sent_idx/rows via the slow path. \\x0c matches in both engines
-    and may stay on the fast path."""
+    """Pinned regression: \\x0b and \\x1c-\\x1f are whitespace to Python's re
+    but not to RE2's \\s. The kernel spells Python's set out, so rows holding
+    them (and \\x0c, whitespace in both) give the specification's sent_idx
+    and rows."""
     k = sorted(KEYS)
     texts = [f"{k[0]}.{ch}{k[1]} treats {k[2]}." for ch in "\x0b\x1c\x1d\x1e\x1f\x0c"]
     texts.append(f"{k[0]} treats {k[1]}.")  # plain fast-path row in the same batch
@@ -288,24 +307,64 @@ def test_large_string_input_equals_string_input():
     pd.testing.assert_frame_equal(large, small)
 
 
+def test_whitespace_set_is_pythons_and_arrows():
+    """The kernel's spelled-out whitespace set is exactly the code points
+    where str.isspace() holds (the set of Python's re \\s and str.strip()),
+    and exactly the set pc.utf8_trim_whitespace trims."""
+    import re
+
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    from knowledge_graph_integration_rag_biomedical_qna_spark.core import vectorized
+
+    chars = [chr(c) for c in range(0x110000) if not 0xD800 <= c <= 0xDFFF]
+    spelled = {ch for ch in chars if re.fullmatch(vectorized._WS, ch)}
+    assert spelled == {ch for ch in chars if ch.isspace()}
+    assert len(spelled) == 29
+    trimmed = pc.equal(pc.binary_length(pc.utf8_trim_whitespace(pa.array(chars))), 0)
+    assert spelled == {ch for ch, t in zip(chars, trimmed.to_pylist()) if t}
+
+
+def test_unicode_and_control_rows_take_the_kernel(monkeypatch):
+    """Rows holding \u00b5, \u03b1, \\xa0, U+2011, \\u3000, \\x0b, \\x1c, \\x00 and
+    \\x00\\x02 all reach `_extract_fast`, in one call with the ASCII rows, and
+    the table equals `_extract_slow`."""
+    k = sorted(KEYS)
+    texts = [
+        f"{k[0]} treats {k[2]} at 5\u00b5g.",
+        f"The \u03b1-blocker {k[1]} inhibits {k[4]}.\xa0{k[2]} binds {k[0]}.",
+        f"IL\u20116 and {k[3]} treats {k[0]}.\u3000\u3000{k[2]} inhibits {k[1]}!",
+        f"{k[0]}.\x0b{k[2]} treats {k[4]};\x1c{k[3]} binds {k[0]}.",
+        f"{k[0]}\x00 treats {k[2]}. \x00{k[3]} inhibits {k[1]}.\x00\x02{k[4]} binds {k[2]}.",
+        f"{k[2]} treats {k[3]}.",
+    ]
+    calls = _record_kernel_calls(monkeypatch)
+    _run_kernel(texts)
+    assert calls == [("c0", len(texts), sum(len(t.encode()) for t in texts))], calls
+    monkeypatch.undo()
+    got = _assert_kernel_equals_row_path(texts)
+    assert set(got["conv_id"]) == {f"c{i}" for i in range(len(texts))}
+
+
 # --- the kernel's working set: each call sees <= KERNEL_SLICE_BYTES of text ---
 
 
 def _record_kernel_calls(monkeypatch) -> list:
-    """Wrap both kernel paths; each call appends (first conv_id, rows, text
-    bytes) to the returned list."""
+    """Wrap the kernel; each call appends (first conv_id, rows, text bytes)
+    to the returned list."""
     import pyarrow.compute as pc
 
     from knowledge_graph_integration_rag_biomedical_qna_spark.core import vectorized
 
     calls = []
-    for name in ("_extract_fast", "_extract_slow"):
-        def wrapped(conv, turn, texts, idx, _path=getattr(vectorized, name)):
-            nbytes = pc.sum(pc.binary_length(texts)).as_py() or 0
-            calls.append((conv[0].as_py(), len(texts), nbytes))
-            return _path(conv, turn, texts, idx)
 
-        monkeypatch.setattr(vectorized, name, wrapped)
+    def wrapped(conv, turn, texts, idx, _kernel=vectorized._extract_fast):
+        nbytes = pc.sum(pc.binary_length(texts)).as_py() or 0
+        calls.append((conv[0].as_py(), len(texts), nbytes))
+        return _kernel(conv, turn, texts, idx)
+
+    monkeypatch.setattr(vectorized, "_extract_fast", wrapped)
     return calls
 
 
@@ -325,7 +384,7 @@ def _run_kernel(texts) -> None:
 @given(
     st.lists(
         st.one_of(sentence_st, text_st, unicode_text_st, divergent_ws_text_st,
-                  st.none(), st.just("")),
+                  unicode_mix_st, st.none(), st.just("")),
         min_size=0,
         max_size=12,
     ),
@@ -335,8 +394,8 @@ def _run_kernel(texts) -> None:
 def test_sliced_kernel_equals_unsliced_and_row_path(texts, slice_bytes):
     """Cutting each batch into slices of a few bytes changes only how rows
     are batched: the output equals the unsliced kernel's and `_extract_slow`'s
-    row for row, whatever rows (ASCII, non-ASCII, null, empty) the cuts and
-    the fast/slow run boundaries fall between."""
+    row for row, whatever rows (ASCII, non-ASCII, null, empty) the cuts fall
+    between."""
     from unittest import mock
 
     import pandas as pd
@@ -350,22 +409,22 @@ def test_sliced_kernel_equals_unsliced_and_row_path(texts, slice_bytes):
 
 
 def test_every_kernel_call_is_within_the_slice_bound(monkeypatch):
-    """Over a batch of many times the bound, every _extract_fast/_extract_slow
-    call holds at most KERNEL_SLICE_BYTES of text unless it holds exactly one
-    row. The byte cut before row 2 falls on a fast/slow run boundary; row 5
-    is larger than the bound and is a call of its own."""
+    """Over a batch of many times the bound, every kernel call holds at most
+    KERNEL_SLICE_BYTES of text unless it holds exactly one row. Rows 0-1
+    fill the first slice; row 5 is larger than the bound and is a call of
+    its own."""
     from knowledge_graph_integration_rag_biomedical_qna_spark.core import vectorized
 
     k = sorted(KEYS)
     texts = [
         f"{k[0]} treats {k[2]}.",                # 20 bytes
         f"{k[2]} inhibits {k[3]}. ok.",          # 23: rows 0-1 fill the first slice
-        f"Caf\u00e9 {k[0]} treats {k[2]}.",      # non-ASCII: a slow run starts here too
+        f"Caf\u00e9 {k[0]} treats {k[2]}.",      # non-ASCII
         None,
         "",
         f"The {k[1]} treats {k[4]}. " * 8,       # 280 bytes, over the bound
         f"{k[3]} binds {k[0]}!  {k[2]} treats {k[1]}",
-        f"{k[0]}.\x0b{k[2]} treats {k[4]}.",     # divergent whitespace: slow
+        f"{k[0]}.\x0b{k[2]} treats {k[4]}.",     # divergent whitespace
         f"{k[4]} inhibits {k[0]}.",
         f"na\u00efve {k[3]} inhibits {k[4]}.",
     ]
