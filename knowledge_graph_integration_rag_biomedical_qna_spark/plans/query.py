@@ -12,11 +12,14 @@ top-k (rag2-retriever/main.py). Against the constructed graph that becomes:
 `link_questions` returns a lazy plan and `retrieve_evidence` composes on top
 of it, so one ask is one adaptive query: one Arrow pass detects and links the
 questions' mentions, nothing is cached or checkpointed, and `kg_edge_stats` is
-scanned once. Batch-oriented: a million questions retrieve in one job; a
-single question is the degenerate one-row case. The question links are the
-broadcast side of the edge join — question-sized by construction, and they
-reach the broadcast with no shuffle — so the graph is never shuffled to meet
-them.
+scanned once. The link pass is ONE Python task per ask, however the questions
+are partitioned: one worker builds the dictionary index and each distinct
+(alias_key, surface) is scored once. That pays off for asks of a handful of
+questions in a LocalRelation; past that, or over a Python RDD, it costs wall
+time (measured in `link_questions`). A single question is the degenerate
+one-row case. The question links are the broadcast side of the edge join —
+question-sized by construction, and they reach the broadcast with no shuffle
+— so the graph is never shuffled to meet them.
 """
 
 from __future__ import annotations
@@ -79,37 +82,45 @@ def link_questions(
     the gated output string-typed against an int32 oracle, and string order
     diverges from numeric past 9 questions).
 
-    One Arrow pass over the questions detects the dictionary mentions,
-    dedups them per (question, alias_key, surface) and links each distinct
-    pair once per task against the candidates `keys_bc` already ships for
-    the matcher — the same ranking and acceptance as
-    `resolution_table(candidate_table(...))`. The plan reads no dictionary
-    table and has no join, aggregate or exchange: the links keep the
-    questions' partitioning on their way to the evidence broadcast."""
+    The questions are coalesced to one partition, so the whole ask links in
+    one Python task: one worker builds the dictionary index, and the pass
+    detects the dictionary mentions, dedups them per (question, alias_key,
+    surface) and scores each distinct (alias_key, surface) pair once per ask
+    against the candidates `keys_bc` already ships for the matcher — the
+    same ranking and acceptance as `resolution_table(candidate_table(...))`.
+    The coalesce adds no exchange, and the links are the broadcast side of
+    `retrieve_evidence`, collected to the driver either way. The plan reads
+    no dictionary table and has no join or aggregate.
+
+    The trade-off: one task gives up parallelism, and a question table
+    backed by a Python RDD (`createDataFrame` of a list) also converts its
+    rows serially inside it. Warm link-pass wall to a noop sink, local[4],
+    shared 4-vCPU host, questions over `synth_aliases`, one task (one per
+    question partition): 16 from `values_df` 0.22-0.35 s (0.30-0.55 s);
+    from a 4-partition `createDataFrame` 16 0.61-0.93 s (0.48-0.72 s), 10k
+    0.86-1.15 s (0.47-0.83 s), 100k 1.41-1.63 s (0.63-1.13 s). The shipped
+    callers ask a handful of `values_df` questions (`kg_query serve` takes
+    one JSON list a line)."""
     from pyspark.sql.pandas.types import to_arrow_type
 
     cui = aliases.schema["cui"]
-    turns_like = questions.select(
-        F.col("question_id").cast("string").alias("conv_id"),
-        F.lit(0).cast("int").alias("turn_idx"),
-        F.col("text"),
-    )
-    return turns_like.mapInArrow(
+    qid_type = questions.schema["question_id"].dataType.simpleString()
+    return questions.coalesce(1).selectExpr(
+        "CAST(question_id AS STRING) AS conv_id", "0 AS turn_idx", "text",
+    ).mapInArrow(
         _question_links_fn(keys_bc, to_arrow_type(cui.dataType)),
         T.StructType([T.StructField("question_id", T.StringType()),
                       T.StructField("cui", cui.dataType),
                       T.StructField("link_score", T.DoubleType())]),
-    ).withColumn(
-        "question_id", F.col("question_id").cast(questions.schema["question_id"].dataType)
-    )
+    ).selectExpr(f"CAST(question_id AS {qid_type}) AS question_id", "cui", "link_score")
 
 
 def _incident_edges(edges: DataFrame, keys: DataFrame) -> DataFrame:
     """Edges touching each key's `cui`, in one scan: both endpoints explode
     into `cui` (deduplicated, so a self-loop matches once) and one equi-join
     on `cui` replaces a join per endpoint plus their union."""
-    return edges.withColumn(
-        "cui", F.explode(F.array_distinct(F.array("subj_cui", "obj_cui")))
+    return edges.selectExpr(
+        "*", "explode(array_distinct(array(subj_cui, obj_cui))) AS cui"
     ).join(keys, "cui").drop("cui")
 
 
@@ -177,28 +188,25 @@ def retrieve_evidence(
     question's hits land in one partition, where the aggregate and the
     window spill instead of spreading.
     """
-    hits = (
+    return (
         _incident_edges(kg_edge_stats, F.broadcast(question_links))
         .repartitionByRange("question_id")
         .groupBy(
             "question_id", "subj_cui", "pred", "obj_cui", "n_evidence", "avg_confidence"
         )
-        .agg(F.max("link_score").alias("link_score"))
-    )
-    scored = hits.withColumn(
-        "rank_score_micro",
-        F.round(
-            F.col("link_score") * F.col("avg_confidence")
-            * F.log1p(F.col("n_evidence")) * F.lit(1e6)
-        ).cast("bigint"),
-    )
-    w = Window.partitionBy("question_id").orderBy(
-        F.col("rank_score_micro").desc(), F.col("subj_cui"), F.col("pred"), F.col("obj_cui")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w).cast("bigint"))
-        .filter(F.col("rank") <= k)
-        .select(
+        .agg(F.expr("max(link_score) AS link_score"))
+        .selectExpr(
+            "*",
+            "CAST(round(link_score * avg_confidence * log1p(n_evidence) * 1e6) AS BIGINT)"
+            " AS rank_score_micro",
+        )
+        .selectExpr(
+            "*",
+            "CAST(row_number() OVER (PARTITION BY question_id ORDER BY rank_score_micro DESC,"
+            " subj_cui, pred, obj_cui) AS BIGINT) AS rank",
+        )
+        .filter(f"rank <= {int(k)}")
+        .selectExpr(
             "question_id", "subj_cui", "pred", "obj_cui",
             "n_evidence", "rank_score_micro", "rank",
         )

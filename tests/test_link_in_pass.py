@@ -156,19 +156,27 @@ def _question_spec(questions, aliases, index):
                     .alias("question_id"), "cui", "link_score"))
 
 
-@pytest.mark.parametrize("inputs", ["fixture", "adversarial"])
+@pytest.mark.parametrize("inputs", ["fixture", "adversarial", "partitioned"])
 def test_question_links_equal_the_specification(spark, fixture_inputs, inputs):
     """link_questions returns exactly the specification's
     (question_id, cui, link_score) rows, NaN scores included, one per
-    question and distinct linked surface."""
-    _, aliases, index = fixture_inputs if inputs == "fixture" else _adversarial_inputs(spark)
-    if inputs == "fixture":
+    question and distinct linked surface. "partitioned" spreads 28
+    questions over 7 partitions, each holding the same 4 texts under other
+    question_ids, which the one-task link pass must keep apart."""
+    _, aliases, index = _adversarial_inputs(spark) if inputs == "adversarial" else fixture_inputs
+    if inputs == "adversarial":
+        texts = SENTENCES + [" ".join(SENTENCES), "nothing here", ""]
+    else:
         names = [r[0] for r in aliases.orderBy("alias_key").select("alias").limit(24).collect()]
         texts = [f"does {names[i]} treat {names[(i + 5) % 24]} or {names[i].upper()}?"
                  for i in range(24)]
+    ddl = "question_id bigint, text string"
+    if inputs == "partitioned":
+        rows = [(q, texts[q % 4]) for q in range(28)]
+        questions = spark.createDataFrame(spark.sparkContext.parallelize(rows, 7), ddl)
+        assert questions.rdd.getNumPartitions() == 7
     else:
-        texts = SENTENCES + [" ".join(SENTENCES), "nothing here", ""]
-    questions = spark.createDataFrame(list(enumerate(texts)), "question_id bigint, text string")
+        questions = spark.createDataFrame(list(enumerate(texts)), ddl)
     got = link_questions(spark, questions, aliases, index)
     _assert_same(got, _question_spec(questions, aliases, index))
     assert got.count() > 0

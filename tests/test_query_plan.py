@@ -11,8 +11,8 @@ assembly's exchange job (none when lazy) and collects nothing to the driver.
 
 An ask is one adaptive query: `link_questions` builds a lazy plan, and
 `retrieve_evidence` plus the caller's orderBy run it with one Arrow pass that
-detects and links the questions' mentions, one `kg_edge_stats` scan and no
-cache or checkpoint.
+detects and links the questions' mentions in a single task, one
+`kg_edge_stats` scan and no cache or checkpoint.
 
 These tests read final adaptive plans and count Spark jobs, so a change that
 splits a plan again goes red here before it shows up as latency.
@@ -299,15 +299,13 @@ def test_build_kg_starts_one_job_only_when_persisted(spark, fixture_inputs):
     assert len(jobs) == 1, jobs
 
 
-def test_lazy_build_kg_plan_costs_at_most_190_py4j_calls(spark, fixture_inputs):
-    """A warm lazy build_kg with a hoisted alias index builds only the plans
-    its writes read: at most 190 py4j commands (270 while it also built the
-    linking specification's views). Counted on the gateway client, as
-    perfbench's tracer counts them. The minimum of three builds is taken,
-    because py4j also sends one command per JVM handle that Python garbage
-    collects, which can land inside any one build."""
-    index = broadcast_alias_keys(spark, fixture_inputs[1])
-    build_kg(spark, *fixture_inputs, persist=False, alias_index=index)
+def _min_py4j_calls(spark, build, runs: int = 3) -> int:
+    """The fewest py4j commands one of `runs` calls of `build` sends, after
+    a warm-up call. Counted on the gateway client, as perfbench's tracer
+    counts them. The minimum is taken because py4j also sends one command
+    per JVM handle that Python garbage collects, which can land inside any
+    one call."""
+    build()
     client = spark.sparkContext._gateway._gateway_client
     send, calls = client.send_command, []
 
@@ -317,12 +315,22 @@ def test_lazy_build_kg_plan_costs_at_most_190_py4j_calls(spark, fixture_inputs):
 
     client.send_command = counting_send
     try:
-        for _ in range(3):
+        for _ in range(runs):
             calls.append(0)
-            build_kg(spark, *fixture_inputs, persist=False, alias_index=index)
+            build()
     finally:
         client.send_command = send
-    assert min(calls) <= 190, calls
+    return min(calls)
+
+
+def test_lazy_build_kg_plan_costs_at_most_190_py4j_calls(spark, fixture_inputs):
+    """A warm lazy build_kg with a hoisted alias index builds only the plans
+    its writes read: at most 190 py4j commands (270 while it also built the
+    linking specification's views)."""
+    index = broadcast_alias_keys(spark, fixture_inputs[1])
+    calls = _min_py4j_calls(
+        spark, lambda: build_kg(spark, *fixture_inputs, persist=False, alias_index=index))
+    assert calls <= 190, calls
 
 
 def test_checkpoint_group_job_count(spark, fixture_inputs, tmp_path):
@@ -493,14 +501,36 @@ def test_ask_is_one_plan(spark, ask_env):
 
 
 def test_ask_job_count(spark, ask_env):
-    """link + retrieve + orderBy + collect of 16 questions built with
-    createDataFrame takes at most 4 Spark jobs at local[4]."""
+    """link + retrieve + orderBy + collect of 16 questions takes at most 4
+    Spark jobs at local[4], and the first of them, the link pass that fills
+    the broadcast, runs exactly 1 task (it ran one per question partition
+    before the link pass coalesced them), so one Python worker builds the
+    dictionary index for the whole ask. The questions come in 4 partitions,
+    built with createDataFrame and with values_df."""
+    from knowledge_graph_integration_rag_biomedical_qna_spark.sources.synth import values_df
+
+    made = _questions(spark, ask_env, range(16))
+    st = spark.sparkContext.statusTracker()
+    for i, qs in enumerate((made, values_df(spark, [tuple(r) for r in made.collect()],
+                                            "question_id int, text string"))):
+        assert qs.rdd.getNumPartitions() == 4
+        _ask(spark, ask_env, qs).collect()  # warm the Python workers
+        with job_group(spark, f"ask-{i}") as jobs:
+            rows = _ask(spark, ask_env, qs).collect()
+        assert rows
+        assert len(jobs) <= 4, jobs
+        link_stages = [st.getStageInfo(s) for s in st.getJobInfo(min(jobs)).stageIds]
+        assert [s.numTasks for s in link_stages] == [1], link_stages
+
+
+def test_ask_plan_costs_at_most_160_py4j_calls(spark, ask_env):
+    """Building a warm ask's plans, link_questions plus retrieve_evidence
+    over 16 questions, takes at most 160 py4j commands (~500 while both
+    were built from Column objects instead of SQL expression strings)."""
     qs = _questions(spark, ask_env, range(16))
-    _ask(spark, ask_env, qs).collect()  # warm the Python workers
-    with job_group(spark, "ask") as jobs:
-        rows = _ask(spark, ask_env, qs).collect()
-    assert rows
-    assert len(jobs) <= 4, jobs
+    calls = _min_py4j_calls(spark, lambda: retrieve_evidence(
+        link_questions(spark, qs, ask_env["aliases"], ask_env["keys"]), ask_env["edge_stats"]))
+    assert calls <= 160, calls
 
 
 @pytest.mark.parametrize("ddl, ids", [

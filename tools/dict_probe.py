@@ -9,6 +9,11 @@ over a fresh read of that dictionary:
 
 - `broadcast_alias_keys`: Spark jobs, driver wall time and the size of
   the Arrow file it ships;
+- on the first run only, a cold ask: one `link_questions` collect over 16
+  questions while no Python worker has started, with the tasks of each of
+  its Spark jobs, its wall time and the peak RSS (`VmHWM`) of every Python
+  process under the JVM afterwards (each worker that ran a link task built
+  the index);
 - one SQL task per core that times how long its Python worker takes to
   have the index ready (the broadcast value, `candidates_by_key` and the
   kernel's vocabulary arrays), with the worker's peak RSS;
@@ -92,6 +97,31 @@ def index_ready(handle):
     return ready
 
 
+def python_peak_rss_mb(root: int) -> list[int]:
+    """VmHWM in MB of every Python process descended from pid `root`,
+    largest first (the worker daemon and the workers it forked)."""
+    children: dict[int, list[int]] = {}
+    for d in filter(str.isdigit, os.listdir("/proc")):
+        try:
+            with open(f"/proc/{d}/stat") as fh:
+                ppid = int(fh.read().rsplit(")", 1)[1].split()[1])
+        except OSError:
+            continue
+        children.setdefault(ppid, []).append(int(d))
+    stack, out = list(children.get(root, [])), []
+    while stack:
+        pid = stack.pop()
+        stack += children.get(pid, [])
+        try:
+            with open(f"/proc/{pid}/status") as fh:
+                status = dict(ln.split(":", 1) for ln in fh if ":" in ln)
+        except OSError:
+            continue
+        if "python" in status["Name"] and "VmHWM" in status:
+            out.append(round(int(status["VmHWM"].split()[0]) / 1024))
+    return sorted(out, reverse=True)
+
+
 def main() -> int:
     ap = argparse.ArgumentParser(description=__doc__.splitlines()[0])
     ap.add_argument("--aliases", type=int, default=1_000_000)
@@ -120,8 +150,14 @@ def main() -> int:
         spark = get_spark(app_name="dict_probe", master=args.master)
         sc = spark.sparkContext
         cores = sc.defaultParallelism
+        jvm_pid = spark._jvm.ProcessHandle.current().pid()
         questions = values_df(spark, [(i, f"what does {a} treat?") for i, a in enumerate(names)],
                               "question_id int, text string")
+
+        def job_tasks(group: str) -> list[int]:
+            st = sc.statusTracker()
+            return [sum(st.getStageInfo(s).numTasks for s in st.getJobInfo(j).stageIds)
+                    for j in sorted(st.getJobIdsForGroup(group))]
 
         def timed(fn):
             jobs = sc._jsc.sc().dagScheduler().nextJobId()
@@ -133,6 +169,13 @@ def main() -> int:
         for run in ("first", "repeat"):
             aliases = read_aliases(spark, path)
             handle, ship = timed(lambda: broadcast_alias_keys(spark, aliases))
+            if run == "first":
+                sc.setJobGroup("cold_ask", "cold_ask")
+                links, cold = timed(
+                    lambda: link_questions(spark, questions, aliases, handle).collect())
+                sc.setLocalProperty("spark.jobGroup.id", None)
+                out["cold_ask"] = {**cold, "rows": len(links), "tasks": job_tasks("cold_ask"),
+                                   "python_peak_rss_mb": python_peak_rss_mb(jvm_pid)}
             workers = spark.range(0, cores, 1, cores).mapInArrow(
                 index_ready(handle), "pid long, ready_s double, rss_mb long").collect()
             links, link = timed(
@@ -141,7 +184,7 @@ def main() -> int:
             out[run] = {"ship": ship, "link": {**link, "rows": len(links)},
                         "workers": [w.asDict() for w in sorted(workers)]}
         out["same_handle"] = handle is broadcast_alias_keys(spark, read_aliases(spark, path))
-        with open(f"/proc/{spark._jvm.ProcessHandle.current().pid()}/status") as fh:
+        with open(f"/proc/{jvm_pid}/status") as fh:
             jvm_kb = next(int(ln.split()[1]) for ln in fh if ln.startswith("VmHWM:"))
         out["driver_peak_rss_mb"] = {
             "python": round(resource.getrusage(resource.RUSAGE_SELF).ru_maxrss / 1024),
