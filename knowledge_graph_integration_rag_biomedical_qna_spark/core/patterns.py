@@ -15,6 +15,7 @@ pandas-UDFs share one implementation.
 
 from __future__ import annotations
 
+from bisect import bisect_left, bisect_right
 from dataclasses import dataclass
 
 from .config import MAX_ARG_GAP, MAX_MENTION_TOKENS
@@ -51,18 +52,12 @@ PREDICATE_LEXICON: dict[str, str] = {
     "lowers": "decreases",
 }
 
-# Longest-first phrase list for greedy matching.
-_PRED_PHRASES = sorted(
-    ((tuple(p.split()), norm) for p, norm in PREDICATE_LEXICON.items()),
-    key=lambda kv: -len(kv[0]),
-)
-
 # First-word index: only phrases starting with the current token can match
 # there, so the per-position scan is a dict hit instead of a 26-phrase loop.
-# Buckets inherit the longest-first order, preserving greedy semantics.
+# Buckets are longest-first, for greedy matching.
 _PRED_BY_FIRST: dict[str, list[tuple[tuple[str, ...], str]]] = {}
-for _phrase, _norm in _PRED_PHRASES:
-    _PRED_BY_FIRST.setdefault(_phrase[0], []).append((_phrase, _norm))
+for _phrase, _norm in sorted(PREDICATE_LEXICON.items(), key=lambda kv: -kv[0].count(" ")):
+    _PRED_BY_FIRST.setdefault(_phrase.split()[0], []).append((tuple(_phrase.split()), _norm))
 
 
 @dataclass(frozen=True)
@@ -92,67 +87,79 @@ def _norm_token(w: str) -> str:
 
 
 class AliasIndex:
-    """First-token-indexed dictionary for the longest-match matcher, plus
-    the dictionary rows that linking draws its candidates from.
+    """The alias dictionary the matcher and the linker read, kept as Arrow.
 
-    `singles` answers 1-token lookups; `multi_first` maps a first token to its
-    multi-token keys longest-first, so a position whose token starts no alias
-    costs two set probes instead of three string joins. Each Python worker
-    builds one per shipped dictionary (plans.pipeline.broadcast_alias_keys).
-    Matching semantics are identical to probing the flat key set.
-
-    `candidates`: the dictionary as four parallel columns (alias_key, alias,
-    cui, prior), or None for a matcher-only index (`extract_all_df` needs
-    keys alone). Columns keep the payload compact; `candidates_by_key`
-    builds the per-key lookup lazily, once per worker that links (the build's
-    and the question's extraction passes both do).
+    `alias_keys`: the matcher's keys, an Arrow string array or an iterable
+    of str. `candidates`: the rows linking draws from, a `pa.Table` of
+    (alias_key, alias, cui, prior) sorted by alias_key, or None for a
+    matcher-only index. A Python worker keeps the shipped file's
+    memory-mapped table as both (plans.pipeline.ShippedAliases.value) and
+    turns no column into Python objects; only the per-row matcher builds
+    Python sets (`first_index`).
     """
 
-    __slots__ = ("singles", "multi_first", "candidates", "_by_len", "_by_key")
+    __slots__ = ("keys", "candidates", "_vocab", "_first", "_rows")
 
     def __init__(self, alias_keys, candidates=None):
-        alias_keys = tuple(alias_keys)  # guard: __init__ iterates twice
-        self.singles: frozenset[str] = frozenset(k for k in alias_keys if " " not in k)
-        multi: dict[str, list[tuple[tuple[str, ...], str]]] = {}
-        for k in alias_keys:
-            parts = tuple(k.split(" "))
-            # a key longer than the matcher's longest n-gram is unreachable
-            # (plans.pipeline.broadcast_alias_keys warns when it ships one)
-            if 1 < len(parts) <= MAX_MENTION_TOKENS:
-                multi.setdefault(parts[0], []).append((parts, k))
-        for v in multi.values():
-            v.sort(key=lambda pk: -len(pk[0]))
-        self.multi_first = multi
-        self.candidates = candidates
-        self._by_len = None
-        self._by_key = None
+        import pyarrow as pa
 
-    def keys_by_len(self) -> "dict[int, frozenset[str]]":
-        """Token-length -> key-set view (for the vectorized kernel's per-length
-        isin probes). Built lazily, cached on the instance — a Python worker
-        holding the shipped AliasIndex pays the build once, not per task."""
-        if self._by_len is None:
-            by_len: dict[int, set[str]] = {1: set(self.singles)}
-            for bucket in self.multi_first.values():
-                for parts, full_key in bucket:
-                    by_len.setdefault(len(parts), set()).add(full_key)
-            self._by_len = {k: frozenset(v) for k, v in by_len.items() if v}
-        return self._by_len
+        if not isinstance(alias_keys, (pa.Array, pa.ChunkedArray)):
+            alias_keys = pa.array(list(alias_keys), pa.string())
+        self.keys, self.candidates = alias_keys, candidates
+        self._vocab = self._first = self._rows = None
 
-    def candidates_by_key(self) -> "dict[str, list[tuple[str, str, float]]]":
-        """alias_key -> [(cui, alias, prior), ...], one entry per dictionary
-        row in dictionary order. Built lazily and cached like `keys_by_len`."""
-        if self._by_key is None:
+    @property
+    def vocab(self) -> dict:
+        """The kernel's vocabulary, built with Arrow compute on first use;
+        keys longer than MAX_MENTION_TOKENS tokens are unreachable and left
+        out (plans.pipeline.broadcast_alias_keys warns when it ships one)."""
+        if self._vocab is None:
+            from .vectorized import _vocab_arrays
+
+            self._vocab = _vocab_arrays(self.keys, MAX_MENTION_TOKENS)
+        return self._vocab
+
+    def candidates_of(self, key) -> "list[tuple[str, str, float]]":
+        """(cui, alias, prior) of every row under `key`, in file order; none
+        for a null or unknown key. Bisects the sorted alias_key column's
+        UTF-8 bytes in place (Arrow sorts strings by their bytes)."""
+        if self._rows is None:
             if self.candidates is None:
-                raise ValueError(
-                    "this AliasIndex carries no link candidates; build it with "
-                    "plans.pipeline.broadcast_alias_keys"
-                )
-            by_key: dict[str, list[tuple[str, str, float]]] = {}
-            for key, alias, cui, prior in zip(*self.candidates):
-                by_key.setdefault(key, []).append((cui, alias, prior))
-            self._by_key = by_key
-        return self._by_key
+                raise ValueError("this AliasIndex carries no link candidates; build it "
+                                 "with plans.pipeline.broadcast_alias_keys")
+            keys, *cols = (c.chunk(0) if c.num_chunks == 1 else c.combine_chunks() for c in
+                           self.candidates.select(["alias_key", "cui", "alias", "prior"]).columns)
+            _, off, data = keys.buffers()
+            self._rows = (len(keys), memoryview(off).cast("i")[keys.offset :],
+                          memoryview(data or b""), cols)
+        if key is None:
+            return []
+        n, off, data, (cui, alias, prior) = self._rows
+        rows, b = range(n), key.encode()
+
+        def at(i):
+            return data[off[i] : off[i + 1]].tobytes()
+
+        lo = bisect_left(rows, b, key=at)
+        step = 1  # gallop past the key's rows (most keys have a few), then bisect
+        while lo + step <= n and at(lo + step - 1) == b:
+            step *= 2
+        hi = bisect_right(rows, b, lo + step // 2, min(lo + step, n), key=at)
+        return [(cui[i].as_py(), alias[i].as_py(), prior[i].as_py()) for i in range(lo, hi)]
+
+    def first_index(self):
+        """(singles, multi_first) for `detect_mentions`, built on first call:
+        the 1-token keys, and each first token's multi-token keys
+        longest-first, so a position whose token starts no alias costs two
+        set probes instead of three string joins."""
+        if self._first is None:
+            keys, multi = set(self.keys.to_pylist()), {}
+            for k in sorted(keys, key=lambda k: -k.count(" ")):
+                parts = tuple(k.split(" "))
+                if 1 < len(parts) <= MAX_MENTION_TOKENS:
+                    multi.setdefault(parts[0], []).append((parts, k))
+            self._first = (frozenset(k for k in keys if " " not in k), multi)
+        return self._first
 
 
 def _as_index(alias_keys) -> AliasIndex:
@@ -176,7 +183,7 @@ def detect_mentions(
     # normalize each token once; an n-gram's alias key is the space-join of
     # its normalized tokens (normalize_alias is per-token by construction)
     norm = [_norm_token(w) for w, _, _ in toks]
-    singles, multi_first = idx.singles, idx.multi_first
+    singles, multi_first = idx.first_index()
     mentions: list[Mention] = []
     i = 0
     n = len(toks)

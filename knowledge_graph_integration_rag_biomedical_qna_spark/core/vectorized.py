@@ -57,12 +57,6 @@ _WS_PAT = rf"{_WS}+"
 # split, so \x00\x02 occurs only where the marker put it
 _SEP = "\x00\x02"
 
-# predicate phrases bucketed by token length: length -> {space-joined: norm}
-_PRED_BY_LEN: dict[int, dict[str, str]] = {}
-for _phrase, _norm in PREDICATE_LEXICON.items():
-    _parts = _phrase.split()
-    _PRED_BY_LEN.setdefault(len(_parts), {})[" ".join(_parts)] = _norm
-
 # confidence = max(0.1, round(1 - 0.1*(subj_gap+obj_gap), 4)); gaps bounded by
 # MAX_ARG_GAP, so precompute with PYTHON round (np.round can differ by 1 ulp)
 _CONF_TABLE = np.array(
@@ -70,56 +64,51 @@ _CONF_TABLE = np.array(
     dtype=np.float64,
 )
 
-def _vocab_arrays(keys_by_len: dict) -> dict:
-    """{span: (keys arrow array,)} plus a "_union" entry: (union word arrow
-    array, uint64 bit-LUT with a 0 sentinel slot, {span: bit}). The union
-    collapses the family's per-span hash probes (exact membership for span 1,
-    first-word prefilter for span >= 2) into ONE index_in pass at match time —
-    each extra is_in was a full re-hash of the token stream (~6-9 ms per probe
-    on the 51k-turn batch). The union LUT is the sole prefilter; per-span
-    first-word sets exist only transiently to build it (r6 advice: the cached
-    per-span firsts Arrow arrays were dead data)."""
+
+def _vocab_arrays(keys, max_span: int = 64) -> dict:
+    """{span: (keys arrow array,)} for every span up to `max_span` that a
+    key has, plus a "_union" entry: (union word arrow array, uint64 bit-LUT
+    with a 0 sentinel slot, {span: bit}), from any string array of keys
+    with Arrow compute (nulls and duplicates dropped). A key's span is its
+    space count + 1, as `len(key.split(" "))` counts doubled, leading and
+    empty keys; its first word is the part before its first space. The
+    union collapses the family's per-span hash probes (exact membership for
+    span 1, first-word prefilter for span >= 2) into ONE index_in pass at
+    match time — each extra is_in was a full re-hash of the token stream
+    (~6-9 ms per probe on the 51k-turn batch)."""
     import pyarrow as pa
+    import pyarrow.compute as pc
 
+    keys = pc.unique(pc.drop_null(keys))
+    span = pc.add(pc.count_substring(keys, " "), 1).to_numpy(zero_copy_only=False)
+    keys, span = keys.filter(pa.array(span <= max_span)), span[span <= max_span]
+    spans = np.unique(span).tolist()
     # one LUT bit per distinct n-gram span length; uint64 gives 64 before
-    # overflow (r6 advice: the old uint8 LUT silently capped a family at 8 —
-    # raising core.config.MAX_MENTION_TOKENS past that would corrupt masks)
-    if len(keys_by_len) > 64:
+    # overflow (r6 advice: the old uint8 LUT silently capped a family at 8)
+    if len(spans) > 64:
         raise ValueError(
-            f"_vocab_arrays: {len(keys_by_len)} distinct n-gram span lengths "
-            "exceed the 64-bit union LUT (one bit per span length) — widen "
-            "the LUT dtype before raising MAX_MENTION_TOKENS this far"
+            f"_vocab_arrays: {len(spans)} distinct n-gram span lengths exceed the "
+            "64-bit union LUT — widen it before raising MAX_MENTION_TOKENS this far"
         )
-    out = {}
-    word_bits: dict[str, int] = {}
-    bit_of: dict[int, int] = {}
-    for bit_ix, k in enumerate(sorted(keys_by_len)):
-        v = keys_by_len[k]
-        keys = sorted(v)
-        out[k] = (pa.array(keys, type=pa.string()),)
-        bit = 1 << bit_ix
-        bit_of[k] = bit
-        firsts = {key.split(" ", 1)[0] for key in keys} if k > 1 else keys
-        for w in firsts:
-            word_bits[w] = word_bits.get(w, 0) | bit
-    union = sorted(word_bits)
+    firsts = pc.list_element(pc.split_pattern(keys, " ", max_splits=1), 0)
+    union = pc.unique(firsts)
     lut = np.zeros(len(union) + 1, dtype=np.uint64)  # slot 0 = not-in-union
-    for i, w in enumerate(union):
-        lut[i + 1] = word_bits[w]
-    out["_union"] = (pa.array(union, type=pa.string()), lut, bit_of)
+    out, bit_of = {}, {}
+    for bit_ix, k in enumerate(spans):
+        sel = pa.array(span == k)
+        bit_of[k] = 1 << bit_ix
+        out[k] = (keys.filter(sel),)
+        ix = pc.index_in(firsts.filter(sel), value_set=union).to_numpy(zero_copy_only=False)
+        lut[ix + 1] |= np.uint64(bit_of[k])
+    out["_union"] = (union, lut, bit_of)
     return out
-
-
-# one entry: a Python worker links against one shipped dictionary's index
-# at a time (plans.pipeline.ShippedAliases.value keeps one too)
-@functools.lru_cache(maxsize=1)
-def _pa_vocab(idx: AliasIndex):
-    return _vocab_arrays(idx.keys_by_len())
 
 
 @functools.cache
 def _pred_vocab():
-    return _vocab_arrays(_PRED_BY_LEN)
+    import pyarrow as pa
+
+    return _vocab_arrays(pa.array(list(PREDICATE_LEXICON), pa.string()))
 
 
 @functools.cache
@@ -130,12 +119,8 @@ def _pred_norm_map():
     (that pass was ~2/3 of the triple stage's wall)."""
     import pyarrow as pa
 
-    phrases, norms = [], []
-    for by in _PRED_BY_LEN.values():
-        for ph, nm in by.items():
-            phrases.append(ph)
-            norms.append(nm)
-    return pa.array(phrases, type=pa.string()), pa.array(norms, type=pa.string())
+    return (pa.array(list(PREDICATE_LEXICON), pa.string()),
+            pa.array(list(PREDICATE_LEXICON.values()), pa.string()))
 
 
 def _ngram_masks(values, sent_of: np.ndarray, vocab_by_len: dict, pc):
@@ -159,12 +144,11 @@ def _ngram_masks(values, sent_of: np.ndarray, vocab_by_len: dict, pc):
     for k in sorted((s for s in vocab_by_len if s != "_union"), reverse=True):
         (vocab,) = vocab_by_len[k]
         mask = np.zeros(total, dtype=bool)
-        keys = None
-        kpos = None
+        keys = kpos = None
         if k == 1:
             mask = (bits & bit_of[k]) != 0
             keys = values
-        elif total >= k and len(vocab):
+        elif total >= k:
             cand = (bits[: total - k + 1] & bit_of[k]) != 0
             cand &= sent_of[: total - k + 1] == sent_of[k - 1 :]
             kpos = np.flatnonzero(cand)
@@ -444,11 +428,8 @@ def _extract_fast(conv, turn, texts, idx: AliasIndex):
         norm = pc.replace_substring_regex(low, pattern=_TRAIL_PUNCT_PAT, replacement="")
 
     # --- greedy dictionary match (aliases on norm, predicates on low) ---
-    alias_masks = _ngram_masks(norm, sent_of, _pa_vocab(idx), pc)
-    if alias_masks:
-        m_pos, m_span = _greedy_resolve(alias_masks, sent_of)
-    else:
-        m_pos = m_span = np.array([], dtype=np.int64)
+    alias_masks = _ngram_masks(norm, sent_of, idx.vocab, pc)
+    m_pos, m_span = _greedy_resolve(alias_masks, sent_of)
     pred_masks = _ngram_masks(low, sent_of, _pred_vocab(), pc)
     p_pos, p_span = _greedy_resolve(pred_masks, sent_of)
 

@@ -1504,7 +1504,7 @@ def kg_pipeline_full(spark, sf_dir):
     docs = _t(spark, sf_dir, "documents")
     transcripts = synth_transcripts(docs)
     aliases = synth_aliases(spark)
-    kg = build_kg(spark, transcripts, aliases)
+    kg = build_kg(spark, transcripts, aliases, persist=False)
     return kg.kg_edges.select(
         "conv_id", "turn_idx", "subj_cui", "pred", "obj_cui", "confidence"
     )
@@ -1517,7 +1517,7 @@ def kg_nodes_full(spark, sf_dir):
     from .sources.synth import synth_aliases, synth_transcripts
 
     docs = _t(spark, sf_dir, "documents")
-    kg = build_kg(spark, synth_transcripts(docs), synth_aliases(spark))
+    kg = build_kg(spark, synth_transcripts(docs), synth_aliases(spark), persist=False)
     return kg.kg_nodes.select(
         "cui", F.array_join("surfaces", ",").alias("surfaces_csv"), "mention_count"
     )
@@ -1806,7 +1806,7 @@ def kg_edge_stats_full(spark, sf_dir):
     from .sources.synth import synth_aliases, synth_transcripts
 
     docs = _t(spark, sf_dir, "documents")
-    kg = build_kg(spark, synth_transcripts(docs), synth_aliases(spark))
+    kg = build_kg(spark, synth_transcripts(docs), synth_aliases(spark), persist=False)
     return kg.kg_edge_stats.select(
         "subj_cui", "pred", "obj_cui", "n_evidence", "avg_confidence", "n_convs"
     )
@@ -1823,7 +1823,7 @@ def kg_question_retrieval(spark, sf_dir):
 
     docs = _t(spark, sf_dir, "documents")
     aliases = synth_aliases(spark)
-    kg = build_kg(spark, synth_transcripts(docs), aliases)
+    kg = build_kg(spark, synth_transcripts(docs), aliases, persist=False)
     # deterministic question set over the planted vocabulary (LocalRelation
     # via values_df: zero jobs to build/broadcast the 16-row table)
     from .sources.synth import values_df
@@ -1942,7 +1942,7 @@ def kg_neighborhood(spark, sf_dir):
     from .sources.synth import synth_aliases, synth_transcripts
 
     docs = _t(spark, sf_dir, "documents")
-    kg = build_kg(spark, synth_transcripts(docs), synth_aliases(spark))
+    kg = build_kg(spark, synth_transcripts(docs), synth_aliases(spark), persist=False)
     from .sources.synth import values_df
 
     seeds = values_df(
@@ -2195,7 +2195,7 @@ def kg_two_hop_paths(spark, sf_dir):
     from .sources.synth import synth_aliases, synth_transcripts
 
     docs = _t(spark, sf_dir, "documents")
-    kg = build_kg(spark, synth_transcripts(docs), synth_aliases(spark))
+    kg = build_kg(spark, synth_transcripts(docs), synth_aliases(spark), persist=False)
     e1 = kg.kg_edge_stats.select(
         F.col("subj_cui").alias("a"), F.col("pred").alias("p1"),
         F.col("obj_cui").alias("b"), F.col("n_evidence").alias("n1"),
@@ -2283,7 +2283,7 @@ def kg_mention_detect_spill(spark, sf_dir):
     identical semantics to kg_mention_detect_synth, whose LocalRelation
     dictionary the driver already holds, but the dictionary is repartitioned,
     so broadcast_alias_keys collects it with a Spark job before it writes
-    and adds the Arrow file each Python worker builds its AliasIndex from."""
+    and adds the Arrow file each Python worker reads its AliasIndex from."""
     from .operators.extraction import detect_mentions_df
     from .operators.turn_assembly import assemble_turns
     from .plans.pipeline import broadcast_alias_keys

@@ -247,8 +247,8 @@ def extract_collapsed_df(
     `cui_type` (pass the dictionary's cui type), null where the surface
     does not link. Scoring is proportional to the distinct pairs in
     each task, not to the global vocabulary: a pair seen by every task is
-    scored once per task. Every worker builds the index's per-key
-    candidates, so `alias_keys_bc` must carry them (broadcast_alias_keys does).
+    scored once per task. Every worker looks candidates up in the index's
+    sorted rows, so `alias_keys_bc` must carry them (broadcast_alias_keys does).
 
     Each 't' row also gets `conv_first`: true on the first row of its
     (conv_id, subj_cui, pred, obj_cui) in the task, false on later ones,

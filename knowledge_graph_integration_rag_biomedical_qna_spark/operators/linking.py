@@ -66,15 +66,15 @@ def pair_linker(alias_index):
     """`link(alias_key, surface) -> (cui, score) | None`: the accepted top-1
     link of one pair, looked up in the dictionary `alias_index` ships and
     memoized, so a task scores each distinct pair once however many
-    mentions repeat it. Call it inside a task: it builds the index's
-    per-key candidates there (raises on a keys-only index)."""
-    by_key = alias_index.value.candidates_by_key()
+    mentions repeat it. Call it inside a task: each lookup reads the
+    index's sorted rows in place (raises on a keys-only index)."""
+    index = alias_index.value
     memo: dict = {}
 
     def link(key, surface):
         pair = (key, surface)
         if pair not in memo:
-            ranked = _ranked(surface, by_key.get(key, ()))
+            ranked = _ranked(surface, index.candidates_of(key))
             score, _, cui = ranked[0] if ranked else (None, None, None)
             memo[pair] = (cui, score) if _accepted(score, cui) else None
         return memo[pair]
@@ -89,13 +89,13 @@ def _candidates_fn(alias_index, cui_type, prior_type):
         prior, score and rank appended; a null prior scores null."""
         import pyarrow as pa
 
-        by_key = alias_index.value.candidates_by_key()
+        index = alias_index.value
         for batch in batches:
             out = []
             for i, (key, surface) in enumerate(zip(
                 batch.column("alias_key").to_pylist(), batch.column("surface").to_pylist()
             )):
-                scored = _ranked(surface, by_key.get(key, ()))
+                scored = _ranked(surface, index.candidates_of(key))
                 out += [(i, c, p, s, rank)
                         for rank, (s, p, c) in enumerate(scored[:TOP_K_CANDIDATES], 1)]
             take, cuis, priors, scores, ranks = zip(*out) if out else ((),) * 5

@@ -88,7 +88,7 @@ class ShippedAliases:
     """A shipped dictionary, named by its content digest. The digest also
     names the Arrow file `SparkContext.addFile` distributed. Pickles as the
     digest alone, so task closures stay tiny. `.value` is the AliasIndex:
-    each Python worker memory-maps the file and builds it once per digest."""
+    each Python worker memory-maps the file once per digest, in place."""
 
     __slots__ = ("digest",)
 
@@ -112,15 +112,20 @@ def _worker_index(digest: str):
 
     from ..core.patterns import AliasIndex
 
-    with pa.memory_map(SparkFiles.get(ShippedAliases(digest).file_name)) as f:
-        cols = [c.to_pylist() for c in pa.ipc.open_file(f).read_all().columns]
-    return AliasIndex(frozenset(cols[0]), candidates=cols)
+    # the table's buffers keep the mapping alive after the file object goes
+    path = SparkFiles.get(ShippedAliases(digest).file_name)
+    table = pa.ipc.open_file(pa.memory_map(path)).read_all()
+    return AliasIndex(table.column("alias_key"), candidates=table)
 
 
 def _ship(spark: SparkSession, proj: DataFrame) -> ShippedAliases:
     """Collect the `_SHIPPED` rows, name them by content, write them once as
     an Arrow file sorted by all four columns, and add that file to the
-    SparkContext once."""
+    SparkContext once. `collect()`, not `toArrow()`: on a LocalRelation
+    dictionary it runs no Spark job where `toArrow()` (or `toPandas()`)
+    runs one (`synth_aliases` at local[2]), which would take construct_x5
+    from 6 to 7 jobs. The cost is Python rows on the driver: at 1M aliases
+    on a shared 4-vCPU host `collect()` took 6.6-7.8 s, `toArrow()` 0.5-0.7 s."""
     import hashlib
     import warnings
 
@@ -133,7 +138,7 @@ def _ship(spark: SparkSession, proj: DataFrame) -> ShippedAliases:
     ).hexdigest())
     cols = tuple(zip(*rows)) or ((),) * len(_SHIPPED)
     # the matcher never probes n-grams longer than MAX_MENTION_TOKENS: say so
-    # here, where the user sees it, not in every worker that builds the index
+    # here, where the user sees it, not in every worker that reads the index
     unreachable = {k for k in cols[0] if k.count(" ") >= MAX_MENTION_TOKENS}
     if unreachable:
         warnings.warn(
@@ -183,17 +188,17 @@ def _files_identity(proj: DataFrame):
 
 # the last file-backed dictionary shipped in this process, as (identity,
 # shipped projection, handle): one entry, as each Python worker keeps one
-# built index (_worker_index, core.vectorized._pa_vocab)
+# index (_worker_index)
 _LAST_SHIP: list = [None]
 
 
 def broadcast_alias_keys(spark: SparkSession, aliases: DataFrame) -> ShippedAliases:
     """Ship the alias dictionary to executors once: its (alias_key, alias,
-    cui, prior) rows, from which each Python worker builds the AliasIndex,
-    the first-token index the matcher probes (two sets per token instead of
-    joining n-grams) and the rows that the extraction and question passes
-    and `candidate_table` look candidates up in, so linking reads no
-    dictionary table of its own. Rows with a null alias_key link nothing
+    cui, prior) rows, sorted, which each Python worker reads in place as
+    its AliasIndex: the kernel's vocabulary comes from the alias_key column
+    and the extraction and question passes and `candidate_table` find a
+    key's candidates as a row range of the sorted table, so linking reads
+    no dictionary table of its own. Rows with a null alias_key link nothing
     and are dropped.
 
     The driver collects the rows (no Spark job for a dictionary it already
@@ -202,11 +207,11 @@ def broadcast_alias_keys(spark: SparkSession, aliases: DataFrame) -> ShippedAlia
     process's own temp directory (removed at interpreter exit) and adds
     that file to the SparkContext (`addFile`, no job). Executors fetch it
     from the driver, so a cluster needs no shared storage; each Python
-    worker memory-maps it and builds the index once per digest
-    (`ShippedAliases.value`). A key longer than MAX_MENTION_TOKENS tokens
-    warns here, once per ship. Cost: every row passes through the driver,
-    as in the reference, which held its dictionaries in driver RAM. No
-    dictionary of UMLS size (~16M aliases) has been run.
+    worker memory-maps it once per digest (`ShippedAliases.value`). A key
+    longer than MAX_MENTION_TOKENS tokens warns here, once per ship. Cost:
+    every row passes through the driver, as in the reference, which held
+    its dictionaries in driver RAM. No dictionary of UMLS size (~16M
+    aliases) has been run.
 
     Memo: the last file-backed dictionary shipped is kept with its handle,
     for the long-lived caller that re-reads its dictionary per request so

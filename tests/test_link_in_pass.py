@@ -81,6 +81,21 @@ SENTENCES = [
 ]
 
 
+def _shipped(rows):
+    """A stand-in for a shipped handle: `.value` is the index of `rows`
+    (alias_key, alias, cui, prior), sorted as the ship sorts them."""
+    import types
+
+    import pyarrow as pa
+
+    names = ["alias_key", "alias", "cui", "prior"]
+    table = pa.Table.from_pylist(
+        [dict(zip(names, r)) for r in rows],
+        pa.schema([(n, pa.float64() if n == "prior" else pa.string()) for n in names]),
+    ).sort_by([(n, "ascending") for n in names])
+    return types.SimpleNamespace(value=AliasIndex(table.column("alias_key"), candidates=table))
+
+
 def _bag(df) -> Counter:
     """Rows as a multiset; NaN compares equal to NaN, arrays as tuples."""
     def norm(v):
@@ -212,8 +227,6 @@ def test_in_pass_linking_scores_each_pair_once(monkeypatch, body):
     one sentence 50 times: link_score runs exactly once per distinct
     (alias_key, surface) pair and candidate, however many mentions and
     triples repeat the pair across batches."""
-    import types
-
     import pyarrow as pa
 
     from knowledge_graph_integration_rag_biomedical_qna_spark.operators import linking
@@ -228,8 +241,7 @@ def test_in_pass_linking_scores_each_pair_once(monkeypatch, body):
             ("aspirin", "acetylsalicylic acid", "C3", 0.2),
             ("headache", "headache", "C4", 0.8), ("headache", "cephalalgia", "C5", 0.3),
             ("nausea", "nausea", "C6", 0.7)]
-    index = types.SimpleNamespace(
-        value=AliasIndex([r[0] for r in rows], candidates=tuple(zip(*rows))))
+    index = _shipped(rows)
     calls = Counter()
     score = linking.link_score
 
@@ -259,10 +271,7 @@ def test_in_pass_linking_scores_each_pair_once(monkeypatch, body):
 
 def _linker(rows):
     """pair_linker over an index shipping `rows` (alias_key, alias, cui, prior)."""
-    import types
-
-    return pair_linker(types.SimpleNamespace(
-        value=AliasIndex({r[0] for r in rows}, candidates=tuple(zip(*rows)))))
+    return pair_linker(_shipped(rows))
 
 
 # few cuis, aliases and priors, so lists repeat rows and tie on score; the
@@ -343,16 +352,13 @@ def test_conv_first_raises_when_conv_id_decreases_in_a_task():
     """The pass body, run in-process on one task's batches, raises when
     conv_id goes down instead of counting the later conversation's edges
     again."""
-    import types
-
     import pyarrow as pa
 
     from knowledge_graph_integration_rag_biomedical_qna_spark.operators.extraction import (
         _collapsed_fn,
     )
 
-    index = types.SimpleNamespace(
-        value=AliasIndex([r[0] for r in FLAG_DICT], candidates=tuple(zip(*FLAG_DICT))))
+    index = _shipped(FLAG_DICT)
     batches = [pa.RecordBatch.from_arrays(
         [pa.array([conv]), pa.array([0], pa.int32()), pa.array(["Aspirin treats headache."])],
         names=["conv_id", "turn_idx", "text"]) for conv in ("c2", "c1")]

@@ -465,51 +465,100 @@ def test_book_length_turn_is_processed_alone(monkeypatch):
     assert (got["conv_id"] == "c1").sum() > len(book) // len(para)
 
 
-word_st = st.sampled_from(
-    ["aspirin", "cox2", "beta", "blocker", "tnf", "alpha", "il-6", "treats",
-     "inhibits", "the", "a", "risk", "of", "xyz"]
+# dictionary keys as a shipped dictionary may hold them: duplicates, doubled,
+# leading and trailing spaces, the empty key, non-ASCII words and keys longer
+# than MAX_MENTION_TOKENS; tokens may be empty or non-ASCII too
+_KEY_WORDS = ["aspirin", "cox2", "beta", "blocker", "tnf", "alpha", "il-6", "treats",
+              "the", "a", "\u00b5g", "\u03b1-blocker", "caf\u00e9", ""]
+dict_key_st = st.one_of(
+    st.lists(st.sampled_from(_KEY_WORDS), min_size=1, max_size=6).map(" ".join),
+    st.sampled_from(["", " aspirin", "beta  blocker", "cox2 ", "tnf alpha beta blocker",
+                     "\u00b5g \u03b1-blocker"]),
 )
+token_st = st.sampled_from(_KEY_WORDS + ["inhibits", "risk", "of", "xyz"])
 
 
 @given(
-    st.lists(word_st, min_size=0, max_size=60),
+    st.lists(token_st, min_size=0, max_size=60),
     st.lists(st.integers(min_value=0, max_value=6), min_size=0, max_size=60),
+    st.lists(dict_key_st, min_size=0, max_size=12),
 )
-@settings(max_examples=150, deadline=None)
-def test_ngram_masks_equal_per_span_is_in(words, breaks):
-    """The single-pass union-vocabulary bitmask prefilter in _ngram_masks must
-    produce exactly the per-span masks of the naive one-is_in-per-span
-    specification (k=1 exact membership; k>=2 sentence-bounded k-gram
-    membership) for any token stream and sentence layout."""
+@settings(max_examples=200, deadline=None)
+def test_ngram_masks_equal_per_span_is_in(words, breaks, keys):
+    """The single-pass union-vocabulary bitmask prefilter in _ngram_masks,
+    over the vocabulary an AliasIndex builds from a drawn dictionary with
+    Arrow compute, must produce exactly the per-span masks of the naive
+    one-set-per-span specification (k=1 exact membership; k>=2
+    sentence-bounded k-gram membership; a key's span is
+    `len(key.split(" "))`, and keys past MAX_MENTION_TOKENS are left out)
+    for any token stream and sentence layout."""
     import numpy as np
     import pyarrow as pa
     import pyarrow.compute as pc
 
+    from knowledge_graph_integration_rag_biomedical_qna_spark.core.config import (
+        MAX_MENTION_TOKENS,
+    )
     from knowledge_graph_integration_rag_biomedical_qna_spark.core.patterns import AliasIndex
     from knowledge_graph_integration_rag_biomedical_qna_spark.core.vectorized import (
         _ngram_masks,
-        _pa_vocab,
     )
 
-    idx = AliasIndex(KEYS)
+    by_span: dict = {}
+    for key in keys:
+        if len(key.split(" ")) <= MAX_MENTION_TOKENS:
+            by_span.setdefault(len(key.split(" ")), set()).add(key)
     values = pa.array(words, type=pa.string())
     # breaks -> monotone sentence ids of the same length as words
     sent_of = np.cumsum([(breaks[i % len(breaks)] == 0) if breaks else 0
                          for i in range(len(words))]).astype(np.int64) \
         if words else np.array([], dtype=np.int64)
-    got = _ngram_masks(values, sent_of, _pa_vocab(idx), pc)
-    kbl = idx.keys_by_len()
+    got = _ngram_masks(values, sent_of, AliasIndex(keys).vocab, pc)
+    assert [k for k, *_ in got] == sorted(by_span, reverse=True)
     total = len(words)
-    for k, mask, keys, kpos in got:
-        vocab = kbl.get(k, frozenset())
+    for k, mask, keys_k, kpos in got:
         want = np.zeros(total, dtype=bool)
         for p in range(total - k + 1):
             if k > 1 and sent_of[p] != sent_of[p + k - 1]:
                 continue
-            if " ".join(words[p : p + k]) in vocab:
+            if " ".join(words[p : p + k]) in by_span[k]:
                 want[p] = True
         assert np.array_equal(np.asarray(mask, dtype=bool), want), (k, words)
         # the keys/kpos gather contract: keys[j] is the k-gram at kpos[j]
         if k > 1 and kpos is not None and len(kpos):
             for j, p in enumerate(kpos.tolist()):
-                assert keys[j].as_py() == " ".join(words[p : p + k])
+                assert keys_k[j].as_py() == " ".join(words[p : p + k])
+
+
+@given(
+    st.lists(st.tuples(dict_key_st, st.sampled_from(["Aspirin", "asa", "\u00b5g", ""]),
+                       st.one_of(st.none(), st.sampled_from(["C1", "C2", "C3"])),
+                       st.one_of(st.none(), st.floats(0, 1))), max_size=30),
+    st.integers(min_value=0, max_value=30),
+)
+@settings(max_examples=200, deadline=None)
+def test_candidates_of_a_key_are_its_rows_in_file_order(rows, cut):
+    """Each key's candidates, read off the sorted table in place, are the
+    rows a Python grouping of the same table gives that key, in file order,
+    whether the table is one chunk or two; an unknown or null key has
+    none."""
+    import pyarrow as pa
+
+    from knowledge_graph_integration_rag_biomedical_qna_spark.core.patterns import AliasIndex
+
+    names = ["alias_key", "alias", "cui", "prior"]
+    table = pa.Table.from_pylist(
+        [dict(zip(names, r)) for r in rows],
+        pa.schema([(n, pa.float64() if n == "prior" else pa.string()) for n in names]),
+    ).sort_by([(n, "ascending") for n in names])
+    cut = min(cut, len(table))
+    chunked = pa.Table.from_batches(
+        [*table.slice(0, cut).to_batches(), *table.slice(cut).to_batches()], table.schema)
+    want: dict = {}
+    for r in table.to_pylist():
+        want.setdefault(r["alias_key"], []).append((r["cui"], r["alias"], r["prior"]))
+    for t in (table, chunked):
+        index = AliasIndex(t.column("alias_key"), candidates=t)
+        for key in {*want, "no such key", "aspirin z"}:
+            assert index.candidates_of(key) == want.get(key, []), key
+        assert index.candidates_of(None) == []

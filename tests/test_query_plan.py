@@ -110,7 +110,8 @@ def _build_and_write(spark, inputs, out: str) -> None:
 
 
 def _index_keys(index) -> set:
-    return set(index.singles) | {k for ks in index.multi_first.values() for _, k in ks}
+    singles, multi_first = index.first_index()
+    return set(singles) | {k for ks in multi_first.values() for _, k in ks}
 
 
 def _dictionary_copy(fixture_dir, tmp_path) -> str:
@@ -154,8 +155,9 @@ def test_a_changed_prior_is_another_dictionary(spark, fixture_dir, tmp_path):
 
     path = _dictionary_copy(fixture_dir, tmp_path)
     bc, _ = _ship(spark, path)
+    key = bc.value.candidates["alias_key"][0].as_py()
     changed = spark.read.parquet(path).withColumn(
-        "prior", F.when(F.col("alias_key") == F.lit(bc.value.candidates[0][0]),
+        "prior", F.when(F.col("alias_key") == F.lit(key),
                         F.col("prior") + 0.01).otherwise(F.col("prior")))
     with job_group(spark, "changed") as jobs:
         other = broadcast_alias_keys(spark, changed)
@@ -264,7 +266,7 @@ def test_duplicate_keys_ship_every_row_as_a_candidate(spark, tmp_path):
     bc, jobs = _ship(spark, path)
     assert len(jobs) == 1, jobs
     assert _index_keys(bc.value) == set(keys)
-    assert {k: sorted(v) for k, v in bc.value.candidates_by_key().items()} == {
+    assert {k: sorted(bc.value.candidates_of(k)) for k in keys} == {
         k: sorted((c, a, p) for kk, a, c, p in rows if kk == k) for k in keys}
     with pa.memory_map(SparkFiles.get(bc.file_name)) as f:
         shipped = pa.ipc.open_file(f).read_all()
@@ -375,6 +377,31 @@ def test_unpersist_drops_the_stored_pass(spark, fixture_inputs, tmp_path):
     assert stored() <= before
     lazy.unpersist()
     assert stored() <= before
+
+
+@pytest.mark.parametrize("query", [
+    "kg_pipeline_full", "kg_nodes_full", "kg_edge_stats_full",
+    "kg_question_retrieval", "kg_neighborhood", "kg_two_hop_paths",
+])
+def test_registry_kg_queries_store_nothing(spark, tmp_path, query):
+    """A registry query that builds the KG returns a lazy plan and no
+    caller can release a stored pass, so it builds with persist=False:
+    running it over a 60-document table leaves no new stored RDD in the
+    session."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from knowledge_graph_integration_rag_biomedical_qna_spark.entry_queries import REGISTRY
+
+    words = ["spark", "customer", "table", "window", "vector", "column", "batch", "stream"]
+    pq.write_table(pa.table({
+        "doc_id": pa.array(range(60), pa.int64()),
+        "text": [" ".join(words[(i * j + j) % 8] for j in range(40)) for i in range(60)],
+    }), str(tmp_path / "documents.parquet"))
+    sc = spark.sparkContext._jsc.sc()
+    before = {i.id() for i in sc.getRDDStorageInfo()}
+    assert REGISTRY[query][0].__wrapped__(spark, str(tmp_path)).collect()
+    assert {i.id() for i in sc.getRDDStorageInfo()} <= before
 
 
 def _plan_above_stored_pass(spark, fixture_inputs, table: str, path: str) -> str:

@@ -163,16 +163,14 @@ def test_vocab_lut_wide_span_family():
         _vocab_arrays,
     )
 
-    keys_by_len = {
-        k: frozenset({" ".join(f"w{k}" for _ in range(k))}) for k in range(1, 13)
-    }
-    arrays = _vocab_arrays(keys_by_len)
+    import pyarrow as pa
+
+    keys = pa.array([" ".join(f"w{k}" for _ in range(k)) for k in range(1, 13)])
+    arrays = _vocab_arrays(keys)
     union, lut, bit_of = arrays["_union"]
     assert lut.dtype == np.uint64
     assert max(bit_of.values()) == 1 << 11
     # tokens of the 12-gram key: mask for span 12 must hit at position 0
-    import pyarrow as pa
-
     toks = ["w12"] * 12
     values = pa.array(toks, type=pa.string())
     sent_of = np.zeros(len(toks), dtype=np.int64)
@@ -187,6 +185,9 @@ def test_vocab_lut_guard_raises_past_64_spans():
         _vocab_arrays,
     )
 
-    keys_by_len = {k: frozenset({f"k{k}"}) for k in range(1, 66)}
+    import pyarrow as pa
+
+    keys = pa.array([" ".join(["k"] * k) for k in range(1, 66)])
     with pytest.raises(ValueError, match="span lengths"):
-        _vocab_arrays(keys_by_len)
+        _vocab_arrays(keys, max_span=65)
+    assert len(_vocab_arrays(keys)) == 65  # 64 spans and the union

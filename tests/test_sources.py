@@ -82,7 +82,8 @@ def test_shipped_dictionary_carries_every_candidate(spark, fixture_dir):
     want: dict = {}
     for k, a, c, p in aliases.collect():
         want.setdefault(k, []).append((c, a, p))
-    assert {k: sorted(v) for k, v in bc.value.candidates_by_key().items()} == {
+    assert set(bc.value.keys.to_pylist()) == set(want)
+    assert {k: sorted(bc.value.candidates_of(k)) for k in want} == {
         k: sorted(v) for k, v in want.items()}
     surfaces = aliases.select("alias_key", F.col("alias").alias("surface"))
 
@@ -158,8 +159,7 @@ def test_broadcast_alias_keys_local_fast_path(spark):
         [tuple(r) for r in aliases.collect()], aliases.schema
     )
     bc2 = broadcast_alias_keys(spark, rdd_backed)
-    assert bc.value.singles == bc2.value.singles
-    assert bc.value.multi_first == bc2.value.multi_first
+    assert bc.value.candidates.equals(bc2.value.candidates)
 
 
 def test_same_content_ships_one_file_added_once(spark, monkeypatch):
@@ -192,8 +192,8 @@ def test_same_content_ships_one_file_added_once(spark, monkeypatch):
     assert [os.path.basename(p) for p in added] == [name]
     assert len([f for f in spark.sparkContext.listFiles if f.endswith("/" + name)]) == 1
     a, b = handles[0].value, handles[2].value
-    assert a.singles == b.singles and a.multi_first == b.multi_first
-    assert a.candidates_by_key() == b.candidates_by_key()
+    assert a.keys.equals(b.keys)
+    assert a.candidates.equals(b.candidates)
 
 
 def test_the_exit_hook_removes_every_shipped_file(spark):
@@ -245,7 +245,9 @@ def test_a_key_longer_than_the_matcher_reaches_warns_on_ship(spark):
     rows = [("aspirin", "Aspirin", "C1", 0.9), (long_key, long_key.title(), "C2", 0.5)]
     with pytest.warns(UserWarning, match="1 alias key.* longer than MAX_MENTION_TOKENS"):
         index = broadcast_alias_keys(spark, values_df(spark, rows, ALIASES_DDL)).value
-    assert index.singles == {"aspirin"} and long_key not in str(index.multi_first)
+    assert index.first_index() == (frozenset({"aspirin"}), {})
+    assert [(k, v[0].to_pylist()) for k, v in index.vocab.items() if k != "_union"] == [
+        (1, ["aspirin"])]
 
 
 def test_readers_take_a_path_or_a_table_name(spark, fixture_dir, tmp_path):

@@ -15,13 +15,23 @@ over a fresh read of that dictionary:
   process under the JVM afterwards (each worker that ran a link task built
   the index);
 - one SQL task per core that times how long its Python worker takes to
-  have the index ready (the broadcast value, `candidates_by_key` and the
-  kernel's vocabulary arrays), with the worker's peak RSS;
+  have the index ready (the memory-mapped table, the kernel's vocabulary
+  and the linker's sorted-key view), with the worker's peak RSS;
 - one `link_questions` pass over 16 questions: Spark jobs and wall time.
 
-Prints one JSON object, with the driver's peak RSS (the Python process
-and its JVM) after both runs. On the repeat run the ship is expected to hit
-the session's memo (0 jobs) and the workers to keep the index they built.
+Then, in the driver process, after reading its peak RSS (the Python
+process and its JVM):
+
+- `link`: microseconds per linked pair, `pair_linker` over up to 10,000
+  distinct (alias_key, alias) pairs of the shipped dictionary (lookup,
+  scoring and acceptance);
+- `kernel`: the extraction kernel over the turns of the n_conv=1000
+  fixture, with the fixture's dictionary and with the synthetic keys added:
+  keys, seconds to build the vocabulary, best-of-3 kernel seconds and
+  output rows.
+
+Prints one JSON object. On the repeat run the ship is expected to hit the
+session's memo (0 jobs) and the workers to keep the index they built.
 """
 
 from __future__ import annotations
@@ -80,21 +90,71 @@ def index_ready(handle):
 
         import pyarrow as pa
 
-        from knowledge_graph_integration_rag_biomedical_qna_spark.core.vectorized import (
-            _pa_vocab,
-        )
-
         for _ in batches:
             t0 = time.perf_counter()
             idx = handle.value
-            idx.candidates_by_key()
-            _pa_vocab(idx)
+            idx.vocab
+            idx.candidates_of("")
             rss = resource.getrusage(resource.RUSAGE_SELF).ru_maxrss / 1024
             yield pa.RecordBatch.from_pydict({
                 "pid": [os.getpid()], "ready_s": [round(time.perf_counter() - t0, 3)],
                 "rss_mb": [round(rss)]})
 
     return ready
+
+
+def link_us_per_pair(handle, n: int = 10_000) -> dict:
+    """`pair_linker` over up to `n` distinct (alias_key, alias) pairs spread
+    over the shipped dictionary, in this process."""
+    import pyarrow as pa
+
+    from knowledge_graph_integration_rag_biomedical_qna_spark.operators.linking import (
+        pair_linker,
+    )
+
+    table = handle.value.candidates
+    rows = table.take(pa.array(range(0, len(table), max(1, len(table) // n))))
+    pairs = sorted(set(zip(rows.column("alias_key").to_pylist(),
+                           rows.column("alias").to_pylist())))
+    link = pair_linker(handle)
+    t0 = time.perf_counter()
+    linked = sum(link(k, s) is not None for k, s in pairs)
+    return {"pairs": len(pairs), "linked": linked,
+            "us_per_pair": round((time.perf_counter() - t0) / len(pairs) * 1e6, 1)}
+
+
+def kernel_timing(work: str, handle) -> list[dict]:
+    """The extraction kernel in this process over the turns of the
+    n_conv=1000 fixture, with its own dictionary and with the shipped
+    synthetic keys added."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    from knowledge_graph_integration_rag_biomedical_qna_spark.core.patterns import AliasIndex
+    from knowledge_graph_integration_rag_biomedical_qna_spark.core.vectorized import (
+        extract_unified_batches,
+    )
+    from knowledge_graph_integration_rag_biomedical_qna_spark.fixtures.gen import generate_all
+
+    fx = generate_all(os.path.join(work, "fixture"), n_conv=1000)
+    tr = pa.Table.from_pandas(fx["transcripts"][["conv_id", "turn_idx", "text"]],
+                              preserve_index=False)
+    cols = [c.combine_chunks() for c in tr.columns]
+    fixture_keys = pa.array(fx["concept_aliases"]["alias_key"], pa.string())
+    out = []
+    for keys in (fixture_keys, pa.chunked_array([fixture_keys, *handle.value.keys.chunks])):
+        idx = AliasIndex(keys)
+        t0 = time.perf_counter()
+        idx.vocab
+        vocab_s = time.perf_counter() - t0
+        walls = []
+        for _ in range(3):
+            t0 = time.perf_counter()
+            rows = sum(map(len, extract_unified_batches(*cols, idx)))
+            walls.append(time.perf_counter() - t0)
+        out.append({"turns": len(tr), "keys": len(pc.unique(keys)), "vocab_s": round(vocab_s, 3),
+                    "kernel_s": round(min(walls), 3), "rows": rows})
+    return out
 
 
 def python_peak_rss_mb(root: int) -> list[int]:
@@ -189,6 +249,8 @@ def main() -> int:
         out["driver_peak_rss_mb"] = {
             "python": round(resource.getrusage(resource.RUSAGE_SELF).ru_maxrss / 1024),
             "jvm": round(jvm_kb / 1024)}
+        out["link"] = link_us_per_pair(handle)
+        out["kernel"] = kernel_timing(work, handle)
         print(json.dumps(out))
         spark.stop()
     finally:
