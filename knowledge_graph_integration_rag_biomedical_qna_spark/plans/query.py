@@ -6,14 +6,17 @@ top-k (rag2-retriever/main.py). Against the constructed graph that becomes:
   questions(question_id, text)
     -> mention detection over question text (same extractor as ingestion)
     -> entity linking (same resolution semantics)
-    -> join kg_edge_stats on either endpoint CUI (1-hop neighborhood)
+    -> probe kg_edge_stats' two endpoint CUIs (1-hop neighborhood)
     -> score = evidence-weighted link score, per-question top-k window
 
 `link_questions` returns a lazy plan and `retrieve_evidence` composes on top
-of it, so one ask is one adaptive query: one Arrow pass detects and links the
-questions' mentions, nothing is cached or checkpointed, and `kg_edge_stats` is
-scanned once. The link pass is ONE Python task per ask, however the questions
-are partitioned: one worker builds the dictionary index and each distinct
+of it, so one ask is one adaptive query of three Spark jobs (the link pass
+with its broadcast, the edge scan's map stage, the one-task result): one
+Arrow pass detects and links the questions' mentions, nothing is cached or
+checkpointed, and `kg_edge_stats` is read by one scan, which ships at most k
+rows per question per scan task; no range exchange samples it first. The
+link pass is ONE Python task per ask, however the questions are
+partitioned: one worker builds the dictionary index and each distinct
 (alias_key, surface) is scored once. That pays off for asks of a handful of
 questions in a LocalRelation; past that, or over a Python RDD, it costs wall
 time (measured in `link_questions`). A single question is the degenerate
@@ -141,8 +144,12 @@ def neighborhood(kg_edge_stats: DataFrame, seeds: DataFrame, hops: int = 1, k: i
     h1 = _incident_edges(e, F.broadcast(s)).withColumn("hop", F.lit(1))
     out = h1
     if hops >= 2:
+        # `n_evidence > 0` always holds (a count); it keeps n_evidence in the
+        # frontier's read, so both hops read the same kg_edge_stats columns
+        # and a lazy build's edge aggregate runs once, its exchange reused
         frontier = (
-            h1.select("seed_cui", F.explode(F.array("subj_cui", "obj_cui")).alias("cui"))
+            h1.filter("n_evidence > 0")
+            .select("seed_cui", F.explode(F.array("subj_cui", "obj_cui")).alias("cui"))
             .filter(F.col("cui") != F.col("seed_cui"))
             .distinct()
         )
@@ -169,6 +176,8 @@ def retrieve_evidence(
 ) -> DataFrame:
     """1-hop evidence edges per question, ranked by evidence-weighted score.
 
+    An edge's link_score for a question is the max over the question's links
+    to either endpoint (a CUI linked through two surfaces counts its best).
     rank_score_micro = round(link_score * avg_confidence * ln(1 + n_evidence)
     * 1e6) as BIGINT — integer micro-units, not a raw double: the product of
     two quantized doubles times a libm log1p differs between JVM and numpy in
@@ -181,33 +190,65 @@ def retrieve_evidence(
     strictly smaller than the float column's combined hazards. Ties pinned
     on (subj_cui, pred, obj_cui). Top-k via per-question window (T1).
 
-    Plan: one `kg_edge_stats` scan joins the broadcast question links, then
-    ONE range exchange on question_id. The max-aggregate, the top-k window
-    and a caller's orderBy("question_id", "rank") all accept that
-    partitioning, so none adds an exchange. Trade-off: all of a hub
-    question's hits land in one partition, where the aggregate and the
-    window spill instead of spreading.
+    Plan: the one-task link pass folds into one broadcast row per cui, a
+    map struct(question_id) -> max(link_score) (the struct lets a null id be
+    a key); both aggregates keep the link pass's single partition, so
+    neither adds an exchange. Each `kg_edge_stats` row
+    probes that broadcast for subj_cui and for obj_cui (the second probe
+    reuses the first's broadcast), rows neither endpoint hit drop, and the
+    explode of the two maps merged by `greatest` yields exactly one row per
+    (question, edge) with its best score, so no max-aggregate follows.
+    Because those rows are already unique, Spark puts a partial
+    `WindowGroupLimit` under the hash exchange on question_id: each scan
+    task ships at most k rows per question. The window runs after it, and
+    the plan ends in `coalesce(1)`, whose single partition already meets a
+    caller's orderBy("question_id", "rank"), so that adds only a local sort:
+    `kg_edge_stats` is scanned once, with no range exchange and no sampling
+    job.
+
+    The query is one SQL string (the two inputs bound as temporary views
+    for the call), so building it costs 9 py4j calls (95 as a DataFrame
+    chain). It assumes what the build writes, one `kg_edge_stats` row per
+    edge.
+
+    Trade-offs: the partial limit needs k <=
+    `spark.sql.optimizer.windowGroupLimitThreshold` (1000 by default); above
+    it, every hit crosses the shuffle and reaches the one-task tail. The tail
+    is one task: it ranks at most (scan tasks x questions x k) rows. Each scan
+    task sorts all of its hits for the partial limit (on a hub-heavy graph,
+    most of the scan). Warm 16-question ask, local[4], shared 4-vCPU host,
+    synthetic 3.9M-edge graph (`tools/ask_probe.py --edges 4000000`): 1.5 s
+    against 2.7-2.9 s for the range-exchange plan this replaced; with 73% of
+    the edges touching a linked CUI (`--shape hub`), 3.2-3.6 s against
+    4.7-6.6 s.
     """
-    return (
-        _incident_edges(kg_edge_stats, F.broadcast(question_links))
-        .repartitionByRange("question_id")
-        .groupBy(
-            "question_id", "subj_cui", "pred", "obj_cui", "n_evidence", "avg_confidence"
+    return question_links.sparkSession.sql(
+        """
+        WITH by_cui AS (
+          SELECT cui, map_from_entries(collect_list(struct(struct(question_id), s))) AS q
+          FROM (SELECT cui, question_id, max(link_score) AS s
+                FROM {links} GROUP BY cui, question_id)
+          GROUP BY cui
+        ), hits AS (
+          SELECT /*+ BROADCAST(s, o) */
+                 explode(coalesce(map_zip_with(s.q, o.q, (_, a, b) -> greatest(a, b)), s.q, o.q))
+                   AS (q, link_score),
+                 e.subj_cui, e.pred, e.obj_cui, e.n_evidence, e.avg_confidence
+          FROM {edges} e
+          LEFT JOIN by_cui s ON e.subj_cui = s.cui
+          LEFT JOIN by_cui o ON e.obj_cui = o.cui
+          WHERE s.q IS NOT NULL OR o.q IS NOT NULL
+        ), scored AS (
+          SELECT q.question_id, subj_cui, pred, obj_cui, n_evidence,
+                 CAST(round(link_score * avg_confidence * log1p(n_evidence) * 1e6) AS BIGINT)
+                   AS rank_score_micro
+          FROM hits
         )
-        .agg(F.expr("max(link_score) AS link_score"))
-        .selectExpr(
-            "*",
-            "CAST(round(link_score * avg_confidence * log1p(n_evidence) * 1e6) AS BIGINT)"
-            " AS rank_score_micro",
-        )
-        .selectExpr(
-            "*",
-            "CAST(row_number() OVER (PARTITION BY question_id ORDER BY rank_score_micro DESC,"
-            " subj_cui, pred, obj_cui) AS BIGINT) AS rank",
-        )
-        .filter(f"rank <= {int(k)}")
-        .selectExpr(
-            "question_id", "subj_cui", "pred", "obj_cui",
-            "n_evidence", "rank_score_micro", "rank",
-        )
+        SELECT /*+ COALESCE(1) */ * FROM (
+          SELECT *, CAST(row_number() OVER (PARTITION BY question_id
+                   ORDER BY rank_score_micro DESC, subj_cui, pred, obj_cui) AS BIGINT) AS rank
+          FROM scored)
+        WHERE rank <= {k}
+        """,
+        links=question_links, edges=kg_edge_stats, k=int(k),
     )

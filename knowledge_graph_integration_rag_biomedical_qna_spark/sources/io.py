@@ -1,11 +1,11 @@
 """Input readers and the bucketed-table writer.
 
-`read_transcripts` / `read_aliases` take a parquet path or a catalog table
-name. A path is anything with a `/` (so every URI: `s3://...`,
-`file:///...`) or a `.parquet` suffix. Anything else is a table name, read
-with `spark.read.table(name)`, which is how an Iceberg input table comes in
-when the session has a catalog attached. The run modes write their own
-outputs as parquet; `write_bucketed` lays out a conv_id-bucketed input
+`read_transcripts` / `read_aliases` / `read_edge_stats` take a parquet path
+or a catalog table name. A path is anything with a `/` (so every URI:
+`s3://...`, `file:///...`) or a `.parquet` suffix. Anything else is a table
+name, read with `spark.read.table(name)`, which is how an Iceberg input table
+comes in when the session has a catalog attached. The run modes write their
+own outputs as parquet; `write_bucketed` lays out a conv_id-bucketed input
 table.
 """
 
@@ -37,6 +37,20 @@ ALIASES_SCHEMA = T.StructType(
     ]
 )
 
+# What build_kg and ResumableKGRun.finalize() write as kg_edge_stats (a read
+# makes every parquet column nullable): a reader that declares it starts no
+# schema-inference job.
+KG_EDGE_STATS_SCHEMA = T.StructType(
+    [
+        T.StructField("subj_cui", T.StringType()),
+        T.StructField("pred", T.StringType()),
+        T.StructField("obj_cui", T.StringType()),
+        T.StructField("n_evidence", T.LongType()),
+        T.StructField("avg_confidence", T.DoubleType()),
+        T.StructField("n_convs", T.LongType()),
+    ]
+)
+
 
 def _read(spark: SparkSession, path: str, schema: T.StructType) -> DataFrame:
     if "/" in path or path.endswith(".parquet"):
@@ -52,6 +66,10 @@ def read_transcripts(spark: SparkSession, path: str) -> DataFrame:
 
 def read_aliases(spark: SparkSession, path: str) -> DataFrame:
     return _read(spark, path, ALIASES_SCHEMA)
+
+
+def read_edge_stats(spark: SparkSession, path: str) -> DataFrame:
+    return _read(spark, path, KG_EDGE_STATS_SCHEMA)
 
 
 def write_bucketed(

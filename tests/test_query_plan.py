@@ -12,7 +12,10 @@ assembly's exchange job (none when lazy) and collects nothing to the driver.
 An ask is one adaptive query: `link_questions` builds a lazy plan, and
 `retrieve_evidence` plus the caller's orderBy run it with one Arrow pass that
 detects and links the questions' mentions in a single task, one
-`kg_edge_stats` scan and no cache or checkpoint.
+`kg_edge_stats` scan that probes the links' one broadcast for both endpoints,
+one hash exchange on question_id with a partial top-k under it, and no range
+exchange (whose bound-sampling job would scan the graph a second time), cache
+or checkpoint.
 
 These tests read final adaptive plans and count Spark jobs, so a change that
 splits a plan again goes red here before it shows up as latency.
@@ -379,15 +382,9 @@ def test_unpersist_drops_the_stored_pass(spark, fixture_inputs, tmp_path):
     assert stored() <= before
 
 
-@pytest.mark.parametrize("query", [
-    "kg_pipeline_full", "kg_nodes_full", "kg_edge_stats_full",
-    "kg_question_retrieval", "kg_neighborhood", "kg_two_hop_paths",
-])
-def test_registry_kg_queries_store_nothing(spark, tmp_path, query):
-    """A registry query that builds the KG returns a lazy plan and no
-    caller can release a stored pass, so it builds with persist=False:
-    running it over a 60-document table leaves no new stored RDD in the
-    session."""
+def _registry_query(query: str, sf_dir):
+    """Registry query `query`, unwrapped, over a 60-document table written
+    to `sf_dir`."""
     import pyarrow as pa
     import pyarrow.parquet as pq
 
@@ -397,11 +394,35 @@ def test_registry_kg_queries_store_nothing(spark, tmp_path, query):
     pq.write_table(pa.table({
         "doc_id": pa.array(range(60), pa.int64()),
         "text": [" ".join(words[(i * j + j) % 8] for j in range(40)) for i in range(60)],
-    }), str(tmp_path / "documents.parquet"))
+    }), os.path.join(sf_dir, "documents.parquet"))
+    return lambda spark: REGISTRY[query][0].__wrapped__(spark, str(sf_dir))
+
+
+@pytest.mark.parametrize("query", [
+    "kg_pipeline_full", "kg_nodes_full", "kg_edge_stats_full",
+    "kg_question_retrieval", "kg_neighborhood", "kg_two_hop_paths",
+])
+def test_registry_kg_queries_store_nothing(spark, tmp_path, query):
+    """A registry query that builds the KG returns a lazy plan and no
+    caller can release a stored pass, so it builds with persist=False:
+    running it over a 60-document table leaves no new stored RDD in the
+    session."""
+    run = _registry_query(query, tmp_path)
     sc = spark.sparkContext._jsc.sc()
     before = {i.id() for i in sc.getRDDStorageInfo()}
-    assert REGISTRY[query][0].__wrapped__(spark, str(tmp_path)).collect()
+    assert run(spark).collect()
     assert {i.id() for i in sc.getRDDStorageInfo()} <= before
+
+
+def test_kg_neighborhood_runs_one_extraction_pass(spark, tmp_path):
+    """Both hops of `kg_neighborhood` read the same kg_edge_stats columns of
+    its lazy build, so the final plan runs the extraction pass once: one
+    `MapInArrow`, whose edge aggregate's exchange the other hop reuses (two
+    while the frontier's read was pruned to (subj_cui, obj_cui))."""
+    df = _registry_query("kg_neighborhood", tmp_path)(spark)
+    assert df.collect()
+    plan = final_plan(df)
+    assert count_nodes(plan, "MapInArrow") == 1, plan
 
 
 def _plan_above_stored_pass(spark, fixture_inputs, table: str, path: str) -> str:
@@ -510,26 +531,40 @@ def test_link_questions_is_lazy(spark, ask_env):
 def test_ask_is_one_plan(spark, ask_env):
     """The final plan of an ask detects and links the questions' mentions
     in one Arrow pass without reading the dictionary or shuffling (no
-    separate candidate pass), broadcasts only the question links, scans
-    kg_edge_stats once, and caches nothing."""
+    separate candidate pass), broadcasts only the question links (the
+    obj_cui probe reuses the subj_cui probe's broadcast), scans
+    kg_edge_stats once, shuffles once, by hash on question_id with the
+    partial top-k below that exchange, has no range exchange, and caches
+    nothing."""
     df = _ask(spark, ask_env, _questions(spark, ask_env, range(16)))
     assert df.collect()
     plan = final_plan(df)
     assert count_nodes(plan, "MapInArrow") == 1, plan
     assert "candidates(" not in plan, plan
     assert count_nodes(plan, "BroadcastExchange") == 1, plan
+    reused = [l for l in plan.splitlines()
+              if l.lstrip(" :+-*()0123456789").startswith("ReusedExchange")]
+    assert len(reused) == 1 and "BroadcastExchange" in reused[0], plan
     assert not [l for l in plan.splitlines()
                 if "FileScan" in l and "concept_aliases" in l], plan
-    assert count_nodes(plan, "ReusedExchange") == 0, plan
     assert "InMemoryRelation" not in plan and "InMemoryTableScan" not in plan, plan
     edge_scans = [l for l in plan.splitlines()
                   if "FileScan" in l and "kg_edge_stats" in l]
     assert len(edge_scans) == 1, plan
+    assert "rangepartitioning" not in plan, plan
+    lines = plan.splitlines()
+    shuffles = [i for i, l in enumerate(lines)
+                if l.lstrip(" :+-*()0123456789").startswith("Exchange ")]
+    assert len(shuffles) == 1, plan
+    assert "hashpartitioning(question_id" in lines[shuffles[0]], plan
+    assert "WindowGroupLimit" in lines[shuffles[0] + 1], plan
+    assert lines[shuffles[0] + 1].rstrip().endswith("Partial"), plan
 
 
 def test_ask_job_count(spark, ask_env):
-    """link + retrieve + orderBy + collect of 16 questions takes at most 4
-    Spark jobs at local[4], and the first of them, the link pass that fills
+    """link + retrieve + orderBy + collect of 16 questions takes at most 3
+    Spark jobs at local[4] (4 while a range exchange on question_id ran its
+    bound-sampling job), and the first of them, the link pass that fills
     the broadcast, runs exactly 1 task (it ran one per question partition
     before the link pass coalesced them), so one Python worker builds the
     dictionary index for the whole ask. The questions come in 4 partitions,
@@ -545,7 +580,7 @@ def test_ask_job_count(spark, ask_env):
         with job_group(spark, f"ask-{i}") as jobs:
             rows = _ask(spark, ask_env, qs).collect()
         assert rows
-        assert len(jobs) <= 4, jobs
+        assert len(jobs) <= 3, jobs
         link_stages = [st.getStageInfo(s) for s in st.getJobInfo(min(jobs)).stageIds]
         assert [s.numTasks for s in link_stages] == [1], link_stages
 
@@ -575,6 +610,51 @@ def test_question_id_keeps_input_type(spark, ask_env, ddl, ids):
     got = [r["question_id"] for r in _ask(spark, ask_env, qs).collect()]
     assert set(got) == set(ids)
     assert got == sorted(got)
+
+
+def test_kg_query_reads_edge_stats_with_the_written_schema(spark, fixture_dir, fixture_inputs,
+                                                          tmp_path):
+    """`KG_EDGE_STATS_SCHEMA` is the schema a batch build and a checkpointed
+    finalize() write, so `tools/kg_query.py` reads kg_edge_stats without a
+    schema-inference job: a warm `answer()` takes at most 3 Spark jobs
+    (link pass, edge scan, result) and equals an ask over an inferred read."""
+    import argparse
+    import sys
+
+    from knowledge_graph_integration_rag_biomedical_qna_spark.plans.checkpoint import (
+        ResumableKGRun,
+    )
+    from knowledge_graph_integration_rag_biomedical_qna_spark.sources.io import (
+        KG_EDGE_STATS_SCHEMA,
+    )
+
+    sys.path.insert(0, os.path.join(os.path.dirname(__file__), "..", "tools"))
+    import kg_query
+
+    kg = build_kg(spark, *fixture_inputs, persist=False)
+    kg.kg_edge_stats.write.parquet(str(tmp_path / "kg" / "kg_edge_stats"))
+    run = ResumableKGRun(spark, str(tmp_path / "ckpt"), buckets=4, group_size=4)
+    run.run(*fixture_inputs)
+    run.finalize()
+    for out in ("kg", "ckpt"):
+        assert spark.read.parquet(str(tmp_path / out / "kg_edge_stats")).schema == \
+            KG_EDGE_STATS_SCHEMA, out
+
+    aliases = fixture_inputs[1]
+    names = [r[0] for r in aliases.orderBy("alias_key").select("alias").limit(8).collect()]
+    questions = [f"what about {n}?" for n in names]
+    args = argparse.Namespace(kg=str(tmp_path / "kg"),
+                              aliases=f"{fixture_dir}/concept_aliases.parquet", k=5)
+    kg_query.answer(spark, args, questions)
+    with job_group(spark, "answer") as jobs:
+        rows = kg_query.answer(spark, args, questions)
+    assert rows and len(jobs) <= 3, jobs
+    qs = spark.createDataFrame(list(enumerate(questions)), "question_id int, text string")
+    inferred = retrieve_evidence(
+        link_questions(spark, qs, aliases, broadcast_alias_keys(spark, aliases)),
+        spark.read.parquet(str(tmp_path / "kg" / "kg_edge_stats")), k=5,
+    ).orderBy("question_id", "rank").collect()
+    assert rows == inferred
 
 
 def test_unlinked_and_empty_batches_return_no_rows(spark, ask_env):

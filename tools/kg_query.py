@@ -20,7 +20,9 @@ constructed graph that is:
         --hops 2 -k 25 C0000123 C0000456
 
 `--kg` is the output directory of tools/run_kg.py (contains kg_edge_stats/
-kg_nodes parquet). Results print as JSON lines on stdout, ranked best-first.
+kg_nodes parquet). kg_edge_stats is read with its declared schema, so no
+command starts a schema-inference job. Results print as JSON lines on stdout,
+ranked best-first.
 
 `serve` re-reads the dictionary and the KG for every batch, so a batch
 sees a rewrite of either made before it; an unchanged dictionary is not
@@ -48,10 +50,13 @@ def answer(spark, args, questions: list[str]) -> list:
         link_questions,
         retrieve_evidence,
     )
-    from knowledge_graph_integration_rag_biomedical_qna_spark.sources.io import read_aliases
+    from knowledge_graph_integration_rag_biomedical_qna_spark.sources.io import (
+        read_aliases,
+        read_edge_stats,
+    )
     from knowledge_graph_integration_rag_biomedical_qna_spark.sources.synth import values_df
 
-    edge_stats = spark.read.parquet(os.path.join(args.kg, "kg_edge_stats"))
+    edge_stats = read_edge_stats(spark, os.path.join(args.kg, "kg_edge_stats"))
     aliases = read_aliases(spark, args.aliases)
     qs = values_df(spark, list(enumerate(questions)), "question_id int, text string")
     links = link_questions(spark, qs, aliases, broadcast_alias_keys(spark, aliases))
@@ -97,8 +102,11 @@ def main(argv: list[str] | None = None) -> int:
 
     if args.cmd == "neighbors":
         from knowledge_graph_integration_rag_biomedical_qna_spark.plans.query import neighborhood
+        from knowledge_graph_integration_rag_biomedical_qna_spark.sources.io import (
+            read_edge_stats,
+        )
 
-        edge_stats = spark.read.parquet(os.path.join(args.kg, "kg_edge_stats"))
+        edge_stats = read_edge_stats(spark, os.path.join(args.kg, "kg_edge_stats"))
         seeds = values_df(spark, [(c,) for c in args.cuis], "seed_cui string")
         rows = neighborhood(edge_stats, seeds, hops=args.hops, k=args.k).collect()
     elif args.cmd == "ask":
